@@ -96,8 +96,8 @@ def main(argv: list[str] | None = None) -> int:
         from notion_spark.sinks.pdf_report import report_payload
 
         df = normalize_for_reports(spark.read.parquet(cache)).cache()
-        frames = report_frames(df, args.period, now, cfg)
-        print(json.dumps(report_payload(frames, args.period, now, cfg), default=str))
+        frames = report_frames(df, (args.period,), now, cfg)
+        print(json.dumps(report_payload(frames, now, cfg)[args.period], default=str))
     return 0
 
 

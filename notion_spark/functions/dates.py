@@ -47,8 +47,3 @@ def iso_week_label(col: Column | str) -> Column:
         week_year.cast("string"),
         F.lpad(F.weekofyear(c).cast("string"), 2, "0"),
     )
-
-
-def period_window(end: Column, days: int) -> tuple[Column, Column]:
-    """Report period [end - days, end] (generate_reports.py:365-385)."""
-    return F.date_sub(end, days), end

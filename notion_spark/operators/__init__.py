@@ -9,7 +9,6 @@ from notion_spark.operators.filters import (
     anti_members,
     array_overlap_filter,
     not_in_filter,
-    period_window_filter,
     substring_filter,
 )
 from notion_spark.operators.joins import broadcast_lookup, semi_members
@@ -25,7 +24,6 @@ __all__ = [
     "conditional_counts",
     "keep_last_upsert",
     "not_in_filter",
-    "period_window_filter",
     "semi_members",
     "substring_filter",
     "top_k",

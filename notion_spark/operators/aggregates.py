@@ -18,15 +18,18 @@ from notion_spark.functions.dates import week_ending
 
 
 # ---------------------------------------------------------------- A1
-def conditional_counts(df: DataFrame, conditions: dict[str, Column]) -> DataFrame:
+def conditional_counts(
+    df: DataFrame, conditions: dict[str, Column], extra: Sequence[Column] = ()
+) -> DataFrame:
     """total + named conditional counts in ONE pass
     (reference analyze_pages.py:358-379 scans the frame four times;
-    `sum(when(cond,1))` folds them into a single aggregate)."""
+    `sum(when(cond,1))` folds them into a single aggregate). ``extra``
+    aggregates join the same pass."""
     aggs = [F.count(F.lit(1)).alias("total")] + [
         F.coalesce(F.sum(F.when(cond, 1)), F.lit(0)).alias(name)
         for name, cond in conditions.items()
     ]
-    return df.agg(*aggs)
+    return df.agg(*aggs, *extra)
 
 
 # ---------------------------------------------------------------- A2/A3
@@ -73,39 +76,6 @@ def weekly_counts(
     if last_n is not None:
         out = out.orderBy(F.desc("week_ending")).limit(last_n)
     return out.orderBy("week_ending")
-
-
-# ---------------------------------------------------------------- A6
-def avg_days_between(df: DataFrame, start_col: str, end_col: str, out: str = "avg_days") -> DataFrame:
-    """'Average time to complete tasks: N days'
-    (samples/sample_analysis_output.txt:18). Exact integer day-diff sum,
-    divided as double — deterministic across engines."""
-    dd = F.datediff(F.col(end_col), F.col(start_col))
-    return df.filter(F.col(start_col).isNotNull() & F.col(end_col).isNotNull()).agg(
-        (F.sum(dd).cast("double") / F.count(dd)).alias(out)
-    )
-
-
-# ---------------------------------------------------------------- A7
-def crosstab_counts(df: DataFrame, row_col: str, pivot_col: str, pivot_values: Sequence[str]) -> DataFrame:
-    """Status × Priority crosstab (samples/sample_analysis_output.txt:56-65).
-
-    Explicit `pivot(values=...)` so Spark skips the extra distinct-values
-    job AND output column names are fixed for oracle parity.
-
-    Rows sort ascending on the row label — the reference's pandas
-    crosstab sorts its index (sample: canceled/doing/done/...), and both
-    sorts are code-point-based, so the rendered section is deterministic
-    under any partitioning AND byte-matches the reference's ordering
-    contract (an unsorted collect() order is session-dependent — caught
-    by the r5 byte-level golden)."""
-    return (
-        df.groupBy(row_col)
-        .pivot(pivot_col, list(pivot_values))
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, list(pivot_values))
-        .orderBy(F.asc(row_col))
-    )
 
 
 def mode_per_group(

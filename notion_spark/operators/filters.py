@@ -67,12 +67,6 @@ def anti_members(df: DataFrame, other: DataFrame, key: str | list[str]) -> DataF
     return df.join(other.select(*keys).distinct(), on=keys, how="left_anti")
 
 
-# ---------------------------------------------------------------- F11
-def period_window_filter(df: DataFrame, col: str, start: Column, end: Column) -> DataFrame:
-    """start <= col <= end (generate_reports.py:407-412)."""
-    return df.filter(F.col(col).between(start, end))
-
-
 # ---------------------------------------------------------------- F12
 def overflow_policy_filter(
     df: DataFrame,
@@ -83,9 +77,14 @@ def overflow_policy_filter(
     frame holds more than ``count_threshold`` rows, keep only rows matching
     ``keep_predicate``; otherwise keep all.
 
-    The gate is a driver-side scalar decision over two lazy plans of the
-    same shape — mirroring the reference's `if len(goals) > 15` — and the
-    count itself is a cheap aggregate (count pushdown on Parquet sources).
+    The reference's `if len(goals) > 15`, lazily: a broadcast one-row
+    count gates ``(n <= threshold) | keep``, so building the plan runs no
+    job (a global ``Window.partitionBy()`` count would move every row
+    into one partition).
     """
-    n = df.count()
-    return df.filter(keep_predicate) if n > count_threshold else df
+    n = df.agg(F.count(F.lit(1)).alias("__n"))
+    return (
+        df.crossJoin(F.broadcast(n))
+        .filter((F.col("__n") <= count_threshold) | keep_predicate)
+        .drop("__n")
+    )

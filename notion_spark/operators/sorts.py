@@ -19,13 +19,6 @@ def top_k(df: DataFrame, keys: list[Column], k: int, tiebreaker: Column | None =
     return df.orderBy(*order).limit(k)
 
 
-def sorted_view(df: DataFrame, keys: list[Column], tiebreaker: Column | None = None) -> DataFrame:
-    """Full sort for render sinks (grouped report sections O6-O8). Only for
-    frames that are about to be collected by a driver-side sink."""
-    order = list(keys) + ([tiebreaker] if tiebreaker is not None else [])
-    return df.orderBy(*order)
-
-
 def top_k_per_group(
     df: DataFrame,
     group_cols: list[str],

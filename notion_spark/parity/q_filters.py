@@ -159,8 +159,8 @@ def filter_substring_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def filter_goals_overflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12: quantity-gated plan switch (generate_reports.py:447-466): when
     goals overflow the page budget keep only urgent-or-imminent rows.
-    Driver-side count() decides between two lazy plans, like the
-    reference's `if len(goals) > 15`."""
+    A broadcast one-row count gates the filter lazily, like the
+    reference's `if len(goals) > 15` without a driver-side job."""
     o = read_table(spark, sf_dir, "orders")
     goals = o.filter(F.col("o_orderstatus") == "P")
     keep = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH") | (

@@ -5,9 +5,17 @@ serially, re-reading its CSV cache at every step. Here the pipeline is:
 
 1. ingest (connector → assemble_tasks, set-at-a-time)
 2. incremental merge into the Parquet canonical store (M1 + M2)
-3. ONE cached normalized frame feeding every analysis/report query lazily
-   (the reference re-reads + re-normalizes 7×, SURVEY §4)
+3. one cached normalized frame per preset (analysis, then reports)
+   feeding every query lazily (the reference re-reads + re-normalizes
+   7×, SURVEY §4)
 4. sinks: golden text report, chart data, report payloads, CSV/JSON export
+
+The read path is built once per sync cycle, not once per period: each
+analysis section is collected once for the text and chart sinks, and all
+period reports come from one collect per report section. Planning runs no
+Spark job (the goals overflow gate is lazy), so the cycle's job count
+does not grow with the number of periods. One cached frame is held at a
+time, released in a ``finally`` also when a step raises.
 
 Everything takes an injected ``now`` — no wall-clock anywhere.
 """
@@ -25,7 +33,9 @@ from notion_spark.normalize import normalize_for_analysis, normalize_for_reports
 from notion_spark.operators.incremental import changed_rows, keep_last_upsert
 from notion_spark.queries import analysis as analysis_q
 from notion_spark.queries import reports as reports_q
-from notion_spark.sinks.charts import render_chart_canvases, render_charts
+from notion_spark.sinks.charts import (
+    charts_available, render_chart_canvases, render_charts, write_pngs,
+)
 from notion_spark.sinks.pdf_report import render_pdf, report_payload
 from notion_spark.sinks.text_report import render_analysis
 from notion_spark.sources.io import export_tasks_csv, export_tasks_json
@@ -79,58 +89,54 @@ def run_pipeline(
     # the ingest lineage (JSON parse, joins, flattening) feeds three
     # consumers (count, change detection, merge write) — persist once
     fetched_tasks = fetched_tasks.cache()
-    n_fetched = fetched_tasks.count()
-    merged, n_changed = refresh_cache(spark, fetched_tasks, cache_path)
-    fetched_tasks.unpersist()
+    try:
+        n_fetched = fetched_tasks.count()
+        merged, n_changed = refresh_cache(spark, fetched_tasks, cache_path)
+    finally:
+        fetched_tasks.unpersist()
 
     if export:
         export_tasks_csv(merged, os.path.join(cache_dir, "tasks_csv"))
         export_tasks_json(merged, os.path.join(cache_dir, "tasks_json"))
 
-    # EP2: analysis over ONE cached normalized frame
+    # EP2: analysis text and charts over one cached frame. The canvases
+    # render ONCE from the rows the text sink collected and feed both the
+    # PNG files and every PDF (generate_reports.py:588-600).
     analyzed = normalize_for_analysis(merged).cache()
-    sections = analysis_q.run_all(analyzed, now, cfg)
-    text = render_analysis(sections, now, cfg)
-    with open(os.path.join(cache_dir, "analysis_output.txt"), "w") as f:
-        f.write(text)
-
-    # EP3: one report per period (app.py:72-99), rendered to real PDFs
-    # with the analysis charts embedded (generate_reports.py:588-600).
-    # Canvases render ONCE (three collects + rasterization) and feed both
-    # the PNG files and every PDF; with export off nothing renders.
-    chart_paths: list[str] = []
-    chart_bufs: list[tuple[bytes, int, int]] = []
-    if export:
-        from notion_spark.sinks.charts import charts_available
-
-        if charts_available():  # pragma: no cover - matplotlib absent here
-            chart_paths = render_charts(sections, cache_dir)
-            canvases = render_chart_canvases(sections)
-        else:
-            canvases = render_chart_canvases(sections)
-            names = [
-                "task_status_distribution.png", "tasks_by_priority.png", "velocity.png"
-            ]
-            for canvas, name in zip(canvases, names):
-                p = os.path.join(cache_dir, name)
-                with open(p, "wb") as f:
-                    f.write(canvas.png_bytes())
-                chart_paths.append(p)
-        chart_bufs = [(c.rgb_bytes(), c.w, c.h) for c in canvases]
-    reported = normalize_for_reports(merged).cache()
-    payloads = {}
-    pdf_paths = {}
-    for period in periods:
-        frames = reports_q.report_frames(reported, period, now, cfg)
-        payloads[period] = report_payload(frames, period, now, cfg)
+    try:
+        sections = analysis_q.run_all(analyzed, now, cfg)
+        text = render_analysis(sections, now, cfg)
+        with open(os.path.join(cache_dir, "analysis_output.txt"), "w") as f:
+            f.write(text)
+        chart_paths: list[str] = []
+        chart_bufs: list[tuple[bytes, int, int]] = []
         if export:
-            pdf_paths[period] = render_pdf(
-                payloads[period],
-                os.path.join(cache_dir, f"{period}_{now:%Y-%m-%d}.pdf"),
-                charts=chart_bufs,
+            canvases = render_chart_canvases(sections)
+            chart_paths = (
+                render_charts(sections, cache_dir)
+                if charts_available()  # pragma: no cover - matplotlib absent here
+                else write_pngs(canvases, cache_dir)
             )
-    analyzed.unpersist()
-    reported.unpersist()
+            chart_bufs = [(c.rgb_bytes(), c.w, c.h) for c in canvases]
+    finally:
+        analyzed.unpersist()
+
+    # EP3: every period's payload from one collect per report section
+    # (app.py:72-99 runs one report per period), then one PDF per period
+    reported = normalize_for_reports(merged).cache()
+    try:
+        frames = reports_q.report_frames(reported, periods, now, cfg)
+        payloads = report_payload(frames, now, cfg)
+        pdf_paths = {}
+        if export:
+            for period, payload in payloads.items():
+                pdf_paths[period] = render_pdf(
+                    payload,
+                    os.path.join(cache_dir, f"{period}_{now:%Y-%m-%d}.pdf"),
+                    charts=chart_bufs,
+                )
+    finally:
+        reported.unpersist()
 
     return PipelineResult(
         n_fetched=n_fetched,

@@ -1,8 +1,9 @@
 """The analysis query suite (EP2 parity — reference backend/
 analyze_pages.py). Every function takes the NORMALIZED tasks frame
 (normalize.normalize_for_analysis), an injected ``now`` timestamp and an
-EngineConfig, and returns a lazy DataFrame. Nothing collects; the text/
-chart sinks do.
+EngineConfig, and returns a lazy DataFrame. Nothing collects here:
+`run_all` wraps the section plans in SectionRows, which the text and
+chart sinks read, collecting each section once.
 
 The reference re-filters one eagerly-mutated frame per section; here each
 section is a lazy plan over a shared cached canonical frame (SURVEY §4),
@@ -11,21 +12,21 @@ with explicit unique tiebreakers (nid) appended to every reference sort.
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from collections import Counter
+from datetime import datetime
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from notion_spark.config import EngineConfig
-from notion_spark.operators.aggregates import (
-    avg_days_between,
-    conditional_counts,
-    crosstab_counts,
-    value_counts,
-    weekly_counts,
-)
+from notion_spark.config import PRIORITY_SCORES, EngineConfig
+from notion_spark.operators.aggregates import conditional_counts, weekly_counts
 from notion_spark.operators.filters import anti_members, array_overlap_filter, status_in
 from notion_spark.operators.sorts import top_k
+
+# rows the text sinks print of the unbounded overdue / immediate-action
+# lists (the golden sample's "Top 30" tables)
+DISPLAY_ROWS = 30
 
 
 def _now_lit(now: datetime) -> Column:
@@ -114,24 +115,24 @@ def backlog(df: DataFrame, now: datetime, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def active_projects(df: DataFrame) -> DataFrame:
-    """(analyze_pages.py:344-355): ACTIVE containers only — status in
-    {to do, doing} — by priority."""
-    return df.filter(
-        F.col("is_project") & F.lower("status").isin("to do", "doing")
-    ).orderBy("priority_score", "nid")
-
-
-def task_summary(df: DataFrame) -> DataFrame:
-    """A1 (analyze_pages.py:358-379): total/completed/doing/todo counts +
-    percent complete, one pass."""
+def task_summary(df: DataFrame, now: datetime) -> DataFrame:
+    """A1+A6 (analyze_pages.py:358-379; golden sample line 18) in one
+    aggregate: total/completed/doing/todo counts, percent complete, mean
+    created → completed days of done rows (`avg_days`, exact day-diff sum
+    divided as double), and the overdue (F6) / critical-high (F7) counts
+    the golden-style summary prints."""
+    done = F.lower("status").contains("done")
+    days = F.when(done, F.datediff("completed", "created"))
     out = conditional_counts(
         df,
         {
-            "completed": F.lower("status").contains("done"),
+            "completed": done,
             "doing": F.lower("status").contains("doing"),
             "todo": F.lower("status").contains("to do"),
+            "n_overdue": active_pred() & (F.col("due") < _now_lit(now)),
+            "n_critical_high": active_pred() & (F.col("priority_score") <= 1),
         },
+        extra=[(F.sum(days).cast("double") / F.count(days)).alias("avg_days")],
     )
     return out.withColumn(
         "pct_complete",
@@ -142,13 +143,6 @@ def task_summary(df: DataFrame) -> DataFrame:
 def overdue(df: DataFrame, now: datetime) -> DataFrame:
     """F6 (analyze_pages.py:382-392)."""
     return df.filter(active_pred() & (F.col("due") < _now_lit(now))).orderBy("due", "nid")
-
-
-def critical_high(df: DataFrame) -> DataFrame:
-    """F7 (analyze_pages.py:395-404): priority_score ≤ 1, active."""
-    return df.filter(active_pred() & (F.col("priority_score") <= 1)).orderBy(
-        "priority_score", "nid"
-    )
 
 
 def oldest_pending(df: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -169,21 +163,11 @@ def uncategorized(df: DataFrame) -> DataFrame:
     return uncategorized_filter(df).orderBy("nid")
 
 
-def status_counts(df: DataFrame) -> DataFrame:
-    """A2 (analyze_pages.py:466)."""
-    return value_counts(df, "status")
-
-
-def priority_counts(df: DataFrame) -> DataFrame:
-    """A3 (analyze_pages.py:483)."""
-    return value_counts(df, "priority")
-
-
-def status_priority_crosstab(df: DataFrame) -> DataFrame:
-    """A7 (golden sample lines 56-65)."""
-    from notion_spark.config import PRIORITY_SCORES
-
-    return crosstab_counts(df, "status", "priority", list(PRIORITY_SCORES))
+def status_priority_counts(df: DataFrame) -> DataFrame:
+    """A2+A3+A7 (analyze_pages.py:466, 483; golden sample lines 56-65):
+    row counts per (status, priority), the one aggregate SectionRows
+    derives both histograms and the crosstab from."""
+    return df.groupBy("status", "priority").agg(F.count(F.lit(1)).alias("count"))
 
 
 def completion_velocity(df: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -226,36 +210,87 @@ def overdue_top_by_priority(df: DataFrame, now: datetime, limit: int = 30) -> Da
     )
 
 
-def avg_completion_days(df: DataFrame) -> DataFrame:
-    """A6 (golden sample line 18): mean(created → completed) days for done
-    rows."""
-    done = df.filter(F.lower("status").contains("done"))
-    return avg_days_between(done, "created", "completed")
+def _value_counts(pairs: list[tuple], i: int, name: str) -> pd.DataFrame:
+    """aggregates.value_counts over collected (status, priority, count)
+    rows: count desc, then key ascending, null first."""
+    counts: Counter = Counter()
+    for row in pairs:
+        counts[row[i]] += row[2]
+    ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0] is not None, kv[0] or ""))
+    return pd.DataFrame(ranked, columns=[name, "count"])
 
 
-def run_all(df: DataFrame, now: datetime, cfg: EngineConfig) -> dict[str, DataFrame]:
-    """The EP2 section map (analyze_pages.py:195-221 order). ``df`` must
-    already be normalized; callers should .cache() it — ~12 sections reuse
-    it (the reference instead re-reads its CSV every time, SURVEY §4)."""
+def _crosstab(pairs: list[tuple]) -> pd.DataFrame:
+    """A7 over collected rows, like the reference's pandas crosstab: a row
+    per status (ascending, null first), a zero-filled count column per
+    known priority label."""
+    labels = list(PRIORITY_SCORES)
+    table: dict = {}
+    for status, priority, n in pairs:
+        row = table.setdefault(status, dict.fromkeys(labels, 0))
+        if priority in row:
+            row[priority] += n
+    order = sorted(table, key=lambda s: (s is not None, s or ""))
+    return pd.DataFrame([[s, *table[s].values()] for s in order], columns=["status", *labels])
+
+
+_DERIVED = {
+    "status_counts": lambda pairs: _value_counts(pairs, 0, "status"),
+    "priority_counts": lambda pairs: _value_counts(pairs, 1, "priority"),
+    "status_priority_crosstab": _crosstab,
+}
+
+
+class SectionRows:
+    """The EP2 sections as collected rows, shared by the text and chart
+    sinks: each plan in ``plans`` runs at most once, on first read. Row
+    sections read as pandas frames (`toPandas` keeps the dtypes
+    `to_string` prints), ``task_summary`` as a dict; the status/priority
+    histograms and crosstab derive from ``status_priority_counts``."""
+
+    def __init__(self, plans: dict[str, DataFrame]):
+        self.plans = plans
+        self._rows: dict[str, object] = {}
+
+    def __contains__(self, name: str) -> bool:
+        return name in self.plans or name in _DERIVED
+
+    def __getitem__(self, name: str):
+        if name not in self._rows:
+            self._rows[name] = self._collect(name)
+        return self._rows[name]
+
+    def _collect(self, name: str):
+        if name in _DERIVED:
+            return _DERIVED[name](self["status_priority_counts"])
+        df = self.plans[name]
+        if name == "task_summary":
+            return df.collect()[0].asDict()
+        if name == "status_priority_counts":
+            return [tuple(r) for r in df.collect()]
+        return df.toPandas()
+
+
+def run_all(df: DataFrame, now: datetime, cfg: EngineConfig) -> SectionRows:
+    """The EP2 section map (analyze_pages.py:195-221 order) — the sections
+    the text and chart sinks render. ``df`` must already be normalized;
+    callers should .cache() it — the sections reuse it (the reference
+    instead re-reads its CSV every time, SURVEY §4). Building it runs no
+    Spark job. Overdue and immediate-action are capped at the
+    DISPLAY_ROWS the sinks print."""
     filtered = apply_tag_filter(df, cfg)
-    out = {
-        "task_summary": task_summary(filtered),
-        "immediate_action": immediate_action(filtered, now),
+    plans = {
+        "task_summary": task_summary(filtered, now),
+        "immediate_action": immediate_action(filtered, now).limit(DISPLAY_ROWS),
         "due_this_week": due_this_week(filtered, now),
-        "backlog": backlog(filtered, now, cfg),
-        "active_projects": active_projects(filtered),
-        "overdue": overdue(filtered, now),
-        "overdue_top_by_priority": overdue_top_by_priority(filtered, now),
+        "overdue": overdue(filtered, now).limit(DISPLAY_ROWS),
+        "overdue_top_by_priority": overdue_top_by_priority(filtered, now, DISPLAY_ROWS),
         "next_by_priority": next_by_priority(filtered),
-        "critical_high": critical_high(filtered),
         "oldest_pending": oldest_pending(filtered, cfg),
-        "status_counts": status_counts(filtered),
-        "priority_counts": priority_counts(filtered),
-        "status_priority_crosstab": status_priority_crosstab(filtered),
+        "status_priority_counts": status_priority_counts(filtered),
         "completion_velocity": completion_velocity(filtered, cfg),
         "created_per_week": created_per_week(filtered),
-        "avg_completion_days": avg_completion_days(filtered),
     }
     if cfg.include_uncategorized:
-        out["uncategorized"] = uncategorized(filtered)
-    return out
+        plans["uncategorized"] = uncategorized(filtered)
+    return SectionRows(plans)

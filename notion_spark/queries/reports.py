@@ -1,12 +1,14 @@
 """The report query suite (EP3 parity — reference backend/
-generate_reports.py). Period-windowed section frames with parent-name
-broadcast join, grouped sorts and the goals overflow policy; the PDF
-assembly itself is a driver-side render over these already-sorted frames
-(sinks/pdf_report.py holds the stub — fpdf is not in this container).
+generate_reports.py). Section plans with parent-name broadcast join,
+grouped sorts and the goals overflow policy, built once for a whole batch
+of periods (`report_frames`); the PDF is a driver-side render over the
+collected, already-sorted rows (sinks/pdf_report.py).
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from dataclasses import dataclass
 from datetime import datetime, timedelta
 
 from pyspark.sql import Column, DataFrame
@@ -78,7 +80,6 @@ def clean_task_list(df: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 def goals(
     df: DataFrame,
-    start: datetime,
     end: datetime,
     cfg: EngineConfig,
     lookup: DataFrame | None = None,
@@ -86,7 +87,8 @@ def goals(
     """F12+O6 (generate_reports.py:444-470): ALL 'to do' rows; when they
     overflow the page budget (>15) keep only due-within-14d-of-period-end
     OR priority ≤ High; grouped sort (parent, priority, due), parent fill
-    '' (:469 — the fill value sorts first, deliberately).
+    '' (:469 — the fill value sorts first, deliberately). Only the period
+    END matters, so every built-in period shares one goals section.
 
     (The dated/undated pre-filter at :393-405 is dead code — its `goals`
     is overwritten by this path before any use.)"""
@@ -127,47 +129,59 @@ def uncategorized_report(df: DataFrame) -> DataFrame:
     return uncategorized_filter(df).orderBy("nid")
 
 
-def section_pie_counts(
-    goals_df: DataFrame, completed_df: DataFrame, in_progress_df: DataFrame
-) -> DataFrame:
-    """A5 (generate_reports.py:226-234): union of the three section frames
-    → status frequency for the pie chart."""
-    unioned = (
-        goals_df.select("status")
-        .unionByName(completed_df.select("status"))
-        .unionByName(in_progress_df.select("status"))
-    )
-    return unioned.groupBy("status").agg(F.count(F.lit(1)).alias("count")).orderBy(
-        F.desc("count"), "status"
-    )
+def in_window_col(period: str) -> str:
+    """The `completed` plan's flag column for ``period``."""
+    return f"__in_{period}"
+
+
+@dataclass
+class ReportFrames:
+    """Lazy section plans for a batch of periods. ``completed`` spans
+    every window and carries one boolean `in_window_col` per period (its
+    inclusive `between` test); ``goals`` is keyed by period end."""
+
+    windows: dict[str, tuple[datetime, datetime]]
+    goals: dict[datetime, DataFrame]
+    completed: DataFrame
+    in_progress: DataFrame
+    uncategorized: DataFrame | None
 
 
 def report_frames(
     df: DataFrame,
-    period: str,
+    periods: Sequence[str],
     now: datetime,
     cfg: EngineConfig,
     custom: tuple[datetime, datetime] | None = None,
-) -> dict[str, DataFrame]:
-    """EP3 section map (generate_reports.py:390-503). ``df`` must be
-    normalize_for_reports output; tag filter applies first
-    (generate_reports.py:177-192)."""
-    start, end = resolve_period(period, now, custom)
+) -> ReportFrames:
+    """EP3 section plans for every period in ``periods`` at once
+    (generate_reports.py:390-503 filters again for each period). ``df``
+    must be normalize_for_reports output; the tag filter applies first
+    (generate_reports.py:177-192).
+
+    Only completed depends on the period start, and every built-in period
+    ends at ``now``: goals (once per distinct end), in-progress and
+    uncategorized are planned once, completed once over the widest window
+    with per-period flags for the driver-side split. Building the plans
+    runs no Spark job — the goals overflow gate is lazy."""
+    windows = {p: resolve_period(p, now, custom) for p in periods}
     tagged = array_overlap_filter(df, "active_tags", cfg.filter_tags)
     base = clean_task_list(tagged, cfg)
     # parent-name lookup comes from the PRE-clean frame (the reference
     # builds nid_to_name before dropping containers, :317-320)
-    g = goals(base, start, end, cfg, lookup=tagged)
-    c = completed_in_period(base, start, end, lookup=tagged)
-    p = in_progress(base, lookup=tagged)
-    out = {
-        "goals": g,
-        "completed": c,
-        "in_progress": p,
-        "pie_counts": section_pie_counts(g, c, p),
-    }
-    if cfg.include_uncategorized:
+    hull = (min(s for s, _ in windows.values()), max(e for _, e in windows.values()))
+    completed = completed_in_period(base, *hull, lookup=tagged).withColumns(
+        {
+            in_window_col(p): F.col("completed").between(_ts(s), _ts(e))
+            for p, (s, e) in windows.items()
+        }
+    )
+    return ReportFrames(
+        windows=windows,
+        goals={e: goals(base, e, cfg, lookup=tagged) for e in {e for _, e in windows.values()}},
+        completed=completed,
+        in_progress=in_progress(base, lookup=tagged),
         # the reference does NOT clean_task_list the catch-all section
         # (generate_reports.py:499-503 filters the raw frame)
-        out["uncategorized"] = uncategorized_report(tagged)
-    return out
+        uncategorized=uncategorized_report(tagged) if cfg.include_uncategorized else None,
+    )

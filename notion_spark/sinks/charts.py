@@ -2,17 +2,17 @@
 velocity bars via matplotlib/seaborn).
 
 Aggregation happens in Spark; only the tiny aggregate result crosses to
-the driver. Rendering is dependency-free: matplotlib is used when
-present, otherwise the vendored `minipng` rasterizer produces real,
-deterministic PNGs — so `render_charts` always writes files, and
-`render_chart_canvases` feeds raw RGB buffers straight into the PDF
-sink's image XObjects.
+the driver, read from the same collected sections as the text sink
+(queries.analysis.SectionRows), so no section is collected twice.
+Rendering is dependency-free: matplotlib is used when present, otherwise
+the vendored `minipng` rasterizer produces real, deterministic PNGs — so
+`render_charts` always writes files, and `render_chart_canvases` feeds
+raw RGB buffers straight into the PDF sink's image XObjects.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
+from notion_spark.queries.analysis import SectionRows
 from notion_spark.sinks import minipng
 
 
@@ -27,17 +27,20 @@ def charts_available() -> bool:
         return False
 
 
-def chart_data(sections: dict[str, DataFrame]) -> dict[str, list[tuple]]:
-    """Collect the chart inputs (status pie, priority bars, weekly
-    velocity) as plain tuples — the render-agnostic artifact."""
+def chart_data(sections: SectionRows) -> dict[str, list[tuple]]:
+    """The chart inputs (status pie, priority bars, weekly velocity) as
+    plain tuples — the render-agnostic artifact."""
     return {
-        "status_pie": [tuple(r) for r in sections["status_counts"].collect()],
-        "priority_bars": [tuple(r) for r in sections["priority_counts"].collect()],
-        "velocity": [tuple(r) for r in sections["completion_velocity"].collect()],
+        key: list(sections[name].itertuples(index=False, name=None))
+        for key, name in (
+            ("status_pie", "status_counts"),
+            ("priority_bars", "priority_counts"),
+            ("velocity", "completion_velocity"),
+        )
     }
 
 
-def render_chart_canvases(sections: dict[str, DataFrame]) -> list[minipng.Canvas]:
+def render_chart_canvases(sections: SectionRows) -> list[minipng.Canvas]:
     """Render the reference's two report charts
     (generate_reports.py:220-253: status pie + priority bars) as minipng
     canvases — PNG-encodable AND embeddable in the PDF as raw RGB."""
@@ -51,18 +54,23 @@ def render_chart_canvases(sections: dict[str, DataFrame]) -> list[minipng.Canvas
     ]
 
 
-def render_charts(sections: dict[str, DataFrame], out_dir: str) -> list[str]:
+def write_pngs(canvases: list[minipng.Canvas], out_dir: str) -> list[str]:
+    """Write `render_chart_canvases` output as the reference's PNG files."""
+    names = ["task_status_distribution.png", "tasks_by_priority.png", "velocity.png"]
+    paths = []
+    for canvas, name in zip(canvases, names):
+        p = f"{out_dir}/{name}"
+        with open(p, "wb") as f:
+            f.write(canvas.png_bytes())
+        paths.append(p)
+    return paths
+
+
+def render_charts(sections: SectionRows, out_dir: str) -> list[str]:
     """Render PNG charts like the reference (status pie, velocity bars).
     Always writes files: matplotlib when present, minipng otherwise."""
     if not charts_available():
-        names = ["task_status_distribution.png", "tasks_by_priority.png", "velocity.png"]
-        paths = []
-        for canvas, name in zip(render_chart_canvases(sections), names):
-            p = f"{out_dir}/{name}"
-            with open(p, "wb") as f:
-                f.write(canvas.png_bytes())
-            paths.append(p)
-        return paths
+        return write_pngs(render_chart_canvases(sections), out_dir)
     import matplotlib
 
     matplotlib.use("Agg")

@@ -6,8 +6,8 @@ overdue + top-30-by-priority, avg completion days, priority histogram,
 per-priority next-task sections, Status×Priority crosstab, due-next-7d,
 longest-pending, created-per-week with 'start/end' W-SUN range labels.
 
-All frames arrive pre-aggregated/pre-limited from queries.analysis; this
-module only formats.
+All sections arrive collected, pre-aggregated and pre-limited from
+queries.analysis (SectionRows); this module only formats.
 """
 
 from __future__ import annotations
@@ -15,26 +15,16 @@ from __future__ import annotations
 import io
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame
-
 from notion_spark.config import PRIORITY_SCORES, EngineConfig
+from notion_spark.queries.analysis import SectionRows
+from notion_spark.sinks.text_report import format_table as _tbl
 
 
-def _tbl(df: DataFrame, cols: list[str], max_rows: int | None = None) -> str:
-    # limit BEFORE collecting — a section frame may be unbounded (e.g.
-    # overdue), and the driver should only ever hold the displayed rows
-    if max_rows is not None:
-        df = df.limit(max_rows)
-    pdf = df.toPandas()
-    pdf = pdf[[c for c in cols if c in pdf.columns]]
-    return "(none)" if pdf.empty else pdf.to_string(index=False)
-
-
-def render_golden_style(sections: dict[str, DataFrame], now: datetime, cfg: EngineConfig) -> str:
+def render_golden_style(sections: SectionRows, now: datetime, cfg: EngineConfig) -> str:
     out = io.StringIO()
     w = out.write
 
-    s = sections["task_summary"].collect()[0]
+    s = sections["task_summary"]
     w(f"Total tasks: {s['total']}\n")
     w(f"Completed tasks: {s['completed']}\n")
     w(f"In Progress tasks: {s['doing']}\n")
@@ -48,10 +38,10 @@ def render_golden_style(sections: dict[str, DataFrame], now: datetime, cfg: Engi
     else:
         w("Most tasks are completed. Great job keeping up the momentum!\n")
 
-    overdue_rows = sections["overdue"].count()
+    overdue_rows = s["n_overdue"]
     w(f"Overdue tasks: {overdue_rows}\n")
     w("Overdue tasks:\n")
-    w(_tbl(sections["overdue"], ["nid", "name", "due", "priority"], 30))
+    w(_tbl(sections["overdue"], ["nid", "name", "due", "priority"]))
     w("\nTop 30 overdue tasks by priority:\n")
     w(_tbl(sections["overdue_top_by_priority"], ["nid", "name", "due", "priority"]))
     if overdue_rows:
@@ -62,9 +52,8 @@ def render_golden_style(sections: dict[str, DataFrame], now: datetime, cfg: Engi
     else:
         w("\nNo overdue tasks. Excellent time management!\n")
 
-    avg = sections["avg_completion_days"].collect()
-    if avg and avg[0]["avg_days"] is not None:
-        w(f"Average time to complete tasks: {avg[0]['avg_days']:.2f} days\n")
+    if s["avg_days"] is not None:
+        w(f"Average time to complete tasks: {s['avg_days']:.2f} days\n")
         w("Tasks are being completed in a timely manner. Keep up the efficiency!\n")
 
     w("Tasks by priority:\n")
@@ -73,12 +62,12 @@ def render_golden_style(sections: dict[str, DataFrame], now: datetime, cfg: Engi
     w(
         "There are critical or high-priority tasks that need attention. "
         "Make sure these are addressed first.\n"
-        if sections["critical_high"].count()
+        if s["n_critical_high"]
         else "No critical or high-priority pressure right now.\n"
     )
 
     w("Tasks to work on next based on priority:\n")
-    nxt = sections["next_by_priority"].toPandas()
+    nxt = sections["next_by_priority"]
     for label in list(PRIORITY_SCORES) + sorted(
         set(nxt["priority"]) - set(PRIORITY_SCORES)
     ):
@@ -93,7 +82,7 @@ def render_golden_style(sections: dict[str, DataFrame], now: datetime, cfg: Engi
     w(_tbl(sections["status_priority_crosstab"], list(sections["status_priority_crosstab"].columns)))
 
     due_week = sections["due_this_week"]
-    n_due = due_week.count()
+    n_due = len(due_week)
     w("\nTasks due in the next 7 days:\n")
     if n_due:
         w(_tbl(due_week, ["nid", "name", "due", "priority"]))
@@ -109,8 +98,9 @@ def render_golden_style(sections: dict[str, DataFrame], now: datetime, cfg: Engi
     w(_tbl(sections["oldest_pending"], ["nid", "name", "created", "status"]))
 
     w("\nTasks created per week:\n")
-    for r in sections["created_per_week"].collect():
-        start = r.week_ending - timedelta(days=6)
-        w(f"{start.isoformat()}/{r.week_ending.isoformat()}    {r['count']}\n")
+    weeks = sections["created_per_week"]
+    for week_ending, n in zip(weeks["week_ending"], weeks["count"]):
+        start = week_ending - timedelta(days=6)
+        w(f"{start.isoformat()}/{week_ending.isoformat()}    {n}\n")
     w("Freq: W-SUN\n")
     return out.getvalue()

@@ -3,9 +3,9 @@ fpdf document with watermark, chapters, grouped task lists, markdown
 rendering, embedded charts).
 
 Two layers:
-- `report_payload` — the fully sorted/grouped/truncated row stream
-  (the Spark-side artifact; everything heavy happens in DataFrames and
-  only human-scale rows are collected);
+- `report_payload` — the fully sorted/grouped/truncated row stream of
+  a batch of periods (the Spark-side artifact; everything heavy happens
+  in DataFrames and only human-scale rows are collected, once);
 - `render_pdf` — driver-side assembly of a real PDF over the payload via
   the dependency-free `minipdf` writer (fpdf is absent in this
   container). The document mirrors the reference's structure: tiled
@@ -16,6 +16,7 @@ Two layers:
 
 from __future__ import annotations
 
+from collections import Counter
 from datetime import datetime
 
 from pyspark.sql import DataFrame
@@ -23,13 +24,8 @@ from pyspark.sql import functions as F
 
 from notion_spark.config import EngineConfig
 from notion_spark.functions.text import truncate_lines
+from notion_spark.queries.reports import ReportFrames, in_window_col
 from notion_spark.sinks.minipdf import MiniPDF
-
-
-def pdf_available() -> bool:
-    """Always true: rendering no longer depends on fpdf — minipdf is the
-    vendored writer. Kept for API compatibility."""
-    return True
 
 
 def safe_encode(text: str) -> str:
@@ -39,19 +35,25 @@ def safe_encode(text: str) -> str:
 
 
 def report_payload(
-    frames: dict[str, DataFrame],
-    period: str,
+    frames: ReportFrames,
     now: datetime,
     cfg: EngineConfig,
     attachments: DataFrame | None = None,
-) -> dict:
-    """Collect the report sections as render-ready rows: body truncated to
+) -> dict[str, dict]:
+    """Collect the report sections once into one render-ready payload per
+    period: body truncated to
     cfg.body_content_max_lines (X11, generate_reports.py:97-102), grouped
     by parent_name in section sort order (W1 boundaries implicit in the
     ordering). With ``attachments`` and include_attachments on, readable
     previews join in by nid and append to the body — one join replacing
     the reference's per-row file reads (get_smart_attachment_content,
-    generate_reports.py:256-305)."""
+    generate_reports.py:256-305).
+
+    Completed rows go to every period whose window flag is set (filtering
+    keeps the section order); the pie counts (A5, generate_reports.py:
+    226-234, status frequency over goals ∪ completed ∪ in-progress) come
+    from the collected rows. Periods share the period-independent row
+    lists."""
     att_text = None
     if attachments is not None and cfg.include_attachments:
         from notion_spark.sources.attachments import attachment_previews
@@ -81,7 +83,7 @@ def report_payload(
             )
         )
 
-    def rows(df: DataFrame) -> list[dict]:
+    def rows(df: DataFrame, extra: tuple[str, ...] = ()) -> list[dict]:
         cols = ["nid", "name", "status", "priority", "parent_name"]
         present = [c for c in cols if c in df.columns]
         out = df
@@ -95,14 +97,32 @@ def report_payload(
                     F.concat_ws("\n", F.col("body_content"), F.col("__att")),
                 ).drop("__att")
             present.append("body_content")
-        return [r.asDict() for r in out.select(*present).collect()]
+        return [r.asDict() for r in out.select(*present, *extra).collect()]
 
-    return {
-        "period": period,
-        "generated_at": now.isoformat(),
-        "sections": {name: rows(df) for name, df in frames.items() if name != "pie_counts"},
-        "pie_counts": [tuple(r) for r in frames["pie_counts"].collect()],
-    }
+    flags = {p: in_window_col(p) for p in frames.windows}
+    goals = {end: rows(df) for end, df in frames.goals.items()}
+    done = rows(frames.completed, tuple(flags.values()))
+    doing = rows(frames.in_progress)
+    other = rows(frames.uncategorized) if frames.uncategorized is not None else None
+
+    payloads = {}
+    for period, (_, end) in frames.windows.items():
+        completed = [
+            {k: v for k, v in r.items() if k not in flags.values()}
+            for r in done
+            if r[flags[period]]
+        ]
+        sections = {"goals": goals[end], "completed": completed, "in_progress": doing}
+        if other is not None:
+            sections["uncategorized"] = other
+        pie = Counter(r["status"] for r in (*goals[end], *completed, *doing))
+        payloads[period] = {
+            "period": period,
+            "generated_at": now.isoformat(),
+            "sections": sections,
+            "pie_counts": sorted(pie.items(), key=lambda kv: (-kv[1], kv[0])),
+        }
+    return payloads
 
 
 class _ReportPdf(MiniPDF):

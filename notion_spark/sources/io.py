@@ -14,7 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from notion_spark.schema import CANONICAL_TO_DISPLAY, COLUMN_ALIASES, TASKS_SCHEMA
+from notion_spark.schema import CANONICAL_TO_DISPLAY, COLUMN_ALIASES
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -33,17 +33,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def read_tasks_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(TASKS_SCHEMA).parquet(path)
-
-
-def write_tasks_parquet(df: DataFrame, path: str, partitions: int | None = None) -> None:
-    """Canonical cache write. Small task tables stay single-partition; at
-    scale callers pass ``partitions`` or pre-repartition by key."""
-    out = df.repartition(partitions) if partitions else df
-    out.write.mode("overwrite").parquet(path)
 
 
 def overwrite_store(df: DataFrame, path: str) -> None:

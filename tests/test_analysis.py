@@ -22,12 +22,12 @@ CFG = EngineConfig()
 
 def test_sections_all_nonempty(tasks):
     sections = A.run_all(tasks, FIXED_NOW, CFG)
-    for name, df in sections.items():
+    for name, df in sections.plans.items():
         assert df.count() > 0, f"section {name} is empty — fixture must populate it"
 
 
 def test_task_summary_consistent(tasks):
-    row = A.task_summary(tasks).collect()[0]
+    row = A.task_summary(tasks, FIXED_NOW).collect()[0]
     rows = tasks.collect()
     assert row["total"] == len(rows)
     assert row["completed"] == sum(1 for r in rows if "done" in (r.status or "").lower())

@@ -156,10 +156,7 @@ def test_report_payloads_match_golden(spark):
     path = os.path.join(os.path.dirname(__file__), "golden", "report_payloads.json")
     cfg = EngineConfig()
     df = normalize_for_reports(make_tasks(spark)).cache()
-    got = {
-        p: report_payload(report_frames(df, p, FIXED_NOW, cfg), p, FIXED_NOW, cfg)
-        for p in ("weekly", "yearly")
-    }
+    got = report_payload(report_frames(df, ("weekly", "yearly"), FIXED_NOW, cfg), FIXED_NOW, cfg)
     df.unpersist()
     got = json.loads(json.dumps(got, sort_keys=True, default=str))
     with open(path) as f:

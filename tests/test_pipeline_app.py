@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from notion_spark.pipeline_app import run_pipeline
@@ -43,3 +44,20 @@ def test_full_pipeline_and_incremental_rerun(spark, tmp_path):
     updated = {r.uid for r in touched.select("uid").collect()}
     got = {r.uid: r.status for r in merged.collect()}
     assert all(got[u] == "Done" for u in updated)
+
+
+@pytest.mark.parametrize("step", ["refresh_cache", "render_analysis", "render_pdf"])
+def test_caches_released_when_a_step_fails(spark, tmp_path, monkeypatch, step):
+    """Every frame run_pipeline persists is unpersisted even when a step
+    raises half-way through the cycle: the merge, the analysis text or a
+    PDF render."""
+    import notion_spark.pipeline_app as app
+
+    def fail(*args, **kwargs):
+        raise RuntimeError(f"{step} failed")
+
+    monkeypatch.setattr(app, step, fail)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match=f"{step} failed"):
+        run_pipeline(spark, make_tasks(spark, n=60), str(tmp_path), FIXED_NOW, periods=("weekly",))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

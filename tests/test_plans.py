@@ -18,6 +18,18 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture(autouse=True)
+def _empty_cache_manager(spark):
+    """Plan pins see only the operators' own lineage. Some queries persist
+    an intermediate frame without releasing it (covisitation_lift's
+    capped pairs, operators/behavior.py), and Spark substitutes a cached
+    plan-identical subplan into any later query, so whatever ran before —
+    in this file or another — must not decide a pinned plan shape."""
+    spark.catalog.clearCache()
+    yield
+    spark.catalog.clearCache()
+
+
 def test_pushdown_and_topk_shape(spark, sf_dir):
     plan = plan_of(parity.QUERIES["filter_pushdown_parts"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan          # no global sort for top-k
@@ -842,7 +854,8 @@ def test_r13_iterative_consumers_no_inmemory_reuse_pinned(spark, sf_dir):
     the exchange reuse actually firing.
 
     Session isolation (r13 close): the pin is about the operators' OWN
-    lineage, so start from an empty CacheManager. In a shared session,
+    lineage, so it starts from an empty CacheManager (the autouse
+    fixture above clears it around every test here). In a shared session,
     any earlier covisitation_lift invocation (e.g. the plan-shape test
     at the top of this file — persist() registers the capped frame
     even without executing it) leaves a cache entry that Spark
@@ -855,7 +868,6 @@ def test_r13_iterative_consumers_no_inmemory_reuse_pinned(spark, sf_dir):
     covisitation_counts itself never persists. The bench is immune by
     construction (fresh-JVM chunks of 25: lift is index 70/chunk 2,
     kcore 85/chunk 3)."""
-    spark.catalog.clearCache()
     for q in ("graph_kcore", "graph_label_propagation"):
         df = parity.QUERIES[q](spark, sf_dir)
         static = plan_of(df)

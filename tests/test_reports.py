@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import uuid
 from datetime import timedelta
 
 import pytest
@@ -58,7 +59,7 @@ def test_completed_in_period_window(tasks):
 def test_goals_overflow_policy(tasks):
     start, end = R.resolve_period("weekly", FIXED_NOW)
     todo_count = tasks.filter(F.lower("status") == "to do").count()
-    rows = R.goals(tasks, start, end, CFG).collect()
+    rows = R.goals(tasks, end, CFG).collect()
     assert rows
     if todo_count > CFG.goals_overflow_threshold:
         horizon = end + timedelta(days=14)
@@ -80,19 +81,25 @@ def test_clean_task_list_drops_empty_containers(tasks):
 
 
 def test_report_frames_and_pie(tasks):
-    frames = R.report_frames(tasks, "yearly", FIXED_NOW, CFG)
-    assert set(frames) >= {"goals", "completed", "in_progress", "pie_counts"}
-    pie = {r.status: r["count"] for r in frames["pie_counts"].collect()}
+    from notion_spark.sinks.pdf_report import report_payload
+
+    frames = R.report_frames(tasks, ("yearly",), FIXED_NOW, CFG)
+    payload = report_payload(frames, FIXED_NOW, CFG)["yearly"]
+    assert set(payload["sections"]) >= {"goals", "completed", "in_progress"}
+    pie = dict(payload["pie_counts"])
     assert sum(pie.values()) == sum(
-        frames[k].count() for k in ("goals", "completed", "in_progress")
+        len(payload["sections"][k]) for k in ("goals", "completed", "in_progress")
+    )
+    assert sum(pie.values()) == (
+        frames.goals[FIXED_NOW].count() + frames.completed.count() + frames.in_progress.count()
     )
 
 
 def test_report_payload_render_ready(tasks):
     from notion_spark.sinks.pdf_report import report_payload
 
-    frames = R.report_frames(tasks, "yearly", FIXED_NOW, CFG)
-    payload = report_payload(frames, "yearly", FIXED_NOW, CFG)
+    frames = R.report_frames(tasks, ("yearly",), FIXED_NOW, CFG)
+    payload = report_payload(frames, FIXED_NOW, CFG)["yearly"]
     assert payload["period"] == "yearly"
     assert payload["sections"]["goals"], "goals section empty"
     assert all("parent_name" in row for row in payload["sections"]["goals"])
@@ -110,8 +117,145 @@ def test_report_payload_with_attachments(spark, tasks):
         [(nid, "notes.txt", ".txt", "attachment body"), (nid, "img.png", ".png", None)],
         ATTACHMENTS_SCHEMA,
     )
-    frames = R.report_frames(tasks, "yearly", FIXED_NOW, cfg)
-    payload = report_payload(frames, "yearly", FIXED_NOW, cfg, attachments=att)
+    frames = R.report_frames(tasks, ("yearly",), FIXED_NOW, cfg)
+    payload = report_payload(frames, FIXED_NOW, cfg, attachments=att)["yearly"]
     rows = [r for r in payload["sections"]["in_progress"] if r["nid"] == nid]
     assert rows and "notes.txt: attachment body" in rows[0]["body_content"]
     assert "img.png: (attachment)" in rows[0]["body_content"]  # unreadable ext listed by name
+
+
+# ---------------------------------------------------- batch read path
+PERIODS = ("daily", "weekly", "biweekly", "monthly", "yearly")
+PAYLOAD_COLS = ["nid", "name", "status", "priority", "parent_name"]
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    gid = f"read-path-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _keeps_goal(r, end):
+    return r.priority_score <= 1 or (r.due is not None and r.due <= end + timedelta(days=14))
+
+
+def _with_todos(df, n: int):
+    """``df`` with exactly ``n`` (non-container) to-do rows: the goals
+    overflow gate's input. Half (at most) fail the keep predicate, so the
+    gate's decision shows in the output."""
+    todo = df.filter((F.lower("status") == "to do") & ~F.col("is_project"))
+    rows = sorted(todo.collect(), key=lambda r: (_keeps_goal(r, FIXED_NOW), r.uid))
+    dropped = [r.uid for r in rows if not _keeps_goal(r, FIXED_NOW)][: n // 2]
+    kept = [r.uid for r in rows if _keeps_goal(r, FIXED_NOW)][: n - len(dropped)]
+    assert len(dropped) + len(kept) == n, "fixture has too few to-do rows"
+    return df.filter((F.lower("status") != "to do") | F.col("uid").isin(dropped + kept))
+
+
+def _with_window_edges(tasks):
+    """``tasks`` with done rows completed exactly at each period's start,
+    one second before it, at ``now`` and one second after ``now``.
+    Returns (frame, {completed timestamp: nid of the row})."""
+    done = sorted(
+        r.nid
+        for r in tasks.filter(
+            (F.col("status") == "done") & ~F.col("is_project") & (F.col("nid") != 0)
+        ).collect()
+    )
+    # completed timestamp -> the done row (nid) that gets it
+    edges = {FIXED_NOW: done[0], FIXED_NOW + timedelta(seconds=1): done[1]}
+    for i, p in enumerate(PERIODS):
+        start, _ = R.resolve_period(p, FIXED_NOW)
+        edges[start] = done[2 + 2 * i]
+        edges[start - timedelta(seconds=1)] = done[3 + 2 * i]
+    completed = F.col("completed")
+    for ts, nid in edges.items():
+        lit = F.lit(ts.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
+        completed = F.when(F.col("nid") == nid, lit).otherwise(completed)
+    return tasks.withColumn("completed", completed), edges
+
+
+def test_read_path_plans_lazily_and_jobs_do_not_grow_with_periods(spark, tasks):
+    """Building the report frames and the analysis section map runs no
+    Spark job, on either side of the goals overflow gate; collecting the
+    report path costs the same jobs for one period as for five."""
+    from notion_spark.normalize import normalize_for_analysis
+    from notion_spark.queries import analysis as A
+    from notion_spark.sinks.pdf_report import report_payload
+
+    analysis_base = normalize_for_analysis(make_tasks(spark))
+    for n_todo in (10, 20):
+        reported = _with_todos(tasks, n_todo)
+        analyzed = _with_todos(analysis_base, n_todo)
+        _, n_jobs = _jobs(spark, lambda: (
+            R.report_frames(reported, PERIODS, FIXED_NOW, CFG),
+            A.run_all(analyzed, FIXED_NOW, CFG),
+        ))
+        assert n_jobs == 0, (n_todo, n_jobs)
+
+    # every window holds rows: AQE answers an empty section without its
+    # sort job, a data property the job count must not be confused with
+    df, _ = _with_window_edges(tasks)
+    frames = {p: R.report_frames(df, p, FIXED_NOW, CFG) for p in (("weekly",), PERIODS)}
+    one, one_jobs = _jobs(spark, lambda: report_payload(frames[("weekly",)], FIXED_NOW, CFG))
+    five, five_jobs = _jobs(spark, lambda: report_payload(frames[PERIODS], FIXED_NOW, CFG))
+    assert set(five) == set(PERIODS) and five["weekly"] == one["weekly"]
+    assert one_jobs == five_jobs > 0
+
+
+def test_driver_side_split_matches_per_period_filter(spark, tasks):
+    """Completed rows on each window's edges land in exactly the periods
+    a per-period Spark `between` filter puts them in, and every section
+    and pie count equals the single-period plans' result."""
+    from notion_spark.sinks.pdf_report import report_payload
+
+    df, edges = _with_window_edges(tasks)
+    payloads = report_payload(R.report_frames(df, PERIODS, FIXED_NOW, CFG), FIXED_NOW, CFG)
+    base = R.clean_task_list(df, CFG)
+    for p in PERIODS:
+        start, end = R.resolve_period(p, FIXED_NOW)
+        want = {
+            "goals": R.goals(base, end, CFG, lookup=df),
+            "completed": R.completed_in_period(base, start, end, lookup=df),
+            "in_progress": R.in_progress(base, lookup=df),
+        }
+        got = payloads[p]["sections"]
+        for name, frame in want.items():
+            assert got[name] == [r.asDict() for r in frame.select(*PAYLOAD_COLS).collect()], (p, name)
+        pie = (
+            want["goals"].select("status")
+            .unionByName(want["completed"].select("status"))
+            .unionByName(want["in_progress"].select("status"))
+            .groupBy("status").count()
+            .orderBy(F.desc("count"), "status")
+        )
+        assert payloads[p]["pie_counts"] == [tuple(r) for r in pie.collect()], p
+        assert sum(n for _, n in payloads[p]["pie_counts"]) == sum(
+            len(got[k]) for k in ("goals", "completed", "in_progress")
+        )
+        in_period = {r["nid"] for r in got["completed"]}
+        assert edges[start] in in_period and edges[FIXED_NOW] in in_period, p
+        assert edges[start - timedelta(seconds=1)] not in in_period, p
+        assert edges[FIXED_NOW + timedelta(seconds=1)] not in in_period, p
+
+
+def test_goals_gate_at_threshold(tasks):
+    """15 to-do rows are all goals; the 16th switches the overflow policy
+    on and only due-soon or critical/high rows stay."""
+    from notion_spark.sinks.pdf_report import report_payload
+
+    assert CFG.goals_overflow_threshold == 15
+    for n_todo, gated in ((15, False), (16, True)):
+        df = _with_todos(tasks, n_todo)
+        todo = R.clean_task_list(df, CFG).filter(F.lower("status") == "to do").collect()
+        want = {r.nid for r in todo if not gated or _keeps_goal(r, FIXED_NOW)}
+        payload = report_payload(R.report_frames(df, PERIODS, FIXED_NOW, CFG), FIXED_NOW, CFG)
+        for p in PERIODS:
+            got = [r["nid"] for r in payload[p]["sections"]["goals"]]
+            assert sorted(got) == sorted(want), (n_todo, p)
+        assert len(want) == (n_todo if not gated else n_todo - n_todo // 2)
