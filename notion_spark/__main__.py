@@ -86,7 +86,7 @@ def main(argv: list[str] | None = None) -> int:
         from notion_spark.sinks.golden_report import render_golden_style
         from notion_spark.sinks.text_report import render_analysis
 
-        df = normalize_for_analysis(spark.read.parquet(cache)).cache()
+        df = normalize_for_analysis(spark.read.parquet(cache).cache())
         sections = run_all(df, now, cfg)
         render = render_golden_style if args.golden_style else render_analysis
         sys.stdout.write(render(sections, now, cfg))
@@ -95,7 +95,7 @@ def main(argv: list[str] | None = None) -> int:
         from notion_spark.queries.reports import report_frames
         from notion_spark.sinks.pdf_report import report_payload
 
-        df = normalize_for_reports(spark.read.parquet(cache)).cache()
+        df = normalize_for_reports(spark.read.parquet(cache).cache())
         frames = report_frames(df, (args.period,), now, cfg)
         print(json.dumps(report_payload(frames, now, cfg)[args.period], default=str))
     return 0

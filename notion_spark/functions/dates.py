@@ -9,12 +9,20 @@ is ISO Monday-START. Helpers below convert exactly.
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
+
+
+def ts_lit(dt: datetime) -> Column:
+    """A timestamp literal at second precision (the injected ``now`` and
+    the period bounds the analysis and report sections compare against)."""
+    return F.lit(dt.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
 
 
 def week_start(col: Column | str) -> Column:

@@ -5,9 +5,10 @@ serially, re-reading its CSV cache at every step. Here the pipeline is:
 
 1. ingest (connector → assemble_tasks, set-at-a-time)
 2. incremental merge into the Parquet canonical store (M1 + M2)
-3. one cached normalized frame per preset (analysis, then reports)
-   feeding every query lazily (the reference re-reads + re-normalizes
-   7×, SURVEY §4)
+3. the merged store read, cached once per cycle and filled by the
+   ``n_cached`` count; the CSV/JSON export and both normalize presets
+   read it, the presets as lazy uncached projections (the reference
+   re-reads + re-normalizes 7×, SURVEY §4)
 4. sinks: golden text report, chart data, report payloads, CSV/JSON export
 
 The read path is built once per sync cycle, not once per period: each
@@ -15,7 +16,8 @@ analysis section is collected once for the text and chart sinks, and all
 period reports come from one collect per report section. Planning runs no
 Spark job (the goals overflow gate is lazy), so the cycle's job count
 does not grow with the number of periods. One cached frame is held at a
-time, released in a ``finally`` also when a step raises.
+time — the ingest frame, then the store — each released in a ``finally``
+also when a step raises.
 
 Everything takes an injected ``now`` — no wall-clock anywhere.
 """
@@ -33,9 +35,7 @@ from notion_spark.normalize import normalize_for_analysis, normalize_for_reports
 from notion_spark.operators.incremental import changed_rows, keep_last_upsert
 from notion_spark.queries import analysis as analysis_q
 from notion_spark.queries import reports as reports_q
-from notion_spark.sinks.charts import (
-    charts_available, render_chart_canvases, render_charts, write_pngs,
-)
+from notion_spark.sinks.charts import render_chart_canvases, write_pngs
 from notion_spark.sinks.pdf_report import render_pdf, report_payload
 from notion_spark.sinks.text_report import render_analysis
 from notion_spark.sources.io import export_tasks_csv, export_tasks_json
@@ -95,16 +95,20 @@ def run_pipeline(
     finally:
         fetched_tasks.unpersist()
 
-    if export:
-        export_tasks_csv(merged, os.path.join(cache_dir, "tasks_csv"))
-        export_tasks_json(merged, os.path.join(cache_dir, "tasks_json"))
-
-    # EP2: analysis text and charts over one cached frame. The canvases
-    # render ONCE from the rows the text sink collected and feed both the
-    # PNG files and every PDF (generate_reports.py:588-600).
-    analyzed = normalize_for_analysis(merged).cache()
+    # one cache of the store for the rest of the cycle, filled by the
+    # count, which scans every partition in parallel (the CSV export's
+    # coalesce(1) would fill it in a single task)
+    store = merged.cache()
     try:
-        sections = analysis_q.run_all(analyzed, now, cfg)
+        n_cached = store.count()
+        if export:
+            export_tasks_csv(store, os.path.join(cache_dir, "tasks_csv"))
+            export_tasks_json(store, os.path.join(cache_dir, "tasks_json"))
+
+        # EP2: analysis text and charts. The canvases render ONCE from the
+        # rows the text sink collected and feed both the PNG files and
+        # every PDF (generate_reports.py:588-600).
+        sections = analysis_q.run_all(normalize_for_analysis(store), now, cfg)
         text = render_analysis(sections, now, cfg)
         with open(os.path.join(cache_dir, "analysis_output.txt"), "w") as f:
             f.write(text)
@@ -112,20 +116,12 @@ def run_pipeline(
         chart_bufs: list[tuple[bytes, int, int]] = []
         if export:
             canvases = render_chart_canvases(sections)
-            chart_paths = (
-                render_charts(sections, cache_dir)
-                if charts_available()  # pragma: no cover - matplotlib absent here
-                else write_pngs(canvases, cache_dir)
-            )
+            chart_paths = write_pngs(canvases, cache_dir)
             chart_bufs = [(c.rgb_bytes(), c.w, c.h) for c in canvases]
-    finally:
-        analyzed.unpersist()
 
-    # EP3: every period's payload from one collect per report section
-    # (app.py:72-99 runs one report per period), then one PDF per period
-    reported = normalize_for_reports(merged).cache()
-    try:
-        frames = reports_q.report_frames(reported, periods, now, cfg)
+        # EP3: every period's payload from one collect per report section
+        # (app.py:72-99 runs one report per period), then one PDF per period
+        frames = reports_q.report_frames(normalize_for_reports(store), periods, now, cfg)
         payloads = report_payload(frames, now, cfg)
         pdf_paths = {}
         if export:
@@ -136,12 +132,12 @@ def run_pipeline(
                     charts=chart_bufs,
                 )
     finally:
-        reported.unpersist()
+        store.unpersist()
 
     return PipelineResult(
         n_fetched=n_fetched,
         n_changed=n_changed,
-        n_cached=merged.count(),
+        n_cached=n_cached,
         analysis_text=text,
         report_payloads=payloads,
         pdf_paths=pdf_paths,

@@ -20,17 +20,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from notion_spark.config import PRIORITY_SCORES, EngineConfig
+from notion_spark.functions.dates import ts_lit
 from notion_spark.operators.aggregates import conditional_counts, weekly_counts
-from notion_spark.operators.filters import anti_members, array_overlap_filter, status_in
+from notion_spark.operators.filters import (
+    anti_members, array_overlap_filter, status_in, uncategorized_filter,
+)
 from notion_spark.operators.sorts import top_k
 
 # rows the text sinks print of the unbounded overdue / immediate-action
 # lists (the golden sample's "Top 30" tables)
 DISPLAY_ROWS = 30
-
-
-def _now_lit(now: datetime) -> Column:
-    return F.lit(now.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
 
 
 def apply_tag_filter(df: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -53,7 +52,7 @@ def immediate_action(df: DataFrame, now: datetime) -> DataFrame:
     pred = (
         active_pred()
         & F.col("due").isNotNull()
-        & ((F.col("due") < _now_lit(now)) | (F.lower("status") == "doing"))
+        & ((F.col("due") < ts_lit(now)) | (F.lower("status") == "doing"))
     )
     return df.filter(pred).orderBy("priority_score", "due", "nid")
 
@@ -61,9 +60,9 @@ def immediate_action(df: DataFrame, now: datetime) -> DataFrame:
 def due_this_week(df: DataFrame, now: datetime) -> DataFrame:
     """F4+O2 (analyze_pages.py:311-315): active, now ≤ due ≤ now+7d, minus
     immediate rows, sorted (due, priority)."""
-    week_end = _now_lit(now) + F.expr("INTERVAL 7 DAYS")
+    week_end = ts_lit(now) + F.expr("INTERVAL 7 DAYS")
     in_window = df.filter(
-        active_pred() & F.col("due").between(_now_lit(now), week_end)
+        active_pred() & F.col("due").between(ts_lit(now), week_end)
     )
     return anti_members(in_window, immediate_action(df, now), "nid").orderBy(
         "due", "priority_score", "nid"
@@ -129,7 +128,7 @@ def task_summary(df: DataFrame, now: datetime) -> DataFrame:
             "completed": done,
             "doing": F.lower("status").contains("doing"),
             "todo": F.lower("status").contains("to do"),
-            "n_overdue": active_pred() & (F.col("due") < _now_lit(now)),
+            "n_overdue": active_pred() & (F.col("due") < ts_lit(now)),
             "n_critical_high": active_pred() & (F.col("priority_score") <= 1),
         },
         extra=[(F.sum(days).cast("double") / F.count(days)).alias("avg_days")],
@@ -142,7 +141,7 @@ def task_summary(df: DataFrame, now: datetime) -> DataFrame:
 
 def overdue(df: DataFrame, now: datetime) -> DataFrame:
     """F6 (analyze_pages.py:382-392)."""
-    return df.filter(active_pred() & (F.col("due") < _now_lit(now))).orderBy("due", "nid")
+    return df.filter(active_pred() & (F.col("due") < ts_lit(now))).orderBy("due", "nid")
 
 
 def oldest_pending(df: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -156,10 +155,10 @@ def oldest_pending(df: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 
 def uncategorized(df: DataFrame) -> DataFrame:
-    """F8 (analyze_pages.py:230-243): status outside the known vocabulary
-    (nulls were already defaulted to 'unknown' by normalization)."""
-    from notion_spark.operators.filters import uncategorized_filter
-
+    """F8 (analyze_pages.py:230-243; the reports section at
+    generate_reports.py:417-421, 499-503 is the same): status outside the
+    known vocabulary (nulls were already defaulted to 'unknown' by
+    normalization)."""
     return uncategorized_filter(df).orderBy("nid")
 
 
@@ -203,7 +202,7 @@ def next_by_priority(df: DataFrame, per_bucket: int = 5) -> DataFrame:
 def overdue_top_by_priority(df: DataFrame, now: datetime, limit: int = 30) -> DataFrame:
     """'Top 30 overdue tasks by priority' (golden sample lines 12-16)."""
     return top_k(
-        df.filter(active_pred() & (F.col("due") < _now_lit(now))),
+        df.filter(active_pred() & (F.col("due") < ts_lit(now))),
         [F.asc("priority_score"), F.asc("due")],
         limit,
         tiebreaker=F.asc("nid"),
@@ -274,7 +273,8 @@ class SectionRows:
 def run_all(df: DataFrame, now: datetime, cfg: EngineConfig) -> SectionRows:
     """The EP2 section map (analyze_pages.py:195-221 order) — the sections
     the text and chart sinks render. ``df`` must already be normalized;
-    callers should .cache() it — the sections reuse it (the reference
+    the sections all read it, so it should be a projection over a cached
+    store (run_pipeline caches the store once per cycle; the reference
     instead re-reads its CSV every time, SURVEY §4). Building it runs no
     Spark job. Overdue and immediate-action are capped at the
     DISPLAY_ROWS the sinks print."""

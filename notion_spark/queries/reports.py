@@ -11,12 +11,14 @@ from collections.abc import Sequence
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from notion_spark.config import REPORT_PERIOD_DAYS, EngineConfig
+from notion_spark.functions.dates import ts_lit
 from notion_spark.operators.filters import array_overlap_filter, overflow_policy_filter
 from notion_spark.operators.joins import broadcast_lookup
+from notion_spark.queries.analysis import uncategorized
 
 NO_PROJECT = "General / No Project"
 
@@ -32,10 +34,6 @@ def resolve_period(
         return custom
     days = REPORT_PERIOD_DAYS[period]
     return now - timedelta(days=days), now
-
-
-def _ts(dt: datetime) -> Column:
-    return F.lit(dt.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
 
 
 def with_parent_name(
@@ -94,7 +92,7 @@ def goals(
     is overwritten by this path before any use.)"""
     todo = df.filter(F.lower("status") == "to do")
     keep = (F.col("priority_score") <= 1) | (
-        F.col("due").isNotNull() & (F.col("due") <= _ts(end + timedelta(days=14)))
+        F.col("due").isNotNull() & (F.col("due") <= ts_lit(end + timedelta(days=14)))
     )
     selected = overflow_policy_filter(todo, cfg.goals_overflow_threshold, keep)
     return with_parent_name(selected, lookup=lookup, default="").orderBy(
@@ -109,7 +107,7 @@ def completed_in_period(
     window, sorted (parent asc, completed desc)."""
     done = df.filter(
         (F.lower("status") == "done")
-        & F.col("completed").between(_ts(start), _ts(end))
+        & F.col("completed").between(ts_lit(start), ts_lit(end))
     )
     return with_parent_name(done, lookup=lookup, default="").orderBy(
         "parent_name", F.desc("completed"), "nid"
@@ -120,13 +118,6 @@ def in_progress(df: DataFrame, lookup: DataFrame | None = None) -> DataFrame:
     """O8 (generate_reports.py:489-496): doing rows, (parent, priority)."""
     doing = df.filter(F.lower("status") == "doing")
     return with_parent_name(doing, lookup=lookup).orderBy("parent_name", "priority_score", "nid")
-
-
-def uncategorized_report(df: DataFrame) -> DataFrame:
-    """F8 reports variant (generate_reports.py:417-421, 499-503)."""
-    from notion_spark.operators.filters import uncategorized_filter
-
-    return uncategorized_filter(df).orderBy("nid")
 
 
 def in_window_col(period: str) -> str:
@@ -156,8 +147,9 @@ def report_frames(
 ) -> ReportFrames:
     """EP3 section plans for every period in ``periods`` at once
     (generate_reports.py:390-503 filters again for each period). ``df``
-    must be normalize_for_reports output; the tag filter applies first
-    (generate_reports.py:177-192).
+    must be normalize_for_reports output, a lazy projection best taken
+    over a cached store as run_pipeline does (the sections all read it);
+    the tag filter applies first (generate_reports.py:177-192).
 
     Only completed depends on the period start, and every built-in period
     ends at ``now``: goals (once per distinct end), in-progress and
@@ -172,7 +164,7 @@ def report_frames(
     hull = (min(s for s, _ in windows.values()), max(e for _, e in windows.values()))
     completed = completed_in_period(base, *hull, lookup=tagged).withColumns(
         {
-            in_window_col(p): F.col("completed").between(_ts(s), _ts(e))
+            in_window_col(p): F.col("completed").between(ts_lit(s), ts_lit(e))
             for p, (s, e) in windows.items()
         }
     )
@@ -183,5 +175,5 @@ def report_frames(
         in_progress=in_progress(base, lookup=tagged),
         # the reference does NOT clean_task_list the catch-all section
         # (generate_reports.py:499-503 filters the raw frame)
-        uncategorized=uncategorized_report(tagged) if cfg.include_uncategorized else None,
+        uncategorized=uncategorized(tagged) if cfg.include_uncategorized else None,
     )

@@ -1,9 +1,9 @@
-"""Dependency-free PNG chart rasterizer (S9 render fallback).
+"""Dependency-free PNG chart rasterizer (the S9 chart renderer).
 
-matplotlib is absent in this container, so charts render through this
-tiny deterministic rasterizer instead: an RGB framebuffer, filled-rect /
-pie-sector primitives, a 5x7 bitmap font for labels, and a stdlib-zlib
-PNG encoder. Deterministic byte-for-byte given the same inputs — the
+Charts render through this tiny deterministic rasterizer whatever is
+installed, so the chart files never depend on the host: an RGB
+framebuffer, filled-rect / pie-sector primitives, a 5x7 bitmap font for
+labels, and a stdlib-zlib PNG encoder. Deterministic byte-for-byte given the same inputs — the
 golden tests hash the output. The same framebuffer doubles as the raw
 RGB payload for PDF image XObjects (sinks/minipdf.py embeds it directly,
 which is how charts end up inside the report PDF like the reference's

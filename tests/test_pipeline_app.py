@@ -46,11 +46,36 @@ def test_full_pipeline_and_incremental_rerun(spark, tmp_path):
     assert all(got[u] == "Done" for u in updated)
 
 
-@pytest.mark.parametrize("step", ["refresh_cache", "render_analysis", "render_pdf"])
+def test_one_store_cache_per_cycle(spark, tmp_path, monkeypatch):
+    """run_pipeline persists exactly two frames, one at a time: the ingest
+    frame, then the merged store read that the export and both normalize
+    presets share (the presets are uncached projections over it)."""
+    tasks = make_tasks(spark, n=60)
+    persisted = []
+    for name in ("cache", "persist"):
+        # the session's concrete DataFrame class implements both methods
+        original = getattr(type(tasks), name)
+
+        def spy(self, *args, _original=original, **kwargs):
+            persisted.append(self)
+            return _original(self, *args, **kwargs)
+
+        monkeypatch.setattr(type(tasks), name, spy)
+    run_pipeline(spark, tasks, str(tmp_path), FIXED_NOW, periods=("weekly",))
+
+    assert len(persisted) == 2
+    assert persisted[0] is tasks
+    store = persisted[1].inputFiles()
+    assert store and all("tasks.parquet" in f for f in store)
+
+
+@pytest.mark.parametrize(
+    "step", ["refresh_cache", "export_tasks_csv", "render_analysis", "render_pdf"]
+)
 def test_caches_released_when_a_step_fails(spark, tmp_path, monkeypatch, step):
     """Every frame run_pipeline persists is unpersisted even when a step
-    raises half-way through the cycle: the merge, the analysis text or a
-    PDF render."""
+    raises half-way through the cycle: the merge, the export, the analysis
+    text or a PDF render."""
     import notion_spark.pipeline_app as app
 
     def fail(*args, **kwargs):

@@ -226,18 +226,20 @@ def test_markdown_bold_segments(tmp_path):
     assert m is not None
 
 
-def test_render_charts_writes_pngs_without_matplotlib(tmp_path, spark):
+def test_chart_canvases_written_as_reference_pngs(tmp_path, spark):
     from notion_spark.config import EngineConfig
     from notion_spark.normalize import normalize_for_analysis
     from notion_spark.queries.analysis import run_all
-    from notion_spark.sinks.charts import render_charts
+    from notion_spark.sinks.charts import render_chart_canvases, write_pngs
     from tests.fixtures import FIXED_NOW, make_tasks
 
-    frames = run_all(normalize_for_analysis(make_tasks(spark)), FIXED_NOW, EngineConfig())
-    paths = render_charts(frames, str(tmp_path))
-    assert len(paths) == 3
+    sections = run_all(normalize_for_analysis(make_tasks(spark)), FIXED_NOW, EngineConfig())
+    paths = write_pngs(render_chart_canvases(sections), str(tmp_path))
+    assert [os.path.basename(p) for p in paths] == [
+        "task_status_distribution.png", "tasks_by_priority.png", "velocity.png",
+    ]
     for p in paths:
-        assert open(p, "rb").read().startswith(b"\x89PNG")
+        assert open(p, "rb").read().startswith(b"\x89PNG\r\n\x1a\n")
 
 
 def test_auto_page_break_restores_font():
