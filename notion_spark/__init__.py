@@ -12,8 +12,8 @@ idiomatic PySpark library:
 - ``notion_spark.queries``     — the analysis (EP2) and report (EP3) query suites
 - ``notion_spark.pipeline``    — large-scale training-data ops: dedup, similarity,
                                  text analysis, multimodal plumbing
-- ``notion_spark.streaming``   — Structured Streaming incremental upsert (§2.12)
-- ``notion_spark.sinks``       — text/CSV/JSON export sinks (§2.1 S6-S8)
+- ``notion_spark.streaming``   — batch sessionization and drift scoring over event rows (§2.12)
+- ``notion_spark.sinks``       — analysis text, report PDF and PNG chart sinks (§2.1 S6-S8)
 
 Every operator is a pure ``DataFrame -> DataFrame`` function, parameterized on
 an injected ``now`` timestamp (never wall-clock) and an ``EngineConfig``.

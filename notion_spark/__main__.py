@@ -5,11 +5,16 @@
     python -m notion_spark report   --cache-dir out/ --period weekly
 
 `pipeline` ≙ `python app.py` (EP1): ingest page snapshots → incremental
-cache merge → analysis text + period report payloads.
-`analyze` ≙ `python -m backend.analyze_pages` (EP2).
-`report`  ≙ `python -m backend.generate_reports` (EP3) — emits the
-render-ready payload as JSON (the PDF renderer is a stub, see
-sinks/pdf_report.py).
+cache merge → CSV/JSON export, analysis text, PNG charts and one report
+PDF per period, all written to ``--cache-dir``; prints one JSON summary
+line.
+`analyze` ≙ `python -m backend.analyze_pages` (EP2) — prints the analysis
+text.
+`report`  ≙ `python -m backend.generate_reports` (EP3) — prints one
+period's render-ready payload as JSON (the PDFs come from `pipeline`).
+
+``--now`` takes an ISO timestamp; one with a UTC offset is converted to
+naive UTC, the form every injected ``now`` has.
 """
 
 from __future__ import annotations
@@ -22,9 +27,10 @@ from datetime import datetime, timezone
 
 
 def _now(arg: str | None) -> datetime:
-    if arg:
-        return datetime.fromisoformat(arg)
-    return datetime.now(timezone.utc).replace(tzinfo=None)
+    now = datetime.fromisoformat(arg) if arg else datetime.now(timezone.utc)
+    if now.tzinfo is not None:
+        now = now.astimezone(timezone.utc).replace(tzinfo=None)
+    return now
 
 
 def main(argv: list[str] | None = None) -> int:

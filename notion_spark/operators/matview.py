@@ -119,19 +119,3 @@ def refresh(
     return merge_states(
         state, build_state(batch, keys, sums, mins, maxs), keys, sums, mins, maxs
     )
-
-
-def finalize(
-    state: DataFrame,
-    avgs: Sequence[str] = (),
-) -> DataFrame:
-    """Read-time derivations over a state frame: avg_<c> = sum_<c>/cnt as
-    DECIMAL(28,6) (exact division of exact operands — engine-neutral).
-    Keeps every state column; adds one derived column per requested avg."""
-    out = state
-    for c in avgs:
-        out = out.withColumn(
-            f"avg_{c}",
-            (F.col(f"sum_{c}") / F.col("cnt")).cast("decimal(28,6)"),
-        )
-    return out

@@ -13,23 +13,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def mark_group_boundaries(
-    df: DataFrame,
-    group_col: str,
-    order_by: list[Column],
-    out: str = "is_group_start",
-) -> DataFrame:
-    """Flag the first row of each run of equal ``group_col`` values under
-    the given total order (generate_reports.py:527-546 header emission)."""
-    w = Window.orderBy(*order_by)
-    prev = F.lag(F.col(group_col)).over(w)
-    # row 1 is always a boundary; after that, null-SAFE inequality so a
-    # null group key forms its own run rather than restarting every row.
-    return df.withColumn(
-        out, (F.row_number().over(w) == 1) | ~(prev.eqNullSafe(F.col(group_col)))
-    )
-
-
 def partitioned_group_boundaries(
     df: DataFrame,
     partition_col: str,
@@ -37,10 +20,13 @@ def partitioned_group_boundaries(
     order_by: list[Column],
     out: str = "is_group_start",
 ) -> DataFrame:
-    """Scale-safe variant: boundaries within each partition key (no global
-    single-partition window)."""
+    """Flag the first row of each run of equal ``group_col`` values under
+    the given order, within each ``partition_col`` key (generate_reports.py:
+    527-546 header emission; no global single-partition window)."""
     w = Window.partitionBy(partition_col).orderBy(*order_by)
     prev = F.lag(F.col(group_col)).over(w)
+    # row 1 is always a boundary; after that, null-SAFE inequality so a
+    # null group key forms its own run rather than restarting every row.
     return df.withColumn(
         out, (F.row_number().over(w) == 1) | ~(prev.eqNullSafe(F.col(group_col)))
     )

@@ -51,16 +51,11 @@ from notion_spark.parity.q_ext import _hu
     """,
 )
 def streaming_drift_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day drift scores from the streaming monitor's STORED-COUNTS
-    batch half (`streaming.drift.tv_against_reference`): tumbling 1-day
-    event-time windows of the event-type mix scored by exact-integer TV
-    distance against the full-corpus reference mix. The streaming half
-    (`windowed_category_counts`) emits rows IDENTICAL to the batch
-    window aggregate (pinned by the batch==stream equivalence test in
-    tests/test_streaming_drift.py); this row certifies the scorer
-    end-to-end against the DuckDB oracle — closing the r10 verdict's
-    ask #8 (the one streaming operator whose batch half lacked an
-    oracle row)."""
+    """Per-day drift scores from `streaming.drift.tv_against_reference`:
+    tumbling 1-day event-time windows of the event-type mix scored by
+    exact-integer TV distance against the full-corpus reference mix;
+    this row certifies the scorer end-to-end against the DuckDB
+    oracle."""
     from notion_spark.streaming.drift import tv_against_reference
 
     e = read_table(spark, sf_dir, "events").filter(

@@ -848,28 +848,6 @@ def source_rebalance_plan(
     )
 
 
-def source_rebalance(
-    df: DataFrame,
-    source_col: str = "source",
-    key_col: str = "doc_id",
-    max_share: float = 0.3,
-    buckets: int = 10_000,
-) -> DataFrame:
-    """Apply the rebalance plan with the deterministic hash-bucket
-    sampler: each over-cap source keeps ~keep_rate of its rows (row-exact
-    reproducible, no RNG). The plan is tiny (one row per source) and
-    broadcasts; the filter is a single pass over the corpus."""
-    plan = source_rebalance_plan(df, source_col, max_share).select(
-        F.col("source").alias("_plan_source"),
-        (F.col("keep_rate") * buckets).cast("long").alias("_cut"),
-    )
-    return (
-        df.join(F.broadcast(plan), df[source_col] == plan["_plan_source"])
-        .filter(hash_bucket(F.col(key_col), buckets) < F.col("_cut"))
-        .drop("_plan_source", "_cut")
-    )
-
-
 # -------------------------------------------- largest-remainder apportionment
 def largest_remainder_quotas(
     df: DataFrame,

@@ -64,14 +64,6 @@ def _raw_shingles(tokens: Column, n: int = 3) -> Column:
     )
 
 
-def token_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct n-gram token shingles for one-off/targeted use. For bulk
-    pipelines prefer `shingle_hashes` (exploded + hashed form)."""
-    c = F.col(col) if isinstance(col, str) else col
-    # Bind via a no-op: small inputs only; bulk paths use shingle_hashes.
-    return F.array_distinct(_raw_shingles(F.split(F.trim(c), r"\s+"), n))
-
-
 def _fan_out(df: DataFrame) -> DataFrame:
     """Fan the docs out across cores BEFORE an expensive explode: a
     single-file corpus arrives as ONE input partition, which would pin
@@ -1533,28 +1525,6 @@ def levenshtein_pairs_minhash(
 
 
 # ------------------------------------------------ cross-corpus (incremental)
-def cross_exact_drop(
-    new: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
-    """Incremental exact dedup: ``new`` rows whose content hash already
-    exists in ``corpus`` are dropped (one anti-join on md5; the corpus
-    side pre-aggregates to distinct hashes, so only the hash set — not
-    the corpus — crosses the shuffle). Null-text rows pass through, as in
-    `drop_exact_dups`."""
-    seen = (
-        corpus.filter(F.col(text_col).isNotNull())
-        .select(F.md5(F.col(text_col)).alias("__h"))
-        .distinct()
-    )
-    candidate = new.filter(F.col(text_col).isNotNull()).withColumn(
-        "__h", F.md5(F.col(text_col))
-    )
-    kept = candidate.join(seen, "__h", "left_anti").drop("__h")
-    return kept.unionByName(new.filter(F.col(text_col).isNull()))
-
-
 def cross_minhash_candidates(
     new: DataFrame,
     corpus: DataFrame,
@@ -1725,23 +1695,6 @@ def cross_minhash_pairs(
     return out.select(
         F.col("id_a").alias("id_new"), F.col("id_b").alias("id_corpus"), "jaccard"
     )
-
-
-def drop_cross_near_dups(
-    new: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    **kw,
-) -> DataFrame:
-    """``new`` minus exact matches and near-duplicates of ``corpus``:
-    the full incremental admission filter."""
-    survivors = cross_exact_drop(new, corpus, text_col)
-    dup_ids = cross_minhash_pairs(
-        survivors, corpus, text_col, id_col, threshold, **kw
-    ).select(F.col("id_new").alias(id_col)).distinct()
-    return survivors.join(dup_ids, id_col, "left_anti")
 
 
 # ------------------------------------------------------------ SimHash

@@ -70,12 +70,6 @@ def expect_matches(col: str, pattern: str, max_ppm: int = 0) -> Expectation:
     return Expectation(f"matches({col})", _count_if(pred), max_ppm)
 
 
-def expect_positive_count(min_rows: int = 1) -> Expectation:
-    """Table-level: at least ``min_rows`` rows. Violations = shortfall."""
-    short = F.greatest(F.lit(min_rows) - F.count(F.lit(1)), F.lit(0))
-    return Expectation(f"min_rows({min_rows})", short.cast("long"), 0)
-
-
 def check(
     df: DataFrame,
     expectations: Sequence[Expectation],

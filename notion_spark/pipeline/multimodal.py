@@ -198,63 +198,6 @@ def phash_signatures(
     )
 
 
-def phash_dct64_signatures(
-    assets: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "asset_id",
-    side: int = 32,
-) -> DataFrame:
-    """A REAL 64-bit perceptual hash (Zauner 2010 pHash shape: 2-D
-    DCT-II of a ``side``×``side`` grayscale image, the low-frequency
-    8×8 coefficient block thresholded at its median, packed row-major
-    MSB-first into 16 hex chars) — computed with numpy inside an
-    Arrow-batched pandas_udf. Output: (id_col, hex16), the exact frame
-    `phash_hamming_pairs(signatures=...)` consumes.
-
-    The only stubbed step in this container is FORMAT DECODING (no
-    PIL/ffmpeg): the payload's first side² bytes are interpreted as a
-    raw grayscale bitmap (zero-padded when shorter) — swap that one
-    line for `PIL.Image.open(...).convert('L').resize(...)` when a
-    decoder ships; the DCT, median threshold, bit packing, and all
-    downstream banding/verify are the real algorithm and are
-    unit-tested for the property that matters: small pixel noise moves
-    the hash ≤ a few bits, different content moves ~half of them.
-
-    No DuckDB oracle (a 1024-point float DCT is not reasonably
-    SQL-expressible); correctness is unit-level, and the banded
-    candidate join it feeds stays oracle-checked via the stand-in row
-    (multimodal_phash_pairs)."""
-    import numpy as np
-
-    from pyspark.sql.types import StringType
-
-    n = side * side
-    # orthonormal DCT-II basis, built once driver-side and closed over
-    k = np.arange(side).reshape(-1, 1)
-    x = np.arange(side).reshape(1, -1)
-    basis = np.cos(np.pi * (2 * x + 1) * k / (2 * side)) * np.sqrt(2.0 / side)
-    basis[0, :] /= np.sqrt(2.0)
-
-    def one(b: bytes | None) -> str:
-        if b is None:
-            b = b""
-        raw = bytes(b)[:n].ljust(n, b"\0")
-        img = np.frombuffer(raw, dtype=np.uint8).astype(np.float64).reshape(side, side)
-        d = basis @ img @ basis.T
-        block = d[:8, :8].ravel()
-        bits = block > np.median(block)
-        val = 0
-        for bit in bits:
-            val = (val << 1) | int(bit)
-        return f"{val:016x}"
-
-    def batch(s: pd.Series) -> pd.Series:
-        return s.map(one)
-
-    udf = F.pandas_udf(batch, StringType())
-    return assets.select(F.col(id_col).alias(id_col), udf(F.col(payload_col)).alias("hex16"))
-
-
 def signatures_from_hex(
     sig: DataFrame,
     hex_col: str = "hex16",

@@ -88,9 +88,7 @@ def kmv_distinct(
 def hll_bucket_rho(
     col: Column, p: int = 8, hasher: Callable[[Column], Column] = md5_hash60
 ) -> tuple[Column, Column]:
-    """The (bucket, rho) column pair every HLL variant derives from —
-    shared by the batch register builder and the streaming windowed one
-    so their registers are identical rows."""
+    """The (bucket, rho) column pair every HLL register derives from."""
     tail_bits = _HASH_BITS - p
     h = hasher(col)
     bucket = F.shiftright(h, tail_bits)
@@ -161,11 +159,9 @@ def hll_distinct(
 def hll_estimate(
     regs: DataFrame, p: int = 8, by: Sequence[str] | str = ()
 ) -> DataFrame:
-    """Estimate from a register frame — `hll_registers` output, a merged
-    union of shard registers, or a streaming register store
-    (streaming/sketches.hll_windowed_registers). Identical math to the
-    inline path `hll_distinct` always used; factored so batch and
-    streaming sketches share one estimator."""
+    """Estimate from a register frame — `hll_registers` output or a
+    merged union of shard registers. Identical math to the inline path
+    `hll_distinct` always used."""
     m = 1 << p
     # 0.7213/(1+1.079/m) is the standard alpha for m >= 128
     alpha = 0.7213 / (1 + 1.079 / m) if m >= 128 else {16: 0.673, 32: 0.697, 64: 0.709}[m]

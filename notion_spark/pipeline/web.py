@@ -106,15 +106,6 @@ def canonical_url_sql(expr: str) -> str:
     )
 
 
-def host_of(url: Column | str) -> Column:
-    """Lowercased host of an absolute URL (no port). Registrable-domain
-    grouping (e.g. per-site quotas, robots buckets) keys on this."""
-    s = F.trim(F.col(url) if isinstance(url, str) else url)
-    after = F.regexp_replace(s, SCHEME_RE, "")
-    authority = F.regexp_extract(after, r"^([^/?#]*)", 1)
-    return F.lower(F.regexp_extract(authority, r"^([^:]*)", 1))
-
-
 def dedup_by_url(
     df: DataFrame,
     url_col: str,

@@ -52,16 +52,6 @@ def overwrite_store(df: DataFrame, path: str) -> None:
     os.rename(tmp, path)
 
 
-def write_partitioned_by_day(df: DataFrame, ts_col: str, path: str) -> None:
-    """Date-partitioned layout (hive-style `event_date=.../`): time-range
-    queries then PRUNE partitions at plan time instead of scanning —
-    the storage layout half of predicate pushdown. Daily granularity keeps
-    file counts sane at 100 TB (one directory per day, sized by
-    maxRecordsPerFile if needed)."""
-    out = df.withColumn("event_date", F.to_date(F.col(ts_col)))
-    out.write.mode("overwrite").partitionBy("event_date").parquet(path)
-
-
 def assert_unpartitioned(path: str) -> None:
     """Refuse hive-partitioned stores (key=value path segments) for
     whole-directory rewrites: a flat rewrite silently destroys partition

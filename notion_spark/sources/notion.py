@@ -9,8 +9,11 @@ in tests/test_http_client.py); `FixtureClient` serves tests and offline
 runs from static JSON. The fetched payloads land in the blocks/comments/
 tasks tables and everything downstream is pure DataFrame.
 
-Change detection happens AFTER the cheap header scan: only pages that
-survive operators.incremental.changed_rows get block/comment fetches.
+`blocks_df`/`comments_df` fetch the bodies of every page id they are
+given; no caller in the package narrows that list to changed pages yet.
+Change detection happens after the fetch, at the store merge:
+`pipeline_app.refresh_cache` keeps only rows that survive
+`operators.incremental.changed_rows` on (uid, updated_time).
 """
 
 from __future__ import annotations

@@ -1,6 +1,8 @@
-"""Structured Streaming extensions (SURVEY §2.12).
+"""Batch halves of the event-stream operators (SURVEY §2.12).
 
-The reference's incremental fetch is batch watermark-upsert; the streaming
-module offers the continuous analogue: a stream of task/event updates
-merged into the canonical store keep-last per key via foreachBatch.
+Only the batch operators the parity registry certifies against DuckDB
+live here: `sessions.sessionize_batch` (events_sessionize),
+`sessions.session_aggregates` (session_native_aggregates) and
+`drift.tv_against_reference` (streaming_drift_scores). No Structured
+Streaming query is started by the package.
 """

@@ -1,16 +1,12 @@
-"""Streaming drift monitor: per-window categorical mix vs a reference.
+"""Drift scoring: per-window categorical mix vs a reference.
 
 The deployment question behind `profile.tv_distance` ("did the mix
-shift?") is usually asked CONTINUOUSLY — is this hour's event-type /
+shift?") is usually asked per time window — is this hour's event-type /
 language / source mix drifting away from the corpus the model was
-trained on? The streaming half is a PURE built-in aggregation
-(`withWatermark` + `groupBy(window, category).count()` — state bounded
-by |categories| per open window, late in-watermark data folds in, the
-watermark expires whole windows); the scoring half is a BATCH operator
-over the stored counts, shared with the reference-mix frame, so the
-alert path reuses the exact integer TV arithmetic — no separate
-streaming math to certify. Same split as streaming/sketches.py
-(registers in the stream, estimation downstream).
+trained on? `tv_against_reference` scores stored per-window category
+counts (a plain ``groupBy(window, category).count()``) against a
+reference-mix frame with the exact integer TV arithmetic of
+`profile.tv_distance`.
 """
 
 from __future__ import annotations
@@ -20,47 +16,17 @@ from pyspark.sql import functions as F
 
 from notion_spark.functions.exactmath import D38
 
-__all__ = ["windowed_category_counts", "tv_against_reference"]
-
-
-def windowed_category_counts(
-    stream: DataFrame,
-    ts_col: str,
-    cat_col: str,
-    window: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """(window_start, window_end, category, n) per tumbling event-time
-    window — the drift monitor's state rows. Pure streaming
-    aggregation: state is at most |categories| rows per open window
-    regardless of stream volume; emitted rows are IDENTICAL to the
-    batch ``groupBy(window, category).count()`` over the same window's
-    data (pinned by the equivalence test)."""
-    return (
-        stream.filter(F.col(cat_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(F.col(ts_col), window).alias("win"),
-            F.col(cat_col).alias("category"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "category",
-            "n",
-        )
-    )
+__all__ = ["tv_against_reference"]
 
 
 def tv_against_reference(
     counts: DataFrame,
     reference: DataFrame,
 ) -> DataFrame:
-    """Per-window total-variation distance of the stored
-    ``windowed_category_counts`` rows against a reference mix
-    (category, n_ref) — one row per window_start: (window_start,
-    n_window, tv_micro), the same cross-multiplied exact-integer
+    """Per-window total-variation distance of stored per-window counts
+    (window_start, category, n) against a reference mix (category,
+    n_ref) — one row per window_start: (window_start, n_window,
+    tv_micro), the same cross-multiplied exact-integer
     arithmetic as `profile.tv_distance` (categories on one side only
     carry their full mass; an empty side yields NULL).
 

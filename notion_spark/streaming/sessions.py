@@ -1,33 +1,22 @@
-"""Sessionization — gap-based session assignment over an event stream.
+"""Sessionization — gap-based session assignment over event rows.
 
-Three implementations with identical boundary semantics (gap strictly
+Two implementations with identical boundary semantics (gap strictly
 greater than the timeout ⇒ new session; an event at exactly start+gap
 merges — verified against the native operator):
 
 - `sessionize_batch`: native window functions — lag + cumulative sum of
-  boundary flags per user. One shuffle; the batch/backfill path.
-- `sessionize_stream`: applyInPandasWithState — the custom stateful
-  streaming operator (SURVEY §2.12 stretch surface; the reference has no
-  streaming at all). Keeps (last_ts, session_seq) per user between
-  micro-batches, emits rows as they arrive with their session ids.
+  boundary flags per user. One shuffle; per-EVENT session ids
+  (events_sessionize, oracle-checked).
 - `session_aggregates`: the built-in `session_window` — pure-JVM
-  per-SESSION aggregates, batch and watermarked streaming from one code
-  path; oracle-checked cross-engine (session_native_aggregates).
+  per-SESSION aggregates; oracle-checked cross-engine
+  (session_native_aggregates).
 """
 
 from __future__ import annotations
 
-import datetime as dt
-from collections.abc import Iterable
-
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
-
-_STATE_SCHEMA = "last_ts double, seq int"
 
 
 def sessionize_batch(
@@ -52,65 +41,6 @@ def sessionize_batch(
     )
 
 
-def sessionize_stream(
-    stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: float = 30.0,
-) -> DataFrame:
-    """Streaming sessionization via applyInPandasWithState: per-user state
-    carries (last event time, session counter) across micro-batches.
-
-    State is two scalars per user — memory-bounded regardless of stream
-    length; a processing-time timeout would evict idle users in a
-    long-running deployment (kept NoTimeout here for determinism)."""
-    gap_s = gap_minutes * 60.0
-    # derive the output schema from the ACTUAL key/ts columns — a
-    # hardcoded 'user_id long' would break (or silently rename) custom
-    # column names/types
-    in_fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = (
-        f"{user_col} {in_fields[user_col]}, {ts_col} {in_fields[ts_col]}, session_id string"
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        (user,) = key
-        if state.exists:
-            last_ts, seq = state.get
-        else:
-            last_ts, seq = None, 0
-        # One event-time sort across the whole micro-batch (chunks of the
-        # iterator arrive in arbitrary order); ordering ACROSS batches is
-        # arrival order, as for any append-mode stateful op.
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            state.update((last_ts, seq))
-            return
-        pdf = pd.concat(chunks).sort_values(ts_col)
-        ids = []
-        for ts in pdf[ts_col]:
-            t = ts.timestamp()
-            if last_ts is None or t - last_ts > gap_s:
-                seq += 1
-            last_ts = t
-            ids.append(f"{user}-{seq}")
-        state.update((last_ts, seq))
-        yield pd.DataFrame({user_col: pdf[user_col], ts_col: pdf[ts_col], "session_id": ids})
-
-    return (
-        stream.groupBy(F.col(user_col))
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def session_aggregates(
     df: DataFrame,
     user_col: str = "user_id",
@@ -119,23 +49,18 @@ def session_aggregates(
     value_col: str | None = None,
 ) -> DataFrame:
     """Per-SESSION aggregates via the NATIVE ``session_window`` — the
-    pure-JVM third implementation of the same gap rule: Spark merges
-    events within ``gap_minutes`` of each other into one growing window
-    per user and the aggregate runs inside whole-stage codegen, no
-    Python state function at all.
+    pure-JVM form of the same gap rule: Spark merges events within
+    ``gap_minutes`` of each other into one growing window per user and
+    the aggregate runs inside whole-stage codegen, no Python at all.
 
-    Works identically on batch and streaming frames (streaming needs a
-    watermark upstream; state evicts when the watermark passes a
-    session's close). Use THIS when only per-session aggregates are
-    needed — counts, sums, bounds; `sessionize_stream` remains for
-    per-EVENT session ids and arbitrary in-session logic the built-in
-    aggregate can't express.
+    Use THIS when only per-session aggregates are needed — counts, sums,
+    bounds; `sessionize_batch` gives per-EVENT session ids.
 
     Output: (user, session_start, session_end, n_events[, sum_value]) —
     session_end is last_event + gap per session_window semantics; equal
     session boundaries to `sessionize_batch` (same strict-gap rule)."""
-    # no int() truncation: a fractional-second gap must match the other
-    # two implementations bit-for-bit (Spark accepts '30.5 seconds')
+    # no int() truncation: a fractional-second gap must match
+    # `sessionize_batch` bit-for-bit (Spark accepts '30.5 seconds')
     gap = f"{gap_minutes * 60} seconds"
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if value_col is not None:

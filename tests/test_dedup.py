@@ -16,13 +16,6 @@ def _docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-def test_token_shingles(spark):
-    df = spark.createDataFrame([("a b c d",), ("a b",)], ["text"])
-    out = df.select(D.token_shingles("text", 3).alias("sh")).collect()
-    assert out[0].sh == ["a b c", "b c d"]
-    assert out[1].sh == []
-
-
 def test_shingle_width_survives_partition_probe_fallback(spark, monkeypatch):
     # Regression: the Spark-Connect fallback branch (no sparkContext/.rdd)
     # must not leak the shuffle-partition count into the shingle width n.
@@ -352,18 +345,6 @@ def test_banded_candidates_agg_and_window_impls_agree(spark):
     assert all(p[2] == 0 for p in hot_pairs)  # center sig carried with center id
 
 
-def test_cross_exact_drop(spark):
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta epsilon zeta")], ["doc_id", "text"]
-    )
-    new = spark.createDataFrame(
-        [(10, "alpha beta gamma"), (11, "completely novel content"), (12, None)],
-        "doc_id long, text string",
-    )
-    kept = sorted(r.doc_id for r in D.cross_exact_drop(new, corpus).collect())
-    assert kept == [11, 12]  # exact dup dropped, novel + null-text kept
-
-
 def test_cross_minhash_pairs_only_cross_side(spark):
     base = " ".join(f"token{i} word{i} item{i}" for i in range(14))  # 42 tokens
     near = base.replace("word7", "sleepy")  # jaccard ~0.86 — above the LSH knee
@@ -378,21 +359,6 @@ def test_cross_minhash_pairs_only_cross_side(spark):
     assert (10, 1) in got
     assert all(idn in (10, 11) and idc in (1, 2, 3) for idn, idc in got)
     assert not any(r.id_new == 11 for r in pairs.collect())
-
-
-def test_drop_cross_near_dups_admission_filter(spark):
-    base = "one two three four five six seven eight nine ten eleven twelve"
-    corpus = spark.createDataFrame([(1, base)], ["doc_id", "text"])
-    new = spark.createDataFrame(
-        [
-            (10, base),                          # exact dup -> dropped
-            (11, base.replace("ten", "TEN")),    # near dup -> dropped
-            (12, "wholly different words in this one here friend"),
-        ],
-        ["doc_id", "text"],
-    )
-    kept = sorted(r.doc_id for r in D.drop_cross_near_dups(new, corpus, threshold=0.5).collect())
-    assert kept == [12]
 
 
 def test_cross_minhash_bucket_cap_keeps_bounded_candidates(spark):

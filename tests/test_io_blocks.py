@@ -268,51 +268,3 @@ def test_phash_decoder_swap_contract(spark):
     injected = phash_hamming_pairs(None, signatures=stand_in)
     as_set = lambda df: {(r.id_a, r.id_b, r.hamming) for r in df.collect()}  # noqa: E731
     assert as_set(builtin) == as_set(injected)
-
-
-def test_phash_dct64_real_hash_properties(spark):
-    """The real DCT pHash (numpy pandas_udf): perceptual locality —
-    small pixel noise moves few bits, different content moves many —
-    and the full banded pipeline finds the noisy near-dup."""
-    import numpy as np
-
-    from notion_spark.pipeline.multimodal import (
-        phash_dct64_signatures,
-        phash_hamming_pairs,
-    )
-
-    rng = np.random.default_rng(7)
-    side = 32
-    # structured image: smooth gradient + a bright square
-    base = np.zeros((side, side), dtype=np.float64)
-    base += np.linspace(0, 180, side)[None, :]
-    base[8:20, 8:20] += 60
-    base = np.clip(base, 0, 255).astype(np.uint8)
-    noisy = base.astype(np.int16).copy()
-    mask = rng.random((side, side)) < 0.05          # 5% of pixels
-    noisy[mask] += rng.integers(-12, 13, mask.sum()).astype(np.int16)
-    noisy = np.clip(noisy, 0, 255).astype(np.uint8)
-    other = rng.integers(0, 256, (side, side)).astype(np.uint8)
-
-    assets = spark.createDataFrame(
-        [
-            ("base", bytearray(base.tobytes())),
-            ("noisy", bytearray(noisy.tobytes())),
-            ("other", bytearray(other.tobytes())),
-        ],
-        "asset_id string, payload binary",
-    )
-    sig = phash_dct64_signatures(assets)
-    hexes = {r.asset_id: r.hex16 for r in sig.collect()}
-    ham = lambda a, b: bin(int(hexes[a], 16) ^ int(hexes[b], 16)).count("1")  # noqa: E731
-    assert ham("base", "noisy") <= 3, f"noise moved {ham('base','noisy')} bits"
-    assert ham("base", "other") >= 16, f"different content only {ham('base','other')} bits"
-
-    # end to end: banding finds the near pair (Hamming <= 3 pigeonholes
-    # into >= 1 shared band) with the exact distance
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in phash_hamming_pairs(None, signatures=sig).collect()
-    }
-    assert got[("base", "noisy")] == ham("base", "noisy")
-    assert ("base", "other") not in got or got[("base", "other")] > 3

@@ -9,7 +9,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from notion_spark.operators.diff import snapshot_diff
-from notion_spark.operators.matview import build_state, finalize, merge_states, refresh
+from notion_spark.operators.matview import build_state, merge_states, refresh
 
 
 def _orders(spark, sf_dir):
@@ -55,18 +55,6 @@ class TestMatview:
         }
         assert out["x"]["cnt"] == 2 and str(out["x"]["sum_v"]) == "10.00"
         assert out["y"]["cnt"] == 1 and out["y"]["min_v"] == 7
-
-    def test_finalize_avg_exact_decimal(self, spark, sf_dir):
-        orders = _orders(spark, sf_dir)
-        state = build_state(orders, keys=["o_orderpriority"], sums=["o_totalprice"])
-        fin = finalize(state, avgs=["o_totalprice"])
-        row = fin.filter(F.col("o_orderpriority").isNotNull()).first()
-        import decimal
-
-        want = (decimal.Decimal(row["sum_o_totalprice"]) / row["cnt"]).quantize(
-            decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-        )
-        assert row["avg_o_totalprice"] == want
 
     def test_state_plan_single_shuffle(self, spark, sf_dir):
         plan = build_state(_orders(spark, sf_dir), **SPEC)._jdf.queryExecution().executedPlan().toString()

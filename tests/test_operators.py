@@ -18,7 +18,6 @@ from notion_spark.operators import (
     value_counts,
     weekly_counts,
 )
-from notion_spark.operators.windows import mark_group_boundaries
 
 
 def test_array_overlap_filter(spark):
@@ -96,14 +95,6 @@ def test_changed_rows_watermark(spark):
     fetched = spark.createDataFrame([("a", t1), ("b", t2), ("c", t1)], "uid string, wm timestamp")
     got = sorted(r.uid for r in changed_rows(fetched, cache, "uid", "wm").collect())
     assert got == ["b", "c"]  # unchanged 'a' skipped, modified 'b' + new 'c' fetched
-
-
-def test_mark_group_boundaries(spark):
-    df = spark.createDataFrame(
-        [(1, "p1"), (2, "p1"), (3, "p2"), (4, None), (5, None)], "ord int, grp string"
-    )
-    rows = mark_group_boundaries(df, "grp", [F.asc("ord")]).orderBy("ord").collect()
-    assert [r.is_group_start for r in rows] == [True, False, True, True, False]
 
 
 def test_asof_join_semantics(spark):

@@ -70,23 +70,6 @@ def test_filter_window_anti_pushes_range(spark, sf_dir):
     assert "GreaterThanOrEqual(o_orderdate" in plan
 
 
-def test_partition_pruning(spark, sf_dir, tmp_path):
-    """Date-partitioned writes let time filters prune at plan time."""
-    from pyspark.sql import functions as F
-
-    from notion_spark.sources.io import read_table, write_partitioned_by_day
-
-    path = str(tmp_path / "events_by_day")
-    write_partitioned_by_day(read_table(spark, sf_dir, "events"), "ts", path)
-    back = spark.read.parquet(path)
-    q = back.filter(F.col("event_date") == "2024-01-05")
-    plan = plan_of(q)
-    assert "PartitionFilters" in plan and "event_date" in plan
-    # pruned scan reads only the one day's partition
-    n_day = q.count()
-    assert 0 < n_day < back.count()
-
-
 def test_decontam_broadcasts_benchmark_no_corpus_preshuffle(spark, sf_dir):
     plan = plan_of(parity.QUERIES["curation_decontam"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan      # benchmark gram set broadcast

@@ -363,40 +363,6 @@ def test_snapshot_diff_matches_dict_reference(spark, old, new):
 
 @SETTINGS
 @given(
-    imps=st.lists(st.tuples(st.integers(0, 2), st.integers(0, 50)), min_size=1, max_size=8),
-    clks=st.lists(st.tuples(st.integers(0, 2), st.integers(0, 50)), min_size=1, max_size=8),
-)
-def test_interval_join_matches_bruteforce(spark, imps, clks):
-    """interval_join == the O(n^2) reference filter for arbitrary event
-    layouts (same user, click in [imp, imp + 10 minutes])."""
-    import datetime as dt
-
-    from notion_spark.streaming.joins import interval_join
-
-    t0 = dt.datetime(2026, 1, 1)
-    idf = spark.createDataFrame(
-        [(str(u), t0 + dt.timedelta(minutes=m), i) for i, (u, m) in enumerate(imps)],
-        "k string, imp_ts timestamp, imp_id int",
-    )
-    cdf = spark.createDataFrame(
-        [(str(u), t0 + dt.timedelta(minutes=m), i) for i, (u, m) in enumerate(clks)],
-        "k string, clk_ts timestamp, clk_id int",
-    )
-    got = {
-        (r["imp_id"], r["clk_id"])
-        for r in interval_join(idf, cdf, "k", "imp_ts", "clk_ts", max_delay="10 minutes").collect()
-    }
-    want = {
-        (i, j)
-        for i, (u, m) in enumerate(imps)
-        for j, (u2, m2) in enumerate(clks)
-        if u == u2 and 0 <= m2 - m <= 10
-    }
-    assert got == want
-
-
-@SETTINGS
-@given(
     vals=st.lists(st.one_of(st.none(), st.integers(0, 5)), min_size=1, max_size=12),
     ppm=st.integers(0, 1_000_000),
 )

@@ -2,9 +2,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from notion_spark.streaming.sessions import sessionize_batch, sessionize_stream
+from notion_spark.streaming.sessions import sessionize_batch
 
 T0 = dt.datetime(2026, 1, 1, 12, 0, 0)
 
@@ -36,38 +34,6 @@ def test_sessionize_batch(spark):
     assert got == EXPECTED
 
 
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    src = tmp_path / "events"
-    src.mkdir()
-    # two micro-batch files split mid-session: state must carry across
-    ev = _events(spark).orderBy("user_id", "ts").collect()
-    # single-part files: multi-part writes would stream as separate,
-    # arbitrarily-ordered micro-batches (out-of-order event time)
-    spark.createDataFrame(ev[:3], "user_id long, ts timestamp").coalesce(1).write.parquet(str(src / "b1"))
-    spark.createDataFrame(ev[3:], "user_id long, ts timestamp").coalesce(1).write.parquet(str(src / "b2"))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.ts): r.session_id
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-    }
-    assert got == EXPECTED
-
-
 def test_skew_joins(spark):
     from notion_spark.operators.skew import hot_key_split_join, salted_join
 
@@ -83,60 +49,6 @@ def test_skew_joins(spark):
     # left join keeps unmatched left rows exactly once
     lonly = spark.createDataFrame([("nomatch", 1)], "k string, v int")
     assert salted_join(lonly, right, "k", salts=4, how="left").count() == 1
-
-
-# ------------------------------------------------------------ streaming funnel
-def _funnel_events(spark):
-    rows = [
-        (1, T0, 1, "view"),
-        (1, T0 + dt.timedelta(minutes=1), 2, "click"),
-        (1, T0 + dt.timedelta(minutes=2), 3, "purchase"),
-        (2, T0, 4, "purchase"),                          # out of order: stays 0
-        (2, T0 + dt.timedelta(minutes=1), 5, "view"),    # then view -> 1
-        (3, T0, 6, "view"),
-        (3, T0 + dt.timedelta(minutes=3), 7, "click"),
-    ]
-    return spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long, event_type string")
-
-
-def test_funnel_stream_matches_batch(spark, tmp_path):
-    from notion_spark.operators.behavior import funnel_max_stage
-    from notion_spark.streaming.funnel import funnel_stage_stream
-
-    steps = ["view", "click", "purchase"]
-    batch = {
-        r.user: r.stage for r in funnel_max_stage(_funnel_events(spark), steps).collect()
-    }
-    assert batch == {1: 3, 2: 1, 3: 2}
-
-    src = tmp_path / "fevents"
-    src.mkdir()
-    ev = _funnel_events(spark).orderBy("event_id").collect()
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    # split mid-funnel for users 1 and 3: the stage int must carry across
-    spark.createDataFrame(ev[:4], schema).coalesce(1).write.parquet(str(src / "b1"))
-    spark.createDataFrame(ev[4:], schema).coalesce(1).write.parquet(str(src / "b2"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (
-        funnel_stage_stream(stream, steps)
-        .writeStream.format("memory")
-        .queryName("funnel_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "fckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # update mode: keep the LAST emitted stage per user across batches
-    rows = spark.sql("SELECT * FROM funnel_out").collect()
-    final: dict = {}
-    for r in rows:
-        final[r.user] = r.stage  # memory sink appends updates in order
-    assert final == batch
 
 
 class TestNativeSessionWindow:

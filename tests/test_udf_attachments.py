@@ -1,37 +1,7 @@
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F
-
 from notion_spark.config import EngineConfig
-from notion_spark.functions.udf import grouped_transform, utf8_byte_length, vectorized
 from notion_spark.sources.attachments import attachment_previews, read_attachment_files
-
-
-def test_vectorized_pandas_udf(spark):
-    df = spark.createDataFrame([("héllo",), ("ascii",), (None,)], "s string")
-    rows = [r.n for r in df.select(utf8_byte_length("s").alias("n")).collect()]
-    assert rows == [6, 5, 0]  # é is 2 bytes
-
-
-def test_vectorized_decorator_custom(spark):
-    @vectorized("double")
-    def half(s: pd.Series) -> pd.Series:
-        return s / 2.0
-
-    df = spark.createDataFrame([(4.0,), (5.0,)], "x double")
-    assert [r.h for r in df.select(half("x").alias("h")).collect()] == [2.0, 2.5]
-
-
-def test_grouped_transform(spark):
-    def demean(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.copy()
-        pdf["v"] = pdf["v"] - pdf["v"].mean()
-        return pdf
-
-    df = spark.createDataFrame([("a", 1.0), ("a", 3.0), ("b", 10.0)], "k string, v double")
-    out = {(r.k, r.v) for r in grouped_transform(df, ["k"], demean, "k string, v double").collect()}
-    assert out == {("a", -1.0), ("a", 1.0), ("b", 0.0)}
 
 
 def test_attachments_pipeline(spark, tmp_path):
