@@ -86,24 +86,30 @@ def main(argv: list[str] | None = None) -> int:
                 }
             )
         )
-    elif args.cmd == "analyze":
-        from notion_spark.normalize import normalize_for_analysis
-        from notion_spark.queries.analysis import run_all
-        from notion_spark.sinks.golden_report import render_golden_style
-        from notion_spark.sinks.text_report import render_analysis
+    else:
+        # analyze/report: the store read, cached for the sections that all
+        # read it and released however the command ends
+        store = spark.read.parquet(cache).cache()
+        try:
+            if args.cmd == "analyze":
+                from notion_spark.normalize import normalize_for_analysis
+                from notion_spark.queries.analysis import run_all
+                from notion_spark.sinks.golden_report import render_golden_style
+                from notion_spark.sinks.text_report import render_analysis
 
-        df = normalize_for_analysis(spark.read.parquet(cache).cache())
-        sections = run_all(df, now, cfg)
-        render = render_golden_style if args.golden_style else render_analysis
-        sys.stdout.write(render(sections, now, cfg))
-    elif args.cmd == "report":
-        from notion_spark.normalize import normalize_for_reports
-        from notion_spark.queries.reports import report_frames
-        from notion_spark.sinks.pdf_report import report_payload
+                sections = run_all(normalize_for_analysis(store), now, cfg)
+                render = render_golden_style if args.golden_style else render_analysis
+                sys.stdout.write(render(sections, now, cfg))
+            else:
+                from notion_spark.normalize import normalize_for_reports
+                from notion_spark.queries.reports import report_frames
+                from notion_spark.sinks.pdf_report import report_payload
 
-        df = normalize_for_reports(spark.read.parquet(cache).cache())
-        frames = report_frames(df, (args.period,), now, cfg)
-        print(json.dumps(report_payload(frames, now, cfg)[args.period], default=str))
+                frames = report_frames(normalize_for_reports(store), (args.period,), now, cfg)
+                payload = report_payload(frames, now, cfg)[args.period]
+                print(json.dumps(payload, default=str))
+        finally:
+            store.unpersist()
     return 0
 
 

@@ -58,8 +58,7 @@ class EngineConfig:
     body_content_max_lines: int = 3
     # Truncation width for displayed names (text_style.py:142-149).
     truncate_width: int = 60
-    # Top-k limits used by the analysis queries (analyze_pages.py:333-341, 412).
-    backlog_limit: int = 15
+    # Top-k limits used by the analysis queries (analyze_pages.py:412, 439).
     oldest_pending_limit: int = 5
     velocity_weeks: int = 12
     # Goals overflow policy threshold (generate_reports.py:447-466).

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from notion_spark.config import KNOWN_STATUSES, PRIORITY_SCORES, UNKNOWN_PRIORITY_SCORE
+from notion_spark.functions.text import fast_lower
 
 # ---------------------------------------------------------------- P1
 def strip_column_names(df: DataFrame) -> DataFrame:
@@ -92,7 +93,7 @@ def normalize_status(df: DataFrame, col: str = "status", lowercase_rest: bool = 
     ``lowercase_rest=True``)."""
     mapping = F.create_map(*[F.lit(x) for kv in _STATUS_MAP.items() for x in kv])
     mapped = mapping[F.col(col)]
-    rest = F.lower(F.col(col)) if lowercase_rest else F.col(col)
+    rest = fast_lower(col) if lowercase_rest else F.col(col)
     return df.withColumn(col, F.coalesce(mapped, rest))
 
 
@@ -161,7 +162,7 @@ def completed_fallback(
 ) -> DataFrame:
     """Done rows with null Completed inherit Updated Time
     (generate_reports.py:162-167)."""
-    done_null = F.lower(F.col(status_col)).contains("done") & F.col(completed_col).isNull()
+    done_null = fast_lower(status_col).contains("done") & F.col(completed_col).isNull()
     return df.withColumn(
         completed_col, F.when(done_null, F.col(updated_col)).otherwise(F.col(completed_col))
     )

@@ -24,12 +24,6 @@ def array_overlap_filter(df: DataFrame, col: str, wanted: Sequence[str]) -> Data
     return df.filter(F.arrays_overlap(F.col(col), F.array(*[F.lit(w) for w in wanted])))
 
 
-# ---------------------------------------------------------------- F2
-def status_in(col: str, values: Sequence[str]) -> Column:
-    """Case-insensitive status membership (analyze_pages.py:289-293)."""
-    return F.lower(F.col(col)).isin([v.lower() for v in values])
-
-
 # ---------------------------------------------------------------- F8
 def not_in_filter(df: DataFrame, col: str, known: Sequence[str]) -> DataFrame:
     """NOT-IN bucket: rows whose (lowercased) value is outside the known

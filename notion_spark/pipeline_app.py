@@ -9,15 +9,21 @@ serially, re-reading its CSV cache at every step. Here the pipeline is:
    ``n_cached`` count; the CSV/JSON export and both normalize presets
    read it, the presets as lazy uncached projections (the reference
    re-reads + re-normalizes 7×, SURVEY §4)
-4. sinks: golden text report, chart data, report payloads, CSV/JSON export
+4. the read path, three lazy plans over the cached store, built once per
+   cycle: the analysis row sections (every section a tag, ranked by
+   windows over one shared partitioning), the analysis counts (one
+   GROUPING SETS aggregate) and the report row sections of every period
+5. sinks: CSV/JSON export, analysis text, chart PNGs, report payloads,
+   one PDF per period
 
-The read path is built once per sync cycle, not once per period: each
-analysis section is collected once for the text and chart sinks, and all
-period reports come from one collect per report section. Planning runs no
-Spark job (the goals overflow gate is lazy), so the cycle's job count
-does not grow with the number of periods. One cached frame is held at a
-time — the ingest frame, then the store — each released in a ``finally``
-also when a step raises.
+The text sink collects the two analysis plans, the chart sink reuses
+what it collected and the payload sink collects the report plan: 8 Spark
+jobs under AQE for analysis, charts and all five periods' reports
+together. Planning runs no Spark job (the goals overflow gate is a
+window count), so the job count grows with neither the number of
+sections nor the number of periods. One cached frame is held at a time —
+the ingest frame, then the store — each released in a ``finally`` also
+when a step raises.
 
 Everything takes an injected ``now`` — no wall-clock anywhere.
 """
@@ -119,7 +125,7 @@ def run_pipeline(
             chart_paths = write_pngs(canvases, cache_dir)
             chart_bufs = [(c.rgb_bytes(), c.w, c.h) for c in canvases]
 
-        # EP3: every period's payload from one collect per report section
+        # EP3: every period's payload from one collect of the report plan
         # (app.py:72-99 runs one report per period), then one PDF per period
         frames = reports_q.report_frames(normalize_for_reports(store), periods, now, cfg)
         payloads = report_payload(frames, now, cfg)

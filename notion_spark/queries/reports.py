@@ -1,8 +1,17 @@
 """The report query suite (EP3 parity — reference backend/
-generate_reports.py). Section plans with parent-name broadcast join,
-grouped sorts and the goals overflow policy, built once for a whole batch
-of periods (`report_frames`); the PDF is a driver-side render over the
-collected, already-sorted rows (sinks/pdf_report.py).
+generate_reports.py). `report_frames` plans every report section of a
+whole batch of periods as ONE lazy `sections.section_rows` plan over the
+normalized frame: the parent-name broadcast join, then each row tagged
+with its sections (the goals of each period end, completed, in progress,
+uncategorized) and ranked in the section's grouped sort, with the goals
+overflow gate as a count over the section's window. `report_payload`
+(sinks/pdf_report.py) collects it once and the PDF is a driver-side
+render over the collected rows.
+
+The per-section plans at the end (`goals`, `completed_in_period`,
+`in_progress`) state each section the way the reference does, one plan
+per section; only the tests that check the combined plan against them
+call them.
 """
 
 from __future__ import annotations
@@ -11,14 +20,16 @@ from collections.abc import Sequence
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from notion_spark.config import REPORT_PERIOD_DAYS, EngineConfig
 from notion_spark.functions.dates import ts_lit
+from notion_spark.functions.text import fast_lower
 from notion_spark.operators.filters import array_overlap_filter, overflow_policy_filter
 from notion_spark.operators.joins import broadcast_lookup
-from notion_spark.queries.analysis import uncategorized
+from notion_spark.queries.analysis import uncategorized_pred
+from notion_spark.queries.sections import Section, in_section, section_rows
 
 NO_PROJECT = "General / No Project"
 
@@ -37,7 +48,7 @@ def resolve_period(
 
 
 def with_parent_name(
-    df: DataFrame, lookup: DataFrame | None = None, default: str = NO_PROJECT
+    df: DataFrame, lookup: DataFrame | None = None, default: str | None = NO_PROJECT
 ) -> DataFrame:
     """J1 (generate_reports.py:320): NID→Name broadcast self-join. The
     reference builds nid_to_name from the FULL frame BEFORE any section
@@ -46,7 +57,7 @@ def with_parent_name(
     resolve almost nothing). Fill defaults differ per section — '' for
     goals/completed (:469, :482), 'General / No Project' for in_progress
     (:493-495) — and the fill value participates in the grouped SORT, so
-    it must be faithful."""
+    it must be faithful. ``default=None`` leaves unresolved names null."""
     src = lookup if lookup is not None else df
     parents = src.filter(F.col("nid") != 0).select("nid", "name")
     return broadcast_lookup(
@@ -54,10 +65,11 @@ def with_parent_name(
     )
 
 
-def clean_task_list(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """F13 (generate_reports.py:424-440): drop container rows whose body
-    is empty — body is always treated as empty when include_body_content
-    is off, matching the reference.
+def _not_empty_container(df: DataFrame, cfg: EngineConfig) -> Column:
+    """F13 (generate_reports.py:424-440): the rows clean_task_list keeps —
+    all but container rows whose body is empty; the body is always
+    treated as empty when include_body_content is off, matching the
+    reference.
 
     'Container' = the row's OWN children list is non-empty
     (parent_nids_set at generate_reports.py:330-332 is built from
@@ -73,9 +85,112 @@ def clean_task_list(df: DataFrame, cfg: EngineConfig) -> DataFrame:
         if not cfg.include_body_content
         else F.coalesce(F.length(F.trim("body_content")), F.lit(0)) == 0
     )
-    return df.filter(~(is_container & body_empty))
+    return ~(is_container & body_empty)
 
 
+def clean_task_list(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """F13 (generate_reports.py:424-440): ``df`` without its empty
+    container rows."""
+    return df.filter(_not_empty_container(df, cfg))
+
+
+def _goal_kept(end: datetime) -> Column:
+    """O6 (generate_reports.py:447-466): the to-do rows the goals keep
+    once they overflow — due within 14 days of the period end, or
+    priority ≤ High."""
+    return (F.col("priority_score") <= 1) | (
+        F.col("due").isNotNull() & (F.col("due") <= ts_lit(end + timedelta(days=14)))
+    )
+
+
+def in_window_col(period: str) -> str:
+    """The report rows' flag column for ``period``."""
+    return f"__in_{period}"
+
+
+@dataclass
+class ReportFrames:
+    """The report sections of a batch of periods as one lazy plan.
+    ``rows`` holds each section's rows with ``tag`` (the section: the
+    ``goal_tags`` entry of a period end, "completed", "in_progress",
+    "uncategorized") and ``rank`` (its order), plus one boolean
+    `in_window_col` per period (its inclusive `between` test on
+    ``completed``). ``with_uncategorized`` tells whether that section
+    was planned."""
+
+    windows: dict[str, tuple[datetime, datetime]]
+    goal_tags: dict[datetime, str]
+    rows: DataFrame
+    with_uncategorized: bool
+
+
+def report_frames(
+    df: DataFrame,
+    periods: Sequence[str],
+    now: datetime,
+    cfg: EngineConfig,
+    custom: tuple[datetime, datetime] | None = None,
+) -> ReportFrames:
+    """EP3 sections for every period in ``periods`` at once
+    (generate_reports.py:390-503 filters again for each period). ``df``
+    must be normalize_for_reports output, a lazy projection best taken
+    over a cached store as run_pipeline does; the tag filter applies
+    first (generate_reports.py:177-192).
+
+    Only completed depends on the period start, and every built-in period
+    ends at ``now``: goals are planned once per distinct end, completed
+    once over the widest window with per-period flags for the driver-side
+    split. Building the plan runs no Spark job — the goals overflow gate
+    is a window count, not an action."""
+    windows = {p: resolve_period(p, now, custom) for p in periods}
+    # the lowercased status, projected once per row
+    tagged = array_overlap_filter(df, "active_tags", cfg.filter_tags).withColumn(
+        "__status", fast_lower("status")
+    )
+    kept = _not_empty_container(tagged, cfg)
+    status = F.col("__status")
+    parent, score, nid = F.col("parent_name"), F.col("priority_score"), F.col("nid")
+    goal_tags = {e: f"goals {e.isoformat()}" for e in sorted({e for _, e in windows.values()})}
+    # ALL to-do rows are goals, unless they overflow the page budget
+    # (the reference's `if len(goals) > 15`); the parent fill '' sorts
+    # first, deliberately (:469)
+    overflow = F.count(F.lit(1)).over(in_section()) > cfg.goals_overflow_threshold
+    sections = {
+        tag: Section(
+            kept & (status == "to do"), (parent, score, F.asc_nulls_last("due"), nid),
+            keep=~overflow | _goal_kept(end),
+        )
+        for end, tag in goal_tags.items()
+    }
+    start, end = min(s for s, _ in windows.values()), max(e for _, e in windows.values())
+    sections["completed"] = Section(
+        kept & (status == "done") & F.col("completed").between(ts_lit(start), ts_lit(end)),
+        (parent, F.desc("completed"), nid),
+    )
+    sections["in_progress"] = Section(kept & (status == "doing"), (parent, score, nid))
+    if cfg.include_uncategorized:
+        # the reference does NOT clean_task_list the catch-all section
+        # (generate_reports.py:499-503 filters the raw frame)
+        sections["uncategorized"] = Section(uncategorized_pred(status), (nid,))
+    # the parent-name lookup comes from the PRE-clean frame (the reference
+    # builds nid_to_name before dropping containers, :317-320); the fill
+    # is 'General / No Project' for in-progress (doing) rows, '' for the
+    # goals and completed rows (:469, :482, :493-495)
+    named = with_parent_name(tagged, lookup=tagged, default=None).withColumn(
+        "parent_name",
+        F.coalesce(parent, F.when(status == "doing", F.lit(NO_PROJECT)).otherwise(F.lit(""))),
+    )
+    rows = section_rows(named, sections).withColumns({
+        in_window_col(p): F.col("completed").between(ts_lit(s), ts_lit(e))
+        for p, (s, e) in windows.items()
+    })
+    return ReportFrames(
+        windows=windows, goal_tags=goal_tags, rows=rows,
+        with_uncategorized=cfg.include_uncategorized,
+    )
+
+
+# ------------------------------------------------- per-section plans
 def goals(
     df: DataFrame,
     end: datetime,
@@ -91,10 +206,7 @@ def goals(
     (The dated/undated pre-filter at :393-405 is dead code — its `goals`
     is overwritten by this path before any use.)"""
     todo = df.filter(F.lower("status") == "to do")
-    keep = (F.col("priority_score") <= 1) | (
-        F.col("due").isNotNull() & (F.col("due") <= ts_lit(end + timedelta(days=14)))
-    )
-    selected = overflow_policy_filter(todo, cfg.goals_overflow_threshold, keep)
+    selected = overflow_policy_filter(todo, cfg.goals_overflow_threshold, _goal_kept(end))
     return with_parent_name(selected, lookup=lookup, default="").orderBy(
         "parent_name", "priority_score", F.asc_nulls_last("due"), "nid"
     )
@@ -120,60 +232,3 @@ def in_progress(df: DataFrame, lookup: DataFrame | None = None) -> DataFrame:
     return with_parent_name(doing, lookup=lookup).orderBy("parent_name", "priority_score", "nid")
 
 
-def in_window_col(period: str) -> str:
-    """The `completed` plan's flag column for ``period``."""
-    return f"__in_{period}"
-
-
-@dataclass
-class ReportFrames:
-    """Lazy section plans for a batch of periods. ``completed`` spans
-    every window and carries one boolean `in_window_col` per period (its
-    inclusive `between` test); ``goals`` is keyed by period end."""
-
-    windows: dict[str, tuple[datetime, datetime]]
-    goals: dict[datetime, DataFrame]
-    completed: DataFrame
-    in_progress: DataFrame
-    uncategorized: DataFrame | None
-
-
-def report_frames(
-    df: DataFrame,
-    periods: Sequence[str],
-    now: datetime,
-    cfg: EngineConfig,
-    custom: tuple[datetime, datetime] | None = None,
-) -> ReportFrames:
-    """EP3 section plans for every period in ``periods`` at once
-    (generate_reports.py:390-503 filters again for each period). ``df``
-    must be normalize_for_reports output, a lazy projection best taken
-    over a cached store as run_pipeline does (the sections all read it);
-    the tag filter applies first (generate_reports.py:177-192).
-
-    Only completed depends on the period start, and every built-in period
-    ends at ``now``: goals (once per distinct end), in-progress and
-    uncategorized are planned once, completed once over the widest window
-    with per-period flags for the driver-side split. Building the plans
-    runs no Spark job — the goals overflow gate is lazy."""
-    windows = {p: resolve_period(p, now, custom) for p in periods}
-    tagged = array_overlap_filter(df, "active_tags", cfg.filter_tags)
-    base = clean_task_list(tagged, cfg)
-    # parent-name lookup comes from the PRE-clean frame (the reference
-    # builds nid_to_name before dropping containers, :317-320)
-    hull = (min(s for s, _ in windows.values()), max(e for _, e in windows.values()))
-    completed = completed_in_period(base, *hull, lookup=tagged).withColumns(
-        {
-            in_window_col(p): F.col("completed").between(ts_lit(s), ts_lit(e))
-            for p, (s, e) in windows.items()
-        }
-    )
-    return ReportFrames(
-        windows=windows,
-        goals={e: goals(base, e, cfg, lookup=tagged) for e in {e for _, e in windows.values()}},
-        completed=completed,
-        in_progress=in_progress(base, lookup=tagged),
-        # the reference does NOT clean_task_list the catch-all section
-        # (generate_reports.py:499-503 filters the raw frame)
-        uncategorized=uncategorized(tagged) if cfg.include_uncategorized else None,
-    )

@@ -40,8 +40,9 @@ def report_payload(
     cfg: EngineConfig,
     attachments: DataFrame | None = None,
 ) -> dict[str, dict]:
-    """Collect the report sections once into one render-ready payload per
-    period: body truncated to
+    """Collect the report rows (`ReportFrames.rows`, one plan) once into one
+    render-ready payload per period, each section in its rank order: body
+    truncated to
     cfg.body_content_max_lines (X11, generate_reports.py:97-102), grouped
     by parent_name in section sort order (W1 boundaries implicit in the
     ordering). With ``attachments`` and include_attachments on, readable
@@ -83,34 +84,40 @@ def report_payload(
             )
         )
 
-    def rows(df: DataFrame, extra: tuple[str, ...] = ()) -> list[dict]:
-        cols = ["nid", "name", "status", "priority", "parent_name"]
-        present = [c for c in cols if c in df.columns]
-        out = df
-        if cfg.include_body_content and "body_content" in df.columns:
-            out = out.withColumn(
-                "body_content", truncate_lines("body_content", cfg.body_content_max_lines)
-            )
-            if att_text is not None:
-                out = out.join(att_text, "nid", "left").withColumn(
-                    "body_content",
-                    F.concat_ws("\n", F.col("body_content"), F.col("__att")),
-                ).drop("__att")
-            present.append("body_content")
-        return [r.asDict() for r in out.select(*present, *extra).collect()]
-
+    out = frames.rows
+    cols = [c for c in ("nid", "name", "status", "priority", "parent_name") if c in out.columns]
+    if cfg.include_body_content and "body_content" in out.columns:
+        out = out.withColumn(
+            "body_content", truncate_lines("body_content", cfg.body_content_max_lines)
+        )
+        if att_text is not None:
+            out = out.join(att_text, "nid", "left").withColumn(
+                "body_content",
+                F.concat_ws("\n", F.col("body_content"), F.col("__att")),
+            ).drop("__att")
+        cols.append("body_content")
     flags = {p: in_window_col(p) for p in frames.windows}
-    goals = {end: rows(df) for end, df in frames.goals.items()}
-    done = rows(frames.completed, tuple(flags.values()))
-    doing = rows(frames.in_progress)
-    other = rows(frames.uncategorized) if frames.uncategorized is not None else None
+    # one collect; each section's rows in rank order
+    by_tag: dict[str, list] = {}
+    for r in sorted(out.select("tag", "rank", *cols, *flags.values()).collect(),
+                    key=lambda r: r["rank"]):
+        by_tag.setdefault(r["tag"], []).append(r)
+
+    def rows(tag: str, keys: list[str] = cols) -> list[dict]:
+        return [{k: r[k] for k in keys} for r in by_tag.get(tag, [])]
+
+    goals = {end: rows(tag) for end, tag in frames.goal_tags.items()}
+    doing = rows("in_progress")
+    # the catch-all section has no parent grouping
+    other = (
+        rows("uncategorized", [c for c in cols if c != "parent_name"])
+        if frames.with_uncategorized else None
+    )
 
     payloads = {}
     for period, (_, end) in frames.windows.items():
         completed = [
-            {k: v for k, v in r.items() if k not in flags.values()}
-            for r in done
-            if r[flags[period]]
+            {k: r[k] for k in cols} for r in by_tag.get("completed", []) if r[flags[period]]
         ]
         sections = {"goals": goals[end], "completed": completed, "in_progress": doing}
         if other is not None:

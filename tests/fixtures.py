@@ -81,3 +81,31 @@ def make_tasks(spark: SparkSession, n: int = 450, seed: int = 7) -> DataFrame:
             )
         )
     return spark.createDataFrame(rows, TASKS_SCHEMA)
+
+
+def make_read_path_tasks(spark: SparkSession) -> DataFrame:
+    """`make_tasks` with the cases the one-plan read path must get right:
+    two nid-0 to-do rows tagged "work", one immediate (overdue) and one
+    due within 7 days — nid 0 matches an immediate row, so neither is due
+    this week — and no completion in the W-MON week ending 2025-12-29
+    (those move a week earlier), an empty week inside the velocity
+    range."""
+    from pyspark.sql import functions as F
+
+    gap = (datetime(2025, 12, 23), datetime(2025, 12, 30))
+    overrides = {
+        "uid-00100": dict(nid=0, status="To Do", due=FIXED_NOW - timedelta(days=2)),
+        "uid-00101": dict(nid=0, status="To Do", due=FIXED_NOW + timedelta(days=3)),
+    }
+    df = make_tasks(spark)
+    for uid, cols in overrides.items():
+        row = F.col("uid") == uid
+        for name, value in cols.items():
+            df = df.withColumn(name, F.when(row, F.lit(value)).otherwise(F.col(name)))
+        df = df.withColumn(
+            "active_tags", F.when(row, F.array(F.lit("work"))).otherwise(F.col("active_tags"))
+        )
+    in_gap = (F.col("completed") >= F.lit(gap[0])) & (F.col("completed") < F.lit(gap[1]))
+    shifted = F.col("completed") - F.expr("INTERVAL 7 DAYS")
+    df = df.withColumn("completed", F.when(in_gap, shifted).otherwise(F.col("completed")))
+    return spark.createDataFrame(df.collect(), TASKS_SCHEMA)

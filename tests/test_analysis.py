@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from datetime import timedelta
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,10 +22,20 @@ def tasks(spark):
 CFG = EngineConfig()
 
 
+SECTIONS = [
+    "immediate_action", "due_this_week", "overdue", "overdue_top_by_priority",
+    "next_by_priority", "oldest_pending", "uncategorized", "status_priority_counts",
+    "completion_velocity", "created_per_week", "status_counts", "priority_counts",
+    "status_priority_crosstab",
+]
+
+
 def test_sections_all_nonempty(tasks):
     sections = A.run_all(tasks, FIXED_NOW, CFG)
-    for name, df in sections.plans.items():
-        assert df.count() > 0, f"section {name} is empty — fixture must populate it"
+    assert sections["task_summary"]["total"] > 0
+    for name in SECTIONS:
+        assert name in sections
+        assert len(sections[name]) > 0, f"section {name} is empty — fixture must populate it"
 
 
 def test_task_summary_consistent(tasks):
@@ -49,23 +61,6 @@ def test_due_week_excludes_immediate(tasks):
     imm = {r.nid for r in A.immediate_action(tasks, FIXED_NOW).collect()}
     week = {r.nid for r in A.due_this_week(tasks, FIXED_NOW).collect()}
     assert not (imm & week)
-
-
-def test_backlog_conditional_branch_and_disjoint(tasks):
-    rows = A.backlog(tasks, FIXED_NOW, CFG).collect()
-    assert 0 < len(rows) <= CFG.backlog_limit
-    # fixture has dated far-future actives -> the dated branch is taken
-    assert all(r.due is not None for r in rows)
-    dues = [r.due for r in rows]
-    assert dues == sorted(dues)
-    imm = {r.nid for r in A.immediate_action(tasks, FIXED_NOW).collect()}
-    week = {r.nid for r in A.due_this_week(tasks, FIXED_NOW).collect()}
-    ids = {r.nid for r in rows}
-    assert not (ids & imm) and not (ids & week)
-    # undated branch: drop every dated candidate -> falls back to undated
-    undated_only = tasks.filter(F.col("due").isNull() | (F.col("due") < F.lit("2000-01-01")))
-    urows = A.backlog(undated_only, FIXED_NOW, CFG).collect()
-    assert urows and all(r.due is None for r in urows)
 
 
 def test_overdue_sorted(tasks):
@@ -137,3 +132,70 @@ def test_golden_style_render(spark, tasks):
     assert "Breakdown of tasks by Status and Priority:" in text
     assert "Freq: W-SUN" in text
     assert "/" in text.split("Tasks created per week:")[1]
+
+
+# ------------------------------------------- one plan vs per-section plans
+def _per_section(df, now, cfg):
+    """Every section as its own plan, collected — the read path before
+    the sections shared one row plan and one aggregate."""
+    f = A.apply_tag_filter(df, cfg)
+    plans = {
+        "immediate_action": A.immediate_action(f, now).limit(A.DISPLAY_ROWS),
+        "due_this_week": A.due_this_week(f, now),
+        "overdue": A.overdue(f, now).limit(A.DISPLAY_ROWS),
+        "overdue_top_by_priority": A.overdue_top_by_priority(f, now),
+        "next_by_priority": A.next_by_priority(f),
+        "oldest_pending": A.oldest_pending(f, cfg),
+        "uncategorized": A.uncategorized(f),
+        "completion_velocity": A.completion_velocity(f, cfg),
+        "created_per_week": A.created_per_week(f),
+    }
+    out = {name: plan.toPandas() for name, plan in plans.items()}
+    out["task_summary"] = A.task_summary(f, now).collect()[0].asDict()
+    out["status_priority_counts"] = [tuple(r) for r in A.status_priority_counts(f).collect()]
+    return out
+
+
+def _by_score(pdf):
+    # the per-section plan orders next-by-priority by (score, rank) only;
+    # labels sharing a score tie
+    return pdf.sort_values(["priority_score", "rank", "priority"]).reset_index(drop=True)
+
+
+def test_sections_match_per_section_plans(spark):
+    """Every section of the one-plan read path equals its per-section
+    plan — frame, columns and dtypes — at the fixed clock, three days
+    either side and before every due date, with and without the tag
+    filter, and with a tag filter no row matches. The fixture's two nid-0
+    rows (one immediate, one due in 7 days) both stay out of
+    due-this-week, and the velocity weeks keep their empty week."""
+    import pandas as pd
+
+    from tests.fixtures import make_read_path_tasks
+
+    df = normalize_for_analysis(make_read_path_tasks(spark)).cache()
+    try:
+        first_due = df.agg(F.min("due")).first()[0]
+        clocks = [FIXED_NOW, FIXED_NOW - timedelta(days=3), FIXED_NOW + timedelta(days=3),
+                  first_due - timedelta(days=1)]
+        runs = [(now, cfg) for now in clocks for cfg in (CFG, CFG.with_tags("work", "dev"))]
+        for now, cfg in [*runs, (FIXED_NOW, CFG.with_tags("no-such-tag"))]:
+            got = A.run_all(df, now, cfg)
+            want = _per_section(df, now, cfg)
+            for name, frame in want.items():
+                if name == "status_priority_counts":
+                    assert sorted(got[name]) == sorted(frame), (now, cfg.filter_tags, name)
+                elif name == "task_summary":
+                    assert got[name] == frame, (now, cfg.filter_tags)
+                elif name == "next_by_priority":
+                    pd.testing.assert_frame_equal(_by_score(got[name]), _by_score(frame))
+                else:
+                    pd.testing.assert_frame_equal(got[name], frame, obj=f"{name} at {now}")
+        got = A.run_all(df, FIXED_NOW, CFG)
+        week = set(got["due_this_week"]["uid"])
+        assert week and not week & {"uid-00100", "uid-00101"}
+        imm = {r.uid for r in A.immediate_action(df, FIXED_NOW).collect()}
+        assert "uid-00100" in imm and "uid-00101" not in imm
+        assert (got["completion_velocity"]["count"] == 0).any()
+    finally:
+        df.unpersist()

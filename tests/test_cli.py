@@ -26,17 +26,20 @@ def test_now_is_naive_utc():
 
 @pytest.fixture
 def run(spark, monkeypatch, capsys):
-    """Run ``main(argv)`` on the test session and return its stdout."""
+    """Run ``main(argv)`` on the test session and return its stdout;
+    every command releases what it cached."""
     monkeypatch.setattr("notion_spark.session.get_spark", lambda **_: spark)
+    # only what the commands cache counts, not what earlier tests left
+    spark.catalog.clearCache()
+    cached = spark._jsparkSession.sharedState().cacheManager()
 
     def _run(*argv: str) -> str:
         capsys.readouterr()
         assert cli.main(list(argv)) == 0
+        assert cached.isEmpty(), f"{argv[0]} left a cached frame"
         return capsys.readouterr().out
 
-    yield _run
-    # analyze/report cache the store read for the life of the process
-    spark.catalog.clearCache()
+    return _run
 
 
 def test_pipeline_analyze_report(run, tmp_path):

@@ -11,7 +11,7 @@ from notion_spark.functions import (
     truncate_lines,
     truncate_text,
 )
-from notion_spark.functions.text import render_rich_text
+from notion_spark.functions.text import fast_lower, render_rich_text
 
 
 def _one(spark, col, value, typ="string"):
@@ -28,6 +28,16 @@ def test_clean_text(spark):
     assert got == '"smart" - dash... é\U0001f600 Warning: hot go'
     # bare U+26A0 (no variation selector) is NOT in the reference map
     assert _one(spark, clean_text(F.col("v")), "⚠ plain") == "⚠ plain"
+
+
+def test_fast_lower_equals_lower(spark):
+    # ASCII takes the translate path, anything else Spark's lower
+    values = ["To Do", "DOING", "done", "Mixed Case 42!", "", None, "ÀÉÎ", "Straße",
+              "İstanbul", "ΣΟΦΙΑ", "“Smart” TO DO", "\U0001f680 GO"]
+    df = spark.createDataFrame([(v,) for v in values], "v string")
+    got = df.select(fast_lower("v").alias("a"), F.lower("v").alias("b")).collect()
+    assert [r.a for r in got] == [r.b for r in got]
+    assert got[1].a == "doing"
 
 
 def test_truncate_text(spark):

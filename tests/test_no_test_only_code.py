@@ -34,6 +34,20 @@ ALLOWED = {
     "norm_unrolled": "oracle",
     "jaccard_pairs": "oracle",
     "levenshtein_pairs": "oracle",
+    # per-section plans the one-plan analysis and report read path is
+    # checked against
+    "due_this_week": "oracle",
+    "overdue": "oracle",
+    "overdue_top_by_priority": "oracle",
+    "oldest_pending": "oracle",
+    "next_by_priority": "oracle",
+    "uncategorized": "oracle",
+    "status_priority_counts": "oracle",
+    "completion_velocity": "oracle",
+    "created_per_week": "oracle",
+    "clean_task_list": "oracle",
+    "completed_in_period": "oracle",
+    "in_progress": "oracle",
     "deterministic_shuffle": "not yet reviewed",
     "write_training_shards": "not yet reviewed",
     "simhash64": "not yet reviewed",

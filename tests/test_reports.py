@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import uuid
+from dataclasses import replace
 from datetime import timedelta
 
 import pytest
@@ -90,8 +91,12 @@ def test_report_frames_and_pie(tasks):
     assert sum(pie.values()) == sum(
         len(payload["sections"][k]) for k in ("goals", "completed", "in_progress")
     )
+    base = R.clean_task_list(tasks, CFG)
+    start, end = R.resolve_period("yearly", FIXED_NOW)
     assert sum(pie.values()) == (
-        frames.goals[FIXED_NOW].count() + frames.completed.count() + frames.in_progress.count()
+        R.goals(base, end, CFG, lookup=tasks).count()
+        + R.completed_in_period(base, start, end, lookup=tasks).count()
+        + R.in_progress(base, lookup=tasks).count()
     )
 
 
@@ -157,36 +162,49 @@ def _with_todos(df, n: int):
     return df.filter((F.lower("status") != "to do") | F.col("uid").isin(dropped + kept))
 
 
-def _with_window_edges(tasks):
-    """``tasks`` with done rows completed exactly at each period's start,
-    one second before it, at ``now`` and one second after ``now``.
-    Returns (frame, {completed timestamp: nid of the row})."""
+def _window_edges(tasks):
+    """{completed timestamp: nid of the done row that gets it}: done rows
+    completed exactly at each period's start, one second before it, at
+    ``now`` and one second after ``now``."""
     done = sorted(
         r.nid
         for r in tasks.filter(
             (F.col("status") == "done") & ~F.col("is_project") & (F.col("nid") != 0)
         ).collect()
     )
-    # completed timestamp -> the done row (nid) that gets it
     edges = {FIXED_NOW: done[0], FIXED_NOW + timedelta(seconds=1): done[1]}
     for i, p in enumerate(PERIODS):
         start, _ = R.resolve_period(p, FIXED_NOW)
         edges[start] = done[2 + 2 * i]
         edges[start - timedelta(seconds=1)] = done[3 + 2 * i]
+    return edges
+
+
+def _with_completed(df, edges):
     completed = F.col("completed")
     for ts, nid in edges.items():
         lit = F.lit(ts.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
         completed = F.when(F.col("nid") == nid, lit).otherwise(completed)
-    return tasks.withColumn("completed", completed), edges
+    return df.withColumn("completed", completed)
+
+
+def _with_window_edges(tasks):
+    """``tasks`` with `_window_edges` applied. Returns (frame, edges)."""
+    edges = _window_edges(tasks)
+    return _with_completed(tasks, edges), edges
 
 
 def test_read_path_plans_lazily_and_jobs_do_not_grow_with_periods(spark, tasks):
     """Building the report frames and the analysis section map runs no
-    Spark job, on either side of the goals overflow gate; collecting the
-    report path costs the same jobs for one period as for five."""
+    Spark job, on either side of the goals overflow gate. Over one cached
+    store, the analysis text, the charts and the report payloads collect
+    in at most 8 jobs, the same for one period as for five and with the
+    uncategorized section on or off."""
     from notion_spark.normalize import normalize_for_analysis
     from notion_spark.queries import analysis as A
+    from notion_spark.sinks.charts import render_chart_canvases
     from notion_spark.sinks.pdf_report import report_payload
+    from notion_spark.sinks.text_report import render_analysis
 
     analysis_base = normalize_for_analysis(make_tasks(spark))
     for n_todo in (10, 20):
@@ -198,14 +216,29 @@ def test_read_path_plans_lazily_and_jobs_do_not_grow_with_periods(spark, tasks):
         ))
         assert n_jobs == 0, (n_todo, n_jobs)
 
-    # every window holds rows: AQE answers an empty section without its
-    # sort job, a data property the job count must not be confused with
-    df, _ = _with_window_edges(tasks)
-    frames = {p: R.report_frames(df, p, FIXED_NOW, CFG) for p in (("weekly",), PERIODS)}
-    one, one_jobs = _jobs(spark, lambda: report_payload(frames[("weekly",)], FIXED_NOW, CFG))
-    five, five_jobs = _jobs(spark, lambda: report_payload(frames[PERIODS], FIXED_NOW, CFG))
+    # every section and every window holds rows: AQE answers an empty
+    # section without its sort job, a data property the job count must
+    # not be confused with
+    store = _with_completed(make_tasks(spark), _window_edges(tasks)).cache()
+    store.count()
+    jobs, payloads = {}, {}
+    try:
+        for periods in (("weekly",), PERIODS):
+            for uncategorized in (True, False):
+                cfg = replace(CFG, include_uncategorized=uncategorized)
+                sections = A.run_all(normalize_for_analysis(store), FIXED_NOW, cfg)
+                frames = R.report_frames(normalize_for_reports(store), periods, FIXED_NOW, cfg)
+                out, jobs[periods, uncategorized] = _jobs(spark, lambda: (
+                    render_analysis(sections, FIXED_NOW, cfg),
+                    render_chart_canvases(sections),
+                    report_payload(frames, FIXED_NOW, cfg),
+                ))
+                payloads[periods, uncategorized] = out[2]
+    finally:
+        store.unpersist()
+    five, one = payloads[PERIODS, True], payloads[("weekly",), True]
     assert set(five) == set(PERIODS) and five["weekly"] == one["weekly"]
-    assert one_jobs == five_jobs > 0
+    assert len(set(jobs.values())) == 1 and 0 < jobs[PERIODS, True] <= 8, jobs
 
 
 def test_driver_side_split_matches_per_period_filter(spark, tasks):
@@ -259,3 +292,43 @@ def test_goals_gate_at_threshold(tasks):
             got = [r["nid"] for r in payload[p]["sections"]["goals"]]
             assert sorted(got) == sorted(want), (n_todo, p)
         assert len(want) == (n_todo if not gated else n_todo - n_todo // 2)
+
+
+def test_sections_match_per_section_plans(spark):
+    """Every report section of the one-plan read path equals its
+    per-section plan at the fixed clock, three days either side and
+    before every due date, with and without the tag filter, and with a
+    tag filter no row matches."""
+    from notion_spark.queries import analysis as A
+    from notion_spark.sinks.pdf_report import report_payload
+    from tests.fixtures import make_read_path_tasks
+
+    df = normalize_for_reports(make_read_path_tasks(spark)).cache()
+    try:
+        first_due = df.agg(F.min("due")).first()[0]
+        clocks = [FIXED_NOW, FIXED_NOW - timedelta(days=3), FIXED_NOW + timedelta(days=3),
+                  first_due - timedelta(days=1)]
+        runs = [(now, cfg) for now in clocks for cfg in (CFG, CFG.with_tags("work", "dev"))]
+        for now, cfg in [*runs, (FIXED_NOW, CFG.with_tags("no-such-tag"))]:
+            payloads = report_payload(R.report_frames(df, PERIODS, now, cfg), now, cfg)
+            tagged = A.apply_tag_filter(df, cfg)
+            base = R.clean_task_list(tagged, cfg)
+            doing = R.in_progress(base, lookup=tagged)
+            other = A.uncategorized(tagged).select(*PAYLOAD_COLS[:4])
+            for p in PERIODS:
+                start, end = R.resolve_period(p, now)
+                want = {
+                    "goals": R.goals(base, end, cfg, lookup=tagged).select(*PAYLOAD_COLS),
+                    "completed": R.completed_in_period(base, start, end, lookup=tagged)
+                    .select(*PAYLOAD_COLS),
+                    "in_progress": doing.select(*PAYLOAD_COLS),
+                    "uncategorized": other,
+                }
+                got = payloads[p]["sections"]
+                assert set(got) == set(want)
+                for name, frame in want.items():
+                    assert got[name] == [r.asDict() for r in frame.collect()], (
+                        now, cfg.filter_tags, p, name,
+                    )
+    finally:
+        df.unpersist()
