@@ -20,6 +20,7 @@ naive UTC, the form every injected ``now`` has.
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import sys
@@ -33,12 +34,26 @@ def _now(arg: str | None) -> datetime:
     return now
 
 
+def _read_pages(path: str) -> list[dict]:
+    """The page objects on every non-blank line of a JSON-lines snapshot
+    file, of a directory's ``*.jsonl`` files, or of the files a glob
+    matches."""
+    files = sorted(glob.glob(os.path.join(path, "*.jsonl") if os.path.isdir(path) else path))
+    if not files:
+        raise FileNotFoundError(f"no page snapshot files under {path}")
+    pages = []
+    for name in files:
+        with open(name) as f:
+            pages += [json.loads(line) for line in f if line.strip()]
+    return pages
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="notion_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     p_pipe = sub.add_parser("pipeline", help="full EP1 pipeline over page snapshots")
-    p_pipe.add_argument("--pages", required=True, help="JSON-lines page snapshot file/dir")
+    p_pipe.add_argument("--pages", required=True, help="JSON-lines page snapshot file, dir or glob")
     p_pipe.add_argument("--cache-dir", required=True)
     p_pipe.add_argument("--now", default=None)
 
@@ -66,15 +81,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "pipeline":
         from notion_spark.pipeline_app import run_pipeline
-        from notion_spark.sources.datasource import NotionPagesDataSource
-        from notion_spark.sources.ingest import parse_pages, resolve_relation_nids
+        from notion_spark.sources.ingest import assemble_tasks
 
-        spark.dataSource.register(NotionPagesDataSource)
-        raw = spark.read.format("notion_pages").option("path", args.pages).load()
-        tasks = resolve_relation_nids(parse_pages(raw))
-        from pyspark.sql import functions as F
-
-        tasks = tasks.withColumn("body_content", F.lit("")).withColumn("comments", F.lit(""))
+        tasks = assemble_tasks(spark, _read_pages(args.pages))
         result = run_pipeline(spark, tasks, args.cache_dir, now, cfg)
         print(
             json.dumps(

@@ -56,13 +56,6 @@ class EngineConfig:
     include_uncategorized: bool = True
     # BODY_CONTENT_MAX_LINES (globals.py:102; generate_reports.py:97-102).
     body_content_max_lines: int = 3
-    # Truncation width for displayed names (text_style.py:142-149).
-    truncate_width: int = 60
-    # Top-k limits used by the analysis queries (analyze_pages.py:412, 439).
-    oldest_pending_limit: int = 5
-    velocity_weeks: int = 12
-    # Goals overflow policy threshold (generate_reports.py:447-466).
-    goals_overflow_threshold: int = 15
     readable_extensions: tuple[str, ...] = READABLE_EXTENSIONS
     attachment_content_cap: int = 1000
 

@@ -977,8 +977,8 @@ def _zorder_oracle() -> str:
 @register("layout_zorder_keys", _zorder_oracle())
 def layout_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) keys for the (l_partkey, l_suppkey) plane — the
-    multi-column clustering key `pipeline/layout.write_zordered` lays
-    files out by, so parquet min/max prunes on either predicate. Pure
+    multi-column clustering key a range-partitioned, key-sorted write
+    lays files out by, so parquet min/max prunes on either predicate. Pure
     shifts/masks (the classic 5-step spread): the oracle recomputes
     every key bit-for-bit from SQL generated by the same code
     (layout.zorder_sql)."""

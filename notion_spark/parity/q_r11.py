@@ -1130,7 +1130,7 @@ def quality_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-total vs line-item reconciliation
     (`pipeline.expectations.reconciliation_audit`): does each order's
     stored total equal the exact-cents sum of its line items — the
-    books-balance audit (referential_integrity says every child has a
+    books-balance audit (referential_integrity_edges says every child has a
     parent; this says the amounts agree). One reduced full-outer join
     + one global reduce; the synthetic corpus's mismatch mass is
     itself the deterministic audit readout."""

@@ -1719,8 +1719,8 @@ def simhash_signatures(
     toksed = df.select(
         F.col(id_col).alias("id"), F.split(F.trim(F.col(text_col)), r"\s+").alias("t")
     )
-    # drop empty tokens (bare split yields [''] for empty text) so the
-    # bulk form agrees with simhash64's ws_tokens on empty documents
+    # drop empty tokens (bare split yields [''] for empty text), so an
+    # empty document contributes no token hash
     ex = (
         toksed.select("id", F.explode("t").alias("tok"))
         .filter(F.col("tok") != "")
@@ -1735,28 +1735,6 @@ def simhash_signatures(
         bit = (F.col(f"c{i}") * 2 > F.col("n")).cast("long")
         sig = sig.bitwiseOR(F.shiftleft(bit, i))
     return counts.select("id", sig.alias("sig"))
-
-
-def simhash64(col: Column | str) -> Column:
-    """Expression form of the 64-bit SimHash (for small/one-off frames;
-    bulk pipelines use simhash_signatures). Sequential fold per bit."""
-    from notion_spark.pipeline.text_analysis import ws_tokens
-
-    toks = ws_tokens(col)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    bits = []
-    for i in range(64):
-        set_cnt = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc + F.shiftright(h, i).bitwiseAND(F.lit(1)).cast("int"),
-        )
-        bit = (set_cnt * 2 > F.size(toks)).cast("long")
-        bits.append(F.shiftleft(bit, i))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
 
 
 def simhash_candidates(
@@ -2237,7 +2215,7 @@ def semantic_dup_pairs(
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: cluster the corpus
     into k-means cells (nearest centroid of a FIXED codebook — train one
-    with `similarity.train_ivf_centroids` or bring your own), then score
+    with `similarity.train_ivf_centroids_scaled` or bring your own), then score
     cosine only WITHIN each cell. The clustering is the blocking key:
     semantically close vectors land in the same cell, so the quadratic
     pair expansion is confined to cells — the same cost envelope as the
@@ -2495,8 +2473,8 @@ def containment_pairs(
     JACCARD — so recall is high for near-size containment (the
     template/near-dup case) and falls off as the size ratio grows (a
     tiny-doc-in-huge-doc pair may never collide). MEASURED (r12,
-    SCALE_r12_containment_recall.json — exact inverted-index ground
-    truth + planted containers): the default b16×r4 finds 100% of the
+    SCALE.md "r12 containment_pairs recall" — exact inverted-index
+    ground truth + planted containers): the default b16×r4 finds 100% of the
     natural corpus's near-size pairs but 10%/0% of planted pairs at
     size ratio 3/30; ``bands=num_hashes`` (r=1: per-band admission
     1−(1−J)^H instead of J^r) holds 0.97/0.78 at ratio 10/30 at ~2-3×

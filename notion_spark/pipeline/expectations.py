@@ -111,49 +111,22 @@ def check(
     return one.select(*by, F.explode(rows).alias("r")).select(*by, "r.*")
 
 
-def referential_integrity(
-    child: DataFrame,
-    parent: DataFrame,
-    fk: str,
-    pk: str,
-    name: str | None = None,
-) -> DataFrame:
-    """Cross-table referential-integrity audit — the FK gate a star
-    schema runs at ingest ("does every lineitem still point at a real
-    order?"), which single-table expectations cannot express. One row:
-    (constraint, n_child, n_null_fk, n_orphans, orphan_ppm) where
-    orphans are non-null FK values with no matching parent key and
-    orphan_ppm is the half-up parts-per-million rate over non-null FK
-    rows (0 when there are none — absent references are reported in
-    n_null_fk, not punished twice).
-
-    Scale shape (r13: ONE child scan, was two): the parent side
-    collapses to distinct keys first (map-side combined), then one
-    1:≤1 left join keyed on the FK — broadcast when the key set is
-    small, keyed shuffle otherwise (AQE decides) — and a single
-    conditional aggregate reads all three counts off the joined rows
-    (a NULL fk never equi-matches; a non-null fk matches at most the
-    one distinct key, so row count is preserved exactly). The r12
-    shape scanned the child twice (a totals aggregate plus a separate
-    left-anti + count); folding the anti-join into a match-marker
-    column halves the child passes with the identical counts. Integer
-    arithmetic end to end, same as the single-table suite."""
-    return referential_integrity_edges(
-        child, [(fk, parent, pk, name or f"{fk}->{pk}")]
-    )
-
-
 def referential_integrity_edges(
     child: DataFrame,
     edges: "list[tuple[str, DataFrame, str, str]]",
 ) -> DataFrame:
-    """`referential_integrity` for SEVERAL FK edges of one child table
-    in a single child scan — the audit-suite form (a fact table like
+    """Cross-table referential-integrity audit of one child table's FK
+    edges in a single child scan — the FK gate a star schema runs at
+    ingest ("does every lineitem still point at a real order?"), which
+    single-table expectations cannot express. A fact table like
     lineitem carries many FKs; auditing them edge-by-edge re-scans the
-    biggest table in the schema once per edge, r12's #1 cost in the
-    referential-integrity query). Each edge is (fk, parent, pk, label);
-    output is one row per edge, same schema and identical values as
-    the single-edge form, rows in the given edge order.
+    biggest table in the schema once per edge. Each edge is (fk,
+    parent, pk, label). Output is one row per edge, in the given edge
+    order: (constraint, n_child, n_null_fk, n_orphans, orphan_ppm),
+    where orphans are non-null FK values with no matching parent key
+    and orphan_ppm is the half-up parts-per-million rate over non-null
+    FK rows (0 when there are none — absent references are reported
+    in n_null_fk, not punished twice). Integer arithmetic end to end.
 
     Scale shape: one pass over the child with one 1:≤1 left join per
     edge (each keyed on its own FK against the parent's distinct keys
@@ -391,7 +364,7 @@ def reconciliation_audit(
     """Parent/child total reconciliation — the books-balance audit
     behind every financial or billing pipeline: does each parent's
     stored total equal the sum of its child rows, within an integer
-    ``tolerance``? referential_integrity says every child HAS a
+    ``tolerance``? referential_integrity_edges says every child HAS a
     parent; this says the AMOUNTS agree.
 
     ``parent_total`` and ``child_amount`` are integer-valued Column

@@ -9,11 +9,9 @@ ZORDER trick, done with plain Spark ops).
 
 The key is computed with the classic 5-step bit-spreading masks — pure
 integer shifts/masks, so the parity oracle recomputes every key
-bit-for-bit (layout_zorder_keys). `write_zordered` lays files out with
-`repartitionByRange` on the key (range boundaries come from Spark's
-reservoir sampling — layout-only nondeterminism; file CONTENTS ride on
-the deterministic key) plus `sortWithinPartitions` so row groups inside
-each file cluster too.
+bit-for-bit (layout_zorder_keys). To lay files out along the curve,
+`repartitionByRange` on the key and `sortWithinPartitions` by it, so row
+groups inside each file cluster too.
 """
 
 from __future__ import annotations
@@ -64,28 +62,6 @@ def spread_sql(expr: str, bits: int = ZORDER_BITS) -> str:
 
 def zorder_sql(expr_a: str, expr_b: str, bits: int = ZORDER_BITS) -> str:
     return f"(({spread_sql(expr_a, bits)}) << 1) | ({spread_sql(expr_b, bits)})"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    n_files: int = 64,
-    bits: int = ZORDER_BITS,
-) -> None:
-    """Write ``df`` as parquet laid out along the z-curve of ``cols``:
-    range-partitioned into ~n_files files by key, key-sorted within each
-    so row groups cluster. Readers need no special support — the layout
-    pays off through ordinary parquet min/max pruning on either column."""
-    z = zorder_key(cols[0], cols[1], bits).alias("__z")
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def write_bucketed(

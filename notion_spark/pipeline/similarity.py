@@ -227,9 +227,9 @@ def _candidate_pairs(
     probes are array_distinct; IVF cells are distinct per query), so
     downstream top-k windows need no dedup.
 
-    Defaults are the MEASURED r8 operating points (SCALE_r08_annswap
-    sweep at sf1, 20k vectors, recall@10 vs exact — table in SCALE.md
-    'ANN operating points'): ivf with a 64-centroid codebook at
+    Defaults are the MEASURED r8 operating points (sweep at sf1, 20k
+    vectors, recall@10 vs exact — table in SCALE.md 'ANN operating
+    points'): ivf with a 64-centroid codebook at
     nprobe=24 gives recall 0.861 at 3.0x over exact (the recommended
     config; a smaller codebook degrades toward exhaustive probing —
     the recall-SAFE direction); lsh at n_planes=5/n_probes=16 is the
@@ -237,7 +237,7 @@ def _candidate_pairs(
     at every recall level on this corpus, keep lsh only where training
     a codebook is impossible. The r7-shipped defaults (8 planes /
     2 probes, 16 cells / nprobe 2) measured recall 0.046 / 0.353 —
-    NOT operating points; that artifact is SCALE_r07_annswap.json."""
+    NOT operating points (SCALE.md 'ANN operating points')."""
     if method == "exact":
         return c.crossJoin(F.broadcast(q))
     if method == "lsh":
@@ -255,7 +255,7 @@ def _candidate_pairs(
     if method == "ivf":
         if centroids is None:
             raise ValueError("method='ivf' requires a centroids codebook "
-                             "(train_ivf_centroids / a static codebook)")
+                             "(train_ivf_centroids_scaled / a static codebook)")
         cc = assign_cells(c, centroids, vec_col="cv", out_col="__cell")
         cells = probe_cells(
             q.select("qid", "qv"), centroids, nprobe, query_id_col="qid", vec_col="qv"
@@ -638,48 +638,6 @@ def lsh_topk(
     )
 
 
-# ------------------------------------------------------------ IVF-flat
-def train_ivf_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iterations: int = 3,
-) -> list[list[float]]:
-    """Deterministic IVF codebook: seed centroids from the ``n_centroids``
-    lowest-id vectors, refine with a few Lloyd iterations computed IN
-    SPARK (assignment via broadcast argmin, means via groupBy+per-dim
-    avg). Driver only ever holds the K×dim codebook.
-
-    float→double averaging is not cross-engine reproducible, which is fine
-    here: the codebook only shapes recall, exactness lives in the scoring.
-    """
-    seeds = [
-        [float(x) for x in r.v]
-        for r in corpus.select(F.col(vec_col).alias("v"))
-        .orderBy(F.col(id_col).asc())
-        .limit(n_centroids)
-        .collect()
-    ]
-    centroids = seeds
-    dim = len(seeds[0])
-    for _ in range(iterations):
-        assigned = assign_cells(
-            corpus.select(F.col(vec_col).alias("v")), centroids, vec_col="v", out_col="c"
-        ).select(
-            "c",
-            *[F.element_at(F.col("v"), d + 1).cast("double").alias(f"d{d}") for d in range(dim)],
-        )
-        rows = (
-            assigned.groupBy("c")
-            .agg(*[F.avg(f"d{d}").alias(f"d{d}") for d in range(dim)])
-            .collect()
-        )
-        new = {r["c"]: [r[f"d{d}"] for d in range(dim)] for r in rows}
-        centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
-    return centroids
-
-
 # ---------------------------------------------- integer-scaled IVF (exact)
 def scaled_int_safe_abs(dim: int, scale: int = 1_000_000, offset: float = 10.0) -> float:
     """Largest element magnitude ``|v|`` for which an int64 squared-L2
@@ -813,7 +771,7 @@ def train_ivf_centroids_scaled(
     """Deterministic, ENGINE-EXACT IVF codebook: Lloyd iterations in
     offset-shifted fixed-point integers, so the trained centroids are
     bit-identical on any engine and any partitioning — the reformulation
-    that lets the full IVF path be hash-checked cross-engine (the float
+    that lets the full IVF path be hash-checked cross-engine (a float
     trainer's mean accumulation order is not reproducible; the same fix
     pattern as operators/graph.pagerank_scaled).
 
@@ -981,6 +939,7 @@ def ivf_topk_scaled(
     )
 
 
+# ------------------------------------------------------------ IVF-flat
 def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     """argmin over squared L2 distance to each literal centroid; the
     centroid loop unrolls into the plan (K small by design — above

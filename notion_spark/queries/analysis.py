@@ -46,6 +46,10 @@ from notion_spark.queries.sections import Section, in_section, section_rows
 DISPLAY_ROWS = 30
 # active tasks listed per priority label under "next based on priority"
 NEXT_PER_PRIORITY = 5
+# active tasks listed, oldest first, under "oldest pending" (analyze_pages.py:412)
+OLDEST_PENDING_ROWS = 5
+# weeks the completion velocity covers (analyze_pages.py:439)
+VELOCITY_WEEKS = 12
 
 
 def apply_tag_filter(df: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -139,7 +143,7 @@ def _row_sections(now: datetime, cfg: EngineConfig, status: Column) -> dict[str,
         "next_by_priority": Section(
             active, (F.asc_nulls_last("due"), nid), NEXT_PER_PRIORITY, bucket=F.col("priority")
         ),
-        "oldest_pending": Section(active, (F.col("created"), nid), cfg.oldest_pending_limit),
+        "oldest_pending": Section(active, (F.col("created"), nid), OLDEST_PENDING_ROWS),
     }
     if cfg.include_uncategorized:
         sections["uncategorized"] = Section(uncategorized_pred(status), (nid,))
@@ -251,14 +255,10 @@ class SectionRows:
     count) tuples, the weeks as (week_ending, count) frames, and the
     status/priority histograms and crosstab derive from the pairs."""
 
-    def __init__(
-        self, rows: DataFrame, totals: DataFrame, columns: dict[str, list[str]],
-        velocity_weeks: int,
-    ):
+    def __init__(self, rows: DataFrame, totals: DataFrame, columns: dict[str, list[str]]):
         self.rows = rows
         self.totals = totals
         self.columns = columns
-        self.velocity_weeks = velocity_weeks
 
     def __contains__(self, name: str) -> bool:
         return name in self.columns or name in _SETS or name in _DERIVED
@@ -300,7 +300,7 @@ class SectionRows:
             "task_summary": {k: summary[k] for k in _SUMMARY},
             "status_priority_counts": pairs,
             "completion_velocity": _weeks(
-                weeks("completion_velocity", "completed_week"), self.velocity_weeks
+                weeks("completion_velocity", "completed_week"), VELOCITY_WEEKS
             ),
             "created_per_week": _weeks(weeks("created_per_week", "created_week")),
             **{name: derive(pairs) for name, derive in _DERIVED.items()},
@@ -322,7 +322,7 @@ def run_all(df: DataFrame, now: datetime, cfg: EngineConfig) -> SectionRows:
     columns["due_this_week"] = ["nid", *[c for c in cols if c != "nid"]]
     columns["next_by_priority"] = [*cols, "rank"]
     rows = section_rows(filtered.withColumn("__status", fast_lower("status")), sections)
-    return SectionRows(rows, _totals(filtered, now), columns, cfg.velocity_weeks)
+    return SectionRows(rows, _totals(filtered, now), columns)
 
 
 # ------------------------------------------------- per-section plans
@@ -360,12 +360,12 @@ def overdue(df: DataFrame, now: datetime) -> DataFrame:
     return df.filter(active_pred() & (F.col("due") < ts_lit(now))).orderBy("due", "nid")
 
 
-def oldest_pending(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+def oldest_pending(df: DataFrame) -> DataFrame:
     """O5 (analyze_pages.py:407-419): nsmallest(5, created) of active."""
     return top_k(
         df.filter(active_pred()),
         [F.asc("created")],
-        cfg.oldest_pending_limit,
+        OLDEST_PENDING_ROWS,
         tiebreaker=F.asc("nid"),
     )
 
@@ -385,12 +385,12 @@ def status_priority_counts(df: DataFrame) -> DataFrame:
     return df.groupBy("status", "priority").agg(F.count(F.lit(1)).alias("count"))
 
 
-def completion_velocity(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+def completion_velocity(df: DataFrame) -> DataFrame:
     """A4 (analyze_pages.py:430-439): W-MON weekly completions, last 12.
     Exact status equality 'done' (the chart filter at :431), unlike the
     summary's substring counts (F9)."""
     done = df.filter((F.lower("status") == "done") & F.col("completed").isNotNull())
-    return weekly_counts(done, "completed", anchor="MON", last_n=cfg.velocity_weeks)
+    return weekly_counts(done, "completed", anchor="MON", last_n=VELOCITY_WEEKS)
 
 
 def created_per_week(df: DataFrame) -> DataFrame:

@@ -32,6 +32,9 @@ from notion_spark.queries.analysis import uncategorized_pred
 from notion_spark.queries.sections import Section, in_section, section_rows
 
 NO_PROJECT = "General / No Project"
+# to-do rows past which the goals keep only the near-due or high-priority
+# ones (generate_reports.py:447-466)
+GOALS_OVERFLOW_THRESHOLD = 15
 
 
 def resolve_period(
@@ -154,7 +157,7 @@ def report_frames(
     # ALL to-do rows are goals, unless they overflow the page budget
     # (the reference's `if len(goals) > 15`); the parent fill '' sorts
     # first, deliberately (:469)
-    overflow = F.count(F.lit(1)).over(in_section()) > cfg.goals_overflow_threshold
+    overflow = F.count(F.lit(1)).over(in_section()) > GOALS_OVERFLOW_THRESHOLD
     sections = {
         tag: Section(
             kept & (status == "to do"), (parent, score, F.asc_nulls_last("due"), nid),
@@ -191,12 +194,7 @@ def report_frames(
 
 
 # ------------------------------------------------- per-section plans
-def goals(
-    df: DataFrame,
-    end: datetime,
-    cfg: EngineConfig,
-    lookup: DataFrame | None = None,
-) -> DataFrame:
+def goals(df: DataFrame, end: datetime, lookup: DataFrame | None = None) -> DataFrame:
     """F12+O6 (generate_reports.py:444-470): ALL 'to do' rows; when they
     overflow the page budget (>15) keep only due-within-14d-of-period-end
     OR priority ≤ High; grouped sort (parent, priority, due), parent fill
@@ -206,7 +204,7 @@ def goals(
     (The dated/undated pre-filter at :393-405 is dead code — its `goals`
     is overwritten by this path before any use.)"""
     todo = df.filter(F.lower("status") == "to do")
-    selected = overflow_policy_filter(todo, cfg.goals_overflow_threshold, _goal_kept(end))
+    selected = overflow_policy_filter(todo, GOALS_OVERFLOW_THRESHOLD, _goal_kept(end))
     return with_parent_name(selected, lookup=lookup, default="").orderBy(
         "parent_name", "priority_score", F.asc_nulls_last("due"), "nid"
     )

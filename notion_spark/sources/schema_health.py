@@ -46,7 +46,7 @@ def check_schema_health(
     raw_pages: DataFrame, props: dict[str, str] | None = None
 ) -> SchemaHealth:
     """``raw_pages`` is the connector landing frame (one `raw` JSON string
-    column, see sources.ingest.pages_raw_df / the notion_pages source)."""
+    column, see sources.ingest.pages_raw_df)."""
     configured = list(({**DEFAULT_PROPS, **(props or {})}).values())
     n_pages = raw_pages.count()
     keys = raw_pages.select(

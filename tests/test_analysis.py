@@ -80,8 +80,8 @@ def test_uncategorized_outside_vocabulary(tasks):
 
 
 def test_velocity_last_n_ascending(tasks):
-    rows = A.completion_velocity(tasks, CFG).collect()
-    assert 0 < len(rows) <= CFG.velocity_weeks
+    rows = A.completion_velocity(tasks).collect()
+    assert 0 < len(rows) <= A.VELOCITY_WEEKS
     weeks = [r.week_ending for r in rows]
     assert weeks == sorted(weeks)
     # W-MON anchoring: every label is a Monday
@@ -145,9 +145,9 @@ def _per_section(df, now, cfg):
         "overdue": A.overdue(f, now).limit(A.DISPLAY_ROWS),
         "overdue_top_by_priority": A.overdue_top_by_priority(f, now),
         "next_by_priority": A.next_by_priority(f),
-        "oldest_pending": A.oldest_pending(f, cfg),
+        "oldest_pending": A.oldest_pending(f),
         "uncategorized": A.uncategorized(f),
-        "completion_velocity": A.completion_velocity(f, cfg),
+        "completion_velocity": A.completion_velocity(f),
         "created_per_week": A.created_per_week(f),
     }
     out = {name: plan.toPandas() for name, plan in plans.items()}

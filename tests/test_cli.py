@@ -24,6 +24,23 @@ def test_now_is_naive_utc():
     assert cli._now(None).tzinfo is None
 
 
+def test_read_pages_from_a_directory_or_glob(tmp_path):
+    (tmp_path / "a.jsonl").write_text('{"id": "pg-1"}\n\n{"id": "pg-2"}\n')
+    (tmp_path / "b.jsonl").write_text('  \n{"id": "pg-3"}\n')
+    (tmp_path / "notes.txt").write_text('{"id": "not-a-page"}\n')
+    ids = ["pg-1", "pg-2", "pg-3"]
+    assert [p["id"] for p in cli._read_pages(str(tmp_path))] == ids
+    assert [p["id"] for p in cli._read_pages(str(tmp_path / "*.jsonl"))] == ids
+    assert [p["id"] for p in cli._read_pages(str(tmp_path / "b.jsonl"))] == ["pg-3"]
+
+
+def test_pipeline_without_snapshot_files_raises(spark, monkeypatch, tmp_path):
+    monkeypatch.setattr("notion_spark.session.get_spark", lambda **_: spark)
+    argv = ["pipeline", "--pages", str(tmp_path / "nope"), "--cache-dir", str(tmp_path / "out")]
+    with pytest.raises(FileNotFoundError, match="no page snapshot files"):
+        cli.main(argv)
+
+
 @pytest.fixture
 def run(spark, monkeypatch, capsys):
     """Run ``main(argv)`` on the test session and return its stdout;

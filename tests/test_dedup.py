@@ -58,8 +58,8 @@ def test_minhash_lsh_finds_near_dups(spark):
 
 
 def test_simhash_near_dups(spark):
-    sig = _docs(spark).select(D.simhash64("text").alias("s")).collect()
-    assert len({r.s for r in sig}) >= 3  # distinct docs -> distinct signatures
+    sig = D.simhash_signatures(_docs(spark)).collect()
+    assert len({r.sig for r in sig}) >= 3  # distinct docs -> distinct signatures
     cands = D.simhash_candidates(_docs(spark)).collect()
     found = {(r.id_a, r.id_b): r.hamming for r in cands}
     assert found[(1, 2)] == 0  # identical text -> identical simhash
@@ -581,7 +581,7 @@ class TestContainmentPairs:
 
 
 def test_containment_recall_operating_point(spark):
-    """r12 (SCALE_r12_containment_recall.json): the Jaccard-banded
+    """r12 (SCALE.md "r12 containment_pairs recall"): the Jaccard-banded
     candidate stage loses size-skewed containment pairs at the default
     b16xr4 geometry, and bands=num_hashes (r=1) recovers them — pinned
     here on a deterministic planted corpus: a ratio-10 container

@@ -169,37 +169,37 @@ class TestGroupedExpectations:
 
 class TestReferentialIntegrity:
     def test_orphans_nulls_and_ppm(self, spark):
-        from notion_spark.pipeline.expectations import referential_integrity
+        from notion_spark.pipeline.expectations import referential_integrity_edges
 
         child = spark.createDataFrame(
             [(1,), (1,), (2,), (99,), (None,)], "fk long"
         )
         parent = spark.createDataFrame([(1,), (2,), (3,)], "pk long")
-        out = referential_integrity(child, parent, "fk", "pk").collect()[0]
+        out = referential_integrity_edges(child, [("fk", parent, "pk", "fk->pk")]).collect()[0]
         assert out.constraint == "fk->pk"
         assert (out.n_child, out.n_null_fk, out.n_orphans) == (5, 1, 1)
         # 1 orphan of 4 non-null = 250000 ppm, half-up exact
         assert out.orphan_ppm == 250000
 
     def test_clean_edge_and_all_null_child(self, spark):
-        from notion_spark.pipeline.expectations import referential_integrity
+        from notion_spark.pipeline.expectations import referential_integrity_edges
 
         parent = spark.createDataFrame([(1,)], "pk long")
         clean = spark.createDataFrame([(1,), (1,)], "fk long")
-        r = referential_integrity(clean, parent, "fk", "pk").collect()[0]
+        r = referential_integrity_edges(clean, [("fk", parent, "pk", "fk->pk")]).collect()[0]
         assert r.n_orphans == 0 and r.orphan_ppm == 0
         nulls = spark.createDataFrame([(None,), (None,)], "fk long")
-        r2 = referential_integrity(nulls, parent, "fk", "pk", name="nulls").collect()[0]
+        r2 = referential_integrity_edges(nulls, [("fk", parent, "pk", "nulls")]).collect()[0]
         # no non-null references: nothing to orphan, rate reports 0
         assert r2.constraint == "nulls"
         assert (r2.n_null_fk, r2.n_orphans, r2.orphan_ppm) == (2, 0, 0)
 
     def test_duplicate_parent_keys_do_not_double_count(self, spark):
-        from notion_spark.pipeline.expectations import referential_integrity
+        from notion_spark.pipeline.expectations import referential_integrity_edges
 
         child = spark.createDataFrame([(1,), (2,)], "fk long")
         parent = spark.createDataFrame([(1,), (1,)], "pk long")
-        r = referential_integrity(child, parent, "fk", "pk").collect()[0]
+        r = referential_integrity_edges(child, [("fk", parent, "pk", "fk->pk")]).collect()[0]
         assert (r.n_child, r.n_orphans) == (2, 1)
 
 

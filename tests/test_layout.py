@@ -1,11 +1,11 @@
-"""Z-order layout: key correctness vs a Python Morton reference, and the
-clustering payoff (per-file bounding boxes shrink vs a random layout)."""
+"""Z-order key correctness vs a Python Morton reference, and the file
+compaction and bucketing helpers."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from notion_spark.pipeline.layout import write_zordered, zorder_key
+from notion_spark.pipeline.layout import zorder_key
 
 
 def _morton_ref(a: int, b: int, bits: int = 20) -> int:
@@ -23,37 +23,6 @@ def test_zorder_key_matches_reference(spark):
            df.select("a", "b", zorder_key("a", "b").alias("z")).collect()}
     for a, b in rows:
         assert got[(a, b)] == _morton_ref(a, b), (a, b)
-
-
-def test_zorder_layout_clusters_both_columns(spark, tmp_path):
-    # a 64x64 grid. A single-column stripe layout clusters that column
-    # perfectly and the other not at all (its per-file extent stays 64 —
-    # min/max pruning on it never skips a file). Z-order trades a little
-    # of each for bounded extents on BOTH dimensions.
-    df = spark.range(64 * 64).select(
-        (F.col("id") % 64).alias("a"), (F.col("id") / 64).cast("long").alias("b")
-    )
-    zpath = str(tmp_path / "z")
-    write_zordered(df, zpath, ("a", "b"), n_files=16)
-    stripes = str(tmp_path / "stripes")
-    df.repartitionByRange(16, "b").write.parquet(stripes)  # b-stripes
-
-    def mean_extents(path):
-        rows = (
-            spark.read.parquet(path)
-            .withColumn("f", F.input_file_name())
-            .groupBy("f")
-            .agg(
-                (F.max("a") - F.min("a") + 1).alias("ea"),
-                (F.max("b") - F.min("b") + 1).alias("eb"),
-            )
-        ).collect()
-        return (sum(r.ea for r in rows) / len(rows), sum(r.eb for r in rows) / len(rows))
-
-    sa, sb = mean_extents(stripes)
-    za, zb = mean_extents(zpath)
-    assert sa >= 63  # stripe layout cannot prune on `a` at all
-    assert za <= 33 and zb <= 33  # z-order bounds BOTH extents
 
 
 class TestCompactFiles:

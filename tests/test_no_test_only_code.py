@@ -3,7 +3,8 @@ a caller outside the tests.
 
 A name counts as called when it is referenced by name, attribute or import
 from ``notion_spark/`` (outside its own definition), ``perfbench/``,
-``scripts/``, ``bench.py`` or ``__spark_entry__.py``. Outside the package a
+``scripts/``, ``bench.py`` or ``__spark_entry__.py``. A local variable or
+parameter that shares the name is not a reference. Outside the package a
 string equal to the name counts too, because the traced benchmark binds
 functions by ``getattr``. Parity queries are called through the registry
 their ``@register`` decorator fills. References from ``tests/`` do not
@@ -48,13 +49,9 @@ ALLOWED = {
     "clean_task_list": "oracle",
     "completed_in_period": "oracle",
     "in_progress": "oracle",
-    "deterministic_shuffle": "not yet reviewed",
-    "write_training_shards": "not yet reviewed",
-    "simhash64": "not yet reviewed",
-    "write_zordered": "not yet reviewed",
+    "goals": "oracle",
     "compact_files": "not yet reviewed",
     "compact_store": "not yet reviewed",
-    "referential_integrity": "not yet reviewed",
 }
 
 
@@ -65,11 +62,52 @@ def _is_registered(node: ast.AST) -> bool:
     )
 
 
-def _names(node: ast.AST, strings: bool = False) -> set[str]:
-    out = set()
-    for n in ast.walk(node):
-        if isinstance(n, ast.Name):
+_FUNCTIONS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+_COMPREHENSIONS = (ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+
+
+def _local_bindings(scope: ast.AST) -> set[str]:
+    """Names a function or comprehension binds for its own body: a
+    comprehension's targets; a function's parameters and every name it
+    assigns, loops over, catches or defines outside its nested scopes,
+    minus its ``global`` declarations."""
+    if isinstance(scope, _COMPREHENSIONS):
+        return {
+            n.id for g in scope.generators for n in ast.walk(g.target) if isinstance(n, ast.Name)
+        }
+    a = scope.args
+    out = {p.arg for p in (*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg) if p}
+    globals_ = set()
+    stack = list(scope.body) if isinstance(scope.body, list) else [scope.body]
+    while stack:
+        n = stack.pop()
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Load):
             out.add(n.id)
+        elif isinstance(n, ast.ExceptHandler) and n.name:
+            out.add(n.name)
+        elif isinstance(n, ast.Global):
+            globals_.update(n.names)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.add(n.name)
+        elif not isinstance(n, (*_FUNCTIONS, *_COMPREHENSIONS)):
+            stack.extend(ast.iter_child_nodes(n))
+    return out - globals_
+
+
+def _names(node: ast.AST, strings: bool = False) -> set[str]:
+    """Names ``node`` refers to. Inside a function a name the function
+    binds itself (a parameter, an assignment, a loop or comprehension
+    target, a lambda argument) is a local, not a reference."""
+    out = set()
+    stack = [(node, frozenset())]
+    while stack:
+        n, bound = stack.pop()
+        if isinstance(n, (*_FUNCTIONS, *_COMPREHENSIONS)):
+            bound = bound | _local_bindings(n)
+        stack.extend((c, bound) for c in ast.iter_child_nodes(n))
+        if isinstance(n, ast.Name):
+            if n.id not in bound:
+                out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, ast.alias):
@@ -124,3 +162,20 @@ def test_allowlist_stays_true():
     assert not gone, f"ALLOWED names that no longer exist: {gone}"
     called = sorted(set(ALLOWED) & refs)
     assert not called, f"ALLOWED names that now have a caller: {called}"
+
+
+def test_a_local_named_like_a_public_function_is_not_a_caller():
+    shadowed = """
+def render(rows, goals):
+    kept = [goals for goals in rows]
+    key = lambda goals: goals
+    for goals in rows:
+        pass
+    return goals, kept, key
+"""
+    assert "goals" not in _names(ast.parse(shadowed))
+    called = """
+def render(rows):
+    return goals(rows)
+"""
+    assert "goals" in _names(ast.parse(called))

@@ -60,9 +60,9 @@ def test_completed_in_period_window(tasks):
 def test_goals_overflow_policy(tasks):
     start, end = R.resolve_period("weekly", FIXED_NOW)
     todo_count = tasks.filter(F.lower("status") == "to do").count()
-    rows = R.goals(tasks, end, CFG).collect()
+    rows = R.goals(tasks, end).collect()
     assert rows
-    if todo_count > CFG.goals_overflow_threshold:
+    if todo_count > R.GOALS_OVERFLOW_THRESHOLD:
         horizon = end + timedelta(days=14)
         for r in rows:
             assert r.priority_score <= 1 or (r.due is not None and r.due <= horizon)
@@ -94,7 +94,7 @@ def test_report_frames_and_pie(tasks):
     base = R.clean_task_list(tasks, CFG)
     start, end = R.resolve_period("yearly", FIXED_NOW)
     assert sum(pie.values()) == (
-        R.goals(base, end, CFG, lookup=tasks).count()
+        R.goals(base, end, lookup=tasks).count()
         + R.completed_in_period(base, start, end, lookup=tasks).count()
         + R.in_progress(base, lookup=tasks).count()
     )
@@ -253,7 +253,7 @@ def test_driver_side_split_matches_per_period_filter(spark, tasks):
     for p in PERIODS:
         start, end = R.resolve_period(p, FIXED_NOW)
         want = {
-            "goals": R.goals(base, end, CFG, lookup=df),
+            "goals": R.goals(base, end, lookup=df),
             "completed": R.completed_in_period(base, start, end, lookup=df),
             "in_progress": R.in_progress(base, lookup=df),
         }
@@ -282,7 +282,7 @@ def test_goals_gate_at_threshold(tasks):
     on and only due-soon or critical/high rows stay."""
     from notion_spark.sinks.pdf_report import report_payload
 
-    assert CFG.goals_overflow_threshold == 15
+    assert R.GOALS_OVERFLOW_THRESHOLD == 15
     for n_todo, gated in ((15, False), (16, True)):
         df = _with_todos(tasks, n_todo)
         todo = R.clean_task_list(df, CFG).filter(F.lower("status") == "to do").collect()
@@ -318,7 +318,7 @@ def test_sections_match_per_section_plans(spark):
             for p in PERIODS:
                 start, end = R.resolve_period(p, now)
                 want = {
-                    "goals": R.goals(base, end, cfg, lookup=tagged).select(*PAYLOAD_COLS),
+                    "goals": R.goals(base, end, lookup=tagged).select(*PAYLOAD_COLS),
                     "completed": R.completed_in_period(base, start, end, lookup=tagged)
                     .select(*PAYLOAD_COLS),
                     "in_progress": doing.select(*PAYLOAD_COLS),

@@ -53,9 +53,19 @@ def test_lsh_topk_recall(spark, sf_dir):
     assert self_hits == 5
 
 
+def _ivf_codebook(df, n_centroids, iterations):
+    """Float IVF codebook: the engine-exact trainer's offset-scaled
+    integer centroids mapped back to floats."""
+    scale, offset = 1_000_000, 10.0
+    cents = S.train_ivf_centroids_scaled(
+        df, n_centroids=n_centroids, iterations=iterations, scale=scale, offset=offset
+    )
+    return [[x / scale - offset for x in c] for c in cents]
+
+
 def test_ivf_topk(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    centroids = S.train_ivf_centroids(emb, n_centroids=8, iterations=2)
+    centroids = _ivf_codebook(emb, 8, 2)
     assert len(centroids) == 8 and len(centroids[0]) == 64
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -78,7 +88,7 @@ def test_ivf_partitioned_layout_same_answer_pruned_scan(spark, sf_dir, tmp_path)
     cells as PartitionFilters (static partition pruning), the 100 TB
     point of the layout."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    centroids = S.train_ivf_centroids(emb, n_centroids=8, iterations=2)
+    centroids = _ivf_codebook(emb, 8, 2)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -116,7 +126,7 @@ def _synth_vectors(n, dim, n_clusters=16):
 def test_assign_cells_pandas_matches_literal_path(spark, monkeypatch):
     rows = _synth_vectors(200, 16, n_clusters=8)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = S.train_ivf_centroids(df, n_centroids=8, iterations=1)
+    cents = _ivf_codebook(df, 8, 1)
     lit = {r.vec_id: r.cell for r in S.assign_cells(df, cents).collect()}
     monkeypatch.setattr(S, "IVF_LITERAL_MAX_K", 0)  # force the numpy path
     pan = {r.vec_id: r.cell for r in S.assign_cells(df, cents).collect()}
@@ -129,7 +139,7 @@ def test_ivf_large_k_no_literal_blowup_and_exact_at_full_probe(spark):
     # EXACT when probing every cell.
     rows = _synth_vectors(400, 64, n_clusters=64)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = S.train_ivf_centroids(df, n_centroids=256, iterations=1)
+    cents = _ivf_codebook(df, 256, 1)
     assert len(cents) == 256
 
     assigned = S.assign_cells(df, cents)
@@ -188,7 +198,7 @@ def test_hard_negatives_ann_methods(spark):
     )
     # n_planes=2, n_probes=3 covers 3 of 4 buckets: high recall, gated
     assert S.recall_at_k(exact, lsh_full) >= 0.6
-    cents = S.train_ivf_centroids(df, n_centroids=8, iterations=1)
+    cents = _ivf_codebook(df, 8, 1)
     ivf_full = S.hard_negatives(df, anchors, k=5, method="ivf", centroids=cents, nprobe=8)
     assert sorted(map(tuple, ivf_full.collect())) == sorted(map(tuple, exact.collect()))
     ivf_part = S.hard_negatives(df, anchors, k=5, method="ivf", centroids=cents, nprobe=4)
@@ -207,7 +217,7 @@ def test_knn_disagreement_ann_methods(spark):
         rows[:5], "query_id long, embedding array<float>, label int"
     )
     exact = S.knn_label_disagreement(df, anchors, k=5)
-    cents = S.train_ivf_centroids(df, n_centroids=8, iterations=1)
+    cents = _ivf_codebook(df, 8, 1)
     # nprobe=K candidate set == full corpus -> identical disagreement table
     ivf_full = S.knn_label_disagreement(
         df, anchors, k=5, method="ivf", centroids=cents, nprobe=8
@@ -345,7 +355,7 @@ def test_ann_swap_plans_no_cartesian(spark):
     anchors = spark.createDataFrame(
         rows[:3], "query_id long, embedding array<float>, label int"
     )
-    cents = S.train_ivf_centroids(df, n_centroids=4, iterations=1)
+    cents = _ivf_codebook(df, 4, 1)
     for approx in (
         S.hard_negatives(df, anchors, k=3, method="lsh", n_planes=4, dim=16),
         S.hard_negatives(df, anchors, k=3, method="ivf", centroids=cents, nprobe=2),
