@@ -37,7 +37,9 @@ def _now(arg: str | None) -> datetime:
 def _read_pages(path: str) -> list[dict]:
     """The page objects on every non-blank line of a JSON-lines snapshot
     file, of a directory's ``*.jsonl`` files, or of the files a glob
-    matches."""
+    matches. A page id that appears more than once keeps its last
+    occurrence in read order (sorted files, then lines): the reference's
+    keep-last by UID (fetch_pages.py:598-601)."""
     files = sorted(glob.glob(os.path.join(path, "*.jsonl") if os.path.isdir(path) else path))
     if not files:
         raise FileNotFoundError(f"no page snapshot files under {path}")
@@ -45,7 +47,8 @@ def _read_pages(path: str) -> list[dict]:
     for name in files:
         with open(name) as f:
             pages += [json.loads(line) for line in f if line.strip()]
-    return pages
+    last = {p["id"]: i for i, p in enumerate(pages)}
+    return [p for i, p in enumerate(pages) if last[p["id"]] == i]
 
 
 def main(argv: list[str] | None = None) -> int:

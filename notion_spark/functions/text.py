@@ -104,24 +104,21 @@ def truncate_lines(col: Column | str, max_lines: int, marker: str = "(Truncated)
 
 
 # ---------------------------------------------------------------- X1
-def render_rich_text(rich: Column | str, include_code: bool = False) -> Column:
+def render_rich_text(rich: Column | str) -> Column:
     """Rich-text array -> markdown-ish string (fetch_pages.py:216-228).
 
     Expects ``array<struct<plain_text:string, href:string,
     annotations:struct<bold:boolean,italic:boolean,underline:boolean,
     strikethrough:boolean,code:boolean>>>`` and wraps each segment in the
-    corresponding markers, concatenated in order. The reference renderer
-    handles only bold/italic/underline/strikethrough/href; pass
-    ``include_code=True`` to additionally backtick code-annotated spans
-    (an extension, off by default to keep byte parity).
+    corresponding markers, concatenated in order. Like the reference
+    renderer it handles only bold/italic/underline/strikethrough/href;
+    code-annotated spans render as plain text (byte parity).
     """
     r = _c(rich)
 
     def seg(e: Column) -> Column:
         txt = e["plain_text"]
         a = e["annotations"]
-        if include_code:
-            txt = F.when(a["code"], F.concat(F.lit("`"), txt, F.lit("`"))).otherwise(txt)
         txt = F.when(a["bold"], F.concat(F.lit("**"), txt, F.lit("**"))).otherwise(txt)
         txt = F.when(a["italic"], F.concat(F.lit("*"), txt, F.lit("*"))).otherwise(txt)
         txt = F.when(a["underline"], F.concat(F.lit("__"), txt, F.lit("__"))).otherwise(txt)

@@ -33,11 +33,10 @@ def conditional_counts(
 
 
 # ---------------------------------------------------------------- A2/A3
-def value_counts(df: DataFrame, col: str, desc: bool = True) -> DataFrame:
+def value_counts(df: DataFrame, col: str) -> DataFrame:
     """`value_counts()` equivalent (analyze_pages.py:466, 483)."""
     out = df.groupBy(col).agg(F.count(F.lit(1)).alias("count"))
-    order = [F.desc("count"), F.asc(col)] if desc else [F.asc(col)]
-    return out.orderBy(*order)
+    return out.orderBy(F.desc("count"), F.asc(col))
 
 
 # ---------------------------------------------------------------- A4
@@ -46,33 +45,31 @@ def weekly_counts(
     ts_col: str,
     anchor: str = "MON",
     last_n: int | None = None,
-    fill_gaps: bool = True,
 ) -> DataFrame:
     """pandas `resample('W-{anchor}').size()` parity
     (analyze_pages.py:438-439 velocity, W-MON; golden created-per-week is
     W-SUN). Output: (week_ending date, count), optionally the trailing
     ``last_n`` buckets re-sorted ascending (`tail(12)` at :439).
 
-    ``fill_gaps`` mirrors resample's calendar semantics: weeks between
-    min and max with no rows appear with count 0 (a bare groupBy would
-    silently skip them, shifting what `tail(12)` means)."""
+    Mirrors resample's calendar semantics: weeks between min and max
+    with no rows appear with count 0 (a bare groupBy would silently skip
+    them, shifting what `tail(12)` means)."""
     out = (
         df.filter(F.col(ts_col).isNotNull())
         .groupBy(week_ending(ts_col, anchor).alias("week_ending"))
         .agg(F.count(F.lit(1)).alias("count"))
     )
-    if fill_gaps:
-        calendar = (
-            out.agg(F.min("week_ending").alias("lo"), F.max("week_ending").alias("hi"))
-            .select(
-                F.explode(
-                    F.sequence(F.col("lo"), F.col("hi"), F.expr("INTERVAL 7 DAYS"))
-                ).alias("week_ending")
-            )
+    calendar = (
+        out.agg(F.min("week_ending").alias("lo"), F.max("week_ending").alias("hi"))
+        .select(
+            F.explode(
+                F.sequence(F.col("lo"), F.col("hi"), F.expr("INTERVAL 7 DAYS"))
+            ).alias("week_ending")
         )
-        out = calendar.join(out, "week_ending", "left").select(
-            "week_ending", F.coalesce("count", F.lit(0)).alias("count")
-        )
+    )
+    out = calendar.join(out, "week_ending", "left").select(
+        "week_ending", F.coalesce("count", F.lit(0)).alias("count")
+    )
     if last_n is not None:
         out = out.orderBy(F.desc("week_ending")).limit(last_n)
     return out.orderBy("week_ending")

@@ -44,12 +44,10 @@ def sigma_outliers(
     value_col: str,
     t: int = 3,
     micro: int = 1_000_000,
-    mark_only: bool = False,
 ) -> DataFrame:
     """Rows whose ``value_col`` deviates more than ``t`` standard
     deviations from their group mean (population σ, the monitoring
-    convention). ``mark_only=True`` returns every row with an
-    ``is_outlier`` boolean instead of filtering.
+    convention).
 
     Groups with n < 2 (σ undefined) and NULL values never flag."""
     if t < 1 or micro < 1:
@@ -101,12 +99,8 @@ def sigma_outliers(
         & (F.col("__n") >= 2)
         & ((lhs * lhs).cast(D38) > (F.lit(t * t).cast(D38) * rhs).cast(D38))
     )
-    marked = j.withColumn("is_outlier", F.coalesce(flag, F.lit(False))).drop(
-        "__v", "__n", "__s", "__q"
-    )
-    if mark_only:
-        return marked
-    return marked.filter(F.col("is_outlier")).drop("is_outlier")
+    # a NULL verdict (no stats, NULL value) filters out like False
+    return j.filter(flag).drop("__v", "__n", "__s", "__q")
 
 
 def sigma_outliers_sql(
@@ -213,7 +207,6 @@ def mad_outliers(
     value_col: str,
     t: int = 3,
     micro: int = 1_000_000,
-    mark_only: bool = False,
 ) -> DataFrame:
     """Rows deviating more than ``t``×MAD from their group's MEDIAN —
     the robust sibling of `sigma_outliers`: one genuine extreme value
@@ -301,22 +294,15 @@ def mad_outliers(
     for g in groups:
         c = F.col(g).eqNullSafe(F.col(f"__g_{g}"))
         cond = c if cond is None else (cond & c)
-    marked = (
+    return (
         df.withColumn("__v", v)
         .join(F.broadcast(frame), on=cond, how="left")
-        .withColumn(
-            "is_outlier",
-            F.coalesce(
-                F.col("__v").isNotNull()
-                & (F.abs(F.col("__v") - F.col("__med")) > F.lit(t) * F.col("__mad")),
-                F.lit(False),
-            ),
+        .filter(
+            F.col("__v").isNotNull()
+            & (F.abs(F.col("__v") - F.col("__med")) > F.lit(t) * F.col("__mad"))
         )
         .drop("__v", "__med", "__mad", *[f"__g_{g}" for g in groups])
     )
-    if mark_only:
-        return marked
-    return marked.filter(F.col("is_outlier")).drop("is_outlier")
 
 
 def mad_outliers_sql(

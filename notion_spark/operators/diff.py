@@ -11,7 +11,7 @@ after a backfill.
 Shape: ONE full-outer shuffle join on the key, then a null-safe
 column-by-column comparison — all codegen'd, no UDFs. At 100 TB both
 sides shuffle once on the key; if the snapshots are written bucketed by
-the key (sources/io.write_bucketed) the exchange disappears entirely and
+the key (pipeline/layout.write_bucketed) the exchange disappears entirely and
 the diff is a zipper merge per bucket. For very wide rows, pass
 ``compare_cols`` to restrict the comparison (and the shuffled width) to
 the columns that matter.
@@ -30,16 +30,16 @@ def snapshot_diff(
     new: DataFrame,
     key: str | Sequence[str],
     compare_cols: Sequence[str] | None = None,
-    include_unchanged: bool = False,
 ) -> DataFrame:
-    """Classify every key of ``old`` ∪ ``new``:
+    """Classify every key of ``old`` ∪ ``new`` and return the ones that
+    differ:
 
     - ``added``     — key only in ``new``
     - ``removed``   — key only in ``old``
     - ``changed``   — key in both, any compare column differs (null-safe:
       NULL→value and value→NULL both count as changes; NULL→NULL does not)
-    - ``unchanged`` — key in both, all compare columns equal (emitted only
-      when ``include_unchanged``)
+
+    Keys in both with all compare columns equal are not emitted.
 
     Output: key column(s) + ``change_type`` + ``old_<c>`` / ``new_<c>``
     for each compare column. Deterministic for any input (no ordering
@@ -92,9 +92,11 @@ def snapshot_diff(
         .when(any_diff(), F.lit("changed"))
         .otherwise(F.lit("unchanged"))
     )
-    out = j.withColumn("change_type", change).drop("__in_old", "__in_new")
-    if not include_unchanged:
-        out = out.filter(F.col("change_type") != "unchanged")
+    out = (
+        j.withColumn("change_type", change)
+        .drop("__in_old", "__in_new")
+        .filter(F.col("change_type") != "unchanged")
+    )
     return out.select(*keys, "change_type", *[f"old_{c}" for c in cols], *[f"new_{c}" for c in cols])
 
 

@@ -10,7 +10,7 @@ both are set operations:
   per key.
 
 At scale the upsert shuffles once on the key; when the base is bucketed by
-the key (sources/io.write_bucketed) the shuffle on the base side disappears.
+the key (pipeline/layout.write_bucketed) the shuffle on the base side disappears.
 """
 
 from __future__ import annotations

@@ -24,7 +24,7 @@ Scale notes:
 - Sums route through DECIMAL so merge order can never change a bit
   (floating-point addition is not associative; decimal addition is).
 - The state is keyed by the group columns — write it bucketed on those
-  keys (sources/io.write_bucketed) and the merge shuffle disappears too.
+  keys (pipeline/layout.write_bucketed) and the merge shuffle disappears too.
 """
 
 from __future__ import annotations

@@ -3466,7 +3466,7 @@ def curation_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_cluster_collapse, curation_decontam, curation_token_budget,
     curation_temperature_take, curation_split_assignment); this row
     certifies the COMPOSITION — stage order, the survivor set each
-    stage hands the next, and the audit thread — by pinning exactly
+    stage hands the next — by pinning exactly
     which (doc_id, source) rows exit the preset and the split each one
     lands in. The oracle chains the same verified SQL fragments over
     the same shrinking survivor CTEs."""
@@ -3479,7 +3479,7 @@ def curation_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n_toks", TA.ws_token_count(F.col("text")).cast("long"))
     )
     bench = d.filter(F.col("doc_id") < 20)
-    out, _ = curate_corpus(
+    out = curate_corpus(
         corpus,
         benchmark=bench,
         near_dup_threshold=0.5,

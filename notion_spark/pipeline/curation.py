@@ -74,7 +74,7 @@ def semantic_contaminated_ids(
     stage and a map-side-combined per-id max — no shuffle of the
     pairwise stream beyond the id-key combine. For a benchmark too big
     to broadcast, bucket both sides with the similarity LSH machinery
-    first (`similarity._candidate_pairs`)."""
+    first (`similarity.random_hyperplane_bucket`)."""
     from notion_spark.pipeline.similarity import cosine
 
     b = F.broadcast(benchmark.select(F.col(vec_col).alias("__bv")))
@@ -120,7 +120,7 @@ def semantic_split_leakage(
     never broadcast the train side. For an eval split too big to
     broadcast (not a real eval set, but e.g. auditing one corpus
     against another), bucket both sides with the LSH machinery first
-    (`similarity._candidate_pairs`) — the same fallback
+    (`similarity.random_hyperplane_bucket`) — the same fallback
     `semantic_contaminated_ids` documents for an oversized benchmark.
 
     ``score_partitions``: the scoring stage's parallelism equals the

@@ -37,16 +37,6 @@ from pyspark.sql import functions as F
 
 # ------------------------------------------------------------ shingling
 
-def _maybe_persist(df: DataFrame, flag: bool) -> DataFrame:
-    """Per-invocation lazy persist with an opt-out (the
-    persist_candidates convention, extended r13 per ADVICE r12): the
-    fan-out frames these operators cache are invaluable inside one
-    call but outlive it — a long-lived session looping over batches
-    should pass persist_intermediates=False (or clearCache between
-    batches) so executor storage does not accrete."""
-    return df.persist() if flag else df
-
-
 def _raw_shingles(tokens: Column, n: int = 3) -> Column:
     """n-gram shingles (space-joined, duplicates kept) over an ALREADY
     BOUND token-array attribute. Callers must project the token array into
@@ -342,7 +332,6 @@ def jaccard_pairs_prefix(
     threshold: float = 0.8,
     block_key: Column | None = None,
     max_token_bucket: int = 100_000,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """BLOCKING-FREE exact n-gram Jaccard near-dup pairs via prefix
     filtering (AllPairs, Bayardo/Ma/Srikant WWW 2007; the PPJoin
@@ -396,7 +385,7 @@ def jaccard_pairs_prefix(
     # (via toks) AND both verify sides — persisted, the shingle explode
     # + collect_set shuffle runs once instead of ~4x (the
     # levenshtein_pairs_qgram treatment; consumers are terminal).
-    docs = _maybe_persist(docs.withColumn("sz", F.size("sh")), persist_intermediates)
+    docs = docs.withColumn("sz", F.size("sh")).persist()
     toks = docs.select("id", *blk, "sz", F.explode("sh").alias("h"))
     freq = toks.groupBy("h").agg(F.count(F.lit(1)).alias("__f"))
     wdoc = Window.partitionBy("id").orderBy(F.asc("__f"), F.asc("h"))
@@ -416,9 +405,7 @@ def jaccard_pairs_prefix(
     wtok = Window.partitionBy("h", *blk)
     # r12 OPT: bucket-size window folded into the persisted prefix frame
     # (one compute; both candidate sides read the cache)
-    pref = _maybe_persist(
-        pref.withColumn("__t_n", F.count(F.lit(1)).over(wtok)), persist_intermediates
-    )
+    pref = pref.withColumn("__t_n", F.count(F.lit(1)).over(wtok)).persist()
     guard = guarded(
         F.col("__t_n") > F.lit(max_token_bucket),
         f"jaccard_pairs_prefix: prefix shingle bucket exceeds {max_token_bucket}"
@@ -689,7 +676,6 @@ def levenshtein_pairs_qgram(
     max_gram_bucket: int = 100_000,
     block_key: Column | None = None,
     max_candidates: int | None = 200_000_000,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """BLOCKING-FREE exact edit-distance near-dup pairs via q-gram
     prefix filtering (Ed-Join, Xiao/Wang/Lin VLDB 2008): no blocking
@@ -825,11 +811,8 @@ def levenshtein_pairs_qgram(
     # action and every later subtree reads the cache; clearCache() or
     # unpersist between batches in a long-running loop (the
     # cross_minhash_pairs convention).
-    docs = _maybe_persist(
-        members.filter(F.col("id") == F.col("rep")).drop("rep", "__grp_n"),
-        persist_intermediates,
-    )
-    mem = _maybe_persist(members.select("id", "rep", "__grp_n"), persist_intermediates)
+    docs = members.filter(F.col("id") == F.col("rep")).drop("rep", "__grp_n").persist()
+    mem = members.select("id", "rep", "__grp_n").persist()
     band_w = max(max_distance, 1)
     banded_docs = docs.withColumn(
         "band", F.call_function("div", F.col("len"), F.lit(band_w))
@@ -875,7 +858,7 @@ def levenshtein_pairs_qgram(
         (F.expr("locate(gram, txt)") - F.lit(1)).alias("__pos"),
     )
     # r12 OPT: feeds freq, the prefix join AND ndist — one explode
-    grams = _maybe_persist(grams, persist_intermediates)
+    grams = grams.persist()
     freq = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("__f"))
     wdoc = Window.partitionBy("id").orderBy(F.asc("__f"), F.asc("gram"))
     pre_cap = (
@@ -916,9 +899,7 @@ def levenshtein_pairs_qgram(
     # window runs once, not once per join side; pref then feeds the a/b
     # candidate sides and the mass-guard sizes from the cache (3 reads,
     # 1 compute of the join+prefix-window lineage).
-    pref = _maybe_persist(
-        pref.withColumn("__g_n", F.count(F.lit(1)).over(wg)), persist_intermediates
-    )
+    pref = pref.withColumn("__g_n", F.count(F.lit(1)).over(wg)).persist()
     guard = guarded(
         F.col("__g_n") > F.lit(max_gram_bucket),
         f"levenshtein_pairs_qgram: prefix gram bucket exceeds {max_gram_bucket}"
@@ -1197,7 +1178,6 @@ def _banded_candidates(
     banded: DataFrame,
     max_bucket: int | None,
     extra_cols: list[str] | None = None,
-    impl: str = "agg",
 ) -> DataFrame:
     """(band, bucket, id [, extras]) rows -> candidate pairs with a
     hot-bucket guard.
@@ -1215,45 +1195,31 @@ def _banded_candidates(
     ``extra_cols`` are carried through with _a/_b suffixes (e.g. simhash
     signatures for the pairwise Hamming distance).
 
-    Physical shapes, chosen by ``impl`` (guarded paths only):
-
-    - ``"agg"`` (default): ONE map-side-combined groupBy (band, bucket)
-      collecting the sorted member array, then pair expansion as a
-      higher-order-function projection (clique for small buckets, star
-      above ``max_bucket`` — the If evaluates only the taken branch, so
-      hot buckets never build clique arrays). No self-join, no window, one
-      shuffle total. ~25% faster than the window formulation at sf0.1
-      (2.7-3.6 s vs 3.2-4.1 s warm, identical output). Memory bound: one
-      collected array per bucket, O(bucket members) — collect_list does
-      NOT spill, so a degenerate bucket of ~10M+ members risks executor
-      memory. Run exact dedup first (standard pipeline order — it
-      collapses the identical-doc mass that forms mega-buckets) or pass
-      ``impl="window"``.
-    - ``"window"``: bucket size + center ride in via window aggregates
-      over one hash-partition by (band, bucket); the clique self-join
-      reuses the same exchange and the star pairs are a pure projection.
-      WindowExec buffers each bucket in a spilling row array, so
-      arbitrarily degenerate buckets survive. The earlier groupBy-stats +
-      two-broadcast-join formulation cost three extra stages and
-      measurably regressed the sf0.1 bench (~35%).
+    Physical shape of the guarded path: ONE map-side-combined groupBy
+    (band, bucket) collecting the sorted member array, then pair
+    expansion as a higher-order-function projection (clique for small
+    buckets, star above ``max_bucket`` — the If evaluates only the taken
+    branch, so hot buckets never build clique arrays). No self-join, no
+    window, one shuffle total. ~25% faster than a window formulation at
+    sf0.1 (2.7-3.6 s vs 3.2-4.1 s warm, identical output). Memory bound:
+    one collected array per bucket, O(bucket members) — collect_list does
+    NOT spill, so a degenerate bucket of ~10M+ members risks executor
+    memory. Run exact dedup first (standard pipeline order — it
+    collapses the identical-doc mass that forms mega-buckets).
 
     ``max_bucket=None`` (explicit unbounded opt-in) always uses the
     streaming self-join — unbounded cliques must not pass through a
     collected array OR a window buffer.
     """
-    if impl not in ("agg", "window"):
-        raise ValueError(f"impl must be 'agg' or 'window', got {impl!r}")
     extra_cols = extra_cols or []
-    keep = ["band", "bucket", "id", *extra_cols]
-    banded = banded.select(*keep)
+    banded = banded.select("band", "bucket", "id", *extra_cols)
     out_cols = ["id_a", "id_b"] + [f"{c}_{s}" for c in extra_cols for s in ("a", "b")]
-
-    def _sides(src: DataFrame):
-        x = src.select(
+    if max_bucket is None:
+        x = banded.select(
             "band", "bucket", F.col("id").alias("id_a"),
             *[F.col(c).alias(f"{c}_a") for c in extra_cols],
         )
-        y = src.select(
+        y = banded.select(
             F.col("band").alias("band_y"), F.col("bucket").alias("bucket_y"),
             F.col("id").alias("id_b"),
             *[F.col(c).alias(f"{c}_b") for c in extra_cols],
@@ -1261,13 +1227,8 @@ def _banded_candidates(
         return x.join(
             y,
             on=[x["band"] == y["band_y"], x["bucket"] == y["bucket_y"], x["id_a"] < y["id_b"]],
-        )
-
-    if max_bucket is None:
-        return _sides(banded).select(*out_cols)
-    if impl == "agg":
-        return _banded_candidates_agg(banded, max_bucket, extra_cols, out_cols)
-    return _banded_candidates_window(banded, max_bucket, extra_cols, out_cols, _sides, keep)
+        ).select(*out_cols)
+    return _banded_candidates_agg(banded, max_bucket, extra_cols, out_cols)
 
 
 def _banded_candidates_agg(
@@ -1311,44 +1272,6 @@ def _banded_candidates_agg(
     )
 
 
-def _banded_candidates_window(
-    banded: DataFrame,
-    max_bucket: int,
-    extra_cols: list[str],
-    out_cols: list[str],
-    _sides,
-    keep: list[str],
-) -> DataFrame:
-    """Guarded pair expansion via spilling window aggregates (see
-    _banded_candidates docstring for when to prefer this)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "bucket")
-    # min(struct(id, extras)) picks the center row atomically: struct
-    # ordering is lexicographic, so the minimum id's extras come with it.
-    center = F.min(F.struct("id", *extra_cols)).over(w)
-    annotated = banded.select(
-        *keep,
-        F.count(F.lit(1)).over(w).alias("cnt"),
-        center.getField("id").alias("center_id"),
-        *[center.getField(c).alias(f"center_{c}") for c in extra_cols],
-    )
-    clique = _sides(annotated.filter(F.col("cnt") <= max_bucket)).select(*out_cols)
-    star = (
-        annotated.filter((F.col("cnt") > max_bucket) & (F.col("id") != F.col("center_id")))
-        .select(
-            F.col("center_id").alias("id_a"),
-            F.col("id").alias("id_b"),
-            *[
-                col
-                for c in extra_cols
-                for col in (F.col(f"center_{c}").alias(f"{c}_a"), F.col(c).alias(f"{c}_b"))
-            ],
-        )
-    )
-    return clique.unionByName(star)
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -1357,7 +1280,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     ngram: int = 3,
     max_bucket: int | None = 1000,
-    guard_impl: str = "agg",
     hashes: DataFrame | None = None,
 ) -> DataFrame:
     """LSH banding: each signature splits into ``bands`` rows keyed by
@@ -1366,15 +1288,13 @@ def minhash_lsh_candidates(
     (16 bands × 4 rows ⇒ ~0.5-0.6 Jaccard). Output: distinct (id_a, id_b),
     id_a < id_b. Buckets larger than ``max_bucket`` fall back to a star
     around the bucket minimum (see _banded_candidates) so a degenerate
-    bucket can never go quadratic. ``guard_impl="window"`` selects the
-    spilling formulation for corpora whose buckets outgrow a collected
-    array (see _banded_candidates). ``hashes``: precomputed
+    bucket can never go quadratic. ``hashes``: precomputed
     `shingle_hashes` frame (see shingle_hash_sets)."""
     assert num_hashes % bands == 0
     sig = minhash_signatures(df, text_col, id_col, num_hashes, ngram, hashes=hashes)
     banded = _minhash_banded(sig, num_hashes, bands)
     return (
-        _banded_candidates(banded, max_bucket, impl=guard_impl)
+        _banded_candidates(banded, max_bucket)
         .select("id_a", "id_b")
         .distinct()
     )
@@ -1414,22 +1334,13 @@ def minhash_dedup_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     ngram: int = 3,
-    verify_scope: str = "all",
     max_bucket: int | None = 1000,
-    guard_impl: str = "agg",
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact Jaccard verify over
     shingle-hash sets. Output matches `jaccard_pairs` (id_a, id_b,
     jaccard ≥ threshold), so LSH recall is measurable against the exact
-    blocked variant.
-
-    ``verify_scope``: 'all' builds verify-sets for the whole corpus in one
-    streaming pass (fewest stages — fastest when the corpus scan is
-    cheap); 'candidates' persists the candidate pairs and builds sets only
-    for docs appearing in one (3 extra small shuffles, but the second
-    shingle pass becomes proportional to candidates — the right choice
-    when the corpus is huge relative to the near-dup population).
+    blocked variant. Verify-sets are built for the whole corpus in one
+    streaming pass.
 
     Measured dead end (so nobody re-tries it): computing signatures and
     verify-sets in ONE combined aggregate behind a persisted frame is
@@ -1441,25 +1352,11 @@ def minhash_dedup_pairs(
     signature aggregate AND the verify-set aggregate from that one
     cache — the explode runs once and the cached rows are 16 bytes+id,
     not the wide combined row the dead end cached."""
-    ex = _maybe_persist(
-        shingle_hashes(df, text_col, id_col, ngram), persist_intermediates
-    )
+    ex = shingle_hashes(df, text_col, id_col, ngram).persist()
     cands = minhash_lsh_candidates(
-        df, text_col, id_col, num_hashes, bands, ngram, max_bucket, guard_impl,
-        hashes=ex,
+        df, text_col, id_col, num_hashes, bands, ngram, max_bucket, hashes=ex
     )
-    if verify_scope == "candidates":
-        cands = cands.persist()
-        cands.count()
-        cand_ids = (
-            cands.select(F.col("id_a").alias("id"))
-            .unionByName(cands.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        scope_hashes = ex.join(cand_ids, "id", "left_semi")
-    else:
-        scope_hashes = ex
-    sets_ = shingle_hash_sets(df, text_col, id_col, ngram, hashes=scope_hashes)
+    sets_ = shingle_hash_sets(df, text_col, id_col, ngram, hashes=ex)
     j = (
         cands.join(sets_.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(sets_.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -1476,7 +1373,6 @@ def levenshtein_pairs_minhash(
     bands: int = 16,
     ngram: int = 3,
     max_bucket: int | None = 1000,
-    guard_impl: str = "agg",
 ) -> DataFrame:
     """APPROXIMATE-RECALL exact edit-distance pairs: MinHash-LSH
     candidates (token-shingle banding) verified by the exact
@@ -1500,7 +1396,7 @@ def levenshtein_pairs_minhash(
     Identical texts share identical signatures, hence every bucket, so
     exact dups are always candidates (bucket cap permitting)."""
     cands = minhash_lsh_candidates(
-        df, text_col, id_col, num_hashes, bands, ngram, max_bucket, guard_impl
+        df, text_col, id_col, num_hashes, bands, ngram, max_bucket
     )
     ta = df.select(
         F.col(id_col).alias("id_a"),
@@ -1625,7 +1521,6 @@ def cross_minhash_pairs(
     bands: int = 16,
     ngram: int = 3,
     max_bucket: int = 1000,
-    persist_candidates: bool = True,
 ) -> DataFrame:
     """Incremental near-dedup: (id_new, id_corpus, jaccard) pairs between
     a new batch and the existing corpus — the daily-increment shape at
@@ -1649,31 +1544,25 @@ def cross_minhash_pairs(
     Scale shape: corpus signatures shuffle once into the bucket
     aggregate; the new batch (typically orders of magnitude smaller)
     shuffles onto the same (band, bucket) key; verification joins fetch
-    shingle sets for candidate ids only (`verify_scope='candidates'`
-    semantics on both sides). In a real deployment the corpus bucket
-    frame is computed once and reused across batches — persist it or
-    write it out partitioned by (band, bucket)."""
+    shingle sets for candidate ids only, on both sides. In a real
+    deployment the corpus bucket frame is computed once and reused across
+    batches — persist it or write it out partitioned by (band, bucket)."""
     # r12 OPT: one persisted exploded hash pass PER SIDE, shared by the
     # signature aggregate and the candidate-scoped verify-set aggregate
     # (see minhash_dedup_pairs — measured 6.3 s -> 3.9 s on the
     # single-corpus sibling)
-    ex_n = _maybe_persist(
-        shingle_hashes(new, text_col, id_col, ngram), persist_candidates
-    )
-    ex_c = _maybe_persist(
-        shingle_hashes(corpus, text_col, id_col, ngram), persist_candidates
-    )
+    ex_n = shingle_hashes(new, text_col, id_col, ngram).persist()
+    ex_c = shingle_hashes(corpus, text_col, id_col, ngram).persist()
     cands = cross_minhash_candidates(
         new, corpus, text_col, id_col, num_hashes, bands, ngram, max_bucket,
         hashes_new=ex_n, hashes_corpus=ex_c,
     )
-    if persist_candidates:
-        # lazy persist: the frame feeds three consumers below, and the
-        # cache populates on the caller's FIRST action (no job runs at
-        # plan-construction time). In a long-running per-batch loop,
-        # unpersist between batches (spark.catalog.clearCache() or pass
-        # persist_candidates=False) — a persisted frame outlives the call.
-        cands = cands.persist()
+    # lazy persist: the frame feeds three consumers below, and the
+    # cache populates on the caller's FIRST action (no job runs at
+    # plan-construction time). In a long-running per-batch loop,
+    # unpersist between batches (spark.catalog.clearCache()) — a
+    # persisted frame outlives the call.
+    cands = cands.persist()
     sets_n = shingle_hash_sets(
         new, text_col, id_col, ngram,
         hashes=ex_n.join(
@@ -1744,7 +1633,6 @@ def simhash_candidates(
     band_bits: int = 16,
     max_bucket: int | None = 1000,
     hasher=None,
-    guard_impl: str = "agg",
 ) -> DataFrame:
     """Near-dup candidates: equal 16-bit band of the SimHash (4 tables).
     Docs within Hamming distance 3 share at least one of 4 bands
@@ -1774,7 +1662,7 @@ def simhash_candidates(
     ).select("id", "sig", "bb.band", "bb.bucket")
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
-        _banded_candidates(banded, max_bucket, extra_cols=["sig"], impl=guard_impl)
+        _banded_candidates(banded, max_bucket, extra_cols=["sig"])
         .select("id_a", "id_b", ham.alias("hamming"))
         .distinct()
     )
@@ -2455,7 +2343,6 @@ def containment_pairs(
     bands: int = 16,
     ngram: int = 3,
     max_bucket: int | None = 1000,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """ASYMMETRIC shingle containment pairs — "is A mostly inside B":
     for candidate pairs, the exact fraction of each side's distinct
@@ -2493,9 +2380,7 @@ def containment_pairs(
 
     # r12 OPT: one persisted exploded hash pass shared by the signature
     # and set aggregates (see minhash_dedup_pairs)
-    ex = _maybe_persist(
-        shingle_hashes(df, text_col, id_col, ngram), persist_intermediates
-    )
+    ex = shingle_hashes(df, text_col, id_col, ngram).persist()
     cands = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, ngram, max_bucket, hashes=ex
     )

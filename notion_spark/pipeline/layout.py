@@ -70,7 +70,6 @@ def write_bucketed(
     key: str,
     n_buckets: int = 32,
     path: str | None = None,
-    sort: bool = True,
 ) -> None:
     """Persist ``df`` as a hash-bucketed parquet table: rows land in
     ``n_buckets`` files by Murmur3(key) pmod buckets, each file sorted
@@ -99,10 +98,7 @@ def write_bucketed(
     )
     if path is not None:
         out = out.option("path", path)
-    out = out.bucketBy(n_buckets, key)
-    if sort:
-        out = out.sortBy(key)
-    out.saveAsTable(table)
+    out.bucketBy(n_buckets, key).sortBy(key).saveAsTable(table)
 
 
 def bucketed_join(

@@ -196,77 +196,6 @@ def brute_force_topk(
     )
 
 
-# ------------------------------------------------ candidate generation
-def _candidate_pairs(
-    c: DataFrame,
-    q: DataFrame,
-    method: str = "exact",
-    n_planes: int = 5,
-    seed: int = 42,
-    dim: int = 64,
-    n_probes: int = 16,
-    centroids: list[list[float]] | None = None,
-    nprobe: int = 24,
-) -> DataFrame:
-    """Join corpus rows (``vid``/``cv`` + carried cols) to broadcast query
-    rows (``qid``/``qv`` + carried cols) under a candidate-generation
-    method — the one lever that decides whether a per-anchor similarity
-    op scans the full corpus or a bucket of it:
-
-    - ``exact``: broadcast cross join — every (query, corpus) pair. The
-      recall-1.0 baseline; cost grows with |corpus| per anchor.
-    - ``lsh``: sign-LSH bucket equi-join with multi-probe on the query
-      side (same probe set as `lsh_topk`) — corpus hashed once, each
-      anchor scores only its bucket(s).
-    - ``ivf``: nearest-centroid cell equi-join (same machinery as
-      `ivf_topk`, requires a trained/static ``centroids`` codebook) —
-      at scale the corpus side is written partitioned by cell, so a
-      probe is a partition-pruned scan.
-
-    Each (qid, vid) pair appears at most once for every method (LSH
-    probes are array_distinct; IVF cells are distinct per query), so
-    downstream top-k windows need no dedup.
-
-    Defaults are the MEASURED r8 operating points (sweep at sf1, 20k
-    vectors, recall@10 vs exact — table in SCALE.md 'ANN operating
-    points'): ivf with a 64-centroid codebook at
-    nprobe=24 gives recall 0.861 at 3.0x over exact (the recommended
-    config; a smaller codebook degrades toward exhaustive probing —
-    the recall-SAFE direction); lsh at n_planes=5/n_probes=16 is the
-    best measured LSH point (recall 0.745, 1.81x) — IVF dominates LSH
-    at every recall level on this corpus, keep lsh only where training
-    a codebook is impossible. The r7-shipped defaults (8 planes /
-    2 probes, 16 cells / nprobe 2) measured recall 0.046 / 0.353 —
-    NOT operating points (SCALE.md 'ANN operating points')."""
-    if method == "exact":
-        return c.crossJoin(F.broadcast(q))
-    if method == "lsh":
-        bucket = lambda v: random_hyperplane_bucket(v, n_planes, seed, dim)  # noqa: E731
-        cb = c.withColumn("__bkt", bucket(F.col("cv")))
-        probes = F.array(
-            *[F.col("__bkt0").bitwiseXOR(F.lit(m)) for m in _probe_masks(n_planes, n_probes)],
-        )
-        qb = (
-            q.withColumn("__bkt0", bucket(F.col("qv")))
-            .withColumn("__bkt", F.explode(F.array_distinct(probes)))
-            .drop("__bkt0")
-        )
-        return cb.join(F.broadcast(qb), "__bkt").drop("__bkt")
-    if method == "ivf":
-        if centroids is None:
-            raise ValueError("method='ivf' requires a centroids codebook "
-                             "(train_ivf_centroids_scaled / a static codebook)")
-        cc = assign_cells(c, centroids, vec_col="cv", out_col="__cell")
-        cells = probe_cells(
-            q.select("qid", "qv"), centroids, nprobe, query_id_col="qid", vec_col="qv"
-        ).withColumnRenamed("cell", "__cell")
-        # join the probe cells back to the full query row set (labels and
-        # any other carried columns) — both frames are anchor-sized
-        qc = cells.join(q.drop("qv"), "qid")
-        return cc.join(F.broadcast(qc), "__cell").drop("__cell")
-    raise ValueError(f"unknown method {method!r}: expected 'exact', 'lsh' or 'ivf'")
-
-
 # ------------------------------------------------------------ hard negatives
 def hard_negatives(
     corpus: DataFrame,
@@ -276,13 +205,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     label_col: str = "label",
     query_id_col: str = "query_id",
-    method: str = "exact",
-    n_planes: int = 5,
-    seed: int = 42,
-    dim: int = 64,
-    n_probes: int = 16,
-    centroids: list[list[float]] | None = None,
-    nprobe: int = 24,
 ) -> DataFrame:
     """Contrastive hard-negative mining: for each anchor (query), the k
     most-similar corpus vectors with a DIFFERENT label — the negatives
@@ -297,20 +219,7 @@ def hard_negatives(
     anchors are broadcast-small; the scale lever is shrinking the
     CANDIDATE set, not the merge). NULL-label rows are dropped from both
     sides up front — a NULL label matches no inequality, so keeping
-    them would only burn scoring work on rows that can never emit.
-
-    ``method`` makes the candidate-generation swap executable:
-    ``"exact"`` (default, the oracle-checked baseline) scores the full
-    corpus per anchor; ``"lsh"`` scores only the anchor's sign-LSH
-    bucket probes (``n_planes``/``seed``/``dim``/``n_probes`` as in
-    `lsh_topk`); ``"ivf"`` scores the anchor's ``nprobe`` nearest IVF
-    cells (requires ``centroids``). The label predicate composes
-    unchanged; approximate methods trade recall for a corpus scan that
-    no longer grows with |corpus| per anchor. Recommended approximate
-    config (measured, SCALE.md 'ANN operating points'): a 64-centroid
-    codebook at the default nprobe=24 — recall 0.861 at 3.0x over
-    exact; the lsh defaults are the best measured LSH point (0.745 at
-    1.81x), dominated by ivf whenever a codebook is available."""
+    them would only burn scoring work on rows that can never emit."""
     q = queries.select(
         F.col(query_id_col).alias("qid"),
         F.col(vec_col).alias("qv"),
@@ -321,7 +230,7 @@ def hard_negatives(
         F.col(vec_col).alias("cv"),
         F.col(label_col).alias("clabel"),
     ).filter(F.col("clabel").isNotNull())
-    pairs = _candidate_pairs(c, q, method, n_planes, seed, dim, n_probes, centroids, nprobe)
+    pairs = c.crossJoin(F.broadcast(q))
     scored = (
         pairs.filter(F.col("clabel") != F.col("qlabel"))
         .select(
@@ -345,13 +254,6 @@ def knn_label_disagreement(
     vec_col: str = "embedding",
     label_col: str = "label",
     query_id_col: str = "query_id",
-    method: str = "exact",
-    n_planes: int = 5,
-    seed: int = 42,
-    dim: int = 64,
-    n_probes: int = 16,
-    centroids: list[list[float]] | None = None,
-    nprobe: int = 24,
 ) -> DataFrame:
     """Confident-learning-style label-noise signal: for each query
     vector, the fraction of its k nearest neighbors (cosine, self
@@ -370,12 +272,9 @@ def knn_label_disagreement(
     (n_neighbors = min(k, labeled corpus−1) at the edge, never
     silently k).
 
-    Scan shape: broadcast queries × candidate corpus, then one qid-keyed
+    Scan shape: broadcast queries × streamed corpus, then one qid-keyed
     top-k window over the scored stream (the window sorts all scored
-    candidates per anchor — no partial top-k; the scale lever is
-    ``method``). ``method="lsh"``/``"ivf"`` swap the full corpus scan
-    for the bucketed candidate generators (see `_candidate_pairs`) —
-    approximate neighborhoods, same disagreement math."""
+    candidates per anchor — no partial top-k)."""
     from notion_spark.pipeline.text_analysis import frac6_half_up
 
     q = queries.select(
@@ -388,7 +287,7 @@ def knn_label_disagreement(
         F.col(vec_col).alias("cv"),
         F.col(label_col).alias("clabel"),
     ).filter(F.col("clabel").isNotNull())
-    pairs = _candidate_pairs(c, q, method, n_planes, seed, dim, n_probes, centroids, nprobe)
+    pairs = c.crossJoin(F.broadcast(q))
     scored = (
         pairs.filter(F.col("vid") != F.col("qid"))
         .select(

@@ -37,17 +37,10 @@ NO_PROJECT = "General / No Project"
 GOALS_OVERFLOW_THRESHOLD = 15
 
 
-def resolve_period(
-    period: str, now: datetime, custom: tuple[datetime, datetime] | None = None
-) -> tuple[datetime, datetime]:
+def resolve_period(period: str, now: datetime) -> tuple[datetime, datetime]:
     """F11 window resolution (generate_reports.py:336-388): period end =
-    now, start = end − period days; custom passes explicit bounds."""
-    if period == "custom":
-        if custom is None:
-            raise ValueError("custom period requires explicit (start, end)")
-        return custom
-    days = REPORT_PERIOD_DAYS[period]
-    return now - timedelta(days=days), now
+    now, start = end − period days."""
+    return now - timedelta(days=REPORT_PERIOD_DAYS[period]), now
 
 
 def with_parent_name(
@@ -114,15 +107,13 @@ def in_window_col(period: str) -> str:
 @dataclass
 class ReportFrames:
     """The report sections of a batch of periods as one lazy plan.
-    ``rows`` holds each section's rows with ``tag`` (the section: the
-    ``goal_tags`` entry of a period end, "completed", "in_progress",
-    "uncategorized") and ``rank`` (its order), plus one boolean
-    `in_window_col` per period (its inclusive `between` test on
-    ``completed``). ``with_uncategorized`` tells whether that section
-    was planned."""
+    ``rows`` holds each section's rows with ``tag`` (the section:
+    "goals", "completed", "in_progress", "uncategorized") and ``rank``
+    (its order), plus one boolean `in_window_col` per period (its
+    inclusive `between` test on ``completed``). ``with_uncategorized``
+    tells whether that section was planned."""
 
     windows: dict[str, tuple[datetime, datetime]]
-    goal_tags: dict[datetime, str]
     rows: DataFrame
     with_uncategorized: bool
 
@@ -132,7 +123,6 @@ def report_frames(
     periods: Sequence[str],
     now: datetime,
     cfg: EngineConfig,
-    custom: tuple[datetime, datetime] | None = None,
 ) -> ReportFrames:
     """EP3 sections for every period in ``periods`` at once
     (generate_reports.py:390-503 filters again for each period). ``df``
@@ -140,12 +130,12 @@ def report_frames(
     over a cached store as run_pipeline does; the tag filter applies
     first (generate_reports.py:177-192).
 
-    Only completed depends on the period start, and every built-in period
-    ends at ``now``: goals are planned once per distinct end, completed
-    once over the widest window with per-period flags for the driver-side
-    split. Building the plan runs no Spark job — the goals overflow gate
-    is a window count, not an action."""
-    windows = {p: resolve_period(p, now, custom) for p in periods}
+    Only completed depends on the period start, and every period ends at
+    ``now``: goals are planned once for all periods, completed once over
+    the widest window with per-period flags for the driver-side split.
+    Building the plan runs no Spark job — the goals overflow gate is a
+    window count, not an action."""
+    windows = {p: resolve_period(p, now) for p in periods}
     # the lowercased status, projected once per row
     tagged = array_overlap_filter(df, "active_tags", cfg.filter_tags).withColumn(
         "__status", fast_lower("status")
@@ -153,21 +143,19 @@ def report_frames(
     kept = _not_empty_container(tagged, cfg)
     status = F.col("__status")
     parent, score, nid = F.col("parent_name"), F.col("priority_score"), F.col("nid")
-    goal_tags = {e: f"goals {e.isoformat()}" for e in sorted({e for _, e in windows.values()})}
     # ALL to-do rows are goals, unless they overflow the page budget
     # (the reference's `if len(goals) > 15`); the parent fill '' sorts
     # first, deliberately (:469)
     overflow = F.count(F.lit(1)).over(in_section()) > GOALS_OVERFLOW_THRESHOLD
     sections = {
-        tag: Section(
+        "goals": Section(
             kept & (status == "to do"), (parent, score, F.asc_nulls_last("due"), nid),
-            keep=~overflow | _goal_kept(end),
+            keep=~overflow | _goal_kept(now),
         )
-        for end, tag in goal_tags.items()
     }
-    start, end = min(s for s, _ in windows.values()), max(e for _, e in windows.values())
+    start = min(s for s, _ in windows.values())
     sections["completed"] = Section(
-        kept & (status == "done") & F.col("completed").between(ts_lit(start), ts_lit(end)),
+        kept & (status == "done") & F.col("completed").between(ts_lit(start), ts_lit(now)),
         (parent, F.desc("completed"), nid),
     )
     sections["in_progress"] = Section(kept & (status == "doing"), (parent, score, nid))
@@ -188,8 +176,7 @@ def report_frames(
         for p, (s, e) in windows.items()
     })
     return ReportFrames(
-        windows=windows, goal_tags=goal_tags, rows=rows,
-        with_uncategorized=cfg.include_uncategorized,
+        windows=windows, rows=rows, with_uncategorized=cfg.include_uncategorized
     )
 
 
@@ -199,7 +186,7 @@ def goals(df: DataFrame, end: datetime, lookup: DataFrame | None = None) -> Data
     overflow the page budget (>15) keep only due-within-14d-of-period-end
     OR priority ≤ High; grouped sort (parent, priority, due), parent fill
     '' (:469 — the fill value sorts first, deliberately). Only the period
-    END matters, so every built-in period shares one goals section.
+    END matters, so every period shares one goals section.
 
     (The dated/undated pre-filter at :393-405 is dead code — its `goals`
     is overwritten by this path before any use.)"""

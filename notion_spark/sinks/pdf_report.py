@@ -106,7 +106,7 @@ def report_payload(
     def rows(tag: str, keys: list[str] = cols) -> list[dict]:
         return [{k: r[k] for k in keys} for r in by_tag.get(tag, [])]
 
-    goals = {end: rows(tag) for end, tag in frames.goal_tags.items()}
+    goals = rows("goals")
     doing = rows("in_progress")
     # the catch-all section has no parent grouping
     other = (
@@ -115,14 +115,14 @@ def report_payload(
     )
 
     payloads = {}
-    for period, (_, end) in frames.windows.items():
+    for period in frames.windows:
         completed = [
             {k: r[k] for k in cols} for r in by_tag.get("completed", []) if r[flags[period]]
         ]
-        sections = {"goals": goals[end], "completed": completed, "in_progress": doing}
+        sections = {"goals": goals, "completed": completed, "in_progress": doing}
         if other is not None:
             sections["uncategorized"] = other
-        pie = Counter(r["status"] for r in (*goals[end], *completed, *doing))
+        pie = Counter(r["status"] for r in (*goals, *completed, *doing))
         payloads[period] = {
             "period": period,
             "generated_at": now.isoformat(),
@@ -132,14 +132,13 @@ def report_payload(
     return payloads
 
 
+WATERMARK = "STATUS REPORT"
+
+
 class _ReportPdf(MiniPDF):
     """PDFReport twin (generate_reports.py:28-123): watermark header on
     every page, italic centered page-number footer, chapter/group/task
     primitives."""
-
-    def __init__(self, watermark: str):
-        super().__init__()
-        self.watermark = watermark
 
     def header(self) -> None:
         self.set_font("Arial", "B", 20)
@@ -147,7 +146,7 @@ class _ReportPdf(MiniPDF):
         self.rotation(45, 105, 148)
         for x in range(-50, 300, 100):
             for y in range(-50, 400, 50):
-                self.text(x, y, safe_encode(self.watermark))
+                self.text(x, y, WATERMARK)
         self.end_rotation()
         self.set_text_color(0, 0, 0)
 
@@ -209,8 +208,6 @@ _SECTIONS = [
 def render_pdf(
     payload: dict,
     path: str,
-    watermark: str = "STATUS REPORT",
-    prepared_by: str | None = None,
     charts: list[tuple[bytes, int, int]] | None = None,
 ) -> str:
     """Assemble the report PDF from `report_payload` output
@@ -219,7 +216,7 @@ def render_pdf(
     sinks.charts.render_chart_canvases — embedded on a final analysis
     page. Deterministic: the generated-on line comes from the payload's
     ``generated_at``, never the wall clock."""
-    pdf = _ReportPdf(watermark)
+    pdf = _ReportPdf()
     pdf.add_page()
 
     period = payload.get("period", "report")
@@ -230,8 +227,6 @@ def render_pdf(
     pdf.cell(0, 6, f"Period: {period}", 0, 1, "C")
     pdf.set_font("Arial", "I", 9)
     pdf.cell(0, 5, f"Generated on: {payload.get('generated_at', '')[:10]}", 0, 1, "C")
-    if prepared_by:
-        pdf.cell(0, 5, f"Prepared by: {safe_encode(prepared_by)}", 0, 1, "C")
     pdf.ln(5)
 
     sections = payload.get("sections", {})

@@ -94,18 +94,18 @@ def with_block_paths(blocks: DataFrame, max_depth: int = 16) -> DataFrame:
     return resolved
 
 
-def flatten_body(blocks: DataFrame, indent: bool = True) -> DataFrame:
+def flatten_body(blocks: DataFrame) -> DataFrame:
     """blocks -> (page_uid, body_content): render each block, order by
     path, newline-join (fetch_pages.py:303-307 joins child lines under
     their parent with two-space indent)."""
     with_paths = with_block_paths(blocks)
     # drop empty renders BEFORE indent-prefixing (otherwise a nested
     # no-text block would survive as a whitespace-only line)
-    rendered = with_paths.withColumn("line", _rendered_line()).filter(F.col("line") != "")
-    if indent:
-        rendered = rendered.withColumn(
-            "line", F.concat(F.expr("repeat('  ', depth)"), F.col("line"))
-        )
+    rendered = (
+        with_paths.withColumn("line", _rendered_line())
+        .filter(F.col("line") != "")
+        .withColumn("line", F.concat(F.expr("repeat('  ', depth)"), F.col("line")))
+    )
     # Sort on the numeric path directly: Spark orders array<int> element-wise
     # (prefix < extension), so parents precede children and sibling ordinals
     # of ANY magnitude order correctly — no string padding to overflow.

@@ -87,21 +87,6 @@ def compact_store(spark: SparkSession, path: str, target_records_per_file: int =
     return n
 
 
-def write_bucketed(
-    df: DataFrame, table_name: str, key: str, buckets: int = 64, path: str | None = None
-) -> None:
-    """Bucketed save for shuffle-free upsert/join on ``key`` (the M2 merge
-    and J-series joins co-locate when both sides are bucketed).
-
-    Thin alias over pipeline/layout.write_bucketed — ONE implementation
-    (which also pre-repartitions so each bucket is exactly one sorted
-    file); see that docstring and `layout.bucketed_join` for the
-    zero-Exchange join story and plan pins."""
-    from notion_spark.pipeline.layout import write_bucketed as _impl
-
-    _impl(df, table_name, key, n_buckets=buckets, path=path)
-
-
 # --------------------------------------------------------------- S6 (CSV)
 def export_tasks_csv(df: DataFrame, path: str) -> None:
     """CSV export in the reference's on-disk dialect: display headers and

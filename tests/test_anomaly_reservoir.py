@@ -38,13 +38,10 @@ class TestSigmaOutliers:
         assert got.count() == 0
 
     def test_null_values_never_flag(self, spark):
-        out = sigma_outliers(self._df(spark), "g", "v", t=1, mark_only=True)
-        row = [r for r in out.collect() if r["id"] == 300][0]
-        assert row["is_outlier"] is False
-
-    def test_mark_only_keeps_all_rows(self, spark):
         df = self._df(spark)
-        assert sigma_outliers(df, "g", "v", mark_only=True).count() == df.count()
+        assert df.filter(F.col("id") == 300).count() == 1
+        out = sigma_outliers(df, "g", "v", t=1)
+        assert 300 not in {r["id"] for r in out.collect()}
 
     def test_duckdb_mirror_identical(self, spark, sf_dir):
         from notion_spark.sources.io import read_table
@@ -239,16 +236,14 @@ class TestMadOutliers:
         got = [r.v for r in mad_outliers(df, "g", "v", t=3).collect()]
         assert got == [5.1]
 
-    def test_nulls_and_mark_only(self, spark):
+    def test_null_value_never_flags(self, spark):
         from notion_spark.operators.anomaly import mad_outliers
 
         df = spark.createDataFrame(
             [("g", 1.0), ("g", 1.0), ("g", None), ("g", 50.0)], "g string, v double"
         )
-        marked = mad_outliers(df, "g", "v", t=3, mark_only=True)
-        assert marked.count() == 4  # every row survives, incl. the NULL
-        flags = {r.v: r.is_outlier for r in marked.collect()}
-        assert flags[None] is False and flags[50.0] is True
+        got = [r.v for r in mad_outliers(df, "g", "v", t=3).collect()]
+        assert got == [50.0]  # the NULL row never flags
 
     def test_duckdb_mirror_identical(self, spark, sf_dir):
         import duckdb as _dd

@@ -32,6 +32,10 @@ def test_read_pages_from_a_directory_or_glob(tmp_path):
     assert [p["id"] for p in cli._read_pages(str(tmp_path))] == ids
     assert [p["id"] for p in cli._read_pages(str(tmp_path / "*.jsonl"))] == ids
     assert [p["id"] for p in cli._read_pages(str(tmp_path / "b.jsonl"))] == ["pg-3"]
+    # a repeated id keeps its last occurrence: sorted files, then lines
+    (tmp_path / "c.jsonl").write_text('{"id": "pg-1", "v": 2}\n{"id": "pg-3", "v": 2}\n')
+    got = cli._read_pages(str(tmp_path))
+    assert [(p["id"], p.get("v")) for p in got] == [("pg-2", None), ("pg-1", 2), ("pg-3", 2)]
 
 
 def test_pipeline_without_snapshot_files_raises(spark, monkeypatch, tmp_path):
@@ -87,3 +91,19 @@ def test_pipeline_analyze_report(run, tmp_path):
     payload = json.loads(lines)
     assert payload["period"] == "weekly" and payload["generated_at"] == NOW
     assert {"goals", "completed", "in_progress"} <= set(payload["sections"])
+
+
+def test_pipeline_over_overlapping_snapshot_files(run, tmp_path):
+    """A page repeated across snapshot files is one task: the first load
+    caches what the incremental run sees."""
+    with open(FIXTURE) as f:
+        pages = [p for batch in json.load(f)["page_batches"] for p in batch["results"]]
+    (tmp_path / "pages").mkdir()
+    (tmp_path / "pages" / "a.jsonl").write_text("".join(json.dumps(p) + "\n" for p in pages))
+    (tmp_path / "pages" / "b.jsonl").write_text(json.dumps(pages[0]) + "\n")
+    pipe = ["pipeline", "--pages", str(tmp_path / "pages"),
+            "--cache-dir", str(tmp_path / "out"), "--now", NOW]
+    first = json.loads(run(*pipe))
+    assert first["cached"] == 2 and first["changed"] == 2
+    second = json.loads(run(*pipe))
+    assert second["cached"] == 2 and second["changed"] == 0

@@ -1,5 +1,5 @@
 """End-to-end corpus curation preset: composition equals the manual
-stage-by-stage application, and the audit report is consistent."""
+stage-by-stage application, with the survivors of every stage counted."""
 
 from __future__ import annotations
 
@@ -42,19 +42,24 @@ def _corpus(spark):
 def test_curate_corpus_matches_manual_stages(spark):
     df = _corpus(spark)
     bench = spark.createDataFrame([(100, BENCH_SENT)], "doc_id long, text string")
-    out, report = curate_corpus(
+    out = curate_corpus(
         df, benchmark=bench, near_dup_threshold=0.5,
-        quality_kwargs={"min_words": 10}, collect_report=True,
+        quality_kwargs={"min_words": 10},
     )
     got = {r.doc_id: r.split for r in out.collect()}
 
-    # manual composition
+    # manual composition, counting the survivors of every stage
+    counts = [df.count()]
     q = CU.quality_rules(df, min_words=10)
     kept = df.join(q.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi")
+    counts.append(kept.count())
     kept = DD.drop_exact_dups(kept)
+    counts.append(kept.count())
     pairs = DD.minhash_dedup_pairs(kept, threshold=0.5)
     kept = DD.dedup_clusters(kept, pairs)
+    counts.append(kept.count())
     kept = CU.decontaminate(kept, bench)
+    counts.append(kept.count())
     manual = {r.doc_id: r.split for r in CU.assign_splits(kept, "doc_id").collect()}
     assert got == manual
 
@@ -63,12 +68,8 @@ def test_curate_corpus_matches_manual_stages(spark):
     # appended passage hold its jaccard vs 4 under 0.5) and is then
     # removed by decontamination; 1 and 4 survive
     assert set(got) == {1, 4}
-    assert report.input_rows == 6
-    assert report.after_quality == 5
-    assert report.after_exact_dedup == 4
-    assert report.after_near_dedup == 3
-    assert report.after_decontam == 2
-    assert sum(report.splits.values()) == 2
+    # input, quality, exact dedup, near dedup, decontamination
+    assert counts == [6, 5, 4, 3, 2]
 
 
 def test_curate_corpus_persists_multi_consumer_frame(spark):
@@ -79,31 +80,25 @@ def test_curate_corpus_persists_multi_consumer_frame(spark):
     df = _corpus(spark)
     # opt-out stays lazy end to end (checked FIRST: Spark's cache
     # manager substitutes cached fragments into any matching later plan)
-    out_lazy, _ = curate_corpus(
+    out_lazy = curate_corpus(
         df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10},
         persist_intermediate=False,
     )
     lazy_plan = out_lazy._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" not in lazy_plan
-    out, _ = curate_corpus(df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10})
+    out = curate_corpus(df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10})
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" in plan
     spark.catalog.clearCache()  # drop the preset's pinned frame for later tests
 
 
 def test_curate_corpus_no_benchmark_no_report(spark):
-    out, report = curate_corpus(_corpus(spark), near_dup_threshold=0.5, quality_kwargs={"min_words": 10})
-    assert report is None
+    out = curate_corpus(_corpus(spark), near_dup_threshold=0.5, quality_kwargs={"min_words": 10})
     ids = {r.doc_id for r in out.collect()}
     assert 5 not in ids and 2 not in ids  # quality + exact dedup applied
     assert "split" in out.columns
 
 
-OTHER2 = (
-    "the garden behind the old house grows tomatoes and beans every summer "
-    "while the neighbors water the flowers and trim the hedge along the "
-    "narrow path that leads to the wooden gate by the quiet street corner"
-)
 OTHER3 = (
     "sailors watched the harbor lights blink through the fog as the tide "
     "pulled the small boats against their ropes and the gulls circled the "
@@ -117,10 +112,9 @@ OTHER4 = (
 
 
 def test_curate_corpus_optional_stages_match_manual(spark):
-    """r7: the four opt-in stages (keep-best collapse, semantic
-    decontam, token-budget fill, temperature mix) composed through the
-    one blessed entry point must equal the hand-wired chain of the same
-    oracle-verified operators, and the report must track each."""
+    """The opt-in token-budget fill and temperature mix composed through
+    the one entry point must equal the hand-wired chain of the same
+    oracle-verified operators, stage by stage."""
     rows = [
         # (doc_id, text, score, toks, source)
         (1, GOOD, 0.9, 40, "a"),
@@ -128,71 +122,51 @@ def test_curate_corpus_optional_stages_match_manual(spark):
         (3, GOOD.replace("river", "stream"), 0.95, 40, "a"),  # near dup of 1
         (4, OTHER, 0.7, 35, "b"),
         (5, "too short", 0.99, 5, "a"),                       # fails quality
-        (6, OTHER2, 0.6, 50, "b"),                            # semantic-contaminated
         (7, OTHER3, 0.5, 30, "b"),
         (8, OTHER4, 0.4, 100, "c"),                           # exceeds token budget
     ]
     df = spark.createDataFrame(
         rows, "doc_id long, text string, score double, toks long, source string"
     )
-    embs = spark.createDataFrame(
-        [(i, [1.0, 0.0, 0.0, 0.0] if i == 6 else [0.0, 1.0, 0.0, 0.0])
-         for i in range(1, 9)],
-        "doc_id long, embedding array<float>",
-    )
-    sb = spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0, 0.0])], "doc_id long, embedding array<float>"
-    )
-    order = [F.desc("score"), F.asc("doc_id")]
-    out, report = curate_corpus(
+    out = curate_corpus(
         df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10},
-        collect_report=True, persist_intermediate=False,
-        keep_best_order=order,
-        embeddings=embs, semantic_benchmark=sb, semantic_threshold=0.95,
+        persist_intermediate=False,
         token_budget=110, token_budget_score_col="score",
         token_budget_token_col="toks",
         mix_group_col="source", mix_budget=2, mix_alpha=0.5,
     )
     got = {r.doc_id: r.split for r in out.collect()}
 
-    # manual composition of the same operators
+    # manual composition of the same operators, counting survivors
+    counts = [df.count()]
     q = CU.quality_rules(df, min_words=10)
     kept = df.join(q.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi")
+    counts.append(kept.count())
     kept = DD.drop_exact_dups(kept)
+    counts.append(kept.count())
     pairs = DD.minhash_dedup_pairs(kept, threshold=0.5)
-    kept = DD.dedup_clusters_keep_best(kept, pairs, order)
-    flagged = CU.semantic_contaminated_ids(
-        embs.join(kept.select("doc_id"), "doc_id", "left_semi"), sb,
-        threshold=0.95, id_col="doc_id",
-    )
-    kept = kept.join(flagged.select("doc_id"), "doc_id", "left_anti")
+    kept = DD.dedup_clusters(kept, pairs)
+    counts.append(kept.count())
     kept = CU.select_token_budget(kept, "score", "toks", budget=110)
+    counts.append(kept.count())
     quotas = CU.temperature_mix_quotas(kept, "source", budget=2, alpha=0.5)
     kept = CU.take_group_quotas(kept, quotas, "source")
+    counts.append(kept.count())
     manual = {r.doc_id: r.split for r in CU.assign_splits(kept, "doc_id").collect()}
     assert got == manual
 
-    # stage-by-stage: 5 fails quality; 2 exact-dups to 1; keep-best
-    # keeps 3 (highest score), NOT min-id 1; 6 dropped semantically;
-    # budget 110 fits 3(40)+4(35)+7(30), 8's 100 tokens don't; mix
-    # budget 2 at alpha .5 gives a=1 (doc 3), b=1 (min id 4)
-    assert set(got) == {3, 4}
-    assert report.input_rows == 8
-    assert report.after_quality == 7
-    assert report.after_exact_dedup == 6
-    assert report.after_near_dedup == 5
-    assert report.after_decontam == 5          # n-gram stage not enabled
-    assert report.after_semantic_decontam == 4
-    assert report.after_token_budget == 3
-    assert report.after_temperature_mix == 2
+    # stage-by-stage: 5 fails quality; 2 exact-dups to 1; 3 near-dups
+    # to min-id 1; budget 110 fits 1(40)+4(35)+7(30), 8's 100 tokens
+    # don't; mix budget 2 at alpha .5 gives a=1 (doc 1), b=1 (min id 4)
+    assert set(got) == {1, 4}
+    # input, quality, exact dedup, near dedup, token budget, mix
+    assert counts == [7, 6, 5, 4, 3, 2]
 
 
 def test_curate_corpus_optional_stage_validation(spark):
     import pytest
 
     df = _corpus(spark)
-    with pytest.raises(ValueError, match="semantic"):
-        curate_corpus(df, semantic_benchmark=df)
     with pytest.raises(ValueError, match="token_budget"):
         curate_corpus(df, token_budget=100)
     with pytest.raises(ValueError, match="temperature"):

@@ -319,9 +319,12 @@ def test_hyperplane_bucket_handles_oversized_vectors(spark):
 
 def test_banded_candidates_agg_and_window_impls_agree(spark):
     # Mixed cold cliques + a hot bucket, with an extra column carried
-    # through: both physical implementations must emit identical pair
-    # sets (the agg path is the default; window is the spill-safe
-    # fallback for mega-buckets).
+    # through: the aggregate path must emit exactly the pair set computed
+    # in Python from the same banded rows — a clique in every bucket of
+    # at most max_bucket members, a star around the min id above it.
+    from collections import defaultdict
+    from itertools import combinations
+
     rows = (
         [(i, "hot bucket identical text mass row", i * 10) for i in range(40)]
         + [(100 + i, "cold near duplicate group text here", 7) for i in range(4)]
@@ -332,16 +335,23 @@ def test_banded_candidates_agg_and_window_impls_agree(spark):
     banded = D._minhash_banded(sigs, 64, 16).join(
         df.select(F.col("doc_id").alias("id"), "sig"), "id"
     )
-    out = {}
-    for impl in ("agg", "window"):
-        got = D._banded_candidates(banded, max_bucket=10, extra_cols=["sig"], impl=impl)
-        out[impl] = sorted(
-            (r.id_a, r.id_b, r.sig_a, r.sig_b) for r in got.distinct().collect()
-        )
-    assert out["agg"] == out["window"]
-    assert len(out["agg"]) > 0
+    buckets = defaultdict(list)
+    for r in banded.collect():
+        buckets[(r.band, r.bucket)].append((r.id, r.sig))
+    want = set()
+    for members in buckets.values():
+        members.sort()
+        if len(members) <= 10:
+            want |= {(a[0], b[0], a[1], b[1]) for a, b in combinations(members, 2)}
+        else:
+            want |= {(members[0][0], b[0], members[0][1], b[1]) for b in members[1:]}
+    got = D._banded_candidates(banded, max_bucket=10, extra_cols=["sig"])
+    out = sorted((r.id_a, r.id_b, r.sig_a, r.sig_b) for r in got.distinct().collect())
+    assert out == sorted(want)
+    assert any(len(m) > 10 for m in buckets.values())  # the star path ran
+    assert len(out) > 0
     # hot bucket produced stars around the min id, not 40*39/2 cliques
-    hot_pairs = [p for p in out["agg"] if p[0] == 0]
+    hot_pairs = [p for p in out if p[0] == 0]
     assert all(p[2] == 0 for p in hot_pairs)  # center sig carried with center id
 
 

@@ -88,7 +88,7 @@ def test_render_rich_text(spark):
 
 def test_render_rich_text_code_parity(spark):
     # reference renderer (fetch_pages.py:216-228) has no code branch:
-    # code-annotated spans pass through bare by default
+    # code-annotated spans pass through bare
     rich = [
         {"plain_text": "x=1", "href": None,
          "annotations": {"bold": False, "italic": False, "underline": False,
@@ -101,7 +101,3 @@ def test_render_rich_text_code_parity(spark):
     )
     df = spark.createDataFrame([(rich,)], schema)
     assert df.select(render_rich_text(F.col("arr")).alias("o")).collect()[0].o == "x=1"
-    assert (
-        df.select(render_rich_text(F.col("arr"), include_code=True).alias("o")).collect()[0].o
-        == "`x=1`"
-    )

@@ -77,15 +77,12 @@ class TestSnapshotDiff:
         # k=3 null==null (unchanged, excluded); k=4 identical (excluded)
         assert got == {1: "removed", 2: "changed", 5: "added"}
 
-    def test_include_unchanged_and_null_transitions(self, spark):
+    def test_null_transitions(self, spark):
         old, new = self._frames(spark)
         new2 = new.withColumn("v", F.when(F.col("k") == 3, F.lit("now")).otherwise(F.col("v")))
-        got = {
-            r["k"]: r["change_type"]
-            for r in snapshot_diff(old, new2, "k", include_unchanged=True).collect()
-        }
+        got = {r["k"]: r["change_type"] for r in snapshot_diff(old, new2, "k").collect()}
         assert got[3] == "changed"  # NULL -> value counts as a change
-        assert got[4] == "unchanged"
+        assert 4 not in got  # identical row: unchanged, not emitted
 
     def test_compare_cols_restricts(self, spark):
         old, new = self._frames(spark)
@@ -107,8 +104,8 @@ def test_diff_schema_drift_requires_explicit_cols(spark):
     with pytest.raises(ValueError, match="schemas differ"):
         snapshot_diff(old, new, "k")
     # explicit compare_cols still works across the drift
-    got = snapshot_diff(old, new, "k", compare_cols=["v"], include_unchanged=True)
-    assert got.first()["change_type"] == "unchanged"
+    got = snapshot_diff(old, new, "k", compare_cols=["v"])
+    assert got.count() == 0  # k=1 is unchanged on v
 
 
 class TestDeltaDrivers:

@@ -10,6 +10,14 @@ functions by ``getattr``. Parity queries are called through the registry
 their ``@register`` decorator fills. References from ``tests/`` do not
 count: code only a test calls is deleted with its test, or listed in
 ALLOWED with the reason it stays.
+
+The same calls decide the options: every ``bool``-defaulted parameter of
+a public top-level function must be passed, by keyword or by position, at
+one of them, or be listed in ALLOWED_FLAGS with its reason. A flag no
+caller sets selects a code path only tests take. Public top-level names
+other than the registered queries are unique across the package, since
+a second definition with the same name would hide the first one's
+missing callers.
 """
 
 from __future__ import annotations
@@ -52,6 +60,12 @@ ALLOWED = {
     "goals": "oracle",
     "compact_files": "not yet reviewed",
     "compact_store": "not yet reviewed",
+}
+
+ALLOWED_FLAGS = {
+    # the all-pairs paths the blocked paths are checked against
+    "levenshtein_pairs.length_bands": "oracle",
+    "embedding_dup_pairs.allow_all_pairs": "oracle",
 }
 
 
@@ -117,33 +131,83 @@ def _names(node: ast.AST, strings: bool = False) -> set[str]:
     return out
 
 
-def public_definitions() -> set[str]:
-    """Public top-level functions and classes of the package, minus the
+def package_trees() -> list[ast.Module]:
+    return [ast.parse(p.read_text()) for p in PACKAGE.rglob("*.py")]
+
+
+def outside_trees() -> list[ast.Module]:
+    """The callers outside the package: the benchmark, the scripts, the
+    bench CLI and the driver entry point."""
+    paths = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    for d in ("perfbench", "scripts"):
+        paths += [p for p in (ROOT / d).rglob("*.py") if "tests" not in p.parts]
+    return [ast.parse(p.read_text()) for p in paths]
+
+
+def _public_defs(tree: ast.Module):
+    """Public top-level functions and classes of a module, minus the
     registered parity queries."""
-    defs = set()
-    for path in PACKAGE.rglob("*.py"):
-        for node in ast.parse(path.read_text()).body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not node.name.startswith("_")
-                and not _is_registered(node)
-            ):
-                defs.add(node.name)
-    return defs
+    for node in tree.body:
+        if (
+            isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and not node.name.startswith("_")
+            and not _is_registered(node)
+        ):
+            yield node
+
+
+def public_definitions() -> set[str]:
+    return {node.name for tree in package_trees() for node in _public_defs(tree)}
 
 
 def referenced_names() -> set[str]:
     refs = set()
-    for path in PACKAGE.rglob("*.py"):
-        for node in ast.parse(path.read_text()).body:
+    for tree in package_trees():
+        for node in tree.body:
             # a definition's own name (recursion) is not a caller
             refs |= _names(node) - {getattr(node, "name", None)}
-    outside = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
-    for d in ("perfbench", "scripts"):
-        outside += [p for p in (ROOT / d).rglob("*.py") if "tests" not in p.parts]
-    for path in outside:
-        refs |= _names(ast.parse(path.read_text()), strings=True)
+    for tree in outside_trees():
+        refs |= _names(tree, strings=True)
     return refs
+
+
+def duplicate_names(package: list[ast.Module]) -> set[str]:
+    seen, dups = set(), set()
+    for tree in package:
+        for node in _public_defs(tree):
+            (dups if node.name in seen else seen).add(node.name)
+    return dups
+
+
+def unset_flags(package: list[ast.Module], outside: list[ast.Module]) -> set[str]:
+    """``function.parameter`` for every bool-defaulted parameter of a
+    public top-level function that no call outside its own definition
+    passes, by keyword or by position."""
+    params, flags = {}, set()
+    for tree in package:
+        for node in _public_defs(tree):
+            if isinstance(node, ast.ClassDef):
+                continue
+            a = node.args
+            positional = [p.arg for p in (*a.posonlyargs, *a.args)]
+            params[node.name] = positional
+            defaults = zip(positional[len(positional) - len(a.defaults):], a.defaults)
+            for name, d in (*defaults, *((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults))):
+                if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                    flags.add(f"{node.name}.{name}")
+    passed = set()
+    scopes = [(node, node) for tree in package for node in tree.body]
+    scopes += [(tree, None) for tree in outside]
+    for scope, own in scopes:
+        for n in ast.walk(scope):
+            if not isinstance(n, ast.Call):
+                continue
+            fn = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+            if fn not in params or fn == getattr(own, "name", None):
+                continue
+            passed |= {f"{fn}.{k.arg}" for k in n.keywords if k.arg}
+            passed |= {f"{fn}.{p}" for p in params[fn][: len(n.args)]}
+    return flags - passed
 
 
 def test_every_public_name_has_a_caller_outside_tests():
@@ -162,6 +226,45 @@ def test_allowlist_stays_true():
     assert not gone, f"ALLOWED names that no longer exist: {gone}"
     called = sorted(set(ALLOWED) & refs)
     assert not called, f"ALLOWED names that now have a caller: {called}"
+
+
+def test_every_flag_is_set_outside_tests():
+    unset = unset_flags(package_trees(), outside_trees())
+    assert set(ALLOWED_FLAGS.values()) <= REASONS
+    unlisted = sorted(unset - set(ALLOWED_FLAGS))
+    assert not unlisted, (
+        f"flags no caller outside tests sets (delete with the path they select,"
+        f" or list in ALLOWED_FLAGS): {unlisted}"
+    )
+    stale = sorted(set(ALLOWED_FLAGS) - unset)
+    assert not stale, f"ALLOWED_FLAGS entries that are gone or now set: {stale}"
+
+
+def test_public_names_are_unique():
+    dups = sorted(duplicate_names(package_trees()))
+    assert not dups, f"public names defined more than once in the package: {dups}"
+
+
+def test_an_unset_flag_is_found_and_a_set_one_is_not():
+    package = [ast.parse("""
+def scan(df, strict: bool = False, *, fast: bool = True, n: int = 1):
+    return scan(df, strict=True, fast=False)
+
+def run(df):
+    return scan(df)
+""")]
+    assert unset_flags(package, []) == {"scan.strict", "scan.fast"}
+    by_position = [ast.parse("scan(df, True)")]
+    assert unset_flags(package, by_position) == {"scan.fast"}
+    by_keyword = [ast.parse("m.scan(df, fast=False)")]
+    assert unset_flags(package, by_keyword) == {"scan.strict"}
+
+
+def test_a_name_defined_twice_is_found():
+    a = ast.parse("def write_bucketed(df):\n    pass\n\ndef _private():\n    pass\n")
+    b = ast.parse("def write_bucketed(df, n):\n    pass\n\ndef _private():\n    pass\n")
+    assert duplicate_names([a, b]) == {"write_bucketed"}
+    assert duplicate_names([a]) == set()
 
 
 def test_a_local_named_like_a_public_function_is_not_a_caller():

@@ -249,17 +249,17 @@ def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
     """The claim behind write_bucketed (cited by matview/diff/incremental
     docstrings and SCALE.md): two tables bucketed on the join key
     co-locate, and the join plan carries NO shuffle exchange."""
-    from notion_spark.sources.io import write_bucketed
+    from notion_spark.pipeline.layout import write_bucketed
 
     spark.sql("DROP TABLE IF EXISTS t_orders_b")
     spark.sql("DROP TABLE IF EXISTS t_cust_b")
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    write_bucketed(o, "t_orders_b", "o_custkey", buckets=8,
+    write_bucketed(o, "t_orders_b", "o_custkey", n_buckets=8,
                    path=str(tmp_path / "ob"))
     write_bucketed(
         c.withColumnRenamed("c_custkey", "o_custkey"), "t_cust_b",
-        "o_custkey", buckets=8, path=str(tmp_path / "cb"),
+        "o_custkey", n_buckets=8, path=str(tmp_path / "cb"),
     )
     # disable auto-broadcast: at test scale Spark would broadcast the
     # small side away (and skip bucketing); at the scale write_bucketed
@@ -845,7 +845,7 @@ def test_r13_iterative_consumers_no_inmemory_reuse_pinned(spark, sf_dir):
     substitutes into kcore's plan-identical capped subplan, turning
     this test into an ordering lottery. That substitution is also the
     documented real-world hazard of the per-invocation persists
-    (ADVICE r12 / the persist_intermediates opt-outs): a long-lived
+    (clear the cache between batches): a long-lived
     session that runs covisitation_lift before graph_kcore re-creates
     the measured r12 regression through the CacheManager even though
     covisitation_counts itself never persists. The bench is immune by

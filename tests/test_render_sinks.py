@@ -140,14 +140,13 @@ def golden_payloads():
 def test_render_pdf_structure_from_golden(tmp_path, golden_payloads):
     payload = golden_payloads["yearly"]
     out = str(tmp_path / "yearly.pdf")
-    render_pdf(payload, out, watermark="STATUS REPORT", prepared_by="QA")
+    render_pdf(payload, out)
     data = open(out, "rb").read()
     runs = pdf_text_runs(data)
     # title block (generate_reports.py:513-523)
     assert "Yearly Status Report" in runs
     assert "Period: yearly" in runs
     assert "Generated on: 2026-01-15" in runs
-    assert "Prepared by: QA" in runs
     # reference section order: Completed, In Progress, To Do
     joined = "\n".join(runs)
     assert joined.index("1. Completed Tasks") < joined.index("2. In Progress") < joined.index("3. To Do")

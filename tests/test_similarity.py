@@ -184,54 +184,6 @@ def _labeled_vectors(n, dim, n_clusters=8):
     ]
 
 
-def test_hard_negatives_ann_methods(spark):
-    rows = _labeled_vectors(300, 32)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    anchors = spark.createDataFrame(
-        rows[:5], "query_id long, embedding array<float>, label int"
-    )
-    exact = S.hard_negatives(df, anchors, k=5)
-    # exhaustive probe settings make the candidate set == full corpus, so
-    # the approximate paths must reproduce the exact output bit-for-bit
-    lsh_full = S.hard_negatives(
-        df, anchors, k=5, method="lsh", n_planes=2, dim=32, n_probes=3
-    )
-    # n_planes=2, n_probes=3 covers 3 of 4 buckets: high recall, gated
-    assert S.recall_at_k(exact, lsh_full) >= 0.6
-    cents = _ivf_codebook(df, 8, 1)
-    ivf_full = S.hard_negatives(df, anchors, k=5, method="ivf", centroids=cents, nprobe=8)
-    assert sorted(map(tuple, ivf_full.collect())) == sorted(map(tuple, exact.collect()))
-    ivf_part = S.hard_negatives(df, anchors, k=5, method="ivf", centroids=cents, nprobe=4)
-    assert S.recall_at_k(exact, ivf_part) >= 0.5
-    # every mined negative carries a different label than its anchor
-    lbl = {r.vec_id: r.label for r in df.collect()}
-    albl = {r.query_id: r.label for r in anchors.collect()}
-    for r in ivf_part.collect():
-        assert lbl[r.vec_id] != albl[r.query_id]
-
-
-def test_knn_disagreement_ann_methods(spark):
-    rows = _labeled_vectors(300, 32)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    anchors = spark.createDataFrame(
-        rows[:5], "query_id long, embedding array<float>, label int"
-    )
-    exact = S.knn_label_disagreement(df, anchors, k=5)
-    cents = _ivf_codebook(df, 8, 1)
-    # nprobe=K candidate set == full corpus -> identical disagreement table
-    ivf_full = S.knn_label_disagreement(
-        df, anchors, k=5, method="ivf", centroids=cents, nprobe=8
-    )
-    assert sorted(map(tuple, ivf_full.collect())) == sorted(map(tuple, exact.collect()))
-    lsh = S.knn_label_disagreement(
-        df, anchors, k=5, method="lsh", n_planes=2, dim=32, n_probes=3
-    )
-    got = {r.query_id: r for r in lsh.collect()}
-    assert set(got) == {r[0] for r in rows[:5]}
-    for r in got.values():
-        assert 0 <= r.n_disagree <= r.n_neighbors <= 5
-
-
 def test_knn_disagreement_null_label_policy(spark):
     # 1 anchor, 4 corpus rows: two same-label, one different, one NULL.
     # The NULL-label row must be excluded from the neighborhood entirely
@@ -253,17 +205,6 @@ def test_knn_disagreement_null_label_policy(spark):
     # neighbors: vec 2 (agree) + vec 3 (disagree); vec 4 excluded, self excluded
     assert r.n_neighbors == 2 and r.n_disagree == 1
     assert abs(r.disagreement - 0.5) < 1e-9
-
-
-def test_hard_negatives_unknown_method(spark):
-    rows = _labeled_vectors(10, 8)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown method"):
-        S.hard_negatives(df, df.withColumnRenamed("vec_id", "query_id"), method="annoy").collect()
-    with pytest.raises(ValueError, match="requires a centroids"):
-        S.hard_negatives(df, df.withColumnRenamed("vec_id", "query_id"), method="ivf").collect()
 
 
 def test_scaled_ivf_trainer_partition_invariant(spark, sf_dir):
@@ -347,25 +288,6 @@ def test_scaled_ivf_large_k_paths_match_literal(spark, monkeypatch):
     # trainer too: identical centroids through the numpy assignment
     cents2 = S.train_ivf_centroids_scaled(df, n_centroids=8, iterations=1)
     assert cents == cents2
-
-
-def test_ann_swap_plans_no_cartesian(spark):
-    rows = _labeled_vectors(100, 16)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    anchors = spark.createDataFrame(
-        rows[:3], "query_id long, embedding array<float>, label int"
-    )
-    cents = _ivf_codebook(df, 4, 1)
-    for approx in (
-        S.hard_negatives(df, anchors, k=3, method="lsh", n_planes=4, dim=16),
-        S.hard_negatives(df, anchors, k=3, method="ivf", centroids=cents, nprobe=2),
-        S.knn_label_disagreement(df, anchors, k=3, method="lsh", n_planes=4, dim=16),
-    ):
-        plan = approx._jdf.queryExecution().executedPlan().toString()
-        # the whole point of the swap: a bucket/cell EQUI-join replaces
-        # the broadcast cross join of the exact baseline
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoop" not in plan
 
 
 class TestProductQuantization:
