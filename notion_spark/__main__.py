@@ -37,9 +37,8 @@ def _now(arg: str | None) -> datetime:
 def _read_pages(path: str) -> list[dict]:
     """The page objects on every non-blank line of a JSON-lines snapshot
     file, of a directory's ``*.jsonl`` files, or of the files a glob
-    matches. A page id that appears more than once keeps its last
-    occurrence in read order (sorted files, then lines): the reference's
-    keep-last by UID (fetch_pages.py:598-601)."""
+    matches, in read order (sorted files, then lines). A page id that
+    appears more than once is kept once, by `assemble_tasks`."""
     files = sorted(glob.glob(os.path.join(path, "*.jsonl") if os.path.isdir(path) else path))
     if not files:
         raise FileNotFoundError(f"no page snapshot files under {path}")
@@ -47,8 +46,7 @@ def _read_pages(path: str) -> list[dict]:
     for name in files:
         with open(name) as f:
             pages += [json.loads(line) for line in f if line.strip()]
-    last = {p["id"]: i for i, p in enumerate(pages)}
-    return [p for i, p in enumerate(pages) if last[p["id"]] == i]
+    return pages
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -63,20 +63,21 @@ def refresh_cache(
 ) -> tuple[DataFrame, int]:
     """M1+M2: skip unchanged rows by (uid, updated_time) watermark, merge
     the rest keep-last into the canonical Parquet store. Returns (merged
-    frame, n_changed)."""
+    frame, n_changed). A first load writes every fetched row once and
+    counts the written store, so an uncached ``fetched`` is evaluated
+    once."""
     from notion_spark.sources.io import overwrite_store
 
+    n_changed = None
+    merged = fetched
     if os.path.exists(cache_path):
         cache = spark.read.parquet(cache_path)
         delta = changed_rows(fetched, cache, "uid", "updated_time")
         n_changed = delta.count()
         merged = keep_last_upsert(cache, delta, "uid")
-    else:
-        delta = fetched
-        n_changed = fetched.count()
-        merged = fetched
     overwrite_store(merged, cache_path)
-    return spark.read.parquet(cache_path), n_changed
+    store = spark.read.parquet(cache_path)
+    return store, store.count() if n_changed is None else n_changed
 
 
 def run_pipeline(

@@ -62,27 +62,14 @@ COLUMN_ALIASES = {
 CANONICAL_TO_DISPLAY = {v: k for k, v in COLUMN_ALIASES.items()}
 
 # --- blocks: the page-body tree (fetch_pages.py:117-170, 194-308) ---------
-# The recursive block tree is modeled as a self-referencing table; body
-# flattening is an iterative self-join to fixpoint (see sources/blocks.py).
-BLOCKS_SCHEMA = T.StructType(
-    [
-        T.StructField("page_uid", T.StringType(), False),
-        T.StructField("block_id", T.StringType(), False),
-        T.StructField("parent_block_id", T.StringType(), True),
-        T.StructField("ord", T.IntegerType(), False),   # sibling order
-        T.StructField("type", T.StringType(), False),
-        T.StructField("payload", T.StringType(), True),  # JSON per block type
-    ]
-)
+# One row per page: the crawl walks the block tree depth-first, so the
+# array is already in body order and each block carries its depth (the
+# indent). sources/blocks.flatten_body renders it without a sort or shuffle.
+BLOCKS_SCHEMA = "page_uid string, blocks array<struct<depth:int,type:string,payload:string>>"
 
-# --- comments (fetch_pages.py:173-191, 412-418) ---------------------------
-COMMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("page_uid", T.StringType(), False),
-        T.StructField("comment_ord", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), True),
-    ]
-)
+# --- comments (fetch_pages.py:173-191, 412-418): one row per page, the
+# texts newline-joined in API order --------------------------------------
+COMMENTS_SCHEMA = "page_uid string, comments string"
 
 # --- attachments (fetch_pages.py:350-372, 444-459; reports 256-305) -------
 ATTACHMENTS_SCHEMA = T.StructType(

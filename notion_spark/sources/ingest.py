@@ -4,8 +4,9 @@ The reference builds each record row-at-a-time in Python with per-row
 point lookups for parent/children NIDs (fetch_pages.py:327-441, lookups
 38-64). Here the raw page JSON lands in a DataFrame column and the whole
 assembly is column expressions over get_json_object/from_json — bulk
-parsed, codegen'd — and FK resolution is ONE broadcast self-join
-(SURVEY §2.5 J2) instead of N API calls.
+parsed, codegen'd — and FK resolution is ONE broadcast uid -> nid map
+(SURVEY §2.5 J2) instead of N API calls. Bodies and comments arrive one
+row per page and join 1:1 on uid.
 
 Property names are remappable like the reference's .env knobs
 (globals.py:72-81) via the ``props`` argument.
@@ -106,38 +107,25 @@ def parse_pages(raw_df: DataFrame, props: dict[str, str] | None = None) -> DataF
 
 def resolve_relation_nids(tasks: DataFrame) -> DataFrame:
     """Bulk parent/children NID resolution (replaces fetch_page_nid's
-    per-row RPC + memo dict, fetch_pages.py:38-64): one broadcast
-    self-join for parents; children via posexplode + join + re-group.
+    per-row RPC + memo dict, fetch_pages.py:38-64): one uid -> nid map,
+    built once as a one-row aggregate and broadcast to every row.
+    ``tasks`` must hold each uid once (`assemble_tasks` keeps the last).
 
     Faithful to the reference (fetch_pages.py:378-382): children keep
     their RELATION ORDER, and a child UID absent from the dataset yields a
     NULL entry (not silently dropped) — `len > 0` still classifies such a
     row as a Project (analyze_pages.py:184-190)."""
-    lut = F.broadcast(tasks.select(F.col("uid").alias("__u"), F.col("nid").alias("__n")))
-    with_parent = (
-        tasks.join(lut, tasks["parent_uid"] == lut["__u"], "left")
-        .withColumn("parent_nid", F.coalesce(F.col("__n"), F.lit(0)))
-        .drop("__u", "__n")
-    )
-    exploded = with_parent.select(
-        "uid", F.posexplode_outer("children_uids").alias("__pos", "__cu")
-    ).join(lut, F.col("__cu") == lut["__u"], "left")
-    # collect (pos, nid) structs — struct is non-null even when nid is
-    # null, so unresolved children survive; sort by pos restores relation
-    # order; rows from explode_outer's empty-array placeholder (__pos
-    # null) are filtered out.
-    child_nids = (
-        exploded.filter(F.col("__pos").isNotNull())
-        .groupBy("uid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("__pos").alias("p"), F.col("__n").alias("n")))),
-                lambda s: s["n"],
-            ).alias("children_nids")
+    lut = F.broadcast(
+        tasks.filter(F.col("uid").isNotNull()).agg(
+            F.map_from_entries(F.collect_list(F.struct("uid", "nid"))).alias("__nids")
         )
     )
-    return with_parent.join(child_nids, "uid", "left").withColumn(
-        "children_nids", F.coalesce("children_nids", F.array().cast("array<long>"))
+    nids = F.col("__nids")
+    return (
+        tasks.crossJoin(lut)
+        .withColumn("parent_nid", F.coalesce(nids[F.col("parent_uid")], F.lit(0)))
+        .withColumn("children_nids", F.transform("children_uids", lambda c: nids[c]))
+        .drop("__nids")
     )
 
 
@@ -148,40 +136,26 @@ def assemble_tasks(
     comments: DataFrame | None = None,
     props: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Full ingest: pages JSON + optional blocks/comments side tables →
-    TASKS_SCHEMA frame (process_page parity, set-at-a-time)."""
+    """Full ingest: pages JSON + optional one-row-per-page blocks/comments
+    frames (`sources.notion.blocks_df`/`comments_df`) → TASKS_SCHEMA frame
+    (process_page parity, set-at-a-time). A page id that appears more than
+    once keeps its last occurrence: the reference's keep-last by UID
+    (fetch_pages.py:598-601)."""
+    pages = list(pages)
+    last = {p["id"]: i for i, p in enumerate(pages)}
+    pages = [p for i, p in enumerate(pages) if last[p["id"]] == i]
     tasks = resolve_relation_nids(parse_pages(pages_raw_df(spark, pages), props))
     if blocks is not None:
         from notion_spark.sources.blocks import flatten_body
 
-        body = flatten_body(blocks).withColumnRenamed("page_uid", "uid")
-        tasks = tasks.join(body, "uid", "left")
-    else:
-        tasks = tasks.withColumn("body_content", F.lit(None).cast("string"))
-    tasks = tasks.withColumn("body_content", F.coalesce("body_content", F.lit("")))
+        blocks = blocks.select(F.col("page_uid").alias("uid"), flatten_body(F.col("blocks")).alias("body_content"))
     if comments is not None:
-        # collect_list order is NOT preserved across the aggregation
-        # shuffle — collect (ord, text) structs and sort post-agg, like
-        # flatten_body does.
-        agg = (
-            comments.groupBy("page_uid")
-            .agg(
-                F.concat_ws(
-                    "\n",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct(F.col("comment_ord").alias("o"), F.col("text").alias("t")))
-                        ),
-                        lambda s: s["t"],
-                    ),
-                ).alias("comments")
-            )
-            .withColumnRenamed("page_uid", "uid")
-        )
-        tasks = tasks.join(agg, "uid", "left")
-    else:
-        tasks = tasks.withColumn("comments", F.lit(None).cast("string"))
-    tasks = tasks.withColumn("comments", F.coalesce("comments", F.lit("")))
+        comments = comments.withColumnRenamed("page_uid", "uid")
+    for side, name in ((blocks, "body_content"), (comments, "comments")):
+        if side is None:
+            tasks = tasks.withColumn(name, F.lit(""))
+        else:
+            tasks = tasks.join(side, "uid", "left").withColumn(name, F.coalesce(name, F.lit("")))
     cols = [
         "uid", "nid", "name", "body_content", "status", "started", "completed",
         "due", "updated_time", "priority", "files_media", "created",

@@ -6,8 +6,9 @@ injectable: `sources.http_client.HttpNotionClient` is the real HTTP
 implementation (cursor pagination with limit pushdown, 429 Retry-After +
 exponential backoff max 5 — unit-tested offline against a fake transport
 in tests/test_http_client.py); `FixtureClient` serves tests and offline
-runs from static JSON. The fetched payloads land in the blocks/comments/
-tasks tables and everything downstream is pure DataFrame.
+runs from static JSON. The crawl lands one row per page in each of the
+blocks and comments frames (BLOCKS_SCHEMA, COMMENTS_SCHEMA), and
+everything downstream is pure DataFrame.
 
 `blocks_df`/`comments_df` fetch the bodies of every page id they are
 given; no caller in the package narrows that list to changed pages yet.
@@ -62,37 +63,39 @@ class FixtureClient:
         return self._comments.get(block_id, [])
 
 
-def crawl_blocks(client: NotionClient, page_ids: Iterable[str]) -> list[tuple]:
-    """Recursive block-tree crawl (fetch_pages.py:117-170) flattened to
-    BLOCKS_SCHEMA rows. Recursion is connector-side (API shape forces it);
-    the result is a plain self-referencing table."""
-    rows: list[tuple] = []
-    for page_uid in page_ids:
-        stack: list[tuple[str, str | None]] = [(page_uid, None)]
+def crawl_blocks(client: NotionClient, page_ids: Iterable[str]) -> Iterator[tuple]:
+    """Block-tree crawl of each distinct page id (fetch_pages.py:117-170):
+    yields ``(page_uid, [(depth, type, payload), ...])`` with the blocks
+    in pre-order, which is the body's line order. The recursion is an
+    explicit stack of child iterators, so each block's children are
+    fetched when the walk reaches it, as the reference does."""
+    for page_uid in dict.fromkeys(page_ids):
+        blocks: list[tuple] = []
+        stack = [iter(client.block_children(page_uid))]
         while stack:
-            node_id, parent = stack.pop()
-            for ord_, blk in enumerate(client.block_children(node_id)):
-                bid = blk["id"]
-                rows.append(
-                    (page_uid, bid, None if parent is None and node_id == page_uid else node_id,
-                     ord_, blk.get("type", "unsupported"), json.dumps(blk.get(blk.get("type", ""), {})))
-                )
-                if blk.get("has_children"):
-                    stack.append((bid, bid))
-    return rows
+            blk = next(stack[-1], None)
+            if blk is None:
+                stack.pop()
+                continue
+            blocks.append(
+                (len(stack) - 1, blk.get("type", "unsupported"), json.dumps(blk.get(blk.get("type", ""), {})))
+            )
+            if blk.get("has_children"):
+                stack.append(iter(client.block_children(blk["id"])))
+        yield page_uid, blocks
 
 
 def blocks_df(spark: SparkSession, client: NotionClient, page_ids: Iterable[str]) -> DataFrame:
-    return spark.createDataFrame(crawl_blocks(client, page_ids), BLOCKS_SCHEMA)
+    """One row per distinct page id: its blocks in body order, each with
+    its depth (BLOCKS_SCHEMA)."""
+    return spark.createDataFrame(list(crawl_blocks(client, page_ids)), BLOCKS_SCHEMA)
 
 
 def comments_df(spark: SparkSession, client: NotionClient, page_ids: Iterable[str]) -> DataFrame:
+    """One row per distinct page id: its comment texts newline-joined in
+    API order (fetch_pages.py:412-418)."""
     rows = []
-    for pid in page_ids:
-        for i, c in enumerate(client.comments(pid)):
-            text = ""
-            rt = c.get("rich_text") or []
-            if rt:
-                text = rt[0].get("plain_text", "")
-            rows.append((pid, i, text))
+    for pid in dict.fromkeys(page_ids):
+        texts = [(c.get("rich_text") or [{}])[0].get("plain_text", "") for c in client.comments(pid)]
+        rows.append((pid, "\n".join(t for t in texts if t is not None)))
     return spark.createDataFrame(rows, COMMENTS_SCHEMA)

@@ -32,10 +32,12 @@ def test_read_pages_from_a_directory_or_glob(tmp_path):
     assert [p["id"] for p in cli._read_pages(str(tmp_path))] == ids
     assert [p["id"] for p in cli._read_pages(str(tmp_path / "*.jsonl"))] == ids
     assert [p["id"] for p in cli._read_pages(str(tmp_path / "b.jsonl"))] == ["pg-3"]
-    # a repeated id keeps its last occurrence: sorted files, then lines
+    # every line in read order, sorted files then lines; a repeated id is
+    # deduplicated by assemble_tasks (test_pipeline_over_overlapping_snapshot_files)
     (tmp_path / "c.jsonl").write_text('{"id": "pg-1", "v": 2}\n{"id": "pg-3", "v": 2}\n')
     got = cli._read_pages(str(tmp_path))
-    assert [(p["id"], p.get("v")) for p in got] == [("pg-2", None), ("pg-1", 2), ("pg-3", 2)]
+    assert [(p["id"], p.get("v")) for p in got] == [
+        ("pg-1", None), ("pg-2", None), ("pg-3", None), ("pg-1", 2), ("pg-3", 2)]
 
 
 def test_pipeline_without_snapshot_files_raises(spark, monkeypatch, tmp_path):

@@ -161,8 +161,9 @@ def test_satisfies_notion_client_protocol_for_crawl(spark):
         ]
     )
     rows = blocks_df(spark, c, ["pageA"]).collect()
-    assert {r.block_id for r in rows} == {"b1", "b2"}
-    assert {r.parent_block_id for r in rows} == {None, "b1"}
+    assert [r.page_uid for r in rows] == ["pageA"]
+    # b1 comes before its child b2, one level deeper
+    assert [(b.depth, b.type) for b in rows[0].blocks] == [(0, "paragraph"), (1, "quote")]
 
 
 # ------------------------------------------------------------ attachments (S5)

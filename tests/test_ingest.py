@@ -1,8 +1,18 @@
 from __future__ import annotations
 
 import datetime as dt
+import uuid
+
+import pytest
 
 from notion_spark.sources.ingest import assemble_tasks
+from notion_spark.sources.notion import FixtureClient, blocks_df, comments_df
+
+
+def _rich(text):
+    return {"rich_text": [{"plain_text": text, "href": None,
+                           "annotations": {"bold": False, "italic": False, "underline": False,
+                                           "strikethrough": False, "code": False}}]}
 
 
 def _page(pid, nid, title, parent=None, children=(), status="Doing", tags=None):
@@ -62,23 +72,29 @@ def test_assemble_tasks_end_to_end(spark):
 
 
 def test_assemble_with_blocks_and_comments(spark):
-    import json
-
-    from notion_spark.schema import BLOCKS_SCHEMA, COMMENTS_SCHEMA
-
     pages = [_page("pg-1", 1, ["T"])]
-    payload = json.dumps(
-        {"rich_text": [{"plain_text": "hello", "href": None,
-                        "annotations": {"bold": False, "italic": False, "underline": False,
-                                        "strikethrough": False, "code": False}}]}
+    client = FixtureClient(
+        pages,
+        {"pg-1": [{"id": "b1", "type": "paragraph", "paragraph": _rich("hello")}]},
+        {"pg-1": [{"rich_text": [{"plain_text": "first"}]}, {"rich_text": [{"plain_text": "second"}]}]},
     )
-    blocks = spark.createDataFrame([("pg-1", "b1", None, 0, "paragraph", payload)], BLOCKS_SCHEMA)
-    comments = spark.createDataFrame(
-        [("pg-1", 0, "first"), ("pg-1", 1, "second")], COMMENTS_SCHEMA
-    )
-    row = assemble_tasks(spark, pages, blocks, comments).collect()[0]
+    row = assemble_tasks(spark, pages, blocks_df(spark, client, ["pg-1"]),
+                         comments_df(spark, client, ["pg-1"])).collect()[0]
     assert row.body_content == "hello"
     assert row.comments == "first\nsecond"
+
+
+def test_a_repeated_page_id_keeps_its_last_occurrence(spark):
+    pages = [_page("pg-1", 1, ["Old"]), _page("pg-2", 2, ["Kid"], parent="pg-1"),
+             _page("pg-1", 1, ["New"], children=("pg-2",))]
+    client = FixtureClient(pages, {}, {"pg-1": [{"rich_text": [{"plain_text": "hi"}]}]})
+    ids = [p["id"] for p in pages]
+    rows = assemble_tasks(spark, pages, blocks_df(spark, client, ids), comments_df(spark, client, ids)).collect()
+    assert sorted(r.uid for r in rows) == ["pg-1", "pg-2"]
+    tasks = {r.uid: r for r in rows}
+    assert tasks["pg-1"].name == "New"
+    assert tasks["pg-1"].children_nids == [2] and tasks["pg-1"].comments == "hi"
+    assert tasks["pg-2"].parent_nid == 1
 
 
 def test_property_remapping(spark):
@@ -99,3 +115,58 @@ def test_single_element_title_and_child(spark):
     assert tasks["pg-1"].name == "Solo"
     assert tasks["pg-1"].children_uids == ["pg-2"]
     assert tasks["pg-1"].children_nids == [2]
+
+
+def _workspace(n):
+    """``n`` pages with parent/child relations, nested blocks (3 levels)
+    and comments, served by a FixtureClient."""
+    pages, blocks, comments = [], {}, {}
+    for i in range(1, n + 1):
+        pid = f"pg-{i}"
+        pages.append(_page(pid, i, [f"Task {i}"], parent=f"pg-{i // 2}" if i > 1 else None,
+                           children=(f"pg-{2 * i}", f"pg-{2 * i + 1}")))
+        blocks[pid] = [{"id": f"{pid}-b{j}", "type": "paragraph", "has_children": j == 0,
+                        "paragraph": _rich(f"line {j}")} for j in range(3)]
+        blocks[f"{pid}-b0"] = [{"id": f"{pid}-c", "type": "toggle", "has_children": True, "toggle": _rich("c")}]
+        blocks[f"{pid}-c"] = [{"id": f"{pid}-d", "type": "quote", "quote": _rich("d")}]
+        comments[pid] = [{"rich_text": [{"plain_text": f"note {k}"}]} for k in range(i % 3)]
+    return pages, FixtureClient(pages, blocks, comments)
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    gid = f"ingest-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+@pytest.mark.parametrize("n", [50, 500])
+def test_ingest_job_counts(spark, tmp_path, n):
+    """Planning the ingest runs no Spark job; filling its cache and a
+    first load each run a fixed handful, whatever the page count."""
+    from notion_spark.pipeline_app import refresh_cache
+
+    pages, client = _workspace(n)
+    ids = [p["id"] for p in pages]
+
+    def ingest():
+        return assemble_tasks(spark, pages, blocks_df(spark, client, ids), comments_df(spark, client, ids))
+
+    tasks, planned = _jobs(spark, ingest)
+    assert planned == 0
+    cached = tasks.cache()
+    try:
+        count, filled = _jobs(spark, cached.count)
+        assert count == n and filled <= 10
+        row = cached.filter("uid = 'pg-1'").collect()[0]
+        assert row.body_content == "line 0\n  c\n    > d\nline 1\nline 2"
+        assert row.children_nids == [2, 3] and row.comments == "note 0"
+    finally:
+        cached.unpersist()
+    (_, written), loaded = _jobs(spark, lambda: refresh_cache(spark, ingest(), str(tmp_path / "tasks.parquet")))
+    assert written == n and loaded <= 11

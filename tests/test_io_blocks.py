@@ -1,10 +1,8 @@
 from __future__ import annotations
 
-import json
-
 import pandas as pd
+from pyspark.sql import functions as F
 
-from notion_spark.schema import BLOCKS_SCHEMA
 from notion_spark.sources.blocks import flatten_body
 from notion_spark.sources.io import export_tasks_csv, read_tasks_csv
 from notion_spark.sources.notion import FixtureClient, blocks_df, comments_df
@@ -24,65 +22,67 @@ def test_csv_round_trip(spark, tmp_path):
         assert [int(x) for x in (r.children_nids or [])] == orig[uid].children_nids
 
 
-def test_flatten_body_ordering_and_rendering(spark):
-    def payload(text, **kw):
-        d = {
-            "rich_text": [
-                {
-                    "plain_text": text,
-                    "href": None,
-                    "annotations": {
-                        "bold": False, "italic": False, "underline": False,
-                        "strikethrough": False, "code": False,
-                    },
-                }
-            ]
-        }
-        d.update(kw)
-        return json.dumps(d)
+def _rich(text):
+    return {
+        "rich_text": [
+            {
+                "plain_text": text,
+                "href": None,
+                "annotations": {
+                    "bold": False, "italic": False, "underline": False,
+                    "strikethrough": False, "code": False,
+                },
+            }
+        ]
+    }
 
-    rows = [
-        ("p1", "b1", None, 0, "heading_1", payload("Title")),
-        ("p1", "b2", None, 1, "bulleted_list_item", payload("item one")),
-        ("p1", "b3", "b2", 0, "paragraph", payload("nested")),
-        ("p1", "b4", None, 2, "to_do", payload("task", checked=True)),
-        ("p1", "b5", None, 3, "divider", json.dumps({})),
-        ("p2", "c1", None, 0, "paragraph", payload("other page")),
-    ]
-    blocks = spark.createDataFrame(rows, BLOCKS_SCHEMA)
-    out = {r.page_uid: r.body_content for r in flatten_body(blocks).collect()}
+
+def _block(bid, kind, has_children=False, **payload):
+    return {"id": bid, "type": kind, "has_children": has_children, kind: payload}
+
+
+def _bodies(spark, blocks, page_ids):
+    """page_uid -> body_content for ``blocks`` served by a FixtureClient."""
+    client = FixtureClient([], blocks, {})
+    bdf = blocks_df(spark, client, page_ids)
+    return {r.page_uid: r.body_content
+            for r in bdf.select("page_uid", flatten_body(F.col("blocks")).alias("body_content")).collect()}
+
+
+def test_flatten_body_ordering_and_rendering(spark):
+    blocks = {
+        "p1": [
+            _block("b1", "heading_1", **_rich("Title")),
+            _block("b2", "bulleted_list_item", has_children=True, **_rich("item one")),
+            _block("b4", "to_do", checked=True, **_rich("task")),
+            _block("b5", "divider"),
+        ],
+        "b2": [_block("b3", "paragraph", **_rich("nested"))],
+        "p2": [_block("c1", "paragraph", **_rich("other page"))],
+    }
+    out = _bodies(spark, blocks, ["p1", "p2"])
     assert out["p1"] == "# Title\n- item one\n  nested\n[x] task\n---"
     assert out["p2"] == "other page"
 
 
 def test_flatten_body_large_ordinals(spark):
-    # Regression: sibling ordinals beyond any fixed pad width must still
-    # order numerically (the old lpad(...,6) key truncated >= 1e6).
-    def payload(text):
-        return json.dumps(
-            {
-                "rich_text": [
-                    {
-                        "plain_text": text,
-                        "href": None,
-                        "annotations": {
-                            "bold": False, "italic": False, "underline": False,
-                            "strikethrough": False, "code": False,
-                        },
-                    }
-                ]
-            }
-        )
+    # 12 siblings keep crawl order: nothing re-sorts them, so the 10th
+    # and later lines cannot land before the 2nd (as a string sort of
+    # their ordinals would put them)
+    texts = [f"line {i}" for i in range(12)]
+    blocks = {"p1": [_block(f"b{i}", "paragraph", **_rich(t)) for i, t in enumerate(texts)]}
+    assert _bodies(spark, blocks, ["p1"])["p1"] == "\n".join(texts)
 
-    rows = [
-        ("p1", "b1", None, 10_000_000, "paragraph", payload("last")),
-        ("p1", "b2", None, 2, "paragraph", payload("second")),
-        ("p1", "b3", None, 999_999, "paragraph", payload("third")),
-        ("p1", "b4", None, 1, "paragraph", payload("first")),
-    ]
-    blocks = spark.createDataFrame(rows, BLOCKS_SCHEMA)
-    out = {r.page_uid: r.body_content for r in flatten_body(blocks).collect()}
-    assert out["p1"] == "first\nsecond\nthird\nlast"
+
+def test_flatten_body_deep_chain(spark):
+    # a 20-level chain of nested blocks renders all 20 lines, each
+    # indented two spaces per level (the crawl has no depth cap)
+    blocks = {
+        ("p1" if d == 0 else f"b{d - 1}"): [_block(f"b{d}", "paragraph", has_children=d < 19, **_rich(f"level {d}"))]
+        for d in range(20)
+    }
+    lines = _bodies(spark, blocks, ["p1"])["p1"].split("\n")
+    assert lines == [f"{'  ' * d}level {d}" for d in range(20)]
 
 
 def test_fixture_client_crawl(spark):
@@ -96,11 +96,11 @@ def test_fixture_client_crawl(spark):
     comments = {"p1": [{"rich_text": [{"plain_text": "hello"}]}]}
     client = FixtureClient(pages, blocks, comments)
     bdf = blocks_df(spark, client, ["p1", "p2"])
-    rows = {r.block_id: r for r in bdf.collect()}
-    assert rows["b1"].parent_block_id is None
-    assert rows["b2"].parent_block_id == "b1"
+    rows = {r.page_uid: r.blocks for r in bdf.collect()}
+    assert [(b.depth, b.type) for b in rows["p1"]] == [(0, "paragraph"), (1, "paragraph")]
+    assert rows["p2"] == []
     cdf = comments_df(spark, client, ["p1", "p2"])
-    assert [(r.page_uid, r.text) for r in cdf.collect()] == [("p1", "hello")]
+    assert sorted((r.page_uid, r.comments) for r in cdf.collect()) == [("p1", "hello"), ("p2", "")]
 
 
 def test_multimodal_feature_plumbing(spark):
