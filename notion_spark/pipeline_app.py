@@ -68,16 +68,15 @@ def refresh_cache(
     once."""
     from notion_spark.sources.io import overwrite_store
 
-    n_changed = None
-    merged = fetched
     if os.path.exists(cache_path):
         cache = spark.read.parquet(cache_path)
         delta = changed_rows(fetched, cache, "uid", "updated_time")
         n_changed = delta.count()
-        merged = keep_last_upsert(cache, delta, "uid")
-    overwrite_store(merged, cache_path)
+        overwrite_store(keep_last_upsert(cache, delta, "uid"), cache_path)
+        return spark.read.parquet(cache_path), n_changed
+    overwrite_store(fetched, cache_path)
     store = spark.read.parquet(cache_path)
-    return store, store.count() if n_changed is None else n_changed
+    return store, store.count()
 
 
 def run_pipeline(

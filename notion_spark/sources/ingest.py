@@ -4,9 +4,9 @@ The reference builds each record row-at-a-time in Python with per-row
 point lookups for parent/children NIDs (fetch_pages.py:327-441, lookups
 38-64). Here the raw page JSON lands in a DataFrame column and the whole
 assembly is column expressions over get_json_object/from_json — bulk
-parsed, codegen'd — and FK resolution is ONE broadcast uid -> nid map
-(SURVEY §2.5 J2) instead of N API calls. Bodies and comments arrive one
-row per page and join 1:1 on uid.
+parsed, codegen'd — and FK resolution is broadcast hash joins against
+ONE uid -> nid table (SURVEY §2.5 J2) instead of N API calls. Bodies and
+comments arrive one row per page and join 1:1 on uid.
 
 Property names are remappable like the reference's .env knobs
 (globals.py:72-81) via the ``props`` argument.
@@ -107,25 +107,31 @@ def parse_pages(raw_df: DataFrame, props: dict[str, str] | None = None) -> DataF
 
 def resolve_relation_nids(tasks: DataFrame) -> DataFrame:
     """Bulk parent/children NID resolution (replaces fetch_page_nid's
-    per-row RPC + memo dict, fetch_pages.py:38-64): one uid -> nid map,
-    built once as a one-row aggregate and broadcast to every row.
-    ``tasks`` must hold each uid once (`assemble_tasks` keeps the last).
+    per-row RPC + memo dict, fetch_pages.py:38-64): one broadcast uid ->
+    nid table, hash-joined on parent uids and on the exploded child uids,
+    which are collected back per page in relation order. ``tasks`` must
+    hold each uid once (`assemble_tasks` keeps the last).
 
     Faithful to the reference (fetch_pages.py:378-382): children keep
     their RELATION ORDER, and a child UID absent from the dataset yields a
     NULL entry (not silently dropped) — `len > 0` still classifies such a
     row as a Project (analyze_pages.py:184-190)."""
-    lut = F.broadcast(
-        tasks.filter(F.col("uid").isNotNull()).agg(
-            F.map_from_entries(F.collect_list(F.struct("uid", "nid"))).alias("__nids")
-        )
+    lut = F.broadcast(tasks.select(F.col("uid").alias("__u"), F.col("nid").alias("__n")))
+    # (position, nid) structs sort back into relation order; the struct is
+    # non-null even when the nid is, so unresolved children survive
+    kids = (
+        tasks.select("uid", F.posexplode("children_uids").alias("__p", "__u"))
+        .join(lut, "__u", "left")
+        .groupBy("uid")
+        .agg(F.array_sort(F.collect_list(F.struct("__p", "__n"))).alias("__k"))
     )
-    nids = F.col("__nids")
     return (
-        tasks.crossJoin(lut)
-        .withColumn("parent_nid", F.coalesce(nids[F.col("parent_uid")], F.lit(0)))
-        .withColumn("children_nids", F.transform("children_uids", lambda c: nids[c]))
-        .drop("__nids")
+        tasks.join(lut, tasks["parent_uid"] == lut["__u"], "left")
+        .withColumn("parent_nid", F.coalesce("__n", F.lit(0)))
+        .drop("__u", "__n")
+        .join(kids, "uid", "left")
+        .withColumn("children_nids", F.coalesce(F.transform("__k", lambda s: s["__n"]), F.array().cast("array<long>")))
+        .drop("__k")
     )
 
 

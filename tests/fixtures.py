@@ -4,11 +4,14 @@
 fixed clock (2026-01-15T00:00:00Z): overdue actives, doing, due-in-7d,
 due-in-14d, undated high-priority, >15 to-dos (goals overflow), done rows
 inside each period window, uncategorized statuses, projects with children.
+Also the helpers several test modules share: a Notion rich-text payload
+and a Spark job counter.
 """
 
 from __future__ import annotations
 
 import random
+import uuid
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
@@ -16,6 +19,26 @@ from pyspark.sql import DataFrame, SparkSession
 from notion_spark.schema import TASKS_SCHEMA
 
 FIXED_NOW = datetime(2026, 1, 15, 0, 0, 0)
+
+
+def rich(text: str) -> dict:
+    """A Notion block payload holding ``text`` as one plain rich-text run."""
+    return {"rich_text": [{"plain_text": text, "href": None,
+                           "annotations": {"bold": False, "italic": False, "underline": False,
+                                           "strikethrough": False, "code": False}}]}
+
+
+def count_jobs(spark: SparkSession, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    gid = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
 
 _STATUSES = ["To Do", "Doing", "Done", "Paused", "Notes", "Duplicate", "Canceled"]
 _PRIORITIES = ["Critical (48hrs)", "High (1wk)", "Medium (2wks)", "Low (>month)", "Note"]

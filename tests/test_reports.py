@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import uuid
 from dataclasses import replace
 from datetime import timedelta
 
@@ -10,7 +9,7 @@ from pyspark.sql import functions as F
 from notion_spark.config import EngineConfig
 from notion_spark.normalize import normalize_for_reports
 from notion_spark.queries import reports as R
-from tests.fixtures import FIXED_NOW, make_tasks
+from tests.fixtures import FIXED_NOW, count_jobs, make_tasks
 
 
 @pytest.fixture(scope="module")
@@ -130,18 +129,6 @@ PERIODS = ("daily", "weekly", "biweekly", "monthly", "yearly")
 PAYLOAD_COLS = ["nid", "name", "status", "priority", "parent_name"]
 
 
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn started)."""
-    sc = spark.sparkContext
-    gid = f"read-path-{uuid.uuid4().hex}"
-    sc.setJobGroup(gid, gid)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
-
-
 def _keeps_goal(r, end):
     return r.priority_score <= 1 or (r.due is not None and r.due <= end + timedelta(days=14))
 
@@ -206,7 +193,7 @@ def test_read_path_plans_lazily_and_jobs_do_not_grow_with_periods(spark, tasks):
     for n_todo in (10, 20):
         reported = _with_todos(tasks, n_todo)
         analyzed = _with_todos(analysis_base, n_todo)
-        _, n_jobs = _jobs(spark, lambda: (
+        _, n_jobs = count_jobs(spark, lambda: (
             R.report_frames(reported, PERIODS, FIXED_NOW, CFG),
             A.run_all(analyzed, FIXED_NOW, CFG),
         ))
@@ -224,7 +211,7 @@ def test_read_path_plans_lazily_and_jobs_do_not_grow_with_periods(spark, tasks):
                 cfg = replace(CFG, include_uncategorized=uncategorized)
                 sections = A.run_all(normalize_for_analysis(store), FIXED_NOW, cfg)
                 frames = R.report_frames(normalize_for_reports(store), periods, FIXED_NOW, cfg)
-                out, jobs[periods, uncategorized] = _jobs(spark, lambda: (
+                out, jobs[periods, uncategorized] = count_jobs(spark, lambda: (
                     render_analysis(sections, FIXED_NOW, cfg),
                     render_chart_canvases(sections),
                     report_payload(frames, FIXED_NOW, cfg),
