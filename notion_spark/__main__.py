@@ -75,16 +75,21 @@ def main(argv: list[str] | None = None) -> int:
     from notion_spark.config import EngineConfig
     from notion_spark.session import get_spark
 
+    # missing input fails before the Spark session starts
+    cache = os.path.join(args.cache_dir, "tasks.parquet")
+    if args.cmd == "pipeline":
+        pages = _read_pages(args.pages)
+    elif not os.path.isdir(cache):
+        raise FileNotFoundError(f"no tasks store under {args.cache_dir}")
     spark = get_spark(app_name=f"notion-spark-{args.cmd}")
     cfg = EngineConfig.from_env()
     now = _now(args.now)
-    cache = os.path.join(args.cache_dir, "tasks.parquet")
 
     if args.cmd == "pipeline":
         from notion_spark.pipeline_app import run_pipeline
         from notion_spark.sources.ingest import assemble_tasks
 
-        tasks = assemble_tasks(spark, _read_pages(args.pages))
+        tasks = assemble_tasks(spark, pages)
         result = run_pipeline(spark, tasks, args.cache_dir, now, cfg)
         print(
             json.dumps(

@@ -32,19 +32,6 @@ def not_in_filter(df: DataFrame, col: str, known: Sequence[str]) -> DataFrame:
     return df.filter(~F.lower(F.col(col)).isin([k.lower() for k in known]) | F.col(col).isNull())
 
 
-def uncategorized_filter(df: DataFrame, col: str = "status") -> DataFrame:
-    """The uncategorized catch-all (F8 specialized to the known status
-    vocabulary) — shared by the analysis and report suites
-    (analyze_pages.py:230-243; generate_reports.py:499-503). Nulls land
-    in the catch-all like pandas ~isin (normalization defaults them to
-    'unknown' first, but the operator stays safe standalone)."""
-    from notion_spark.config import KNOWN_STATUSES
-
-    return df.filter(
-        ~F.lower(F.col(col)).isin(list(KNOWN_STATUSES)) | F.col(col).isNull()
-    )
-
-
 # ---------------------------------------------------------------- F9
 def substring_filter(df: DataFrame, col: str, needle: str) -> DataFrame:
     """Case-insensitive substring containment with null→False

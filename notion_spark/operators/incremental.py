@@ -30,7 +30,12 @@ def changed_rows(
     """Rows of ``new`` with no cache row carrying the same (key, watermark)
     (fetch_pages.py:570-577: skip page when cached `Updated Time` equals
     the fetched `last_edited_time`). New keys and modified keys both
-    survive the anti-join."""
+    survive the anti-join.
+
+    Known gap, kept as the reference has it: Notion's `last_edited_time`
+    has minute resolution, so a second edit within the minute of the
+    last sync carries the same watermark and is skipped until the page
+    is edited again."""
     return new.join(cache.select(key, watermark), on=[key, watermark], how="left_anti")
 
 

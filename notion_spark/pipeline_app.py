@@ -65,7 +65,12 @@ def refresh_cache(
     the rest keep-last into the canonical Parquet store. Returns (merged
     frame, n_changed). A first load writes every fetched row once and
     counts the written store, so an uncached ``fetched`` is evaluated
-    once."""
+    once.
+
+    A row whose (uid, updated_time) the store already holds is skipped
+    even when its other fields differ: a second edit in the same minute
+    as the last sync (Notion's `last_edited_time` has minute resolution)
+    is missed until the page is edited again (`changed_rows`)."""
     from notion_spark.sources.io import overwrite_store
 
     if os.path.exists(cache_path):

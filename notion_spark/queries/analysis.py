@@ -14,11 +14,8 @@ two lazy plans over that frame:
 `SectionRows` collects each plan once, on first read (2 Spark jobs each
 under AQE), and hands the sinks pandas frames split per section.
 
-The reference re-filters one eagerly-mutated frame per section. The
-per-section plans below `run_all` (`overdue`, `due_this_week`, ...) state
-each section the way the reference does, one plan per section; only the
-parity queries (`task_summary`, `immediate_action`) and the tests that
-check the combined plans against them call them.
+`immediate_action` and `task_summary` state two of the sections as plans
+of their own, for the parity queries that call them.
 """
 
 from __future__ import annotations
@@ -34,11 +31,8 @@ from pyspark.sql import functions as F
 from notion_spark.config import KNOWN_STATUSES, PRIORITY_SCORES, EngineConfig
 from notion_spark.functions.dates import ts_lit, week_ending
 from notion_spark.functions.text import fast_lower
-from notion_spark.operators.aggregates import conditional_counts, weekly_counts
-from notion_spark.operators.filters import (
-    anti_members, array_overlap_filter, uncategorized_filter,
-)
-from notion_spark.operators.sorts import top_k
+from notion_spark.operators.aggregates import conditional_counts
+from notion_spark.operators.filters import array_overlap_filter
 from notion_spark.queries.sections import Section, in_section, section_rows
 
 # rows the text sinks print of the unbounded overdue / immediate-action
@@ -59,52 +53,41 @@ def apply_tag_filter(df: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 
 # --------------------------------------------------------------- predicates
-# Every predicate reads the lowercased status. By default a predicate
-# lowercases it itself; the one-plan read path projects it once per row
-# with `fast_lower` and passes the projected column.
-def _lower_status() -> Column:
-    return F.lower(F.col("status"))
-
-
-def active_pred(status: Column | None = None) -> Column:
+# Every predicate reads ``status``, the lowercased status (`fast_lower`),
+# which the read path projects once per row.
+def active_pred(status: Column) -> Column:
     """F2: lower(status) ∈ {to do, doing} ∧ ¬project
     (analyze_pages.py:289-293)."""
-    s = _lower_status() if status is None else status
-    return s.isin(["to do", "doing"]) & ~F.col("is_project")
+    return status.isin(["to do", "doing"]) & ~F.col("is_project")
 
 
-def _immediate(now: datetime, status: Column | None = None) -> Column:
+def _immediate(now: datetime, status: Column) -> Column:
     """F3 (analyze_pages.py:296-302): active ∧ due set ∧ (overdue ∨ doing)."""
-    s = _lower_status() if status is None else status
     return (
-        active_pred(s)
+        active_pred(status)
         & F.col("due").isNotNull()
-        & ((F.col("due") < ts_lit(now)) | (s == "doing"))
+        & ((F.col("due") < ts_lit(now)) | (status == "doing"))
     )
 
 
-def uncategorized_pred(status: Column | None = None) -> Column:
+def uncategorized_pred(status: Column) -> Column:
     """F8 (analyze_pages.py:230-243; generate_reports.py:417-421, 499-503):
     status outside the known vocabulary, nulls included like pandas
     ~isin (normalization defaults them to 'unknown' first)."""
-    s = _lower_status() if status is None else status
-    return ~s.isin(list(KNOWN_STATUSES)) | F.col("status").isNull()
+    return ~status.isin(list(KNOWN_STATUSES)) | F.col("status").isNull()
 
 
-def _summary_counts(
-    now: datetime, status: Column | None = None
-) -> tuple[dict[str, Column], Column]:
+def _summary_counts(now: datetime, status: Column) -> tuple[dict[str, Column], Column]:
     """A1+A6 per row: the conditions the task summary counts (the
     reference's four scans folded into one aggregate) and the created →
     completed days of done rows."""
-    s = _lower_status() if status is None else status
-    done = s.contains("done")
+    done = status.contains("done")
     conditions = {
         "completed": done,
-        "doing": s.contains("doing"),
-        "todo": s.contains("to do"),
-        "n_overdue": active_pred(s) & (F.col("due") < ts_lit(now)),
-        "n_critical_high": active_pred(s) & (F.col("priority_score") <= 1),
+        "doing": status.contains("doing"),
+        "todo": status.contains("to do"),
+        "n_overdue": active_pred(status) & (F.col("due") < ts_lit(now)),
+        "n_critical_high": active_pred(status) & (F.col("priority_score") <= 1),
     }
     return conditions, F.when(done, F.datediff("completed", "created"))
 
@@ -121,8 +104,9 @@ def _pct_complete() -> Column:
 # ------------------------------------------------------------- the plans
 def _row_sections(now: datetime, cfg: EngineConfig, status: Column) -> dict[str, Section]:
     """The row sections the sinks render (analyze_pages.py:195-221 order),
-    each with the sort of its per-section plan below; ``status`` is the
-    projected lowercased status."""
+    each with its sort; ``status`` is the projected lowercased status.
+    Oldest pending is the reference's `nsmallest`: undated rows come
+    last, so they show only when fewer than five dated rows exist."""
     due, nid, score = F.col("due"), F.col("nid"), F.col("priority_score")
     active, immediate = active_pred(status), _immediate(now, status)
     overdue_rows = active & (due < ts_lit(now))
@@ -143,7 +127,9 @@ def _row_sections(now: datetime, cfg: EngineConfig, status: Column) -> dict[str,
         "next_by_priority": Section(
             active, (F.asc_nulls_last("due"), nid), NEXT_PER_PRIORITY, bucket=F.col("priority")
         ),
-        "oldest_pending": Section(active, (F.col("created"), nid), OLDEST_PENDING_ROWS),
+        "oldest_pending": Section(
+            active, (F.asc_nulls_last("created"), nid), OLDEST_PENDING_ROWS
+        ),
     }
     if cfg.include_uncategorized:
         sections["uncategorized"] = Section(uncategorized_pred(status), (nid,))
@@ -318,29 +304,19 @@ def run_all(df: DataFrame, now: datetime, cfg: EngineConfig) -> SectionRows:
     sections = _row_sections(now, cfg, F.col("__status"))
     cols = filtered.columns
     columns = {name: cols for name in sections}
-    # the per-section plan's USING anti-join puts nid first
+    # the golden outputs print due this week with nid first
     columns["due_this_week"] = ["nid", *[c for c in cols if c != "nid"]]
     columns["next_by_priority"] = [*cols, "rank"]
     rows = section_rows(filtered.withColumn("__status", fast_lower("status")), sections)
     return SectionRows(rows, _totals(filtered, now), columns)
 
 
-# ------------------------------------------------- per-section plans
+# ------------------------------------------- sections as plans of their own
 def immediate_action(df: DataFrame, now: datetime) -> DataFrame:
     """F3+O1 (analyze_pages.py:296-302): active ∧ due set ∧ (overdue ∨
     doing), sorted (priority, due)."""
-    return df.filter(_immediate(now)).orderBy("priority_score", "due", "nid")
-
-
-def due_this_week(df: DataFrame, now: datetime) -> DataFrame:
-    """F4+O2 (analyze_pages.py:311-315): active, now ≤ due ≤ now+7d, minus
-    immediate rows, sorted (due, priority)."""
-    week_end = ts_lit(now) + F.expr("INTERVAL 7 DAYS")
-    in_window = df.filter(
-        active_pred() & F.col("due").between(ts_lit(now), week_end)
-    )
-    return anti_members(in_window, immediate_action(df, now), "nid").orderBy(
-        "due", "priority_score", "nid"
+    return df.filter(_immediate(now, fast_lower("status"))).orderBy(
+        "priority_score", "due", "nid"
     )
 
 
@@ -350,76 +326,6 @@ def task_summary(df: DataFrame, now: datetime) -> DataFrame:
     created → completed days of done rows (`avg_days`, exact day-diff sum
     divided as double), and the overdue (F6) / critical-high (F7) counts
     the golden-style summary prints."""
-    conditions, days = _summary_counts(now)
+    conditions, days = _summary_counts(now, fast_lower("status"))
     out = conditional_counts(df, conditions, extra=[_avg_days(days)])
     return out.withColumn("pct_complete", _pct_complete())
-
-
-def overdue(df: DataFrame, now: datetime) -> DataFrame:
-    """F6 (analyze_pages.py:382-392)."""
-    return df.filter(active_pred() & (F.col("due") < ts_lit(now))).orderBy("due", "nid")
-
-
-def oldest_pending(df: DataFrame) -> DataFrame:
-    """O5 (analyze_pages.py:407-419): nsmallest(5, created) of active."""
-    return top_k(
-        df.filter(active_pred()),
-        [F.asc("created")],
-        OLDEST_PENDING_ROWS,
-        tiebreaker=F.asc("nid"),
-    )
-
-
-def uncategorized(df: DataFrame) -> DataFrame:
-    """F8 (analyze_pages.py:230-243; the reports section at
-    generate_reports.py:417-421, 499-503 is the same): status outside the
-    known vocabulary (nulls were already defaulted to 'unknown' by
-    normalization)."""
-    return uncategorized_filter(df).orderBy("nid")
-
-
-def status_priority_counts(df: DataFrame) -> DataFrame:
-    """A2+A3+A7 (analyze_pages.py:466, 483; golden sample lines 56-65):
-    row counts per (status, priority), the one aggregate both histograms
-    and the crosstab derive from."""
-    return df.groupBy("status", "priority").agg(F.count(F.lit(1)).alias("count"))
-
-
-def completion_velocity(df: DataFrame) -> DataFrame:
-    """A4 (analyze_pages.py:430-439): W-MON weekly completions, last 12.
-    Exact status equality 'done' (the chart filter at :431), unlike the
-    summary's substring counts (F9)."""
-    done = df.filter((F.lower("status") == "done") & F.col("completed").isNotNull())
-    return weekly_counts(done, "completed", anchor="MON", last_n=VELOCITY_WEEKS)
-
-
-def created_per_week(df: DataFrame) -> DataFrame:
-    """A8 (golden sample line 73-77): W-SUN weekly created counts."""
-    return weekly_counts(df, "created", anchor="SUN")
-
-
-def next_by_priority(df: DataFrame, per_bucket: int = NEXT_PER_PRIORITY) -> DataFrame:
-    """'Tasks to work on next based on priority' (golden sample lines
-    29-55): for each priority label, the first ``per_bucket`` active tasks
-    by due date — a windowed top-k PER GROUP, one shuffle."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("priority").orderBy(
-        F.asc_nulls_last("due"), F.asc("nid")
-    )
-    return (
-        df.filter(active_pred())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= per_bucket)
-        .orderBy("priority_score", "rank")
-    )
-
-
-def overdue_top_by_priority(df: DataFrame, now: datetime, limit: int = DISPLAY_ROWS) -> DataFrame:
-    """'Top 30 overdue tasks by priority' (golden sample lines 12-16)."""
-    return top_k(
-        df.filter(active_pred() & (F.col("due") < ts_lit(now))),
-        [F.asc("priority_score"), F.asc("due")],
-        limit,
-        tiebreaker=F.asc("nid"),
-    )

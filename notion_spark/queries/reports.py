@@ -7,11 +7,6 @@ uncategorized) and ranked in the section's grouped sort, with the goals
 overflow gate as a count over the section's window. `report_payload`
 (sinks/pdf_report.py) collects it once and the PDF is a driver-side
 render over the collected rows.
-
-The per-section plans at the end (`goals`, `completed_in_period`,
-`in_progress`) state each section the way the reference does, one plan
-per section; only the tests that check the combined plan against them
-call them.
 """
 
 from __future__ import annotations
@@ -26,7 +21,7 @@ from pyspark.sql import functions as F
 from notion_spark.config import REPORT_PERIOD_DAYS, EngineConfig
 from notion_spark.functions.dates import ts_lit
 from notion_spark.functions.text import fast_lower
-from notion_spark.operators.filters import array_overlap_filter, overflow_policy_filter
+from notion_spark.operators.filters import array_overlap_filter
 from notion_spark.operators.joins import broadcast_lookup
 from notion_spark.queries.analysis import uncategorized_pred
 from notion_spark.queries.sections import Section, in_section, section_rows
@@ -43,27 +38,17 @@ def resolve_period(period: str, now: datetime) -> tuple[datetime, datetime]:
     return now - timedelta(days=REPORT_PERIOD_DAYS[period]), now
 
 
-def with_parent_name(
-    df: DataFrame, lookup: DataFrame | None = None, default: str | None = NO_PROJECT
-) -> DataFrame:
-    """J1 (generate_reports.py:320): NID→Name broadcast self-join. The
-    reference builds nid_to_name from the FULL frame BEFORE any section
-    filtering — pass that frame as ``lookup`` (section frames have had
-    containers removed by clean_task_list, so a self-derived lookup would
-    resolve almost nothing). Fill defaults differ per section — '' for
-    goals/completed (:469, :482), 'General / No Project' for in_progress
-    (:493-495) — and the fill value participates in the grouped SORT, so
-    it must be faithful. ``default=None`` leaves unresolved names null."""
-    src = lookup if lookup is not None else df
-    parents = src.filter(F.col("nid") != 0).select("nid", "name")
-    return broadcast_lookup(
-        df, parents, "parent_nid", "nid", "name", "parent_name", default=default
-    )
+def with_parent_name(df: DataFrame) -> DataFrame:
+    """J1 (generate_reports.py:320): NID→Name broadcast self-join; names
+    no row resolves stay null. The reference builds nid_to_name from the
+    FULL frame, before containers drop, so ``df`` is that frame."""
+    parents = df.filter(F.col("nid") != 0).select("nid", "name")
+    return broadcast_lookup(df, parents, "parent_nid", "nid", "name", "parent_name")
 
 
-def _not_empty_container(df: DataFrame, cfg: EngineConfig) -> Column:
-    """F13 (generate_reports.py:424-440): the rows clean_task_list keeps —
-    all but container rows whose body is empty; the body is always
+def _not_empty_container(cfg: EngineConfig) -> Column:
+    """F13 (generate_reports.py:424-440, the reference's clean_task_list):
+    all rows but container rows whose body is empty; the body is always
     treated as empty when include_body_content is off, matching the
     reference.
 
@@ -71,23 +56,12 @@ def _not_empty_container(df: DataFrame, cfg: EngineConfig) -> Column:
     (parent_nids_set at generate_reports.py:330-332 is built from
     `Children NIDs`), i.e. the is_project flag — NOT reverse parent_nid
     edges, which diverge on one-way links."""
-    is_container = (
-        F.col("is_project")
-        if "is_project" in df.columns
-        else F.size("children_nids") > 0
-    )
     body_empty = (
         F.lit(True)
         if not cfg.include_body_content
         else F.coalesce(F.length(F.trim("body_content")), F.lit(0)) == 0
     )
-    return ~(is_container & body_empty)
-
-
-def clean_task_list(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """F13 (generate_reports.py:424-440): ``df`` without its empty
-    container rows."""
-    return df.filter(_not_empty_container(df, cfg))
+    return ~(F.col("is_project") & body_empty)
 
 
 def _goal_kept(end: datetime) -> Column:
@@ -140,7 +114,7 @@ def report_frames(
     tagged = array_overlap_filter(df, "active_tags", cfg.filter_tags).withColumn(
         "__status", fast_lower("status")
     )
-    kept = _not_empty_container(tagged, cfg)
+    kept = _not_empty_container(cfg)
     status = F.col("__status")
     parent, score, nid = F.col("parent_name"), F.col("priority_score"), F.col("nid")
     # ALL to-do rows are goals, unless they overflow the page budget
@@ -160,14 +134,15 @@ def report_frames(
     )
     sections["in_progress"] = Section(kept & (status == "doing"), (parent, score, nid))
     if cfg.include_uncategorized:
-        # the reference does NOT clean_task_list the catch-all section
-        # (generate_reports.py:499-503 filters the raw frame)
+        # the reference does not drop the empty containers from the
+        # catch-all section (generate_reports.py:499-503 filters the raw
+        # frame)
         sections["uncategorized"] = Section(uncategorized_pred(status), (nid,))
     # the parent-name lookup comes from the PRE-clean frame (the reference
     # builds nid_to_name before dropping containers, :317-320); the fill
     # is 'General / No Project' for in-progress (doing) rows, '' for the
     # goals and completed rows (:469, :482, :493-495)
-    named = with_parent_name(tagged, lookup=tagged, default=None).withColumn(
+    named = with_parent_name(tagged).withColumn(
         "parent_name",
         F.coalesce(parent, F.when(status == "doing", F.lit(NO_PROJECT)).otherwise(F.lit(""))),
     )
@@ -178,42 +153,3 @@ def report_frames(
     return ReportFrames(
         windows=windows, rows=rows, with_uncategorized=cfg.include_uncategorized
     )
-
-
-# ------------------------------------------------- per-section plans
-def goals(df: DataFrame, end: datetime, lookup: DataFrame | None = None) -> DataFrame:
-    """F12+O6 (generate_reports.py:444-470): ALL 'to do' rows; when they
-    overflow the page budget (>15) keep only due-within-14d-of-period-end
-    OR priority ≤ High; grouped sort (parent, priority, due), parent fill
-    '' (:469 — the fill value sorts first, deliberately). Only the period
-    END matters, so every period shares one goals section.
-
-    (The dated/undated pre-filter at :393-405 is dead code — its `goals`
-    is overwritten by this path before any use.)"""
-    todo = df.filter(F.lower("status") == "to do")
-    selected = overflow_policy_filter(todo, GOALS_OVERFLOW_THRESHOLD, _goal_kept(end))
-    return with_parent_name(selected, lookup=lookup, default="").orderBy(
-        "parent_name", "priority_score", F.asc_nulls_last("due"), "nid"
-    )
-
-
-def completed_in_period(
-    df: DataFrame, start: datetime, end: datetime, lookup: DataFrame | None = None
-) -> DataFrame:
-    """F11+O7 (generate_reports.py:407-412, 483-485): done within the
-    window, sorted (parent asc, completed desc)."""
-    done = df.filter(
-        (F.lower("status") == "done")
-        & F.col("completed").between(ts_lit(start), ts_lit(end))
-    )
-    return with_parent_name(done, lookup=lookup, default="").orderBy(
-        "parent_name", F.desc("completed"), "nid"
-    )
-
-
-def in_progress(df: DataFrame, lookup: DataFrame | None = None) -> DataFrame:
-    """O8 (generate_reports.py:489-496): doing rows, (parent, priority)."""
-    doing = df.filter(F.lower("status") == "doing")
-    return with_parent_name(doing, lookup=lookup).orderBy("parent_name", "priority_score", "nid")
-
-

@@ -132,3 +132,17 @@ def make_read_path_tasks(spark: SparkSession) -> DataFrame:
     shifted = F.col("completed") - F.expr("INTERVAL 7 DAYS")
     df = df.withColumn("completed", F.when(in_gap, shifted).otherwise(F.col("completed")))
     return spark.createDataFrame(df.collect(), TASKS_SCHEMA)
+
+
+def read_path_runs(first_due: datetime) -> list:
+    """The (now, cfg) pairs the read-path differential tests run: the
+    fixed clock, three days either side and a day before the first due
+    date, each with and without the tag filter, and a tag filter no row
+    matches."""
+    from notion_spark.config import EngineConfig
+
+    cfg = EngineConfig()
+    clocks = [FIXED_NOW, FIXED_NOW - timedelta(days=3), FIXED_NOW + timedelta(days=3),
+              first_due - timedelta(days=1)]
+    runs = [(now, c) for now in clocks for c in (cfg, cfg.with_tags("work", "dev"))]
+    return [*runs, (FIXED_NOW, cfg.with_tags("no-such-tag"))]

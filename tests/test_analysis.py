@@ -1,13 +1,12 @@
 from __future__ import annotations
 
-from datetime import timedelta
-
 import pytest
 from pyspark.sql import functions as F
 
 from notion_spark.config import EngineConfig
 from notion_spark.normalize import normalize_for_analysis
 from notion_spark.queries import analysis as A
+from tests import read_model as M
 from tests.fixtures import FIXED_NOW, make_tasks
 
 
@@ -59,39 +58,39 @@ def test_immediate_action_semantics(tasks):
 
 def test_due_week_excludes_immediate(tasks):
     imm = {r.nid for r in A.immediate_action(tasks, FIXED_NOW).collect()}
-    week = {r.nid for r in A.due_this_week(tasks, FIXED_NOW).collect()}
+    week = set(A.run_all(tasks, FIXED_NOW, CFG)["due_this_week"]["nid"])
     assert not (imm & week)
 
 
 def test_overdue_sorted(tasks):
-    rows = A.overdue(tasks, FIXED_NOW).collect()
-    dues = [r.due for r in rows]
+    rows = A.run_all(tasks, FIXED_NOW, CFG)["overdue"]
+    dues = list(rows["due"])
     assert dues == sorted(dues)
-    assert all(r.due < FIXED_NOW for r in rows)
+    assert all(d < FIXED_NOW for d in dues)
 
 
 def test_uncategorized_outside_vocabulary(tasks):
     from notion_spark.config import KNOWN_STATUSES
 
-    rows = A.uncategorized(tasks).collect()
-    assert rows
-    for r in rows:
-        assert r.status.lower() not in KNOWN_STATUSES
+    rows = A.run_all(tasks, FIXED_NOW, CFG)["uncategorized"]
+    assert len(rows)
+    for status in rows["status"]:
+        assert status.lower() not in KNOWN_STATUSES
 
 
 def test_velocity_last_n_ascending(tasks):
-    rows = A.completion_velocity(tasks).collect()
+    rows = A.run_all(tasks, FIXED_NOW, CFG)["completion_velocity"]
     assert 0 < len(rows) <= A.VELOCITY_WEEKS
-    weeks = [r.week_ending for r in rows]
+    weeks = list(rows["week_ending"])
     assert weeks == sorted(weeks)
     # W-MON anchoring: every label is a Monday
     assert all(w.weekday() == 0 for w in weeks)
 
 
 def test_created_per_week_sun_anchor(tasks):
-    rows = A.created_per_week(tasks).collect()
-    assert all(r.week_ending.weekday() == 6 for r in rows)
-    assert sum(r["count"] for r in rows) == tasks.filter(F.col("created").isNotNull()).count()
+    rows = A.run_all(tasks, FIXED_NOW, CFG)["created_per_week"]
+    assert all(w.weekday() == 6 for w in rows["week_ending"])
+    assert rows["count"].sum() == tasks.filter(F.col("created").isNotNull()).count()
 
 
 def test_tag_filter_drops_nonmatching(tasks):
@@ -111,14 +110,11 @@ def test_text_report_renders(spark, tasks):
 
 
 def test_next_by_priority_buckets(tasks):
-    rows = A.next_by_priority(tasks, per_bucket=3).collect()
-    by_p = {}
-    for r in rows:
-        by_p.setdefault(r.priority, []).append(r)
-    for p, rs in by_p.items():
-        assert len(rs) <= 3
-        assert [r.rank for r in rs] == list(range(1, len(rs) + 1))
-        dated = [r.due for r in rs if r.due is not None]
+    rows = A.run_all(tasks, FIXED_NOW, CFG)["next_by_priority"]
+    for _, rs in rows.groupby("priority"):
+        assert len(rs) <= A.NEXT_PER_PRIORITY
+        assert list(rs["rank"]) == list(range(1, len(rs) + 1))
+        dated = list(rs["due"].dropna())
         assert dated == sorted(dated)
 
 
@@ -134,63 +130,37 @@ def test_golden_style_render(spark, tasks):
     assert "/" in text.split("Tasks created per week:")[1]
 
 
-# ------------------------------------------- one plan vs per-section plans
-def _per_section(df, now, cfg):
-    """Every section as its own plan, collected — the read path before
-    the sections shared one row plan and one aggregate."""
-    f = A.apply_tag_filter(df, cfg)
-    plans = {
-        "immediate_action": A.immediate_action(f, now).limit(A.DISPLAY_ROWS),
-        "due_this_week": A.due_this_week(f, now),
-        "overdue": A.overdue(f, now).limit(A.DISPLAY_ROWS),
-        "overdue_top_by_priority": A.overdue_top_by_priority(f, now),
-        "next_by_priority": A.next_by_priority(f),
-        "oldest_pending": A.oldest_pending(f),
-        "uncategorized": A.uncategorized(f),
-        "completion_velocity": A.completion_velocity(f),
-        "created_per_week": A.created_per_week(f),
-    }
-    out = {name: plan.toPandas() for name, plan in plans.items()}
-    out["task_summary"] = A.task_summary(f, now).collect()[0].asDict()
-    out["status_priority_counts"] = [tuple(r) for r in A.status_priority_counts(f).collect()]
-    return out
+def test_oldest_pending_lists_undated_tasks_last(spark):
+    """A task with no created date is not among the oldest pending while
+    five dated ones exist: pandas `nsmallest` puts NaT last."""
+    store = make_tasks(spark).withColumn(
+        "created", F.when(F.col("uid") == "uid-00210", None).otherwise(F.col("created"))
+    )
+    got = A.run_all(normalize_for_analysis(store), FIXED_NOW, CFG)["oldest_pending"]
+    assert list(got["uid"]) == ["uid-00127", "uid-00096", "uid-00213", "uid-00109", "uid-00251"]
+    want = M.analysis(store.toPandas(), FIXED_NOW)["oldest_pending"]
+    assert M.records(got) == M.records(want)
 
 
-def _by_score(pdf):
-    # the per-section plan orders next-by-priority by (score, rank) only;
-    # labels sharing a score tie
-    return pdf.sort_values(["priority_score", "rank", "priority"]).reset_index(drop=True)
-
-
-def test_sections_match_per_section_plans(spark):
-    """Every section of the one-plan read path equals its per-section
-    plan — frame, columns and dtypes — at the fixed clock, three days
-    either side and before every due date, with and without the tag
-    filter, and with a tag filter no row matches. The fixture's two nid-0
+# --------------------------------------------------- one plan vs the model
+def test_sections_match_read_model(spark):
+    """Every section of the one-plan read path equals the pandas model's
+    (`tests/read_model.py`) — columns, row order and values — at every
+    clock and tag filter of `read_path_runs`. The fixture's two nid-0
     rows (one immediate, one due in 7 days) both stay out of
     due-this-week, and the velocity weeks keep their empty week."""
-    import pandas as pd
+    from tests.fixtures import make_read_path_tasks, read_path_runs
 
-    from tests.fixtures import make_read_path_tasks
-
-    df = normalize_for_analysis(make_read_path_tasks(spark)).cache()
+    store = make_read_path_tasks(spark)
+    rows = store.toPandas()
+    df = normalize_for_analysis(store).cache()
     try:
-        first_due = df.agg(F.min("due")).first()[0]
-        clocks = [FIXED_NOW, FIXED_NOW - timedelta(days=3), FIXED_NOW + timedelta(days=3),
-                  first_due - timedelta(days=1)]
-        runs = [(now, cfg) for now in clocks for cfg in (CFG, CFG.with_tags("work", "dev"))]
-        for now, cfg in [*runs, (FIXED_NOW, CFG.with_tags("no-such-tag"))]:
+        for now, cfg in read_path_runs(df.agg(F.min("due")).first()[0]):
             got = A.run_all(df, now, cfg)
-            want = _per_section(df, now, cfg)
-            for name, frame in want.items():
-                if name == "status_priority_counts":
-                    assert sorted(got[name]) == sorted(frame), (now, cfg.filter_tags, name)
-                elif name == "task_summary":
-                    assert got[name] == frame, (now, cfg.filter_tags)
-                elif name == "next_by_priority":
-                    pd.testing.assert_frame_equal(_by_score(got[name]), _by_score(frame))
-                else:
-                    pd.testing.assert_frame_equal(got[name], frame, obj=f"{name} at {now}")
+            want = M.analysis(rows, now, cfg.filter_tags)
+            assert set(want) == {*SECTIONS, "task_summary"} and all(n in got for n in want)
+            for name, section in want.items():
+                assert M.records(got[name]) == M.records(section), (now, cfg.filter_tags, name)
         got = A.run_all(df, FIXED_NOW, CFG)
         week = set(got["due_this_week"]["uid"])
         assert week and not week & {"uid-00100", "uid-00101"}

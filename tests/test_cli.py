@@ -47,6 +47,16 @@ def test_pipeline_without_snapshot_files_raises(spark, monkeypatch, tmp_path):
         cli.main(argv)
 
 
+@pytest.mark.parametrize("cmd", ["analyze", "report"])
+def test_command_without_a_store_raises_before_spark_starts(cmd, monkeypatch, tmp_path):
+    def no_spark(**_):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr("notion_spark.session.get_spark", no_spark)
+    with pytest.raises(FileNotFoundError, match="no tasks store under"):
+        cli.main([cmd, "--cache-dir", str(tmp_path)])
+
+
 @pytest.fixture
 def run(spark, monkeypatch, capsys):
     """Run ``main(argv)`` on the test session and return its stdout;

@@ -46,6 +46,25 @@ def test_full_pipeline_and_incremental_rerun(spark, tmp_path):
     assert all(got[u] == "Done" for u in updated)
 
 
+def test_same_minute_edit_is_skipped(spark, tmp_path):
+    """The watermark gap, kept as the reference has it: a refetch with the
+    stored (uid, updated_time) but a new name counts as unchanged, and the
+    store keeps the old name."""
+    from notion_spark.pipeline_app import refresh_cache
+
+    path = str(tmp_path / "tasks.parquet")
+    tasks = make_tasks(spark, n=20)
+    refresh_cache(spark, tasks, path)
+    uid = tasks.first().uid
+    old_name = tasks.filter(F.col("uid") == uid).first().name
+    renamed = tasks.withColumn(
+        "name", F.when(F.col("uid") == uid, F.lit("renamed")).otherwise(F.col("name"))
+    )
+    store, n_changed = refresh_cache(spark, renamed, path)
+    assert n_changed == 0
+    assert store.filter(F.col("uid") == uid).first().name == old_name
+
+
 def test_one_store_cache_per_cycle(spark, tmp_path, monkeypatch):
     """run_pipeline persists exactly two frames, one at a time: the ingest
     frame, then the merged store read that the export and both normalize

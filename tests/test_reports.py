@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from notion_spark.config import EngineConfig
 from notion_spark.normalize import normalize_for_reports
 from notion_spark.queries import reports as R
+from tests import read_model as M
 from tests.fixtures import FIXED_NOW, count_jobs, make_tasks
 
 
@@ -29,6 +30,11 @@ def test_resolve_period_windows():
         assert end == FIXED_NOW and (end - start).days == days
 
 
+def _section(frames, tag):
+    """One section of ``frames`` as rows, in rank order."""
+    return frames.rows.filter(F.col("tag") == tag).orderBy("rank").collect()
+
+
 def test_parent_name_join(tasks):
     out = R.with_parent_name(tasks)
     rows = {r.nid: r for r in out.collect()}
@@ -37,12 +43,21 @@ def test_parent_name_join(tasks):
         if r.parent_nid and r.parent_nid in names:
             assert r.parent_name == names[r.parent_nid]
         else:
-            assert r.parent_name == R.NO_PROJECT
+            assert r.parent_name is None
+    # report_frames fills the names no row resolves; in progress with
+    # NO_PROJECT
+    frames = R.report_frames(tasks, ("yearly",), FIXED_NOW, CFG)
+    doing = _section(frames, "in_progress")
+    assert doing and all(
+        r.parent_name == names.get(r.parent_nid, R.NO_PROJECT) for r in doing
+    )
+    assert any(r.parent_name == R.NO_PROJECT for r in doing)
 
 
 def test_completed_in_period_window(tasks):
     start, end = R.resolve_period("yearly", FIXED_NOW)
-    rows = R.completed_in_period(tasks, start, end).collect()
+    frames = R.report_frames(tasks, ("yearly",), FIXED_NOW, CFG)
+    rows = [r for r in _section(frames, "completed") if r[R.in_window_col("yearly")]]
     assert rows
     for r in rows:
         assert "done" in r.status and start <= r.completed <= end
@@ -55,7 +70,7 @@ def test_completed_in_period_window(tasks):
 def test_goals_overflow_policy(tasks):
     start, end = R.resolve_period("weekly", FIXED_NOW)
     todo_count = tasks.filter(F.lower("status") == "to do").count()
-    rows = R.goals(tasks, end).collect()
+    rows = _section(R.report_frames(tasks, ("weekly",), FIXED_NOW, CFG), "goals")
     assert rows
     if todo_count > R.GOALS_OVERFLOW_THRESHOLD:
         horizon = end + timedelta(days=14)
@@ -69,14 +84,17 @@ def test_goals_overflow_policy(tasks):
 
 
 def test_clean_task_list_drops_empty_containers(tasks):
-    out = R.clean_task_list(tasks, CFG)
+    """The goals, completed and in-progress sections hold no container
+    row: with include_body_content=False every container is dropped."""
+    frames = R.report_frames(tasks, ("yearly",), FIXED_NOW, CFG)
     parent_ids = {r.parent_nid for r in tasks.collect() if r.parent_nid}
-    kept = {r.nid for r in out.collect()}
-    # with include_body_content=False every container is dropped
-    assert not (kept & parent_ids)
+    kept = {
+        r.nid for tag in ("goals", "completed", "in_progress") for r in _section(frames, tag)
+    }
+    assert kept and not (kept & parent_ids)
 
 
-def test_report_frames_and_pie(tasks):
+def test_report_frames_and_pie(spark, tasks):
     from notion_spark.sinks.pdf_report import report_payload
 
     frames = R.report_frames(tasks, ("yearly",), FIXED_NOW, CFG)
@@ -86,12 +104,9 @@ def test_report_frames_and_pie(tasks):
     assert sum(pie.values()) == sum(
         len(payload["sections"][k]) for k in ("goals", "completed", "in_progress")
     )
-    base = R.clean_task_list(tasks, CFG)
-    start, end = R.resolve_period("yearly", FIXED_NOW)
-    assert sum(pie.values()) == (
-        R.goals(base, end, lookup=tasks).count()
-        + R.completed_in_period(base, start, end, lookup=tasks).count()
-        + R.in_progress(base, lookup=tasks).count()
+    want = M.report_payloads(make_tasks(spark).toPandas(), FIXED_NOW, ("yearly",))["yearly"]
+    assert sum(pie.values()) == sum(
+        len(want["sections"][k]) for k in ("goals", "completed", "in_progress")
     )
 
 
@@ -126,7 +141,6 @@ def test_report_payload_with_attachments(spark, tasks):
 
 # ---------------------------------------------------- batch read path
 PERIODS = ("daily", "weekly", "biweekly", "monthly", "yearly")
-PAYLOAD_COLS = ["nid", "name", "status", "priority", "parent_name"]
 
 
 def _keeps_goal(r, end):
@@ -226,31 +240,21 @@ def test_read_path_plans_lazily_and_jobs_do_not_grow_with_periods(spark, tasks):
 
 def test_driver_side_split_matches_per_period_filter(spark, tasks):
     """Completed rows on each window's edges land in exactly the periods
-    a per-period Spark `between` filter puts them in, and every section
-    and pie count equals the single-period plans' result."""
+    a per-period `between` filter puts them in, and every section and pie
+    count equals the pandas model's."""
     from notion_spark.sinks.pdf_report import report_payload
 
     df, edges = _with_window_edges(tasks)
     payloads = report_payload(R.report_frames(df, PERIODS, FIXED_NOW, CFG), FIXED_NOW, CFG)
-    base = R.clean_task_list(df, CFG)
+    want = M.report_payloads(
+        _with_completed(make_tasks(spark), edges).toPandas(), FIXED_NOW, PERIODS
+    )
     for p in PERIODS:
         start, end = R.resolve_period(p, FIXED_NOW)
-        want = {
-            "goals": R.goals(base, end, lookup=df),
-            "completed": R.completed_in_period(base, start, end, lookup=df),
-            "in_progress": R.in_progress(base, lookup=df),
-        }
         got = payloads[p]["sections"]
-        for name, frame in want.items():
-            assert got[name] == [r.asDict() for r in frame.select(*PAYLOAD_COLS).collect()], (p, name)
-        pie = (
-            want["goals"].select("status")
-            .unionByName(want["completed"].select("status"))
-            .unionByName(want["in_progress"].select("status"))
-            .groupBy("status").count()
-            .orderBy(F.desc("count"), "status")
-        )
-        assert payloads[p]["pie_counts"] == [tuple(r) for r in pie.collect()], p
+        for name in ("goals", "completed", "in_progress"):
+            assert got[name] == want[p]["sections"][name], (p, name)
+        assert payloads[p]["pie_counts"] == want[p]["pie_counts"], p
         assert sum(n for _, n in payloads[p]["pie_counts"]) == sum(
             len(got[k]) for k in ("goals", "completed", "in_progress")
         )
@@ -268,7 +272,7 @@ def test_goals_gate_at_threshold(tasks):
     assert R.GOALS_OVERFLOW_THRESHOLD == 15
     for n_todo, gated in ((15, False), (16, True)):
         df = _with_todos(tasks, n_todo)
-        todo = R.clean_task_list(df, CFG).filter(F.lower("status") == "to do").collect()
+        todo = df.filter((F.col("status") == "to do") & ~F.col("is_project")).collect()
         want = {r.nid for r in todo if not gated or _keeps_goal(r, FIXED_NOW)}
         payload = report_payload(R.report_frames(df, PERIODS, FIXED_NOW, CFG), FIXED_NOW, CFG)
         for p in PERIODS:
@@ -277,41 +281,21 @@ def test_goals_gate_at_threshold(tasks):
         assert len(want) == (n_todo if not gated else n_todo - n_todo // 2)
 
 
-def test_sections_match_per_section_plans(spark):
-    """Every report section of the one-plan read path equals its
-    per-section plan at the fixed clock, three days either side and
-    before every due date, with and without the tag filter, and with a
-    tag filter no row matches."""
-    from notion_spark.queries import analysis as A
+def test_sections_match_read_model(spark):
+    """Every report payload of the one-plan read path equals the pandas
+    model's (`tests/read_model.py`) at every clock and tag filter of
+    `read_path_runs`."""
     from notion_spark.sinks.pdf_report import report_payload
-    from tests.fixtures import make_read_path_tasks
+    from tests.fixtures import make_read_path_tasks, read_path_runs
 
-    df = normalize_for_reports(make_read_path_tasks(spark)).cache()
+    store = make_read_path_tasks(spark)
+    rows = store.toPandas()
+    df = normalize_for_reports(store).cache()
     try:
-        first_due = df.agg(F.min("due")).first()[0]
-        clocks = [FIXED_NOW, FIXED_NOW - timedelta(days=3), FIXED_NOW + timedelta(days=3),
-                  first_due - timedelta(days=1)]
-        runs = [(now, cfg) for now in clocks for cfg in (CFG, CFG.with_tags("work", "dev"))]
-        for now, cfg in [*runs, (FIXED_NOW, CFG.with_tags("no-such-tag"))]:
-            payloads = report_payload(R.report_frames(df, PERIODS, now, cfg), now, cfg)
-            tagged = A.apply_tag_filter(df, cfg)
-            base = R.clean_task_list(tagged, cfg)
-            doing = R.in_progress(base, lookup=tagged)
-            other = A.uncategorized(tagged).select(*PAYLOAD_COLS[:4])
+        for now, cfg in read_path_runs(df.agg(F.min("due")).first()[0]):
+            got = report_payload(R.report_frames(df, PERIODS, now, cfg), now, cfg)
+            want = M.report_payloads(rows, now, PERIODS, cfg.filter_tags)
             for p in PERIODS:
-                start, end = R.resolve_period(p, now)
-                want = {
-                    "goals": R.goals(base, end, lookup=tagged).select(*PAYLOAD_COLS),
-                    "completed": R.completed_in_period(base, start, end, lookup=tagged)
-                    .select(*PAYLOAD_COLS),
-                    "in_progress": doing.select(*PAYLOAD_COLS),
-                    "uncategorized": other,
-                }
-                got = payloads[p]["sections"]
-                assert set(got) == set(want)
-                for name, frame in want.items():
-                    assert got[name] == [r.asDict() for r in frame.collect()], (
-                        now, cfg.filter_tags, p, name,
-                    )
+                assert got[p] == want[p], (now, cfg.filter_tags, p)
     finally:
         df.unpersist()
