@@ -467,8 +467,9 @@ def covisitation_counts(
     # unrolled round plans re-reference the pair subplan many times —
     # AQE's ReusedExchange already dedups those at execution, and an
     # InMemoryRelation in the middle BLOCKS that reuse (measured:
-    # graph_kcore 5.2 s -> 35.5 s with a persist here). The terminal
-    # covisitation_lift wrapper persists its own capped frame instead.
+    # graph_kcore 5.2 s -> 35.5 s with a persist here). No operator
+    # persists a frame it does not release: `covisitation_lift` shares
+    # its capped frame through the same exchange reuse.
     capped = (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= cap)
@@ -517,12 +518,6 @@ def covisitation_lift(
         .select(F.col(user_col).alias("__u"), F.col(item_col).alias("__item"))
         .distinct()
     )
-    # r12 OPT (guide §2.4/§5): four consumers (item counts, user
-    # total, both pair sides) — persisted, the JSON-extract + window
-    # + distinct lineage runs once instead of four times. A long-lived
-    # per-batch loop should clearCache between batches — the cached
-    # frame outlives the call.
-    capped = capped.persist()
     item_users = capped.groupBy("__item").agg(F.count(F.lit(1)).alias("__nu"))
     total = capped.select(F.countDistinct("__u").alias("__nt"))
     a = capped.select("__u", F.col("__item").alias("item_a"))

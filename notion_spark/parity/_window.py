@@ -120,8 +120,8 @@ DRIVER_CHECKED: tuple[str, ...] = (
 PLAN_RECERT: tuple[str, ...] = (
     # r13: referential integrity restructured to one scan per child
     # table (multi-edge left-join + conditional aggregate, explode
-    # reshape); ccnet buckets persist the shared familiarity frame
-    # (plan gains InMemoryTableScan reads):
+    # reshape); ccnet buckets share the familiarity frame (a persist
+    # in r13, exchange reuse since):
     "quality_referential_integrity",
     "curation_ccnet_buckets",
     # r13: adaptive Ed-Join prefix (location-based mismatch filter) in
@@ -159,6 +159,18 @@ PLAN_RECERT: tuple[str, ...] = (
     # r12: link_prediction dropped the forced degree-frame broadcast
     # (AQE decides at runtime); funnel queries gained the in-plan
     # hot-user guard window (shares the user-key exchange):
+    # The unreleased operator persists are gone: these plans lose their
+    # InMemoryTableScan reads and share subtrees through exchange reuse
+    # (curation_ccnet_buckets and both levenshtein queries, listed above,
+    # lose theirs too; levenshtein_pairs_qgram's collapse shuffle is
+    # pinned at the shuffle width):
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_containment",
+    "dedup_incremental_cross",
+    "behavior_covisitation_lift",
+    "curation_corpus_e2e",
+    "dedup_cluster_collapse",
 )
 
 

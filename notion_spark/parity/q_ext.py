@@ -3491,7 +3491,6 @@ def curation_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         mix_group_col="source",
         mix_budget=100,
         mix_alpha=0.5,
-        persist_intermediate=False,
     )
     return out.select("doc_id", "source", "split")
 
@@ -3720,18 +3719,7 @@ def curation_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from notion_spark.pipeline.curation import grouped_score_buckets
 
     d = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    # r13 OPT (guide §2.4/§5, the levenshtein_qgram treatment): the fam
-    # frame — tokenize + bigram explode + three aggregations + two
-    # joins, the profiled cost of this query — feeds BOTH the bucket
-    # boundary computation and the final probe side; unpersisted, the
-    # whole lineage executed twice per run. Both consumers are terminal
-    # (an aggregate and a broadcast-probe join — no iterative plan
-    # downstream), so the persist cannot block AQE ReusedExchange the
-    # way the covisitation_counts persist did. clearCache()/unpersist
-    # between batches in a long-running loop.
-    fam = (
-        TA.bigram_familiarity(d).join(d.select("doc_id", "lang"), "doc_id").persist()
-    )
+    fam = TA.bigram_familiarity(d).join(d.select("doc_id", "lang"), "doc_id")
     buckets = grouped_score_buckets(fam, "familiarity_micro", "lang", n_bins=3)
     bounds = buckets.groupBy("lang").agg(
         F.min(F.when(F.col("bucket") == 0, F.col("familiarity_micro"))).alias("__lo0"),

@@ -23,14 +23,13 @@ flow composed from this package's operators, in the canonical order:
 
 Stages 4-6 are opt-in (pass their inputs to enable); each is the
 already-oracle-verified operator — this module only fixes the
-composition order. One intermediate IS persisted: the exact-dedup
-output feeds THREE independent subtrees (LSH signature pass, shingle
-verify-set pass, cluster join-back), and without a cache each one
-re-runs the input scan + quality semi-join + exact-dedup shuffle from
-scratch; at corpus scale that is 3-4 full input scans for one (the r2
-edge-cache lesson, applied to the preset). Everything else stays lazy —
-Catalyst sees one plan per remaining stage (plus the near-dedup edge
-cache documented in `connected_components`).
+composition order. Nothing is persisted: the exact-dedup output feeds
+three subtrees (LSH signature pass, shingle verify-set pass, cluster
+join-back), and AQE's exchange reuse shares the exact-dedup shuffle
+among them within the plan, while a persist here would outlive the call
+in the cache manager. The one cache in the flow is the near-dedup edge
+list, which `connected_components` caches around its own count and
+collect and releases before it returns.
 """
 
 from __future__ import annotations
@@ -52,7 +51,6 @@ def curate_corpus(
     split_fractions: dict[str, float] | None = None,
     max_bucket: int = 1000,
     quality_kwargs: dict | None = None,
-    persist_intermediate: bool = True,
     token_budget: int | None = None,
     token_budget_score_col: str | None = None,
     token_budget_token_col: str | None = None,
@@ -66,12 +64,6 @@ def curate_corpus(
 
     ``quality_kwargs`` forwards to `curation.quality_rules` (e.g.
     min_words for short-document corpora).
-    ``persist_intermediate`` caches the exact-dedup output, the one
-    multi-consumer frame in the flow (see module docstring); the cache
-    populates lazily on the caller's first action. Pass False in
-    single-pass pipelines that go straight to one write, or unpersist
-    via spark.catalog.clearCache() between corpora in a long-running
-    driver.
 
     Optional stages (each enabled by passing its inputs):
 
@@ -104,8 +96,6 @@ def curate_corpus(
         quality.filter(F.col("keep")).select(id_col), id_col, "left_semi"
     )
     kept = DD.drop_exact_dups(kept, text_col, id_col)
-    if persist_intermediate:
-        kept = kept.persist()
     pairs = DD.minhash_dedup_pairs(
         kept, text_col, id_col, threshold=near_dup_threshold, max_bucket=max_bucket
     )

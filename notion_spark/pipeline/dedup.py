@@ -107,19 +107,15 @@ def shingle_hash_sets(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    hashes: DataFrame | None = None,
 ) -> DataFrame:
     """(id, sorted distinct shingle-hash array) — the compact set form for
-    exact Jaccard. One map-side-combined shuffle on id.
-
-    ``hashes`` (r12 opt): a precomputed `shingle_hashes` frame to
-    aggregate instead of re-exploding ``df`` — lets a pipeline that
-    needs BOTH signatures and verify sets share one (persisted)
-    exploded pass (minhash_dedup_pairs measured 6.3 s -> 3.9 s at
-    sf0.1 from exactly this). Caller guarantees it came from the same
-    rows/ngram."""
-    ex = hashes if hashes is not None else shingle_hashes(df, text_col, id_col, n)
-    return ex.groupBy("id").agg(F.array_sort(F.collect_set("h")).alias("sh"))
+    exact Jaccard. One map-side-combined shuffle on id, over its own
+    shingle explode: a pipeline that also needs signatures explodes
+    twice rather than persisting one exploded frame (measured the same
+    warm time at sf0.1, see `minhash_dedup_pairs`)."""
+    return shingle_hashes(df, text_col, id_col, n).groupBy("id").agg(
+        F.array_sort(F.collect_set("h")).alias("sh")
+    )
 
 
 # ------------------------------------------------------------ exact dedup
@@ -381,11 +377,7 @@ def jaccard_pairs_prefix(
         docs = docs.join(
             df.select(F.col(id_col).alias("id"), block_key.alias("blk")), "id"
         )
-    # r12 OPT (guide §2.4/§5): the set frame feeds the prefix index
-    # (via toks) AND both verify sides — persisted, the shingle explode
-    # + collect_set shuffle runs once instead of ~4x (the
-    # levenshtein_pairs_qgram treatment; consumers are terminal).
-    docs = docs.withColumn("sz", F.size("sh")).persist()
+    docs = docs.withColumn("sz", F.size("sh"))
     toks = docs.select("id", *blk, "sz", F.explode("sh").alias("h"))
     freq = toks.groupBy("h").agg(F.count(F.lit(1)).alias("__f"))
     wdoc = Window.partitionBy("id").orderBy(F.asc("__f"), F.asc("h"))
@@ -403,9 +395,7 @@ def jaccard_pairs_prefix(
         .select("id", *blk, "sz", "h")
     )
     wtok = Window.partitionBy("h", *blk)
-    # r12 OPT: bucket-size window folded into the persisted prefix frame
-    # (one compute; both candidate sides read the cache)
-    pref = pref.withColumn("__t_n", F.count(F.lit(1)).over(wtok)).persist()
+    pref = pref.withColumn("__t_n", F.count(F.lit(1)).over(wtok))
     guard = guarded(
         F.col("__t_n") > F.lit(max_token_bucket),
         f"jaccard_pairs_prefix: prefix shingle bucket exceeds {max_token_bucket}"
@@ -786,36 +776,46 @@ def levenshtein_pairs_qgram(
 
     if q < 1:
         raise ValueError(f"q must be >= 1, got {q}")
-    doc_cols = [
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("txt"),
-        F.length(text_col).alias("len"),
-    ]
+    doc_cols = [F.col(id_col).alias("id"), F.col(text_col).alias("txt")]
     if block_key is not None:
         doc_cols.append(block_key.alias("blk"))
     docs = df.select(*doc_cols).filter(F.col("txt").isNotNull())
     blk = ["blk"] if block_key is not None else []
     # representative collapse: one txt-keyed shuffle computes, per
     # (txt[, blk]) group, the representative (min id) and the group
-    # size; the pair pipeline below runs on representatives only
+    # size; the pair pipeline below runs on representatives only.
+    # Every consumer below (gram index, pool, verify texts, member
+    # expansion) reads exactly (id, txt[, blk]) through this shuffle —
+    # the length is derived above it — so AQE reuses the one exchange
+    # instead of rescanning per consumer. The shuffle is pinned at the
+    # session's shuffle width (REPARTITION_BY_NUM, exempt from AQE
+    # coalescing; the `_pair_join` fix): the texts are a few MB, so a
+    # byte-sized shuffle would run the gram explode and the prefix
+    # selection downstream of it in one task.
+    try:
+        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    except (TypeError, ValueError):
+        n_parts = df.sparkSession.sparkContext.defaultParallelism or 200
     wrep = Window.partitionBy("txt", *blk)
-    members = docs.withColumn("rep", F.min("id").over(wrep)).withColumn(
-        "__grp_n", F.count(F.lit(1)).over(wrep)
+    members = (
+        docs.repartition(n_parts, "txt", *blk)
+        .withColumn("rep", F.min("id").over(wrep))
+        .withColumn("__grp_n", F.count(F.lit(1)).over(wrep))
     )
-    # r12 OPT (guide §2.4/§5): the collapse window's output fans out to
-    # ~8 consumers (gram index, pool, verify texts, member expansion) —
-    # unpersisted, Spark recomputed the whole scan+window lineage per
-    # consumer (the sf0.1 profile measured the gram explode 4x and the
-    # prefix window 4x, ~7.5 s of serial single-task recomputation in a
-    # 12.6 s query). Lazy persists populate on the caller's first
-    # action and every later subtree reads the cache; clearCache() or
-    # unpersist between batches in a long-running loop (the
-    # cross_minhash_pairs convention).
-    docs = members.filter(F.col("id") == F.col("rep")).drop("rep", "__grp_n").persist()
-    mem = members.select("id", "rep", "__grp_n").persist()
+    docs = members.filter(F.col("id") == F.col("rep")).select(
+        "id", "txt", F.length("txt").alias("len"), *blk
+    )
+    mem = members.select("id", "rep", "__grp_n")
     band_w = max(max_distance, 1)
-    banded_docs = docs.withColumn(
-        "band", F.call_function("div", F.col("len"), F.lit(band_w))
+
+    def band_of(c: str) -> Column:
+        return F.call_function("div", F.col(c), F.lit(band_w))
+
+    doc_grams = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.col("len") - q + 1),
+            lambda i: F.col("txt").substr(i, F.lit(q)),
+        )
     )
     # r13 OPT (guide §2.3/§2.5, VERDICT r12 #1 — cut the candidate
     # mass): the prefix is ADAPTIVE per document (Ed-Join §4.2
@@ -835,30 +835,20 @@ def levenshtein_pairs_qgram(
     # cutoff is computed from the ALREADY q·d+1-capped prefix rows —
     # a |docs|-row aggregate, never a corpus-sized one.
     prefix_cap = q * max_distance + 1
-    grams = banded_docs.filter(F.col("len") >= q).select(
-        "id",
-        "band",
-        "len",
-        *blk,
-        "txt",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("len") - q + 1),
-                    lambda i: F.col("txt").substr(i, F.lit(q)),
-                )
-            )
-        ).alias("gram"),
+    # texts shorter than q explode a null array (no rows) rather than
+    # being filtered out: Catalyst pushes a filter on the text alone
+    # below the collapse window, into the one-task scan, and the
+    # consumers' exchanges would then differ (the pools below do the same)
+    grams = docs.select(
+        "id", "len", *blk, "txt",
+        F.explode(F.when(F.col("len") >= q, doc_grams)).alias("gram"),
     ).select(
         "id",
-        "band",
         "len",
         *blk,
         "gram",
         (F.expr("locate(gram, txt)") - F.lit(1)).alias("__pos"),
     )
-    # r12 OPT: feeds freq, the prefix join AND ndist — one explode
-    grams = grams.persist()
     freq = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("__f"))
     wdoc = Window.partitionBy("id").orderBy(F.asc("__f"), F.asc("gram"))
     pre_cap = (
@@ -880,7 +870,7 @@ def levenshtein_pairs_qgram(
     pref = (
         pre_cap.join(ks, "id")
         .filter(F.col("__rk") <= F.col("__kk"))
-        .select("id", "band", "len", *blk, "gram")
+        .select("id", band_of("len").alias("band"), "len", *blk, "gram")
     )
     # bucket = the candidate-join key's bucket: (gram, band, block).
     # The length band rides the JOIN KEY (exact: gap <= d => same or
@@ -895,11 +885,7 @@ def levenshtein_pairs_qgram(
     # normalized — exactly the two-pass construction levenshtein_pairs
     # uses, applied to the prefix index.
     wg = Window.partitionBy("gram", "band", *blk)
-    # r12 OPT: __g_n folded into the persisted frame so the bucket-size
-    # window runs once, not once per join side; pref then feeds the a/b
-    # candidate sides and the mass-guard sizes from the cache (3 reads,
-    # 1 compute of the join+prefix-window lineage).
-    pref = pref.withColumn("__g_n", F.count(F.lit(1)).over(wg)).persist()
+    pref = pref.withColumn("__g_n", F.count(F.lit(1)).over(wg))
     guard = guarded(
         F.col("__g_n") > F.lit(max_gram_bucket),
         f"levenshtein_pairs_qgram: prefix gram bucket exceeds {max_gram_bucket}"
@@ -962,22 +948,29 @@ def levenshtein_pairs_qgram(
     # quadratic term after the index join was banded. The small side
     # explodes to its three admissible bands (gap <= d => band diff
     # <= 1) so ONE equi-join covers both adjacency directions.
-    ndist = grams.groupBy("id").agg(F.count(F.lit(1)).alias("__nd"))
-    pooled = banded_docs.join(ndist, "id", "left").withColumn(
-        "__nd", F.coalesce(F.col("__nd"), F.lit(0))
+    # __nd = the doc's distinct gram count, from the gram array itself
+    # (not an aggregate over the exploded rows)
+    pooled = docs.select(
+        "id",
+        band_of("len").alias("band"),
+        *blk,
+        F.when(F.col("len") >= q, F.size(doc_grams)).otherwise(0).alias("__nd"),
     )
-    pool_small = pooled.filter(F.col("__nd") <= F.lit(q * max_distance)).select(
+    pool_small = pooled.select(
         F.col("id").alias("pid_a"),
         F.explode(
-            F.array(F.col("band") - 1, F.col("band"), F.col("band") + 1)
+            F.when(
+                F.col("__nd") <= F.lit(q * max_distance),
+                F.array(F.col("band") - 1, F.col("band"), F.col("band") + 1),
+            )
         ).alias("band_a"),
         *([F.col("blk").alias("pblk_a")] if block_key is not None else []),
     )
-    pool_big = pooled.filter(
-        F.col("__nd") <= F.lit(2 * q * max_distance)
-    ).select(
+    pool_big = pooled.select(
         F.col("id").alias("pid_b"),
-        F.col("band").alias("band_b"),
+        F.explode(
+            F.when(F.col("__nd") <= F.lit(2 * q * max_distance), F.array("band"))
+        ).alias("band_b"),
         *([F.col("blk").alias("pblk_b")] if block_key is not None else []),
     )
     pblk_on = (
@@ -1153,7 +1146,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     ngram: int = 3,
-    hashes: DataFrame | None = None,
 ) -> DataFrame:
     """(id, m0..m{num_hashes-1}) MinHash signature columns.
 
@@ -1165,13 +1157,11 @@ def minhash_signatures(
 
     The affine maps rely on wrap-around long arithmetic; ANSI mode would
     raise ARITHMETIC_OVERFLOW on them, so it is disabled for the session
-    (runtime-settable; get_spark already defaults it off).
-
-    ``hashes`` (r12 opt): precomputed `shingle_hashes` frame — see
-    shingle_hash_sets."""
+    (runtime-settable; get_spark already defaults it off)."""
     df.sparkSession.conf.set("spark.sql.ansi.enabled", "false")
-    ex = hashes if hashes is not None else shingle_hashes(df, text_col, id_col, ngram)
-    return ex.groupBy("id").agg(*_sig_min_aggs(num_hashes))
+    return shingle_hashes(df, text_col, id_col, ngram).groupBy("id").agg(
+        *_sig_min_aggs(num_hashes)
+    )
 
 
 def _banded_candidates(
@@ -1280,7 +1270,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     ngram: int = 3,
     max_bucket: int | None = 1000,
-    hashes: DataFrame | None = None,
 ) -> DataFrame:
     """LSH banding: each signature splits into ``bands`` rows keyed by
     (band_idx, xxhash64 of its rows); docs sharing any band bucket become
@@ -1288,10 +1277,9 @@ def minhash_lsh_candidates(
     (16 bands × 4 rows ⇒ ~0.5-0.6 Jaccard). Output: distinct (id_a, id_b),
     id_a < id_b. Buckets larger than ``max_bucket`` fall back to a star
     around the bucket minimum (see _banded_candidates) so a degenerate
-    bucket can never go quadratic. ``hashes``: precomputed
-    `shingle_hashes` frame (see shingle_hash_sets)."""
+    bucket can never go quadratic."""
     assert num_hashes % bands == 0
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, ngram, hashes=hashes)
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, ngram)
     banded = _minhash_banded(sig, num_hashes, bands)
     return (
         _banded_candidates(banded, max_bucket)
@@ -1342,21 +1330,22 @@ def minhash_dedup_pairs(
     blocked variant. Verify-sets are built for the whole corpus in one
     streaming pass.
 
-    Measured dead end (so nobody re-tries it): computing signatures and
-    verify-sets in ONE combined aggregate behind a persisted frame is
-    ~1.6x SLOWER cold at sf0.1 — building the columnar cache of the wide
-    (64 longs + hash-array) rows costs more than the second shingle pass
-    it saves, and column pruning already keeps the two separate passes
-    narrow. What DOES pay (r12 opt, measured 6.3 s -> 3.9 s at sf0.1):
-    persisting the NARROW exploded (id, h) hash frame and deriving the
-    signature aggregate AND the verify-set aggregate from that one
-    cache — the explode runs once and the cached rows are 16 bytes+id,
-    not the wide combined row the dead end cached."""
-    ex = shingle_hashes(df, text_col, id_col, ngram).persist()
+    The signature pass and the verify-set pass each explode the
+    shingles (column pruning keeps both narrow), and nothing is
+    persisted. Measured (dedup_minhash_lsh, sf0.1, local[4], a fresh JVM
+    per run, 6 runs interleaved with the persisted form): warm median
+    4.9 s against 4.5 s for persisting the narrow exploded (id, h) frame
+    and deriving both aggregates from it; cold median 15.8 s against
+    14.3 s, with single runs spreading 13.5-18.7 s on both sides; 10
+    Spark jobs instead of 13, and the call leaves nothing in the cache
+    manager. Measured dead end: one combined signature+set
+    aggregate behind a persisted frame is ~1.6x slower cold (the
+    columnar cache of the wide 64-long + hash-array rows costs more than
+    the second shingle pass it saves)."""
     cands = minhash_lsh_candidates(
-        df, text_col, id_col, num_hashes, bands, ngram, max_bucket, hashes=ex
+        df, text_col, id_col, num_hashes, bands, ngram, max_bucket
     )
-    sets_ = shingle_hash_sets(df, text_col, id_col, ngram, hashes=ex)
+    sets_ = shingle_hash_sets(df, text_col, id_col, ngram)
     j = (
         cands.join(sets_.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(sets_.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -1430,8 +1419,6 @@ def cross_minhash_candidates(
     bands: int = 16,
     ngram: int = 3,
     max_bucket: int = 1000,
-    hashes_new: DataFrame | None = None,
-    hashes_corpus: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-side-only LSH candidate stage shared by the incremental
     verifiers (`cross_minhash_pairs`, `cross_levenshtein_pairs`):
@@ -1440,14 +1427,9 @@ def cross_minhash_candidates(
     representatives per bucket through the spilling row_number window
     (same representatives as array_sort(collect_list)[:max_bucket],
     but no executor ever buffers a full mega-bucket). Within-side
-    pairs are structurally impossible. ``hashes_new``/``hashes_corpus``:
-    precomputed `shingle_hashes` frames (see shingle_hash_sets)."""
-    sig_c = minhash_signatures(
-        corpus, text_col, id_col, num_hashes, ngram, hashes=hashes_corpus
-    )
-    sig_n = minhash_signatures(
-        new, text_col, id_col, num_hashes, ngram, hashes=hashes_new
-    )
+    pairs are structurally impossible."""
+    sig_c = minhash_signatures(corpus, text_col, id_col, num_hashes, ngram)
+    sig_n = minhash_signatures(new, text_col, id_col, num_hashes, ngram)
     banded_c = _minhash_banded(sig_c, num_hashes, bands)
     banded_n = _minhash_banded(sig_n, num_hashes, bands)
     wb = Window.partitionBy("band", "bucket").orderBy("id")
@@ -1543,38 +1525,16 @@ def cross_minhash_pairs(
 
     Scale shape: corpus signatures shuffle once into the bucket
     aggregate; the new batch (typically orders of magnitude smaller)
-    shuffles onto the same (band, bucket) key; verification joins fetch
-    shingle sets for candidate ids only, on both sides. In a real
-    deployment the corpus bucket frame is computed once and reused across
-    batches — persist it or write it out partitioned by (band, bucket)."""
-    # r12 OPT: one persisted exploded hash pass PER SIDE, shared by the
-    # signature aggregate and the candidate-scoped verify-set aggregate
-    # (see minhash_dedup_pairs — measured 6.3 s -> 3.9 s on the
-    # single-corpus sibling)
-    ex_n = shingle_hashes(new, text_col, id_col, ngram).persist()
-    ex_c = shingle_hashes(corpus, text_col, id_col, ngram).persist()
+    shuffles onto the same (band, bucket) key; each side's verify sets
+    come from one whole-side shingle-set aggregate (the
+    `minhash_dedup_pairs` shape), joined to the candidates on id. In a
+    real deployment the corpus bucket frame is computed once and reused
+    across batches — write it out partitioned by (band, bucket)."""
     cands = cross_minhash_candidates(
-        new, corpus, text_col, id_col, num_hashes, bands, ngram, max_bucket,
-        hashes_new=ex_n, hashes_corpus=ex_c,
+        new, corpus, text_col, id_col, num_hashes, bands, ngram, max_bucket
     )
-    # lazy persist: the frame feeds three consumers below, and the
-    # cache populates on the caller's FIRST action (no job runs at
-    # plan-construction time). In a long-running per-batch loop,
-    # unpersist between batches (spark.catalog.clearCache()) — a
-    # persisted frame outlives the call.
-    cands = cands.persist()
-    sets_n = shingle_hash_sets(
-        new, text_col, id_col, ngram,
-        hashes=ex_n.join(
-            cands.select(F.col("id_new").alias("id")).distinct(), "id", "left_semi"
-        ),
-    )
-    sets_c = shingle_hash_sets(
-        corpus, text_col, id_col, ngram,
-        hashes=ex_c.join(
-            cands.select(F.col("id_corpus").alias("id")).distinct(), "id", "left_semi"
-        ),
-    )
+    sets_n = shingle_hash_sets(new, text_col, id_col, ngram)
+    sets_c = shingle_hash_sets(corpus, text_col, id_col, ngram)
     j = (
         cands.join(sets_n.select(F.col("id").alias("id_new"), F.col("sh").alias("sh_a")), "id_new")
         .join(sets_c.select(F.col("id").alias("id_corpus"), F.col("sh").alias("sh_b")), "id_corpus")
@@ -1742,85 +1702,86 @@ def connected_components(
         .distinct()
         .cache()
     )
-    n_edges = edges.count()
-    if n_edges <= driver_max_edges:
-        spark = pairs.sparkSession
-        id_type = edges.schema["src"].dataType
-        from pyspark.sql import types as T
+    try:
+        n_edges = edges.count()
+        if n_edges <= driver_max_edges:
+            spark = pairs.sparkSession
+            id_type = edges.schema["src"].dataType
+            from pyspark.sql import types as T
 
-        out_schema = T.StructType(
-            [T.StructField("id", id_type), T.StructField("component", id_type)]
-        )
-        data = _driver_union_find(edges.collect(), id_type)
-        edges.unpersist()
-        return spark.createDataFrame(data, out_schema)
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint()
-    )
-    # Convergence detector: one cheap aggregate per round instead of a
-    # join-based diff. The fingerprint hashes (id, component) pairs and
-    # sums the hashes — type-agnostic (a plain SUM over STRING ids would
-    # be NULL with ANSI off, making None == None declare false
-    # convergence after round one). Labels only decrease, so an unchanged
-    # fingerprint means an unchanged assignment up to a 2^-64-ish hash
-    # collision; a collision would only end the loop early, never corrupt
-    # a converged state that the invariant hasn't reached — and the odds
-    # are ignorable against max_iter rounds.
-    def _fingerprint(lbl: DataFrame):
-        return lbl.agg(
-            F.sum(
-                F.xxhash64(
-                    F.col("id").cast("string"), F.col("component").cast("string")
-                )
+            out_schema = T.StructType(
+                [T.StructField("id", id_type), T.StructField("component", id_type)]
             )
-        ).collect()[0][0]
-
-    prev_sum = _fingerprint(labels)
-    converged = False
-    for _ in range(max_iter):
-        # neighbor's label, propagated across each edge
-        prop = (
-            edges.join(labels.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), "component")
-        )
-        merged = (
-            labels.unionByName(prop)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        )
-        # pointer doubling: component(x) <- component(component(x)).
-        # component(x) <= x invariant ⇒ every label is itself a labeled
-        # node, so the self-join always resolves; labels only decrease.
-        jump = merged.select(
-            F.col("id").alias("component"), F.col("component").alias("comp2")
-        )
-        # localCheckpoint (not cache): `merged` feeds the self-join twice,
-        # so an un-truncated lineage would DOUBLE in size every round and
-        # blow up plan generation after ~15 rounds; checkpointing cuts the
-        # plan back to a leaf each iteration.
-        new_labels = (
-            merged.join(jump, "component")
-            .select("id", F.col("comp2").alias("component"))
+            data = _driver_union_find(edges.collect(), id_type)
+            return spark.createDataFrame(data, out_schema)
+        labels = (
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id"))
             .localCheckpoint()
         )
-        new_sum = _fingerprint(new_labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    edges.unpersist()
-    if not converged:
-        # silent non-fixpoint would mean WRONG clusters (long chains keep
-        # intermediate labels and duplicates survive) — fail loudly
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter); raise max_iter"
-        )
-    return labels
+        # Convergence detector: one cheap aggregate per round instead of a
+        # join-based diff. The fingerprint hashes (id, component) pairs and
+        # sums the hashes — type-agnostic (a plain SUM over STRING ids would
+        # be NULL with ANSI off, making None == None declare false
+        # convergence after round one). Labels only decrease, so an unchanged
+        # fingerprint means an unchanged assignment up to a 2^-64-ish hash
+        # collision; a collision would only end the loop early, never corrupt
+        # a converged state that the invariant hasn't reached — and the odds
+        # are ignorable against max_iter rounds.
+        def _fingerprint(lbl: DataFrame):
+            return lbl.agg(
+                F.sum(
+                    F.xxhash64(
+                        F.col("id").cast("string"), F.col("component").cast("string")
+                    )
+                )
+            ).collect()[0][0]
+
+        prev_sum = _fingerprint(labels)
+        converged = False
+        for _ in range(max_iter):
+            # neighbor's label, propagated across each edge
+            prop = (
+                edges.join(labels.withColumnRenamed("id", "src"), "src")
+                .select(F.col("dst").alias("id"), "component")
+            )
+            merged = (
+                labels.unionByName(prop)
+                .groupBy("id")
+                .agg(F.min("component").alias("component"))
+            )
+            # pointer doubling: component(x) <- component(component(x)).
+            # component(x) <= x invariant ⇒ every label is itself a labeled
+            # node, so the self-join always resolves; labels only decrease.
+            jump = merged.select(
+                F.col("id").alias("component"), F.col("component").alias("comp2")
+            )
+            # localCheckpoint (not cache): `merged` feeds the self-join twice,
+            # so an un-truncated lineage would DOUBLE in size every round and
+            # blow up plan generation after ~15 rounds; checkpointing cuts the
+            # plan back to a leaf each iteration.
+            new_labels = (
+                merged.join(jump, "component")
+                .select("id", F.col("comp2").alias("component"))
+                .localCheckpoint()
+            )
+            new_sum = _fingerprint(new_labels)
+            labels = new_labels
+            if new_sum == prev_sum:
+                converged = True
+                break
+            prev_sum = new_sum
+        if not converged:
+            # silent non-fixpoint would mean WRONG clusters (long chains keep
+            # intermediate labels and duplicates survive) — fail loudly
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                "(graph diameter exceeds max_iter); raise max_iter"
+            )
+        return labels
+    finally:
+        edges.unpersist()
 
 
 def dedup_clusters(
@@ -2378,13 +2339,10 @@ def containment_pairs(
     from notion_spark.functions.exactmath import D38
     from notion_spark.pipeline.stats import halfup_micro_div_cols_expr
 
-    # r12 OPT: one persisted exploded hash pass shared by the signature
-    # and set aggregates (see minhash_dedup_pairs)
-    ex = shingle_hashes(df, text_col, id_col, ngram).persist()
     cands = minhash_lsh_candidates(
-        df, text_col, id_col, num_hashes, bands, ngram, max_bucket, hashes=ex
+        df, text_col, id_col, num_hashes, bands, ngram, max_bucket
     )
-    sets = shingle_hash_sets(df, text_col, id_col, ngram, hashes=ex)
+    sets = shingle_hash_sets(df, text_col, id_col, ngram)
     sa = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("__sh_a"))
     sb = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("__sh_b"))
     joined = (

@@ -70,7 +70,11 @@ def refresh_cache(
     A row whose (uid, updated_time) the store already holds is skipped
     even when its other fields differ: a second edit in the same minute
     as the last sync (Notion's `last_edited_time` has minute resolution)
-    is missed until the page is edited again (`changed_rows`)."""
+    is missed until the page is edited again (`changed_rows`).
+
+    A stored row that ``fetched`` no longer holds (a page deleted or
+    archived upstream) stays in the store: the merge only adds and
+    replaces rows, so deletes never reach it."""
     from notion_spark.sources.io import overwrite_store
 
     if os.path.exists(cache_path):
@@ -95,7 +99,11 @@ def run_pipeline(
 ) -> PipelineResult:
     """The full EP1 step list (app.py:23-99) over an already-fetched
     tasks frame (the connector is injected upstream — tests use fixtures,
-    production passes assemble_tasks output)."""
+    production passes assemble_tasks output).
+
+    The store only grows: a page missing from ``fetched_tasks`` (deleted
+    or archived upstream) keeps its stored row, and the reports and
+    ``n_cached`` still count it (see `refresh_cache`)."""
     cache_path = os.path.join(cache_dir, "tasks.parquet")
     # the ingest lineage (JSON parse, joins, flattening) feeds three
     # consumers (count, change detection, merge write) — persist once

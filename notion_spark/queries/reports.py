@@ -46,6 +46,10 @@ def with_parent_name(df: DataFrame) -> DataFrame:
     return broadcast_lookup(df, parents, "parent_nid", "nid", "name", "parent_name")
 
 
+# a character Python's str.strip() keeps (Java regex class)
+_NON_SPACE = r"[^\t-\r\x1c-\x20\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+
+
 def _not_empty_container(cfg: EngineConfig) -> Column:
     """F13 (generate_reports.py:424-440, the reference's clean_task_list):
     all rows but container rows whose body is empty; the body is always
@@ -55,11 +59,19 @@ def _not_empty_container(cfg: EngineConfig) -> Column:
     'Container' = the row's OWN children list is non-empty
     (parent_nids_set at generate_reports.py:330-332 is built from
     `Children NIDs`), i.e. the is_project flag — NOT reverse parent_nid
-    edges, which diverge on one-way links."""
+    edges, which diverge on one-way links.
+
+    A body is empty when it is null or holds only whitespace, as Python's
+    ``str.strip()`` defines it (tab, newline, vertical tab, form feed,
+    carriage return, the file/group/record/unit separators, space, NEL,
+    no-break space and the Unicode space separators) — not Spark's
+    ``trim``, which strips spaces only, so ``"\\n"`` would count as a
+    body. Decided from the reference being Python; its source is not in
+    this repository, so the exact call it makes is unverified."""
     body_empty = (
         F.lit(True)
         if not cfg.include_body_content
-        else F.coalesce(F.length(F.trim("body_content")), F.lit(0)) == 0
+        else F.coalesce(~F.col("body_content").rlike(_NON_SPACE), F.lit(True))
     )
     return ~(F.col("is_project") & body_empty)
 

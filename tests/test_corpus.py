@@ -72,24 +72,17 @@ def test_curate_corpus_matches_manual_stages(spark):
     assert counts == [6, 5, 4, 3, 2]
 
 
-def test_curate_corpus_persists_multi_consumer_frame(spark):
-    """The exact-dedup output feeds three subtrees (LSH signatures,
-    shingle verify-sets, cluster join-back); the preset must pin it in
-    the cache so the input scan + quality join + exact-dedup shuffle run
-    once, not once per consumer (the r2 edge-cache lesson)."""
-    df = _corpus(spark)
-    # opt-out stays lazy end to end (checked FIRST: Spark's cache
-    # manager substitutes cached fragments into any matching later plan)
-    out_lazy = curate_corpus(
-        df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10},
-        persist_intermediate=False,
-    )
-    lazy_plan = out_lazy._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" not in lazy_plan
-    out = curate_corpus(df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10})
+def test_curate_corpus_plan_holds_no_cached_frame(spark):
+    """The preset persists nothing: the exact-dedup output feeds three
+    subtrees (LSH signatures, shingle verify-sets, cluster join-back),
+    which share it through the plan's exchange reuse, so the returned
+    plan holds no InMemoryRelation and the cache manager stays empty."""
+    jcache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    out = curate_corpus(_corpus(spark), near_dup_threshold=0.5, quality_kwargs={"min_words": 10})
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" in plan
-    spark.catalog.clearCache()  # drop the preset's pinned frame for later tests
+    assert "InMemoryRelation" not in plan
+    assert jcache.isEmpty()
 
 
 def test_curate_corpus_no_benchmark_no_report(spark):
@@ -130,7 +123,6 @@ def test_curate_corpus_optional_stages_match_manual(spark):
     )
     out = curate_corpus(
         df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10},
-        persist_intermediate=False,
         token_budget=110, token_budget_score_col="score",
         token_budget_token_col="toks",
         mix_group_col="source", mix_budget=2, mix_alpha=0.5,

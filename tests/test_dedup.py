@@ -209,6 +209,22 @@ def test_connected_components_driver_path_equals_distributed(spark):
     }
 
 
+def test_connected_components_releases_its_edges_when_a_step_raises(spark, monkeypatch):
+    """The edge list is cached for the count and the collect; a failure
+    after it is cached must not leave it in the cache manager."""
+    import pytest
+
+    def fail(*_):
+        raise RuntimeError("union-find failed")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(D, "_driver_union_find", fail)
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="union-find failed"):
+        D.connected_components(pairs)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_connected_components_driver_path_string_ids(spark):
     pairs = spark.createDataFrame([("b", "a"), ("b", "c")], "id_a string, id_b string")
     from notion_spark.pipeline.dedup import connected_components

@@ -18,6 +18,12 @@ caller sets selects a code path only tests take. Public top-level names
 other than the registered queries are unique across the package, since
 a second definition with the same name would hide the first one's
 missing callers.
+
+A function in the package that persists a frame (``.persist(`` or
+``.cache(``) binds it to a name and releases it with ``.unpersist()`` in
+a ``finally`` of the same function: a plan builder returns a lazy plan
+and leaves nothing in the cache manager, and a frame cached around
+driver-side actions is released however the function ends.
 """
 
 from __future__ import annotations
@@ -195,6 +201,56 @@ def unset_flags(package: list[ast.Module], outside: list[ast.Module]) -> set[str
     return flags - passed
 
 
+def _own_nodes(fn: ast.AST):
+    """The nodes of a function's body, minus those of nested functions."""
+    stack = list(ast.iter_child_nodes(fn))
+    while stack:
+        n = stack.pop()
+        yield n
+        if not isinstance(n, _FUNCTIONS):
+            stack.extend(ast.iter_child_nodes(n))
+
+
+def unreleased_caches(package: list[ast.Module]) -> set[str]:
+    """``function.frame`` for every frame a function persists or caches
+    without an ``frame.unpersist()`` call in a ``finally`` of the same
+    function (``function.?`` when the cached frame is bound to no name)."""
+    out = set()
+    for tree in package:
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            own = list(_own_nodes(fn))
+            bound = {
+                id(n.value): n.targets[0].id
+                for n in own
+                if isinstance(n, ast.Assign)
+                and len(n.targets) == 1
+                and isinstance(n.targets[0], ast.Name)
+            }
+            released = {
+                c.func.value.id
+                for t in own
+                if isinstance(t, ast.Try)
+                for f in t.finalbody
+                for c in ast.walk(f)
+                if isinstance(c, ast.Call)
+                and isinstance(c.func, ast.Attribute)
+                and c.func.attr == "unpersist"
+                and isinstance(c.func.value, ast.Name)
+            }
+            for n in own:
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in ("persist", "cache")
+                ):
+                    name = bound.get(id(n), "?")
+                    if name not in released:
+                        out.add(f"{fn.name}.{name}")
+    return out
+
+
 def test_every_public_name_has_a_caller_outside_tests():
     uncalled = public_definitions() - referenced_names()
     unlisted = sorted(uncalled - set(ALLOWED))
@@ -267,3 +323,60 @@ def render(rows):
     return goals(rows)
 """
     assert "goals" in _names(ast.parse(called))
+
+
+def test_every_cached_frame_is_released_in_a_finally():
+    leaks = sorted(unreleased_caches(package_trees()))
+    assert not leaks, (
+        f"frames persisted or cached without .unpersist() in a finally of the"
+        f" same function (let the plan share the subtree instead): {leaks}"
+    )
+
+
+def test_a_cache_released_in_a_finally_is_not_found_and_others_are():
+    released = ast.parse("""
+def count_twice(df, n: int = 2):
+    df = df.persist()
+    try:
+        return df.count() + df.count()
+    finally:
+        if n > 1:
+            df.unpersist()
+""")
+    assert unreleased_caches([released]) == set()
+    never = ast.parse("""
+def build(df):
+    ex = df.select("id").persist()
+    return ex.join(ex, "id")
+""")
+    assert unreleased_caches([never]) == {"build.ex"}
+    not_in_finally = ast.parse("""
+def count(df):
+    edges = df.distinct().cache()
+    n = edges.count()
+    edges.unpersist()
+    return n
+""")
+    assert unreleased_caches([not_in_finally]) == {"count.edges"}
+    other_frame = ast.parse("""
+def count(df, other):
+    kept = df.cache()
+    try:
+        return kept.count()
+    finally:
+        other.unpersist()
+""")
+    assert unreleased_caches([other_frame]) == {"count.kept"}
+    unbound = ast.parse("def build(df):\n    return df.persist()\n")
+    assert unreleased_caches([unbound]) == {"build.?"}
+    nested = ast.parse("""
+def outer(df):
+    def inner(x):
+        x = x.cache()
+        return x
+    try:
+        return inner(df)
+    finally:
+        df.unpersist()
+""")
+    assert unreleased_caches([nested]) == {"inner.x"}

@@ -65,6 +65,25 @@ def test_same_minute_edit_is_skipped(spark, tmp_path):
     assert store.filter(F.col("uid") == uid).first().name == old_name
 
 
+def test_page_missing_from_a_later_fetch_stays_in_the_store(spark, tmp_path):
+    """Upstream deletes, kept as they are today: a page the next fetch no
+    longer returns (deleted or archived in Notion) is neither removed nor
+    counted as changed — the store keeps it and n_cached does not drop."""
+    cache = str(tmp_path)
+    tasks = make_tasks(spark, n=20)
+    r1 = run_pipeline(spark, tasks, cache, FIXED_NOW, periods=("weekly",), export=False)
+    gone = tasks.first().uid
+    r2 = run_pipeline(
+        spark, tasks.filter(F.col("uid") != gone), cache, FIXED_NOW,
+        periods=("weekly",), export=False,
+    )
+    assert r2.n_fetched == r1.n_fetched - 1
+    assert r2.n_changed == 0
+    assert r2.n_cached == r1.n_cached == 20
+    store = spark.read.parquet(f"{cache}/tasks.parquet")
+    assert store.filter(F.col("uid") == gone).count() == 1
+
+
 def test_one_store_cache_per_cycle(spark, tmp_path, monkeypatch):
     """run_pipeline persists exactly two frames, one at a time: the ingest
     frame, then the merged store read that the export and both normalize

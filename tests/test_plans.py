@@ -9,25 +9,11 @@ filter that stops pushing, a join that goes cartesian) fails CI.
 
 from __future__ import annotations
 
-import pytest
-
 from notion_spark import parity
 
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(autouse=True)
-def _empty_cache_manager(spark):
-    """Plan pins see only the operators' own lineage. Some queries persist
-    an intermediate frame without releasing it (covisitation_lift's
-    capped pairs, operators/behavior.py), and Spark substitutes a cached
-    plan-identical subplan into any later query, so whatever ran before —
-    in this file or another — must not decide a pinned plan shape."""
-    spark.catalog.clearCache()
-    yield
-    spark.catalog.clearCache()
 
 
 def test_pushdown_and_topk_shape(spark, sf_dir):
@@ -825,32 +811,16 @@ def test_r12_batch3_plans(spark, sf_dir):
 
 
 def test_r13_iterative_consumers_no_inmemory_reuse_pinned(spark, sf_dir):
-    """r13 pin of the r12 persist rule ("persist only frames whose
-    consumers are terminal"): the iterative graph consumers unroll
-    their rounds into ONE lazy plan that re-references the
-    covisitation pair subplan many times; AQE's ReusedExchange dedups
-    those at execution, and an InMemoryRelation in the middle BLOCKS
-    that reuse (measured r12: graph_kcore 5.2 s -> 35.5 s with a
-    persist inside covisitation_counts). This test fails if anyone
-    re-adds a persist upstream of the iterative consumers — the static
-    plan must be cache-free, and the executed adaptive plan must show
-    the exchange reuse actually firing.
-
-    Session isolation (r13 close): the pin is about the operators' OWN
-    lineage, so it starts from an empty CacheManager (the autouse
-    fixture above clears it around every test here). In a shared session,
-    any earlier covisitation_lift invocation (e.g. the plan-shape test
-    at the top of this file — persist() registers the capped frame
-    even without executing it) leaves a cache entry that Spark
-    substitutes into kcore's plan-identical capped subplan, turning
-    this test into an ordering lottery. That substitution is also the
-    documented real-world hazard of the per-invocation persists
-    (clear the cache between batches): a long-lived
-    session that runs covisitation_lift before graph_kcore re-creates
-    the measured r12 regression through the CacheManager even though
-    covisitation_counts itself never persists. The bench is immune by
-    construction (fresh-JVM chunks of 25: lift is index 70/chunk 2,
-    kcore 85/chunk 3)."""
+    """Pin of the persist rule (no operator persists a frame it does
+    not release): the iterative graph consumers unroll their rounds
+    into ONE lazy plan that re-references the covisitation pair subplan
+    many times; AQE's ReusedExchange dedups those at execution, and an
+    InMemoryRelation in the middle BLOCKS that reuse (measured r12:
+    graph_kcore 5.2 s -> 35.5 s with a persist inside
+    covisitation_counts). This test fails if anyone re-adds a persist
+    upstream of the iterative consumers — the static plan must be
+    cache-free, and the executed adaptive plan must show the exchange
+    reuse actually firing."""
     for q in ("graph_kcore", "graph_label_propagation"):
         df = parity.QUERIES[q](spark, sf_dir)
         static = plan_of(df)

@@ -82,7 +82,7 @@ def stores(draw):
             f"uid-{draw(st.integers(0, 99)):02d}-{i:02d}",
             draw(st.sampled_from([0, 0, None, i + 1, i + 1, i + 1])),
             draw(st.sampled_from([None, "Alpha", "Beta", f"Task {i}"])),
-            draw(st.sampled_from([None, "", "   ", "one line", "a\nb\nc\nd"])),
+            draw(st.sampled_from([None, "", "   ", "\n", " \t\n", "one line", "a\nb\nc\nd"])),
             status,
             draw(dates), draw(dates), draw(dates), draw(dates),
             draw(st.sampled_from([*M.SCORES, None, "Someday"])),
