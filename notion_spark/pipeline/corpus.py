@@ -59,8 +59,10 @@ def curate_corpus(
     mix_alpha: float = 0.5,
 ) -> DataFrame:
     """Run the full curation flow; returns the curated frame with a
-    ``split`` column. Builds the plan only: no Spark job runs until the
-    caller's first action.
+    ``split`` column. Not a lazy plan builder yet: the near-dup collapse
+    (`dedup.dedup_clusters` → `dedup.connected_components`) counts and
+    collects the verified edge list while the plan is built, so Spark
+    jobs run before the caller's first action (ROADMAP item 4).
 
     ``quality_kwargs`` forwards to `curation.quality_rules` (e.g.
     min_words for short-document corpora).

@@ -93,7 +93,19 @@ def shingle_hashes(
 ) -> DataFrame:
     """The shared bulk form: one row per (id, xxhash64(shingle)),
     duplicates kept. Tokens are bound to an attribute before the Generate
-    so the split runs exactly once per document."""
+    so the split runs exactly once per document.
+
+    Tokens are ``split(trim(text), '\\s+')``. Spark's ``trim`` strips
+    only U+0020 spaces and Java's ``\\s`` is the six ASCII whitespace
+    characters, so a leading tab or a trailing newline survives the
+    trim and the split turns it into an EMPTY first or last token:
+    ``"a b c d\\n"`` shingles to ``{"a b c", "b c d", "c d "}`` and
+    scores Jaccard 0.666667 against ``"a b c d"``. The DuckDB oracles
+    split the same way, so no oracle hash sees it; the same
+    ``split(trim(...))`` form recurs across the package and its
+    oracles, which is why it is recorded here rather than changed in
+    one place. A null text yields no shingle, and so does a text of
+    fewer than ``n`` tokens (an empty text is one empty token)."""
     toksed = _fan_out(df).select(
         F.col(id_col).alias("id"), F.split(F.trim(F.col(text_col)), r"\s+").alias("t")
     )
@@ -283,50 +295,12 @@ def _jaccard_on_sets(pairs: DataFrame) -> DataFrame:
     return pairs.select("id_a", "id_b", jac.alias("jaccard"))
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    block_key: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Exact n-gram Jaccard over pairs WITHIN a blocking key — the
-    SMALL-N / bounded-block path. For corpus-scale inputs use
-    `jaccard_pairs_prefix` (AllPairs prefix filtering — exact, no block
-    key needed): here the block IS the scale mechanism, so a key whose
-    cardinality does not grow with N degrades to quadratic within
-    blocks (measured 36.4x wall at 10x data on the constant-cardinality
-    `source` key, SCALE.md r8 slope sweep).
-
-    The blocking key is mandatory: pairwise similarity without blocking is
-    O(N²) and cannot survive scale. Output: (id_a, id_b, jaccard) with
-    id_a < id_b and jaccard >= threshold. Shingle sets are 64-bit hash
-    sets (collision odds ~n²/2^64 — immaterial), so the pairwise stage
-    shuffles longs, not strings.
-    """
-    blocks = df.select(F.col(id_col).alias("id"), block_key.alias("block"))
-    docs = shingle_hash_sets(df, text_col, id_col, n).join(blocks, "id")
-    a = docs.select(
-        F.col("block"), F.col("id").alias("id_a"), F.col("sh").alias("sh_a")
-    )
-    b = docs.select(
-        F.col("block").alias("block_b"), F.col("id").alias("id_b"), F.col("sh").alias("sh_b")
-    )
-    pairs = _pair_join(
-        a, b, on=[a["block"] == b["block_b"], a["id_a"] < b["id_b"]],
-        keys_a=["block"], keys_b=["block_b"],
-    )
-    return _jaccard_on_sets(pairs).filter(F.col("jaccard") >= threshold)
-
-
 def jaccard_pairs_prefix(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.8,
-    block_key: Column | None = None,
     max_token_bucket: int = 100_000,
 ) -> DataFrame:
     """BLOCKING-FREE exact n-gram Jaccard near-dup pairs via prefix
@@ -339,8 +313,11 @@ def jaccard_pairs_prefix(
     prefixes are disjoint under a COMMON total order can share at most
     ``floor(t·|sh_x|) - 1`` elements — so every qualifying pair
     collides in the index and the exact-Jaccard verify removes the
-    false positives (same output contract as `jaccard_pairs`:
-    (id_a < id_b, jaccard) at jaccard >= threshold, rounded 6).
+    false positives. Output: (id_a < id_b, jaccard) at jaccard >=
+    threshold, where jaccard is the set Jaccard of the two documents'
+    distinct shingle hashes rounded to 6 places (HALF_UP). A document
+    with no shingle (null, empty, or fewer than ``n`` tokens) pairs with
+    nothing; rows sharing an id pool their shingles into one set.
 
     This is the corpus-scale default of the jaccard family. The
     granularity of the filter ADAPTS to the corpus: prefixes keep only
@@ -356,11 +333,9 @@ def jaccard_pairs_prefix(
     exceeds the bound — the boilerplate-degenerate corpus where the
     blowup would be real (exact-dedup first, or raise the threshold).
 
-    ``block_key`` (optional): a scope contract ("only pair within
-    source/tenant"), ANDed into the index join — NOT needed for scale.
-    NULL keys pair with nothing. Low thresholds (< ~0.5) make any
-    prefix filter weak (prefixes approach the whole set); use
-    `minhash_dedup_pairs` there and accept banded recall.
+    Low thresholds (< ~0.5) make any prefix filter weak (prefixes
+    approach the whole set); use `minhash_dedup_pairs` there and accept
+    banded recall.
 
     One shuffle for the shingle sets, one vocab-sized frequency
     combine, one doc-keyed window for prefix ranks, one pinned-width
@@ -371,14 +346,8 @@ def jaccard_pairs_prefix(
 
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    docs = shingle_hash_sets(df, text_col, id_col, n)
-    blk = ["blk"] if block_key is not None else []
-    if block_key is not None:
-        docs = docs.join(
-            df.select(F.col(id_col).alias("id"), block_key.alias("blk")), "id"
-        )
-    docs = docs.withColumn("sz", F.size("sh"))
-    toks = docs.select("id", *blk, "sz", F.explode("sh").alias("h"))
+    docs = shingle_hash_sets(df, text_col, id_col, n).withColumn("sz", F.size("sh"))
+    toks = docs.select("id", "sz", F.explode("sh").alias("h"))
     freq = toks.groupBy("h").agg(F.count(F.lit(1)).alias("__f"))
     wdoc = Window.partitionBy("id").orderBy(F.asc("__f"), F.asc("h"))
     # floor (not ceil) of t·|sh| is the float-safe required-overlap
@@ -392,9 +361,9 @@ def jaccard_pairs_prefix(
         toks.join(freq, "h")
         .withColumn("__rk", F.row_number().over(wdoc))
         .filter(F.col("__rk") <= prefix_len)
-        .select("id", *blk, "sz", "h")
+        .select("id", "sz", "h")
     )
-    wtok = Window.partitionBy("h", *blk)
+    wtok = Window.partitionBy("h")
     pref = pref.withColumn("__t_n", F.count(F.lit(1)).over(wtok))
     guard = guarded(
         F.col("__t_n") > F.lit(max_token_bucket),
@@ -403,13 +372,12 @@ def jaccard_pairs_prefix(
         " raise the threshold, or raise max_token_bucket deliberately",
     )
     a = pref.select(
-        "h", *blk,
+        "h",
         guard(F.col("id"), "long").alias("id_a"),
         F.col("sz").alias("sz_a"),
     )
     b = pref.select(
         F.col("h").alias("h_b"),
-        *([F.col("blk").alias("blk_b")] if block_key is not None else []),
         guard(F.col("id"), "long").alias("id_b"),
         F.col("sz").alias("sz_b"),
     )
@@ -422,14 +390,8 @@ def jaccard_pairs_prefix(
         F.least(a["sz_a"], b["sz_b"]).cast("double")
         >= F.lit(float(threshold)) * F.greatest(a["sz_a"], b["sz_b"]) - F.lit(1e-9),
     ]
-    if block_key is not None:
-        on.append(a["blk"] == b["blk_b"])
     cands = (
-        _pair_join(
-            a, b, on=on,
-            keys_a=["h", *blk],
-            keys_b=["h_b"] + (["blk_b"] if block_key is not None else []),
-        )
+        _pair_join(a, b, on=on, keys_a=["h"], keys_b=["h_b"])
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -437,147 +399,6 @@ def jaccard_pairs_prefix(
     sb = docs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     pairs = cands.join(sa, "id_a").join(sb, "id_b")
     return _jaccard_on_sets(pairs).filter(F.col("jaccard") >= threshold)
-
-
-def levenshtein_pairs(
-    df: DataFrame,
-    block_key: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_distance: int = 50,
-    max_length_diff: int | None = None,
-    length_bands: bool = True,
-) -> DataFrame:
-    """Edit-distance near-duplicate pairs WITHIN a blocking key —
-    the SMALL-N / bounded-block path. For corpus-scale inputs use
-    `levenshtein_pairs_qgram` (Ed-Join prefix filtering, optional
-    ``block_key`` scope): here the block IS the scale mechanism, so a
-    key whose cardinality does not grow with N degrades to quadratic
-    within blocks — measured 56.8x wall at 10x data on the
-    constant-cardinality `source` key (SCALE.md r8 slope sweep),
-    where the q-gram path stays ~flat. Reach for this form only when
-    the block key genuinely subdivides the corpus (e.g. per-tenant,
-    per-URL-host) or N is small.
-
-    Character-level complement to the token-level `jaccard_pairs`: edit
-    distance catches small in-word mutations (typos, template fills)
-    that n-gram Jaccard over word shingles misses. Blocking is mandatory
-    for the same O(N²) reason. Output: (id_a, id_b, distance) with
-    id_a < id_b and distance <= max_distance.
-
-    ``max_length_diff`` (default: max_distance) prunes pairs whose
-    length gap already exceeds the threshold BEFORE the O(L²)
-    levenshtein runs — |len(a) - len(b)| is a lower bound on edit
-    distance, so the prune is exact. The distance itself runs JVM-side
-    (`F.levenshtein` with the threshold arg, which early-exits any row
-    whose running minimum crosses the bound).
-
-    ``length_bands`` (default on, r7) folds the length-gap prune INTO
-    the join key instead of evaluating it after the block equi-join:
-    with band = len div bound, any pair within the gap bound sits in
-    the same or adjacent bands (floor(x/B) − floor(y/B) ≤ 1 when
-    x − y ≤ B), so the join runs on (block, band) plus an
-    adjacent-band pass and never materializes the cross-band bulk of
-    each block — EXACTLY the same output, measured ~4× fewer joined
-    rows on the length-spread documents corpus. The gap filter still
-    applies afterwards (adjacent bands admit gaps up to 2·bound − 1).
-    Turn off only for corpora whose texts all share one band (the
-    two-pass union then costs more than it saves)."""
-    bound = max_distance if max_length_diff is None else max_length_diff
-    docs = df.select(
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("txt"),
-        F.length(text_col).alias("len"),
-        block_key.alias("block"),
-    ).filter(F.col("txt").isNotNull())
-    dist = F.levenshtein(F.col("txt_a"), F.col("txt_b"), max_distance)
-    if not length_bands or bound < 1:
-        a = docs.select(
-            "block",
-            F.col("id").alias("id_a"),
-            F.col("txt").alias("txt_a"),
-            F.col("len").alias("len_a"),
-        )
-        b = docs.select(
-            F.col("block").alias("block_b"),
-            F.col("id").alias("id_b"),
-            F.col("txt").alias("txt_b"),
-            F.col("len").alias("len_b"),
-        )
-        pairs = _pair_join(
-            a,
-            b,
-            on=[
-                a["block"] == b["block_b"],
-                a["id_a"] < b["id_b"],
-                F.abs(a["len_a"] - b["len_b"]) <= F.lit(bound),
-            ],
-            keys_a=["block"],
-            keys_b=["block_b"],
-        )
-        # threshold form returns -1 when the distance exceeds the bound
-        return (
-            pairs.select("id_a", "id_b", dist.alias("distance"))
-            .filter(F.col("distance") >= 0)
-        )
-    banded = docs.withColumn("band", F.call_function("div", F.col("len"), F.lit(bound)))
-    a = banded.select(
-        "block",
-        "band",
-        F.col("id").alias("id_a"),
-        F.col("txt").alias("txt_a"),
-        F.col("len").alias("len_a"),
-    )
-    b = banded.select(
-        F.col("block").alias("block_b"),
-        F.col("band").alias("band_b"),
-        F.col("id").alias("id_b"),
-        F.col("txt").alias("txt_b"),
-        F.col("len").alias("len_b"),
-    )
-    gap_ok = F.abs(F.col("len_a") - F.col("len_b")) <= F.lit(bound)
-    # same-band pairs once via id order; adjacent-band pairs once via
-    # the band order itself, ids normalized afterwards
-    same = _pair_join(
-        a,
-        b,
-        on=[
-            a["block"] == b["block_b"],
-            a["band"] == b["band_b"],
-            a["id_a"] < b["id_b"],
-        ],
-        keys_a=["block", "band"],
-        keys_b=["block_b", "band_b"],
-    ).select("id_a", "txt_a", "id_b", "txt_b", gap_ok.alias("ok"))
-    adj = (
-        _pair_join(
-            a,
-            b,
-            on=[
-                a["block"] == b["block_b"],
-                a["band"] + F.lit(1) == b["band_b"],
-            ],
-            keys_a=[F.col("block"), F.col("band") + F.lit(1)],
-            keys_b=["block_b", "band_b"],
-        )
-        .select(
-            F.least("id_a", "id_b").alias("lo"),
-            F.greatest("id_a", "id_b").alias("hi"),
-            F.when(F.col("id_a") < F.col("id_b"), F.col("txt_a"))
-            .otherwise(F.col("txt_b")).alias("txt_a"),
-            F.when(F.col("id_a") < F.col("id_b"), F.col("txt_b"))
-            .otherwise(F.col("txt_a")).alias("txt_b"),
-            gap_ok.alias("ok"),
-        )
-        .select(
-            F.col("lo").alias("id_a"), "txt_a", F.col("hi").alias("id_b"), "txt_b", "ok"
-        )
-    )
-    pairs = same.unionByName(adj).filter(F.col("ok"))
-    return (
-        pairs.select("id_a", "id_b", dist.alias("distance"))
-        .filter(F.col("distance") >= 0)
-    )
 
 
 def _qgram_prefix_len_udf(q: int, d: int):
@@ -686,9 +507,14 @@ def levenshtein_pairs_qgram(
     rare grams are spread out — on the small-vocabulary bench corpus
     that is ~3x fewer index rows and ~8x fewer raw candidates.
 
-    Same output contract as `levenshtein_pairs`: (id_a < id_b,
-    distance <= max_distance), the exact length-gap prune before the
-    O(L²) verify, JVM threshold-form levenshtein.
+    Output: (id_a < id_b, distance) for every pair of rows with
+    non-null texts whose edit distance, counted over code points, is
+    <= max_distance — the exact length-gap prune before the O(L²)
+    verify, then the JVM threshold-form levenshtein. A row repeated
+    under its id pairs as one copy does (the output repeats the pair).
+    One id carrying two DIFFERENT texts is outside the contract: the
+    collapse below keys members on the id, so the pair between the
+    id's second text and a partner identical to its first is lost.
 
     EXACTNESS EDGE, closed: the prefix argument forces an intersection
     only when the smaller side has MORE than ``q·d`` distinct grams
@@ -722,13 +548,13 @@ def levenshtein_pairs_qgram(
 
     ``block_key`` (optional): restrict pairs to rows sharing the key,
     ANDed into BOTH candidate joins (the gram index join and the
-    low-diversity pool bands) — unlike `levenshtein_pairs`, the block
-    here is a scope CONTRACT ("only compare within source"), not the
-    scale mechanism: the prefix filter is what keeps candidates
-    sub-quadratic, so a constant-cardinality key is safe to pass (the
-    r8 slope sweep measured the band-blocked sibling at 56.8x wall
-    per 10x data on exactly such a key, vs ~flat for this path).
-    NULL keys pair with nothing (SQL equi-join semantics).
+    low-diversity pool bands). The block here is a scope CONTRACT
+    ("only compare within source"), not the scale mechanism: the
+    prefix filter is what keeps candidates sub-quadratic, so a
+    constant-cardinality key is safe to pass (the r8 slope sweep
+    measured a length-band-blocked join at 56.8x wall per 10x data on
+    exactly such a key, vs ~flat for this path). A NULL key pairs with
+    nothing, identical texts included (SQL equi-join semantics).
 
     ``max_candidates`` (r9, estimate tightened r10): an IN-PLAN
     candidate-MASS guard — a 1-row broadcast frame carries the
@@ -777,9 +603,13 @@ def levenshtein_pairs_qgram(
     if q < 1:
         raise ValueError(f"q must be >= 1, got {q}")
     doc_cols = [F.col(id_col).alias("id"), F.col(text_col).alias("txt")]
+    keep = F.col("txt").isNotNull()
     if block_key is not None:
         doc_cols.append(block_key.alias("blk"))
-    docs = df.select(*doc_cols).filter(F.col("txt").isNotNull())
+        # a NULL key pairs with nothing: the identical-text expansion
+        # below joins on the representative alone, so drop those rows here
+        keep = keep & F.col("blk").isNotNull()
+    docs = df.select(*doc_cols).filter(keep)
     blk = ["blk"] if block_key is not None else []
     # representative collapse: one txt-keyed shuffle computes, per
     # (txt[, blk]) group, the representative (min id) and the group
@@ -874,16 +704,15 @@ def levenshtein_pairs_qgram(
     )
     # bucket = the candidate-join key's bucket: (gram, band, block).
     # The length band rides the JOIN KEY (exact: gap <= d => same or
-    # adjacent band of width d — the levenshtein_pairs band lemma), not
-    # just the post-filter: on a SMALL-GRAM-VOCABULARY corpus
+    # adjacent band of width d, as floor(x/d) - floor(y/d) <= 1 when
+    # x - y <= d), not just the post-filter: on a SMALL-GRAM-VOCABULARY corpus
     # (template/boilerplate text) rare-first ordering cannot make
     # buckets cold — the r9 sf1 profile measured 1,767 distinct
     # 3-grams across 50k docs and 160M candidate rows from
     # (gram, source) keys alone; banding cut the bucket mass ~14x and
     # is free (the band is already computed for the pool). Candidates
     # are the union of a same-band and an adjacent-band pass, ids
-    # normalized — exactly the two-pass construction levenshtein_pairs
-    # uses, applied to the prefix index.
+    # normalized.
     wg = Window.partitionBy("gram", "band", *blk)
     pref = pref.withColumn("__g_n", F.count(F.lit(1)).over(wg))
     guard = guarded(
@@ -1325,10 +1154,11 @@ def minhash_dedup_pairs(
     max_bucket: int | None = 1000,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact Jaccard verify over
-    shingle-hash sets. Output matches `jaccard_pairs` (id_a, id_b,
-    jaccard ≥ threshold), so LSH recall is measurable against the exact
-    blocked variant. Verify-sets are built for the whole corpus in one
-    streaming pass.
+    shingle-hash sets. Output has `jaccard_pairs_prefix`'s contract
+    (id_a < id_b, jaccard ≥ threshold, the same rounded scores) and is a
+    subset of its pairs, so LSH recall is measurable against the exact
+    path. Verify-sets are built for the whole corpus in one streaming
+    pass.
 
     The signature pass and the verify-set pass each explode the
     shingles (column pruning keeps both narrow), and nothing is
@@ -1838,9 +1668,8 @@ def embedding_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    block_key: Column | str | None = "auto",
+    block_key: Column | str = "auto",
     dim: int = 64,
-    allow_all_pairs: bool = False,
     n_tables: int = 8,
     n_planes: int | str = "auto",
     extra_block: Column | None = None,
@@ -1856,10 +1685,17 @@ def embedding_dup_pairs(
     while the per-table bucket join stays bounded. Cost: the frame
     explodes ×n_tables on the (id, vector) projection, and colliding
     pairs are deduped before the cosine (so each pair's cosine computes
-    once). Pass an explicit Column to block on domain structure instead
-    (single-table path, no explode). All-pairs is the one O(N²) escape
-    hatch and must be requested twice: ``block_key=None,
-    allow_all_pairs=True``.
+    once). Pass an explicit Column (or a column name) to block on domain
+    structure instead (single-table path, no explode); NULL keys pair
+    with nothing. All pairs, the O(N²) join, is an explicit constant
+    block: ``block_key=F.lit(1)``.
+
+    Output: (id_a < id_b, cosine) at ``cosine >= threshold``: `dot_fold`
+    over the product of the two `norm_fold`s, on the first ``dim``
+    components (shorter vectors zero-padded, null elements 0.0),
+    rounded to 6 places; a null or zero vector pairs with nothing. The
+    explicit-block path scores every pair of rows within a block; the
+    auto path scores a subset of those pairs.
 
     ``n_planes="auto"`` (default, r9): size each table's plane count to
     the CORPUS, not a constant — ``ceil(log2(N / occupancy_target))``
@@ -1911,10 +1747,10 @@ def embedding_dup_pairs(
             block_key = F.col(block_key)
         else:
             multi_table = True
-    if block_key is None and not allow_all_pairs:
+    if block_key is None:
         raise ValueError(
             "embedding_dup_pairs without a block_key is an all-pairs O(N²) "
-            "join; pass allow_all_pairs=True to opt in explicitly, or keep "
+            "join; pass block_key=F.lit(1) to opt in explicitly, or keep "
             "the default 'auto' hyperplane blocking"
         )
     if extra_block is not None and not multi_table:
@@ -1936,16 +1772,14 @@ def embedding_dup_pairs(
     # verify was >90% of wall time):
     # - norms PRECOMPUTED per row (one pass over |corpus| rows; the
     #   sqrt happens before the join instead of twice per pair) and
-    #   dim-TRUNCATED to match the numerator (norm_unrolled — a
+    #   dim-TRUNCATED to match the numerator (norm_fold — a
     #   full-width norm over a dim-truncated dot silently deflates
     #   every score for vectors wider than `dim`);
-    # - the dot product UNROLLED into `dim` codegen'd multiply-adds
-    #   (F.get + Multiply + Add) instead of the interpreted
-    #   ArrayAggregate fold (~600 us/pair measured) — seeded with 0.0
-    #   and summed left-to-right, so the IEEE op sequence is identical
-    #   to the fold and to the oracle's range(1, dim+1) list_sum.
-    #   (dot_unrolled's contract: elements past `dim` ignored, shorter
-    #   vectors zero-padded — the fixed-dim oracles' own semantics).
+    # - the dot product as dot_fold: elements past `dim` ignored,
+    #   shorter vectors zero-padded, seeded with 0.0 and summed
+    #   left-to-right, so the IEEE op sequence is identical to the
+    #   oracle's range(1, dim+1) list_sum (the fixed-dim oracles' own
+    #   semantics).
     dotu = dot_fold(F.col("v_a"), F.col("v_b"), dim)
     denom = F.col("n_a") * F.col("n_b")
     sim = F.round(F.when(denom > 0, dotu / denom), 6)
@@ -2019,34 +1853,28 @@ def embedding_dup_pairs(
         )
     # evaluate block_key against the ORIGINAL frame (it may reference
     # columns outside id/vec), then project down
-    cols = [
+    v = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         norm_fold(F.col(vec_col), dim).alias("nrm"),
-    ]
-    if block_key is not None:
-        cols.append(block_key.alias("block"))
-    v = df.select(*cols)
+        block_key.alias("block"),
+    )
     a = v.select(
-        *(["block"] if block_key is not None else []),
+        "block",
         F.col("id").alias("id_a"),
         F.col("v").alias("v_a"),
         F.col("nrm").alias("n_a"),
     )
     b = v.select(
-        *([F.col("block").alias("block_b")] if block_key is not None else []),
+        F.col("block").alias("block_b"),
         F.col("id").alias("id_b"),
         F.col("v").alias("v_b"),
         F.col("nrm").alias("n_b"),
     )
-    cond = [a["id_a"] < b["id_b"]]
-    if block_key is not None:
-        cond.append(a["block"] == b["block_b"])
     return (
         _pair_join(
-            a, b, on=cond,
-            keys_a=["block"] if block_key is not None else None,
-            keys_b=["block_b"] if block_key is not None else None,
+            a, b, on=[a["id_a"] < b["id_b"], a["block"] == b["block_b"]],
+            keys_a=["block"], keys_b=["block_b"],
         )
         .select("id_a", "id_b", sim.alias("cosine"))
         .filter(F.col("cosine") >= threshold)

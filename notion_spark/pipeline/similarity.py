@@ -50,55 +50,24 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom)
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """`dot` unrolled into ``dim`` codegen'd multiply-adds (F.get +
-    Multiply + Add) — the hot-loop replacement for the interpreted
-    ArrayAggregate fold, which measured ~600 µs per 64-dim evaluation
-    inside r8's pair joins (HOFs have no codegen; every fold allocates
-    and interprets per element). Seeded with 0.0 and summed
-    left-to-right, so the IEEE op sequence is identical to `dot`'s
-    fold and to the oracles' ``list_sum`` over ``range(1, dim+1)``.
-    Contract difference, deliberate: elements past ``dim`` are ignored
-    (the fixed-dim oracles' own semantics) and shorter vectors
-    zero-pad via coalesce — an equal-length short pair scores exactly
-    what the fold scored (x + 0.0 == x); a length-MISMATCHED pair
-    scores over the zero-padded union where the fold dropped it.
-
-    Use with per-row precomputed norms (`norm` before the join) so the
-    per-PAIR work is ONE unrolled dot: the r8 recipe that took
-    embedding_dup_pairs at sf1 from a 10-30 min single task to 70 s
-    and semantic_split_leakage from ~20 min/run to seconds."""
-    out: Column = F.lit(0.0)
-    for i in range(dim):
-        out = out + (
-            F.coalesce(F.get(a, i).cast("double"), F.lit(0.0))
-            * F.coalesce(F.get(b, i).cast("double"), F.lit(0.0))
-        )
-    return out
-
-
 def dot_fold(a: Column, b: Column, dim: int) -> Column:
-    """`dot_unrolled`'s EXACT contract (elements past ``dim`` ignored,
-    shorter vectors zero-padded per element, +0.0 seed, left-to-right
-    IEEE order) as a zip_with/aggregate fold — bit-identical output,
-    ~30x smaller expression tree.
+    """Dot product over the first ``dim`` components: elements past
+    ``dim`` ignored, the shorter vector zero-padded, null elements 0.0,
+    seeded with +0.0 and summed left to right in double precision (the
+    oracles' ``list_sum`` over ``range(1, dim+1)`` in the same IEEE
+    order). A zip_with/aggregate fold.
 
-    r12 opt (supersedes the r8 unroll finding ON SPARK 4.1): the
-    unrolled form measured ~4 µs/pair SLOWER than the fold on the
-    754k-pair micro-bench (3.13 s vs 0.84 s incl. the join), i.e. the
-    engine now evaluates the fold at least as fast as the unrolled
-    chain, while the unroll still pays its giant-tree planning/codegen
-    cost per AQE stage (the r9 Catalyst-superlinear hazard). Keep
-    `dot_unrolled` only as the reference form its bit-exactness tests
-    pin against.
+    r12 opt (supersedes the r8 unroll finding ON SPARK 4.1): an
+    unrolled chain of ``dim`` F.get multiply-adds measured ~4 µs/pair
+    SLOWER than the fold on the 754k-pair micro-bench (3.13 s vs
+    0.84 s incl. the join), while paying its giant-tree
+    planning/codegen cost per AQE stage (the r9 Catalyst-superlinear
+    hazard).
 
-    ONE contract divergence (r13, ADVICE r12): a WHOLE-NULL vector
-    yields NULL here (slice of NULL is NULL, so the aggregate is NULL)
-    where dot_unrolled's per-element F.get + coalesce yields 0.0.
-    Every current caller guards the result behind when(denom > 0), so
-    outputs are unchanged — but a new caller relying on the 0.0
-    contract for null VECTORS (not null elements) must coalesce the
-    fold itself. Pinned with a None-vector row in test_similarity."""
+    A WHOLE-NULL vector yields NULL (slice of NULL is NULL, so the
+    aggregate is NULL), not 0.0. Every current caller guards the result
+    behind when(denom > 0); a caller that wants 0.0 for a null VECTOR
+    must coalesce the fold itself."""
     sa = F.slice(a, 1, dim)
     sb = F.slice(b, 1, dim)
     return F.aggregate(
@@ -114,9 +83,11 @@ def dot_fold(a: Column, b: Column, dim: int) -> Column:
 
 
 def norm_fold(a: Column, dim: int) -> Column:
-    """`norm_unrolled`'s exact contract as a fold — see `dot_fold`
-    (including its whole-NULL-vector divergence: NULL here, 0.0 in the
-    unrolled form; all callers guard behind when(denom > 0))."""
+    """Euclidean norm over the first ``dim`` components, on `dot_fold`'s
+    terms (null elements 0.0, +0.0 seed, left-to-right order, NULL for a
+    null vector). Pair it with `dot_fold` at the same ``dim``: a
+    full-width norm under a dim-truncated dot silently DEFLATES every
+    score for vectors wider than ``dim`` (the r9 advisory finding)."""
     sa = F.slice(a, 1, dim)
     return F.sqrt(
         F.aggregate(
@@ -145,25 +116,6 @@ def auto_planes(n_rows: int, occupancy_target: int = 16) -> int:
             f"occupancy_target must be >= 1, got {occupancy_target}"
         )
     return max(2, min(24, math.ceil(math.log2(max(n_rows, 2) / occupancy_target))))
-
-
-def norm_unrolled(a: Column, dim: int) -> Column:
-    """Truncated-to-``dim`` companion of `dot_unrolled` — the SAME
-    contract (elements past ``dim`` ignored, shorter vectors
-    zero-padded), so a cosine assembled as
-    ``dot_unrolled(a, b, dim) / (norm_unrolled(a, dim) *
-    norm_unrolled(b, dim))`` is a true cosine over the first ``dim``
-    components for ANY input width. Pairing dot_unrolled with the
-    full-width `norm` instead silently DEFLATES scores for vectors
-    wider than ``dim`` (numerator truncated, denominator not) — the
-    r9 advisory finding: a near-dup scorer that under-reports is a
-    silent wrong answer in a safety audit. Same unrolled codegen
-    shape (no HOF fold) so it rides whole-stage codegen like the dot."""
-    out: Column = F.lit(0.0)
-    for i in range(dim):
-        v = F.coalesce(F.get(a, i).cast("double"), F.lit(0.0))
-        out = out + v * v
-    return F.sqrt(out)
 
 
 # ------------------------------------------------------------ brute force
@@ -361,7 +313,7 @@ def random_hyperplane_bucket(vec: Column, n_planes: int = 8, seed: int = 42, dim
     sequential zip_with/aggregate fold — deterministic element order and a
     compact expression tree that stays inside codegen limits.
 
-    DELIBERATELY a fold, not a `dot_unrolled`-style unroll (r9,
+    DELIBERATELY a fold, not an unrolled chain of multiply-adds (r9,
     measured): the unroll helps when ONE dot sits in a per-pair hot
     loop, but a bucket assignment evaluates n_planes×n_tables
     projections per ROW and the unrolled tree (planes×tables×dim

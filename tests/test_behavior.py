@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from notion_spark.operators import behavior as BEH
 from notion_spark.pipeline import dedup as D
 from notion_spark.pipeline import sketches as SK
+from tests import dedup_model as M
 
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
@@ -120,7 +121,7 @@ def test_levenshtein_threshold_boundary(spark):
     )
     got = {
         (r.id_a, r.id_b): r.distance
-        for r in D.levenshtein_pairs(df, block_key=F.col("src"), max_distance=1).collect()
+        for r in D.levenshtein_pairs_qgram(df, block_key=F.col("src"), max_distance=1).collect()
     }
     assert got == {(1, 2): 1}
 
@@ -133,7 +134,7 @@ def test_levenshtein_length_gap_prune_is_exact(spark):
     )
     got = {
         (r.id_a, r.id_b): r.distance
-        for r in D.levenshtein_pairs(df, block_key=F.col("src"), max_distance=2).collect()
+        for r in D.levenshtein_pairs_qgram(df, block_key=F.col("src"), max_distance=2).collect()
     }
     assert got == {(1, 2): 2}
 
@@ -522,11 +523,12 @@ class TestDecayedCounts:
 
 
 def test_levenshtein_length_bands_equal_unbanded(spark):
-    """r7 banded join: same-band + adjacent-band passes must reproduce
-    the unbanded result EXACTLY — including boundary pairs whose length
-    gap equals the bound (bands differ by exactly 1) and cross-band
-    pairs where the lower id sits in the higher band (id normalization
-    in the adjacent pass)."""
+    """The Ed-Join path's length-banded candidate joins (same band plus
+    the band above) must reproduce the unbanded model
+    (`tests/dedup_model.py`) EXACTLY — including boundary pairs whose
+    length gap equals the bound (bands differ by exactly 1) and
+    cross-band pairs where the lower id sits in the higher band (id
+    normalization in the adjacent pass)."""
     rows = []
     # lengths spread across many bands of width 3 (max_distance=3);
     # ids deliberately anti-correlated with length for half the docs
@@ -535,23 +537,17 @@ def test_levenshtein_length_bands_equal_unbanded(spark):
         rows.append((i if i % 2 == 0 else 1000 - i, "a" * ln, f"s{i % 3}"))
     df = spark.createDataFrame(rows, "doc_id long, text string, src string")
     banded = {
-        (r.id_a, r.id_b): r.distance
-        for r in D.levenshtein_pairs(
+        (r.id_a, r.id_b, r.distance)
+        for r in D.levenshtein_pairs_qgram(
             df, block_key=F.col("src"), max_distance=3
         ).collect()
     }
-    plain = {
-        (r.id_a, r.id_b): r.distance
-        for r in D.levenshtein_pairs(
-            df, block_key=F.col("src"), max_distance=3, length_bands=False
-        ).collect()
-    }
-    assert banded == plain and len(banded) > 0
+    assert banded == M.levenshtein_pairs(rows, 3) and len(banded) > 0
 
 
 def test_levenshtein_qgram_equals_bruteforce(spark):
-    """Blocking-free Ed-Join prefix filter must reproduce the brute
-    force exactly — including the adversarial low-diversity cases a
+    """Blocking-free Ed-Join prefix filter must reproduce the brute-force
+    model (`tests/dedup_model.py`) exactly — including the adversarial low-diversity cases a
     naive distinct-gram prefix filter misses: repetitive strings whose
     distinct q-gram count is below q*d ("aaaa" vs "aaba" share ZERO
     distinct 3-grams at distance 1), strings shorter than q, and
@@ -573,13 +569,8 @@ def test_levenshtein_qgram_equals_bruteforce(spark):
         (r.id_a, r.id_b): r.distance
         for r in D.levenshtein_pairs_qgram(df, max_distance=3, q=3).collect()
     }
-    brute = {
-        (r.id_a, r.id_b): r.distance
-        for r in D.levenshtein_pairs(
-            df, block_key=F.lit(1), max_distance=3, length_bands=False
-        ).collect()
-    }
-    assert got == brute
+    brute = M.levenshtein_pairs([(i, t, 0) for i, t in rows], 3)
+    assert {(a, b, d) for (a, b), d in got.items()} == brute
     assert (1, 2) in got and (5, 6) in got and (9, 10) in got and (3, 4) in got
 
 
@@ -620,8 +611,8 @@ def test_levenshtein_qgram_block_key_scopes_pairs(spark):
 
 
 def test_jaccard_prefix_equals_bruteforce(spark):
-    """AllPairs prefix filtering must reproduce brute-force exact
-    Jaccard — including boundary cases: exact duplicates (J=1), pairs
+    """AllPairs prefix filtering must reproduce the brute-force exact
+    Jaccard model (`tests/dedup_model.py`) — including boundary cases: exact duplicates (J=1), pairs
     straddling the threshold, size-filter edges (one set much smaller
     than the other), and single-shingle docs."""
     rows = [
@@ -640,32 +631,9 @@ def test_jaccard_prefix_equals_bruteforce(spark):
             (r.id_a, r.id_b): r.jaccard
             for r in D.jaccard_pairs_prefix(df, n=3, threshold=t).collect()
         }
-        brute = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in D.jaccard_pairs(
-                df, block_key=F.lit(1), n=3, threshold=t
-            ).collect()
-        }
-        assert got == brute, f"threshold {t}: {got} != {brute}"
+        brute = M.jaccard_pairs(rows, 3, t)
+        assert {(a, b, j) for (a, b), j in got.items()} == brute, f"threshold {t}"
     assert (1, 2) in got and (5, 6) in got  # t=1.0 exact dups survive
-
-
-def test_jaccard_prefix_block_key_scopes_pairs(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon", "s1"),
-            (2, "alpha beta gamma delta epsilon", "s1"),   # same block
-            (3, "alpha beta gamma delta epsilon", "s2"),   # CROSS block
-        ],
-        "doc_id long, text string, src string",
-    )
-    got = [
-        (r.id_a, r.id_b)
-        for r in D.jaccard_pairs_prefix(
-            df, threshold=0.8, block_key=F.col("src")
-        ).collect()
-    ]
-    assert got == [(1, 2)]
 
 
 def test_jaccard_prefix_hot_bucket_guard(spark):
@@ -728,7 +696,8 @@ def test_levenshtein_qgram_exact_dup_collapse(spark):
 
 
 def test_levenshtein_minhash_equals_bruteforce_on_near_dups(spark):
-    """The MinHash-candidate fallback must reproduce the brute force on
+    """The MinHash-candidate fallback must reproduce the brute-force model
+    (`tests/dedup_model.py`) on
     textually-close near-dups (high shingle Jaccard — the class the
     banding knee admits), including exact-dup groups (identical
     signatures share every bucket), while never emitting a pair past
@@ -748,13 +717,8 @@ def test_levenshtein_minhash_equals_bruteforce_on_near_dups(spark):
         (r.id_a, r.id_b): r.distance
         for r in D.levenshtein_pairs_minhash(df, max_distance=6).collect()
     }
-    brute = {
-        (r.id_a, r.id_b): r.distance
-        for r in D.levenshtein_pairs(
-            df, block_key=F.lit(1), max_distance=6, length_bands=False
-        ).collect()
-    }
-    assert got == brute
+    brute = M.levenshtein_pairs([(i, t, 0) for i, t in rows], 6)
+    assert {(a, b, d) for (a, b), d in got.items()} == brute
     assert got[(1, 2)] == 0 and got[(1, 3)] == 1 and (1, 5) not in got
 
 

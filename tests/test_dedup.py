@@ -3,6 +3,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from notion_spark.pipeline import dedup as D
+from tests import dedup_model as M
 
 
 def _docs(spark):
@@ -40,8 +41,8 @@ def test_exact_dedup(spark):
     assert sorted(r.doc_id for r in kept.collect()) == [1, 3, 4, 5]
 
 
-def test_jaccard_pairs_blocked(spark):
-    pairs = D.jaccard_pairs(_docs(spark), block_key=F.lit(1), threshold=0.5).collect()
+def test_jaccard_pairs_prefix_finds_near_dups(spark):
+    pairs = D.jaccard_pairs_prefix(_docs(spark), threshold=0.5).collect()
     found = {(r.id_a, r.id_b): r.jaccard for r in pairs}
     assert (1, 2) in found and found[(1, 2)] == 1.0
     assert (1, 3) in found and 0.5 <= found[(1, 3)] < 1.0
@@ -76,9 +77,7 @@ def _emb_df(spark):
 
 
 def test_embedding_dup_pairs_explicit_all_pairs(spark):
-    pairs = D.embedding_dup_pairs(
-        _emb_df(spark), threshold=0.95, block_key=None, allow_all_pairs=True
-    ).collect()
+    pairs = D.embedding_dup_pairs(_emb_df(spark), threshold=0.95, block_key=F.lit(1)).collect()
     assert [(r.id_a, r.id_b) for r in pairs] == [(1, 2)]
 
 
@@ -284,7 +283,8 @@ def test_connected_components_distributed_path_string_ids(spark):
 
 def test_embedding_dup_pairs_multitable_recall(spark):
     """Default 'auto' blocking is n_tables OR'd sign-LSH tables: recall
-    vs all-pairs on planted cosine~0.95 near-dups must be high (a single
+    vs the all-pairs model (`tests/dedup_model.py`) on planted
+    cosine~0.95 near-dups must be high (a single
     8-plane table catches only ~43% of such pairs)."""
     import math
     import random
@@ -303,10 +303,7 @@ def test_embedding_dup_pairs_multitable_recall(spark):
     from notion_spark.pipeline.dedup import embedding_dup_pairs
 
     exact = {
-        (r.id_a, r.id_b)
-        for r in embedding_dup_pairs(
-            df, threshold=0.9, block_key=None, allow_all_pairs=True
-        ).collect()
+        (a, b) for a, b, _ in M.embedding_pairs([(i, v, 0) for i, v in rows], 0.9, 64)
     }
     auto = {
         (r.id_a, r.id_b)
@@ -455,9 +452,7 @@ def test_embedding_dup_pairs_truncated_norm_matches_dot(spark):
         (3, [5.0, -1.0] + [0.0] * 6),
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = D.embedding_dup_pairs(
-        df, threshold=0.99, block_key=None, allow_all_pairs=True, dim=2
-    ).collect()
+    out = D.embedding_dup_pairs(df, threshold=0.99, block_key=F.lit(1), dim=2).collect()
     assert [(r.id_a, r.id_b, r.cosine) for r in out] == [(1, 2, 1.0)]
 
 

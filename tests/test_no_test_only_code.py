@@ -12,12 +12,14 @@ count: code only a test calls is deleted with its test, or listed in
 ALLOWED with the reason it stays.
 
 The same calls decide the options: every ``bool``-defaulted parameter of
-a public top-level function must be passed, by keyword or by position, at
-one of them, or be listed in ALLOWED_FLAGS with its reason. A flag no
-caller sets selects a code path only tests take. Public top-level names
-other than the registered queries are unique across the package, since
-a second definition with the same name would hide the first one's
-missing callers.
+a public top-level function, and every ``None``-defaulted one that the
+test of an ``if``, conditional expression or ``while`` in the function's
+own body reads (a ``None`` selector), must be passed, by keyword or by
+position, at one of them, or be listed in ALLOWED_FLAGS with its reason.
+An option no caller sets selects a code path only tests take. Public
+top-level names other than the registered queries are unique across the
+package, since a second definition with the same name would hide the
+first one's missing callers.
 
 A function in the package that persists a frame (``.persist(`` or
 ``.cache(``) binds it to a name and releases it with ``.unpersist()`` in
@@ -33,7 +35,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "notion_spark"
-REASONS = {"reference step", "test fake", "test metric", "oracle", "not yet reviewed"}
+REASONS = {"reference step", "test fake", "test metric", "not yet reviewed"}
 
 ALLOWED = {
     # steps of the reference sync with no package caller yet
@@ -44,19 +46,20 @@ ALLOWED = {
     "download_attachments": "reference step",
     "FixtureClient": "test fake",
     "recall_at_k": "test metric",
-    # reference forms that tests compare kept code against
-    "dot_unrolled": "oracle",
-    "norm_unrolled": "oracle",
-    "jaccard_pairs": "oracle",
-    "levenshtein_pairs": "oracle",
     "compact_files": "not yet reviewed",
     "compact_store": "not yet reviewed",
 }
 
 ALLOWED_FLAGS = {
-    # the all-pairs paths the blocked paths are checked against
-    "levenshtein_pairs.length_bands": "oracle",
-    "embedding_dup_pairs.allow_all_pairs": "oracle",
+    "asof_join.right_tiebreak": "not yet reviewed",
+    "compact_files.sort_cols": "not yet reviewed",
+    "fingerprint_overlap.fps_b": "not yet reviewed",
+    "heavy_hitters.capacity": "not yet reviewed",
+    "hot_key_split_join.hot_threshold": "not yet reviewed",
+    "phash_hamming_pairs.signatures": "not yet reviewed",
+    "pq_adc_topk.codes": "not yet reviewed",
+    "report_payload.attachments": "not yet reviewed",
+    "snapshot_diff.compare_cols": "not yet reviewed",
 }
 
 
@@ -171,9 +174,11 @@ def duplicate_names(package: list[ast.Module]) -> set[str]:
 
 
 def unset_flags(package: list[ast.Module], outside: list[ast.Module]) -> set[str]:
-    """``function.parameter`` for every bool-defaulted parameter of a
-    public top-level function that no call outside its own definition
-    passes, by keyword or by position."""
+    """``function.parameter`` for every option of a public top-level
+    function that no call outside its own definition passes, by keyword
+    or by position. An option is a bool-defaulted parameter, or a
+    None-defaulted one read by the test of an ``if``, conditional
+    expression or ``while`` in the function's own body."""
     params, flags = {}, set()
     for tree in package:
         for node in _public_defs(tree):
@@ -182,9 +187,18 @@ def unset_flags(package: list[ast.Module], outside: list[ast.Module]) -> set[str
             a = node.args
             positional = [p.arg for p in (*a.posonlyargs, *a.args)]
             params[node.name] = positional
+            tested = {
+                n.id
+                for t in _own_nodes(node)
+                if isinstance(t, (ast.If, ast.IfExp, ast.While))
+                for n in ast.walk(t.test)
+                if isinstance(n, ast.Name)
+            }
             defaults = zip(positional[len(positional) - len(a.defaults):], a.defaults)
             for name, d in (*defaults, *((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults))):
-                if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                if isinstance(d, ast.Constant) and (
+                    isinstance(d.value, bool) or (d.value is None and name in tested)
+                ):
                     flags.add(f"{node.name}.{name}")
     passed = set()
     scopes = [(node, node) for tree in package for node in tree.body]
@@ -299,6 +313,26 @@ def run(df):
     assert unset_flags(package, by_position) == {"scan.fast"}
     by_keyword = [ast.parse("m.scan(df, fast=False)")]
     assert unset_flags(package, by_keyword) == {"scan.strict"}
+
+
+def test_an_unset_none_selector_is_found_and_others_are_not():
+    package = [ast.parse("""
+def pick(df, key=None, cap=None, label=None, *, scope=None, width=None):
+    if key is not None:
+        df = df.filter(key)
+    n = 1 if cap is None else cap
+    while scope:
+        scope = None
+    clip = lambda w: 0 if width is None else w
+    return df, n, label, clip
+
+def run(df):
+    return pick(df, cap=3)
+""")]
+    # label is never tested, width only inside a nested lambda, and cap is set by run
+    assert unset_flags(package, []) == {"pick.key", "pick.scope"}
+    by_position = [ast.parse("pick(df, F.col('k'))")]
+    assert unset_flags(package, by_position) == {"pick.scope"}
 
 
 def test_a_name_defined_twice_is_found():

@@ -63,32 +63,6 @@ def test_truncate_text_length_bound(spark, s, width):
 
 @SETTINGS
 @given(
-    docs=st.lists(
-        st.tuples(st.integers(0, 50), st.text(alphabet="ab c", min_size=0, max_size=40)),
-        min_size=2,
-        max_size=6,
-        unique_by=lambda t: t[0],
-    )
-)
-def test_jaccard_pairs_bounds_and_symmetry(spark, docs):
-    """0 <= jaccard <= 1; identical texts (with >=3 tokens) score 1."""
-    from notion_spark.pipeline.dedup import jaccard_pairs
-
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = jaccard_pairs(df, block_key=F.lit(1), threshold=0.0).collect()
-    text_of = dict(docs)
-    for r in pairs:
-        assert 0.0 <= r.jaccard <= 1.0
-        assert r.id_a < r.id_b
-        if (
-            text_of[r.id_a].split() == text_of[r.id_b].split()
-            and len(text_of[r.id_a].split()) >= 3
-        ):
-            assert r.jaccard == 1.0
-
-
-@SETTINGS
-@given(
     tags=st.lists(
         st.text(alphabet=st.characters(blacklist_categories=("Cs",), blacklist_characters="\x00"), max_size=12),
         max_size=4,

@@ -5,6 +5,7 @@ import math
 from pyspark.sql import functions as F
 
 from notion_spark.pipeline import similarity as S
+from tests import dedup_model as M
 
 
 def test_cosine_math(spark):
@@ -519,13 +520,11 @@ def test_probe_masks_extend_past_hamming3():
     assert len(_probe_masks(4, 100)) == 16
 
 
-def test_norm_unrolled_truncates_like_dot_unrolled(spark):
-    from notion_spark.pipeline.similarity import dot_unrolled, norm_unrolled
-
+def test_norm_fold_truncates_like_dot_fold(spark):
     df = spark.createDataFrame([([3.0, 4.0, 100.0],)], ["v"])
     r = df.select(
-        norm_unrolled(F.col("v"), 2).alias("n"),
-        dot_unrolled(F.col("v"), F.col("v"), 2).alias("d"),
+        S.norm_fold(F.col("v"), 2).alias("n"),
+        S.dot_fold(F.col("v"), F.col("v"), 2).alias("d"),
     ).first()
     assert r.n == 5.0  # 100.0 beyond dim ignored, matching the dot
     assert r.d == 25.0
@@ -578,55 +577,45 @@ def test_hyperplane_table_buckets_bit_exact_vs_fold(spark, sf_dir):
             assert exp == got, (vid, t, exp, got)
 
 
-def test_dot_fold_bit_exact_vs_unrolled(spark, sf_dir):
-    """r12 opt pin: dot_fold/norm_fold must reproduce dot_unrolled/
-    norm_unrolled bit-exactly (same truncate/zero-pad contract, same
-    IEEE op order) — on the real corpus and on ragged widths."""
+def test_dot_fold_bit_exact_vs_model(spark, sf_dir):
+    """dot_fold/norm_fold must reproduce the plain-Python model's
+    left-to-right sums (`tests/dedup_model.py`) bit-exactly — truncated
+    at ``dim``, zero-padded, null elements 0.0 — on the real corpus and
+    on ragged widths. A whole-NULL vector folds to NULL (documented):
+    every caller guards behind when(denom > 0)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
-    pairs = a.join(b, F.col("ia") % 17 == F.col("ib") % 17)
-    diff = pairs.select(
-        (S.dot_unrolled(F.col("va"), F.col("vb"), 64)
-         != S.dot_fold(F.col("va"), F.col("vb"), 64)).alias("dd"),
-        (S.norm_unrolled(F.col("va"), 64) != S.norm_fold(F.col("va"), 64)).alias("nd"),
-    )
-    assert diff.filter("dd or nd").count() == 0
+    pairs = a.join(b, (F.col("ia") % 17 == F.col("ib") % 17) & (F.col("ia") % 5 == 0))
+    rows = pairs.select(
+        "va", "vb",
+        S.dot_fold(F.col("va"), F.col("vb"), 64).alias("d"),
+        S.norm_fold(F.col("va"), 64).alias("n"),
+    ).collect()
+    assert len(rows) > 1000
+    for r in rows:
+        assert r.d == M.dot(r.va, r.vb, 64) and r.n == M.norm(r.va, 64)
 
     ragged = spark.createDataFrame(
         [(1, [1.5, -2.25], [0.5] * 70),
          (2, [0.5] * 70, [1.0, 2.0, 3.0]),
          (3, [], [1.0]),
-         (4, [float("nan"), 1.0], [2.0, 3.0])],
+         (4, [float("nan"), 1.0], [2.0, 3.0]),
+         (5, [1.0, None, 2.0], [None, 3.0]),
+         (6, None, [1.0, 2.0])],
         "i int, x array<double>, y array<double>",
     )
     rows = ragged.select(
-        S.dot_unrolled(F.col("x"), F.col("y"), 64).alias("du"),
-        S.dot_fold(F.col("x"), F.col("y"), 64).alias("df"),
-        S.norm_unrolled(F.col("x"), 64).alias("nu"),
-        S.norm_fold(F.col("x"), 64).alias("nf"),
+        "x", "y",
+        S.dot_fold(F.col("x"), F.col("y"), 64).alias("d"),
+        S.norm_fold(F.col("x"), 64).alias("n"),
     ).collect()
-    import math as _m
-    for r in rows:
-        assert (r.du == r.df) or (_m.isnan(r.du) and _m.isnan(r.df)), r
-        assert (r.nu == r.nf) or (_m.isnan(r.nu) and _m.isnan(r.nf)), r
+    def same(got, want):
+        return got == want or (got is not None and math.isnan(got) and math.isnan(want))
 
-    # r13 (ADVICE r12): the ONE documented contract divergence — a
-    # whole-NULL vector folds to NULL where the unrolled form coalesces
-    # each element and yields 0.0; every caller guards behind
-    # when(denom > 0), and this row pins the divergence as documented
-    # behavior rather than letting it drift silently.
-    nullvec = spark.createDataFrame(
-        [(1, None, [1.0, 2.0])], "i int, x array<double>, y array<double>"
-    )
-    r = nullvec.select(
-        S.dot_unrolled(F.col("x"), F.col("y"), 64).alias("du"),
-        S.dot_fold(F.col("x"), F.col("y"), 64).alias("df"),
-        S.norm_unrolled(F.col("x"), 64).alias("nu"),
-        S.norm_fold(F.col("x"), 64).alias("nf"),
-    ).collect()[0]
-    assert r.du == 0.0 and r.nu == 0.0      # unrolled: coalesce-to-0.0
-    assert r.df is None and r.nf is None    # fold: NULL (documented)
+    for r in rows:
+        assert same(r.d, M.dot(r.x, r.y, 64)) and same(r.n, M.norm(r.x, 64)), r
+    assert rows[-1].d is None and rows[-1].n is None
 
 
 def test_hyperplane_table_buckets_rejects_nonfinite_elements(spark):
