@@ -567,7 +567,8 @@ def decayed_counts(
     also documents itself.
 
     ``now`` is an explicit timestamp (pass your batch watermark) —
-    determinism forbids wall-clock defaults. Events after ``now``
+    determinism forbids wall-clock defaults. It may also be a Column,
+    such as a scalar subquery over ``df``. Events after ``now``
     (late/future data) count at full weight, age clamped to 0.
 
     One map-side-combined groupBy; weights are per-row expressions on

@@ -15,10 +15,10 @@ iterations in SQL).
 
 Scale shape: one shuffle per iteration (the incoming-mass groupBy on
 dst); the scores⋈edges join broadcasts while scores are driver-sized
-and flips to sort-merge on real graphs automatically. Lineage is cut
-with localCheckpoint every few rounds exactly like
-`dedup.connected_components` — iteration count is the user's knob, so
-plans never grow unboundedly.
+and flips to sort-merge on real graphs automatically. Every iterative
+operator here builds ONE lazy plan: each round references the previous
+round once, so the plan grows linearly in the fixed round count and
+building it runs no Spark job.
 """
 
 from __future__ import annotations
@@ -36,7 +36,6 @@ def pagerank_scaled(
     damping_pct: int = 85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(node, score) after ``iterations`` rounds of integer-scaled
     PageRank over the DISTINCT directed edge set. score is bigint in
@@ -46,7 +45,11 @@ def pagerank_scaled(
         contrib(e)   = score(src) div outdeg(src)
         score'(node) = (SCALE * (100 - damping_pct)) div (100 * n)
                      + (damping_pct * sum(contrib(in-edges))) div 100
-    """
+
+    The node count n is a one-row aggregate cross-joined onto the node
+    set, so the seed score and the teleport base are plan expressions:
+    no count runs on the driver, and an empty edge set gives an empty
+    frame (no row ever divides by the zero count)."""
     if not 0 <= damping_pct <= 100:
         raise ValueError("damping_pct must be in [0, 100]")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
@@ -55,31 +58,23 @@ def pagerank_scaled(
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    # n is a scalar of the (bounded) node universe, not the data — the
-    # one count() here is the same driver-sized step connected
-    # components takes
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("score", F.lit(0).cast("bigint"))
+    sized = nodes.crossJoin(nodes.agg(F.count(F.lit(1)).alias("__n")))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    base = (SCALE * (100 - damping_pct)) // (100 * n)
-    scores = nodes.withColumn("score", F.lit(SCALE // n).cast("bigint"))
-    for i in range(iterations):
+    base = F.expr(f"{SCALE * (100 - damping_pct)} div (100 * __n)")
+    scores = sized.select("node", F.expr(f"{SCALE} div __n").alias("score"))
+    for _ in range(iterations):
         contrib = (
             e.join(scores, e["src"] == scores["node"])
             .join(deg, "src")
             .select(F.col("dst").alias("node"), F.expr("score div deg").alias("c"))
         )
         inc = contrib.groupBy("node").agg(F.sum("c").alias("inc"))
-        scores = nodes.join(inc, "node", "left").select(
+        scores = sized.join(inc, "node", "left").select(
             "node",
             (
-                F.lit(base)
-                + F.expr(f"({damping_pct} * coalesce(inc, 0)) div 100")
+                base + F.expr(f"({damping_pct} * coalesce(inc, 0)) div 100")
             ).cast("bigint").alias("score"),
         )
-        if (i + 1) % checkpoint_every == 0:
-            scores = scores.localCheckpoint(eager=False)
     return scores
 
 
@@ -88,7 +83,6 @@ def label_propagation(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(node, label) communities by DETERMINISTIC synchronous label
     propagation (Raghavan et al. 2007's LPA, made engine-exact): every
@@ -113,11 +107,8 @@ def label_propagation(
     Scale shape: per round, ONE edge⋈labels equi-join (shuffle keyed on
     the neighbor id, linear in |E|), one map-side-combined
     (node, label) count, and a per-node top-1 window over that node's
-    distinct neighbor labels (frame bounded by degree). Lineage is cut
-    with localCheckpoint every ``checkpoint_every`` rounds, same as
-    `pagerank_scaled`."""
-    from pyspark.sql.window import Window
-
+    distinct neighbor labels (frame bounded by degree). Each round reads
+    the previous round's labels once, so the plan grows linearly."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     und = (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -130,7 +121,7 @@ def label_propagation(
         )
     )
     w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
-    for i in range(iterations):
+    for _ in range(iterations):
         nb = und.join(
             labels.select(F.col("node").alias("dst"), "label"), "dst"
         ).select(F.col("src").alias("node"), "label")
@@ -140,8 +131,6 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", "label")
         )
-        if (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=False)
     return labels
 
 
@@ -241,7 +230,6 @@ def k_core(
     edges: DataFrame,
     k: int = 2,
     iterations: int = 3,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(node, degree) for nodes surviving ``iterations`` rounds of
     k-core peeling (Seidman 1983 coreness, the Batagelj–Zaveršnik
@@ -255,39 +243,28 @@ def k_core(
     the edge set, and the oracle unrolls the identical rounds in SQL).
     ``degree`` is the node's degree in the final surviving subgraph.
 
-    Scale shape: per round, one groupBy for degrees and two semi-joins
-    (both edge endpoints against the survivor set) — all keyed on node
-    id, linear in |E|; lineage cut with localCheckpoint every
-    ``checkpoint_every`` rounds.
-
-    r13: ``checkpoint_every`` defaults to EVERY round, not every 3.
-    Each round references the previous round's frame THREE times (the
-    degree aggregate plus both semi-join survivor sets), so an
-    uncheckpointed unroll grows the lazy plan 3^i-fold and the driver
-    pays Catalyst analysis per copy — the benched query's profile read
-    1.0 s of total executor time against a 6 s wall (pure driver
-    planning, c8/c32 ratio 0.99). Per-round checkpoints keep the plan
-    linear: measured 6.0 -> 3.1 s on graph_kcore at sf0.1 (A/B,
-    interleaved). Within one round AQE ReusedExchange still dedups the
-    three references (pinned in tests/test_plans.py). The same cadence
-    measured SLOWER on label_propagation (3.7 -> 5.8 s warm), whose
-    rounds reference the previous frame once — linear growth, so the
-    checkpoint job overhead buys nothing; its default stays 5."""
+    Scale shape: the undirected edge set is symmetric, so a node's
+    degree is both its count over the ``s`` partition and over the
+    ``d`` partition. Each round keeps an edge when both window counts
+    are >= k, which removes every edge of a peeled node and keeps the
+    set symmetric. Two node-keyed window shuffles per round, linear in
+    |E|; each round reads the previous one once, so the plan grows
+    linearly in ``iterations``."""
     e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
     und = (
         e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .filter(F.col("s") != F.col("d"))
         .distinct()
     )
+    by_s, by_d = Window.partitionBy("s"), Window.partitionBy("d")
     alive = und
-    for i in range(iterations):
-        degs = alive.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-        keep = degs.filter(F.col("deg") >= k).select("s")
-        alive = alive.join(keep, "s", "left_semi").join(
-            keep.select(F.col("s").alias("d")), "d", "left_semi"
+    for _ in range(iterations):
+        alive = (
+            alive.withColumn("__ds", F.count(F.lit(1)).over(by_s))
+            .withColumn("__dd", F.count(F.lit(1)).over(by_d))
+            .filter((F.col("__ds") >= k) & (F.col("__dd") >= k))
+            .select("s", "d")
         )
-        if (i + 1) % checkpoint_every == 0:
-            alive = alive.localCheckpoint(eager=False)
     return (
         alive.groupBy("s")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))

@@ -129,9 +129,9 @@ PLAN_RECERT: tuple[str, ...] = (
     # column, a per-doc cutoff aggregate and an ArrowEvalPython node:
     "dedup_levenshtein_pairs",
     "dedup_levenshtein_qgram",
-    # r13: k_core checkpoints every peel round (linear plan instead of
-    # the 3^i unroll; final-stage plan unchanged but execution
-    # restructured):
+    # r13: k_core checkpointed every peel round; since then each round
+    # keeps an edge by two degree windows over the symmetric edge set
+    # (one lazy plan, linear in the rounds, no checkpoint):
     "graph_kcore",
     # r9 plan swaps the r9 driver window missed (certified old plans):
     # r10 plan swaps: representative collapse + scalar-subquery mass
@@ -171,6 +171,14 @@ PLAN_RECERT: tuple[str, ...] = (
     "behavior_covisitation_lift",
     "curation_corpus_e2e",
     "dedup_cluster_collapse",
+    # Lazy plan builders: counts as cross-joined one-row aggregates, the
+    # max as a scalar subquery, the pruned vocabulary shared by exchange
+    # reuse (r13 is the newest driver artifact and predates the swaps
+    # above: no fold):
+    "graph_pagerank_event_types",
+    "text_cooccurrence_pruned",
+    "heavy_hitters_users",
+    "behavior_decayed_counts",
 )
 
 

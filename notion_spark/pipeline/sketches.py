@@ -618,8 +618,10 @@ def heavy_hitters(df: DataFrame, col: str, k: int, capacity: int | None = None) 
     contain every true heavy hitter since the total undercount
     n/(8k+1) < n/k. Pass 2: exact recount of candidates only (semi-join
     then one map-side-combined groupBy), threshold applied with integer
-    math (count*k >= n). Unlike one-pass sketch answers the output is
-    exact: no false positives, no false negatives.
+    math (count*k >= n, with the non-null count n cross-joined in as a
+    one-row aggregate, so building the plan runs no job). Unlike
+    one-pass sketch answers the output is exact: no false positives,
+    no false negatives.
 
     Scale shape: no full-cardinality shuffle ever happens — the only
     groupBys run over candidate values (bounded by capacity x
@@ -631,11 +633,6 @@ def heavy_hitters(df: DataFrame, col: str, k: int, capacity: int | None = None) 
         # threshold or the no-false-negative guarantee silently breaks
         raise ValueError(f"capacity ({capacity}) must be >= k ({k})")
     capacity = capacity if capacity is not None else 8 * k
-    n = df.filter(F.col(col).isNotNull()).count()
-    if n == 0:
-        return (
-            df.sparkSession.createDataFrame([], f"value {df.select(col).schema[0].dataType.simpleString()}, freq bigint")
-        )
     cands = (
         mg_partition_summaries(df, col, capacity)
         .groupBy("value")
@@ -643,6 +640,7 @@ def heavy_hitters(df: DataFrame, col: str, k: int, capacity: int | None = None) 
         .select("value")
     )
     vals = df.select(F.col(col).alias("value")).filter(F.col("value").isNotNull())
+    n = vals.agg(F.count(F.lit(1)).alias("__n"))
     recount_src = vals.join(F.broadcast(cands), "value", "left_semi")
     # Float NaN can't survive the Arrow round-trip out of the MG summary
     # (pandas NaN -> Arrow null), so it is recounted directly — it is a
@@ -653,6 +651,8 @@ def heavy_hitters(df: DataFrame, col: str, k: int, capacity: int | None = None) 
         recount_src
         .groupBy("value")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .filter(F.col("freq") * k >= F.lit(n))
+        .crossJoin(n)
+        .filter(F.col("freq") * k >= F.col("__n"))
+        .select("value", "freq")
         .orderBy(F.desc("freq"), F.asc("value"))
     )

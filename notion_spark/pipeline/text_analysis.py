@@ -691,13 +691,10 @@ def cooccurrence_counts(
     )
     w = Window.orderBy(F.desc("cnt"), F.asc("tok_a"), F.asc("tok_b"))
     if min_count is not None and min_count > 1:
-        # r7 restructure (measured at sf1: the r6 shape recomputed the
-        # count pass once PER JOIN SIDE — Catalyst sees two independent
-        # broadcast subtrees — and still paired on strings):
-        #   1. ONE count pass builds the kept vocab; localCheckpoint
-        #      cuts the lineage so both pair-join sides reuse the same
-        #      materialized dictionary instead of re-counting the
-        #      corpus.
+        # The pruned path:
+        #   1. ONE count pass builds the kept vocab. The encode join
+        #      and both id->string maps read the same vocab subtree,
+        #      and exchange reuse runs its count shuffle once.
         #   2. The count pass DOUBLES AS A DICTIONARY ENCODE: each kept
         #      token gets a dense integer id (rank by cnt desc, tok asc
         #      — deterministic), the positional stream carries ids, and
@@ -729,7 +726,7 @@ def cooccurrence_counts(
         vw = Window.orderBy(F.desc("__cnt"), F.asc("tok"))
         vocab = counts.select(
             "tok", guard(F.row_number().over(vw), "long").alias("tid")
-        ).localCheckpoint(eager=False)
+        )
         enc = toks.join(F.broadcast(vocab), "tok").select("id", "pos", "tid")
         left = enc.select(
             "id",

@@ -143,15 +143,19 @@ def test_heavy_hitters_exact_vs_bruteforce_multi_partition(spark):
     # skewed values spread over many partitions; tiny capacity forces
     # real Misra-Gries shrinking inside each partition
     vals = [1] * 400 + [2] * 200 + [3] * 90 + list(range(100, 410))
-    df = spark.createDataFrame([(v,) for v in vals], "v long").repartition(8)
     k = 10  # threshold n/k = 100
-    got = {(r.value, r.freq) for r in SK.heavy_hitters(df, "v", k=k, capacity=12).collect()}
-    brute = {
-        (r.v, r.cnt)
-        for r in df.groupBy("v").agg(F.count(F.lit(1)).alias("cnt")).collect()
-        if r.cnt * k >= len(vals)
-    }
-    assert got == brute
+    # an empty and an all-null column have no heavy hitter; nulls never
+    # count toward n
+    for rows in ([], [None] * 30, vals + [None] * 300, vals):
+        df = spark.createDataFrame([(v,) for v in rows], "v long").repartition(8)
+        got = {(r.value, r.freq) for r in SK.heavy_hitters(df, "v", k=k, capacity=12).collect()}
+        n = sum(v is not None for v in rows)
+        brute = {
+            (r.v, r.cnt)
+            for r in df.groupBy("v").agg(F.count(F.lit(1)).alias("cnt")).collect()
+            if r.v is not None and r.cnt * k >= n
+        }
+        assert got == brute, len(rows)
     assert (1, 400) in got and (2, 200) in got and (3, 90) not in got
 
 
@@ -168,6 +172,10 @@ def test_heavy_hitters_nan_is_a_real_value(spark):
     got = {r.value if r.value == r.value else "nan": r.freq
            for r in SK.heavy_hitters(df, "v", k=4).collect()}
     assert got == {"nan": 60, 1.0: 30}
+    # a float column with no non-null value has none, NaN recount included
+    for rows in ([], [(None,)] * 10):
+        df = spark.createDataFrame(rows, "v double")
+        assert SK.heavy_hitters(df, "v", k=4).collect() == []
 
 
 class TestLinearAttribution:

@@ -4,8 +4,9 @@ Every operator returns a lazy plan; a subtree that several consumers
 read is shared by the plan's exchange reuse, not by a persist that
 outlives the call. The queries below are the ones whose operators share
 subtrees (near-dup pairs, co-visitation lift, the curation preset, the
-ccnet buckets); they run in one session with no cache clearing between
-them, so a frame one of them left behind would show up after it.
+ccnet buckets, the graph rounds, the pruned co-occurrence vocabulary);
+they run in one session with no cache clearing between them, so a frame
+or a checkpointed RDD one of them left behind would show up after it.
 """
 
 from __future__ import annotations
@@ -23,6 +24,9 @@ SHARED_SUBTREE_QUERIES = (
     "dedup_cluster_collapse",
     "dedup_levenshtein_qgram",
     "dedup_levenshtein_pairs",
+    "graph_kcore",
+    "graph_pagerank_event_types",
+    "text_cooccurrence_pruned",
 )
 
 

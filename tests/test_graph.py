@@ -3,7 +3,15 @@ implementation of the same recurrence, and sane ranking behavior."""
 
 from __future__ import annotations
 
+import random
+
 from notion_spark.operators.graph import SCALE, pagerank_scaled
+
+
+def _random_graph(seed: int, nodes: int, edges: int) -> list[tuple[int, int]]:
+    """Seeded random edge list, with repeats, reversals and self-loops."""
+    rng = random.Random(seed)
+    return [(rng.randrange(nodes), rng.randrange(nodes)) for _ in range(edges)]
 
 
 def _ref_pagerank(edges, iterations=3, damping=85):
@@ -34,6 +42,13 @@ def test_pagerank_matches_integer_reference(spark):
     df = spark.createDataFrame(EDGES, "src string, dst string")
     got = {r.node: r.score for r in pagerank_scaled(df, iterations=3).collect()}
     assert got == _ref_pagerank(EDGES, 3)
+    edges = _random_graph(7, 25, 60)
+    df = spark.createDataFrame(edges, "src int, dst int")
+    got = {r.node: r.score for r in pagerank_scaled(df, iterations=12).collect()}
+    assert got == _ref_pagerank(edges, 12)
+    # no node: the in-plan node count is 0 and no row divides by it
+    empty = spark.createDataFrame([], "src int, dst int")
+    assert pagerank_scaled(empty, iterations=12).collect() == []
 
 
 def test_pagerank_ranking_and_determinism(spark):
@@ -152,6 +167,15 @@ def test_kcore_matches_reference_peel(spark):
     for k, rounds in [(2, 1), (2, 3), (3, 2)]:
         got = {r.node: r.degree for r in k_core(df, k=k, iterations=rounds).collect()}
         assert got == _ref_kcore(edges, k, rounds), (k, rounds)
+    # seeded random graphs that still lose nodes in round six
+    for seed, k, m in [(4, 3, 70), (4, 4, 110)]:
+        edges = _random_graph(seed, 40, m)
+        df = spark.createDataFrame(edges, "src int, dst int")
+        for rounds in range(1, 7):
+            got = {r.node: r.degree for r in k_core(df, k=k, iterations=rounds).collect()}
+            assert got == _ref_kcore(edges, k, rounds), (seed, k, rounds)
+    empty = spark.createDataFrame([], "src int, dst int")
+    assert k_core(empty, k=2, iterations=3).collect() == []
 
 
 def test_kcore_peels_iteratively_not_once(spark):

@@ -16,6 +16,11 @@ pin the regression cases. Schema checks only trigger Catalyst analysis,
 not execution, so the sweep over the full registry stays cheap; the
 dtype half needs real execution on both engines and lives in
 scripts/check_parity.py (run per family after touching a query).
+
+The same sweep pins that building a query's plan runs no Spark job,
+apart from the one schema-inference job each ``read_table`` call runs
+(``spark.read.parquet`` without a schema) and the queries named in
+BUILD_JOBS with their reasons.
 """
 
 from __future__ import annotations
@@ -25,21 +30,65 @@ import pytest
 from pyspark.sql.types import ArrayType, BinaryType, MapType, NullType, StructType
 
 from notion_spark import parity
+from tests.fixtures import count_jobs
 
 BANNED = (ArrayType, MapType, StructType, BinaryType, NullType)
 
+_CC = (
+    "connected_components counts and collects the edge list to pick its"
+    " regime, then loops to a runtime fixpoint"
+)
+_AUTO = "the auto LSH planes and blocks are sized from a row count"
+BUILD_JOBS = {
+    "dedup_cluster_collapse": _CC,
+    "dedup_cluster_keep_best": _CC,
+    "curation_corpus_e2e": _CC,
+    "sim_ann_ivf": "IVF trainer: collects the seeds, then once per Lloyd iteration",
+    "sim_ann_pq": "PQ trainer: collects the seeds, then once per Lloyd iteration",
+    "sim_ann_ivfpq": "IVF and PQ trainers",
+    "sim_ann_pq_probe": "collects the query lookup tables of the PQ codes",
+    "sim_ann_ivfpq_probe": "collects the query lookup tables of the PQ codes",
+    "sim_ann_ivf_partitioned": "writes the partitioned layout to a temporary"
+    " directory and collects the result before removing it",
+    "layout_bucketed_join": "writes the bucketed tables and collects the join"
+    " before dropping them",
+    "behavior_basket_lift": "eager localCheckpoint of the basket items (a lazy one raced at sf10)",
+    "dedup_semantic_pairs": "collects four seed vectors as literal centroids",
+    "dedup_embedding_pairs": _AUTO,
+    "curation_semantic_split_leakage_lsh": _AUTO,
+}
 
-def test_all_parity_outputs_driver_hashable(spark, sf_dir):
-    """Every oracle-bearing registration emits only atomic columns."""
-    bad = {}
-    for name, fn in parity.QUERIES.items():
-        if name not in parity.ORACLES:
-            continue  # rows-only rows are counted, never canonicalized
-        schema = fn(spark, sf_dir).schema
+
+def test_all_parity_outputs_driver_hashable(spark, sf_dir, monkeypatch):
+    """Every registration emits only atomic columns, and building it runs
+    no Spark job beyond one per ``read_table`` call unless BUILD_JOBS
+    names it."""
+    import sys
+
+    from notion_spark.sources.io import read_table
+
+    reads = {}
+
+    def counted(*args, **kwargs):
+        reads[current] = reads.get(current, 0) + 1
+        return read_table(*args, **kwargs)
+
+    for module in list(sys.modules.values()):
+        name = getattr(module, "__name__", "")
+        if name.startswith("notion_spark") and getattr(module, "read_table", None) is read_table:
+            monkeypatch.setattr(module, "read_table", counted)
+    bad, extra = {}, {}
+    for current, fn in parity.QUERIES.items():
+        schema, jobs = count_jobs(spark, lambda: fn(spark, sf_dir).schema)
+        extra[current] = jobs - reads.get(current, 0)
         cols = [f.name for f in schema.fields if isinstance(f.dataType, BANNED)]
         if cols:
-            bad[name] = cols
+            bad[current] = cols
     assert not bad, f"driver-unhashable output columns: {bad}"
+    eager = {n: j for n, j in extra.items() if j > 0 and n not in BUILD_JOBS}
+    assert not eager, f"jobs run at build, beyond one per read_table: {eager}"
+    lazy = sorted(n for n in BUILD_JOBS if extra[n] <= 0)
+    assert not lazy, f"BUILD_JOBS names that now build without a job: {lazy}"
 
 
 def test_rotation_never_front_loads_unhashable(spark, sf_dir):

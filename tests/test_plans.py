@@ -826,39 +826,39 @@ def test_r13_iterative_consumers_no_inmemory_reuse_pinned(spark, sf_dir):
         static = plan_of(df)
         assert "InMemoryRelation" not in static, q
         assert "InMemoryTableScan" not in static, q
-    # ReusedExchange evidence: the registered queries checkpoint their
-    # last round (lineage truncates to Scan ExistingRDD, hiding the
-    # reuse from the final plan string), so probe the same operator
-    # shape checkpoint-free — two unrolled k_core rounds over the same
-    # covisitation pair subplan. collect() executes THIS dataframe's
-    # own query execution (count() would plan a separate one), after
-    # which the adaptive plan must show the pair subplan deduped.
-    from pyspark.sql import functions as F
-
-    from notion_spark.operators.behavior import covisitation_counts
-    from notion_spark.operators.graph import k_core
-    from notion_spark.parity._base import read_table
-
-    ev = read_table(spark, sf_dir, "events").withColumn(
-        "item", F.get_json_object("props", "$.k").cast("int")
-    )
-    pairs = covisitation_counts(
-        ev, "user_id", "item", ("ts", "event_id"), cap=50, min_count=2
-    )
-    # checkpoint_every=5 > iterations: no lineage cut, so the reuse is
-    # visible in THIS dataframe's final plan (the registered query
-    # checkpoints every round since r13 — its reuse lives inside the
-    # round-1 checkpoint job, invisible from the returned plan string)
-    probe = k_core(
-        pairs.select(F.col("item_a").alias("src"), F.col("item_b").alias("dst")),
-        k=3,
-        iterations=2,
-        checkpoint_every=5,
-    )
-    probe.collect()
-    final = plan_of(probe)
+    # collect() executes THIS dataframe's own query execution (count()
+    # would plan a separate one), after which the adaptive plan must
+    # show the pair subplan deduped
+    kcore = parity.QUERIES["graph_kcore"](spark, sf_dir)
+    kcore.collect()
+    final = plan_of(kcore)
     assert "isFinalPlan=true" in final
     assert "ReusedExchange" in final, (
-        "k_core probe: executed adaptive plan shows no exchange reuse — "
+        "graph_kcore: executed adaptive plan shows no exchange reuse — "
         "the unrolled rounds are recomputing the pair subplan"
     )
+
+
+def test_graph_rounds_grow_the_plan_linearly_and_build_without_jobs(spark):
+    """Each round of k_core, pagerank_scaled and label_propagation reads
+    the previous round once: the plan's shuffle exchanges grow by the
+    same number per added round (a round that read its predecessor
+    three times would triple them), so no lineage cut is needed, and
+    building twelve rounds runs no Spark job."""
+    import re
+
+    from notion_spark.operators.graph import k_core, label_propagation, pagerank_scaled
+    from tests.fixtures import count_jobs
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], "src int, dst int")
+    builders = {
+        "k_core": lambda n: k_core(edges, k=2, iterations=n),
+        "pagerank_scaled": lambda n: pagerank_scaled(edges, iterations=n),
+        "label_propagation": lambda n: label_propagation(edges, iterations=n),
+    }
+    for name, build in builders.items():
+        shuffles = [len(re.findall(r"\bExchange ", plan_of(build(n)))) for n in (1, 2, 3, 4)]
+        steps = {b - a for a, b in zip(shuffles, shuffles[1:])}
+        assert len(steps) == 1 and steps.pop() > 0, (name, shuffles)
+        _, jobs = count_jobs(spark, lambda: build(12).schema)
+        assert jobs == 0, name
