@@ -4,7 +4,7 @@ A from-scratch re-expression of the capabilities of the reference ETL +
 analytics + reporting pipeline (alsyefs/notion, see SURVEY.md) as an
 idiomatic PySpark library:
 
-- ``notion_spark.schema``      — canonical typed data model (tasks/blocks/comments/attachments)
+- ``notion_spark.schema``      — canonical typed data model (tasks/blocks/comments)
 - ``notion_spark.normalize``   — the normalization operator library (SURVEY §2.3 P1-P12)
 - ``notion_spark.operators``   — filters/joins/aggregates/sorts/incremental (§2.4-2.9)
 - ``notion_spark.functions``   — scalar string/date column functions (§2.10)

@@ -4,10 +4,15 @@
     python -m notion_spark analyze  --cache-dir out/ [--now 2026-01-15T00:00:00]
     python -m notion_spark report   --cache-dir out/ --period weekly
 
-`pipeline` ≙ `python app.py` (EP1): ingest page snapshots → incremental
-cache merge → CSV/JSON export, analysis text, PNG charts and one report
-PDF per period, all written to ``--cache-dir``; prints one JSON summary
-line.
+`pipeline` ≙ `python app.py` (EP1) minus its API crawl: ingest page
+snapshots → incremental cache merge → CSV/JSON export, analysis text, PNG
+charts and one report PDF per period, all written to ``--cache-dir``;
+prints one JSON summary line. A snapshot holds page properties only and
+the command calls no API, so every row it stores has an empty
+``body_content`` and ``comments``: the same workspace crawled through
+`HttpNotionClient` (blocks and comments frames passed to
+`assemble_tasks`) stores both. A sync through the client is the open
+change (ROADMAP item 1).
 `analyze` ≙ `python -m backend.analyze_pages` (EP2) — prints the analysis
 text.
 `report`  ≙ `python -m backend.generate_reports` (EP3) — prints one
@@ -102,9 +107,12 @@ def main(argv: list[str] | None = None) -> int:
             )
         )
     else:
-        # analyze/report: the store read, cached for the sections that all
-        # read it and released however the command ends
-        store = spark.read.parquet(cache).cache()
+        from notion_spark.schema import TASKS_SCHEMA
+
+        # analyze/report: the store read with its declared schema (no
+        # inference job), cached for the sections that all read it and
+        # released however the command ends
+        store = spark.read.schema(TASKS_SCHEMA).parquet(cache).cache()
         try:
             if args.cmd == "analyze":
                 from notion_spark.normalize import normalize_for_analysis

@@ -2,7 +2,7 @@
 
 The reference configures everything through module globals loaded from .env
 (reference backend/globals.py:86-104): tag filters, body-content inclusion,
-truncation limits, readable attachment extensions, and report periods. Here
+truncation limits and report periods. Here
 the same knobs are a frozen dataclass injected into query builders, so two
 configs can coexist in one SparkSession and tests never mutate global state.
 """
@@ -27,10 +27,6 @@ PRIORITY_SCORES = {
 }
 UNKNOWN_PRIORITY_SCORE = 5
 
-# Attachment extensions whose text content is inlined into reports
-# (reference backend/globals.py:104, generate_reports.py:256-305).
-READABLE_EXTENSIONS = (".txt", ".md", ".py", ".json", ".log", ".html", ".css", ".js")
-
 REPORT_PERIOD_DAYS = {
     # reference backend/generate_reports.py:365-385
     "daily": 1,
@@ -50,14 +46,9 @@ class EngineConfig:
     filter_tags: tuple[str, ...] = ()
     # INCLUDE_BODY_CONTENT / INCLUDE_UNCATEGORIZED_TASKS_ANALYSIS etc.
     include_body_content: bool = False
-    # INCLUDE_ATTACHMENTS (globals.py:93): inline readable attachment
-    # content into report task bodies (generate_reports.py:256-305).
-    include_attachments: bool = False
     include_uncategorized: bool = True
     # BODY_CONTENT_MAX_LINES (globals.py:102; generate_reports.py:97-102).
     body_content_max_lines: int = 3
-    readable_extensions: tuple[str, ...] = READABLE_EXTENSIONS
-    attachment_content_cap: int = 1000
 
     def with_tags(self, *tags: str) -> "EngineConfig":
         from dataclasses import replace

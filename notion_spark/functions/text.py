@@ -82,15 +82,6 @@ def sanitize_filename(col: Column | str, max_len: int = 255) -> Column:
     return F.substring(F.translate(c, _FORBIDDEN, "_" * len(_FORBIDDEN)), 1, max_len)
 
 
-def sanitize_filename_py(filename: str, max_len: int = 255) -> str:
-    """Driver-side twin of `sanitize_filename` for connector paths (the
-    attachment downloader names files before anything reaches a DataFrame).
-    Kept byte-identical to the Column version; tests assert the two agree."""
-    for ch in _FORBIDDEN:
-        filename = filename.replace(ch, "_")
-    return filename[:max_len]
-
-
 # ---------------------------------------------------------------- X11
 def truncate_lines(col: Column | str, max_lines: int, marker: str = "(Truncated)") -> Column:
     """Keep the first ``max_lines`` newline-separated lines, appending a

@@ -24,19 +24,6 @@ def strip_column_names(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.strip() for c in df.columns])
 
 
-# ---------------------------------------------------------------- P2
-def pad_schema(df: DataFrame, expected: dict[str, str]) -> DataFrame:
-    """Create missing expected columns as typed nulls
-    (analyze_pages.py:63-78; generate_reports.py:138-152).
-
-    ``expected`` maps column name -> Spark DDL type string.
-    """
-    missing = [
-        F.lit(None).cast(t).alias(c) for c, t in expected.items() if c not in df.columns
-    ]
-    return df.select("*", *missing) if missing else df
-
-
 # ---------------------------------------------------------------- P3
 def default_nulls(df: DataFrame, defaults: dict[str, str]) -> DataFrame:
     """Null-coalescing display defaults (analyze_pages.py:137-140:
@@ -107,42 +94,6 @@ def priority_score(col: str = "priority") -> Column:
 
 def with_priority_score(df: DataFrame, col: str = "priority", out: str = "priority_score") -> DataFrame:
     return df.withColumn(out, priority_score(col))
-
-
-# ---------------------------------------------------------------- P8
-def rehydrate_list_column(df: DataFrame, col: str, element_type: str = "string") -> DataFrame:
-    """Parse stringified lists from CSV into real arrays — faithful to the
-    reference's ast.literal_eval (analyze_pages.py:81-89;
-    generate_reports.py:179-183), which must accept BOTH dialects on disk:
-    Python repr (single quotes, repr quote-switching around apostrophes)
-    and our JSON export. A naive quote-swap + from_json corrupts elements
-    containing quotes, so this cold ingest path uses an Arrow-batched
-    pandas UDF running literal_eval itself; unparseable input -> empty
-    list (the reference's except-branch).
-    """
-    import ast
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cast = int if element_type in ("long", "int", "bigint") else str
-
-    @pandas_udf(f"array<{element_type}>")
-    def parse(s):
-        def one(v):
-            if v is None:
-                return []
-            try:
-                out = ast.literal_eval(v)
-            except (ValueError, SyntaxError):
-                return []
-            if not isinstance(out, list):
-                return []
-            return [None if x is None else cast(x) for x in out]
-
-        return s.map(one)
-
-    return df.withColumn(col, parse(F.col(col)))
 
 
 # ---------------------------------------------------------------- P9

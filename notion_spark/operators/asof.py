@@ -32,7 +32,6 @@ def asof_join(
     right_cols: list[str] | None = None,
     prefix: str = "asof_",
     how: str = "inner",
-    right_tiebreak: str | None = None,
 ) -> DataFrame:
     """For each left row: the latest right row with right_ts <= left_ts
     and matching key (inclusive at equality, like DuckDB/kdb ASOF).
@@ -40,10 +39,8 @@ def asof_join(
     ``left_id`` must be a unique left key (joins the enriched payload
     back). Right payload columns arrive as ``prefix``-renamed columns.
     how='left' keeps unmatched left rows with null payload; 'inner'
-    drops them. ``right_tiebreak`` (a unique right column) makes the
-    match deterministic when several right rows share a timestamp — the
-    highest value in STRING order wins; without it, equal-ts right rows
-    are picked arbitrarily.
+    drops them. When several right rows share a timestamp, the one
+    matched is picked arbitrarily.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"asof_join supports inner/left, not {how!r}")
@@ -51,9 +48,6 @@ def asof_join(
         c for c in right.columns if c not in (key, right_ts)
     ]
     payload = F.struct(F.col(right_ts).alias(right_ts), *[F.col(c) for c in rcols])
-    tb_r = (
-        F.col(right_tiebreak).cast("string") if right_tiebreak else F.lit("")
-    )
     # null timestamps sort FIRST and would otherwise carry their payload
     # onto every left row — they can never satisfy right_ts <= left_ts
     right = right.filter(F.col(right_ts).isNotNull())
@@ -61,7 +55,6 @@ def asof_join(
         F.col(key).alias("__k"),
         F.col(right_ts).alias("__ts"),
         F.lit(0).alias("__side"),
-        tb_r.alias("__tb"),
         F.lit(None).cast("string").alias("__lid"),
         payload.alias("__p"),
     )
@@ -69,13 +62,12 @@ def asof_join(
         F.col(key).alias("__k"),
         F.col(left_ts).alias("__ts"),
         F.lit(1).alias("__side"),
-        F.lit("").alias("__tb"),
         F.col(left_id).cast("string").alias("__lid"),
         F.lit(None).cast(r.schema["__p"].dataType).alias("__p"),
     )
     w = (
         Window.partitionBy("__k")
-        .orderBy("__ts", "__side", "__tb")
+        .orderBy("__ts", "__side")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = (

@@ -12,9 +12,9 @@ Shape: ONE full-outer shuffle join on the key, then a null-safe
 column-by-column comparison — all codegen'd, no UDFs. At 100 TB both
 sides shuffle once on the key; if the snapshots are written bucketed by
 the key (pipeline/layout.write_bucketed) the exchange disappears entirely and
-the diff is a zipper merge per bucket. For very wide rows, pass
-``compare_cols`` to restrict the comparison (and the shuffled width) to
-the columns that matter.
+the diff is a zipper merge per bucket. For very wide rows, select the
+columns that matter on both sides first: the comparison (and the
+shuffled width) covers every non-key column.
 """
 
 from __future__ import annotations
@@ -29,20 +29,19 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     key: str | Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Classify every key of ``old`` ∪ ``new`` and return the ones that
     differ:
 
     - ``added``     — key only in ``new``
     - ``removed``   — key only in ``old``
-    - ``changed``   — key in both, any compare column differs (null-safe:
+    - ``changed``   — key in both, any non-key column differs (null-safe:
       NULL→value and value→NULL both count as changes; NULL→NULL does not)
 
-    Keys in both with all compare columns equal are not emitted.
+    Keys in both with all non-key columns equal are not emitted.
 
     Output: key column(s) + ``change_type`` + ``old_<c>`` / ``new_<c>``
-    for each compare column. Deterministic for any input (no ordering
+    for each non-key column. Deterministic for any input (no ordering
     sensitivity anywhere).
 
     NULL keys never match each other (SQL join semantics): a null-keyed
@@ -51,22 +50,19 @@ def snapshot_diff(
     run `pipeline.expectations` (not_null + unique) upstream if that is
     not guaranteed."""
     keys = [key] if isinstance(key, str) else list(key)
-    if compare_cols is None:
-        # schema drift must be an explicit decision: deriving the
-        # comparison from `new` alone would silently ignore a column
-        # DROPPED between snapshots (its changes would classify as
-        # 'unchanged'), while a column added fails loudly — make both
-        # directions loud
-        if set(old.columns) != set(new.columns):
-            only_old = sorted(set(old.columns) - set(new.columns))
-            only_new = sorted(set(new.columns) - set(old.columns))
-            raise ValueError(
-                "snapshot schemas differ (old-only: "
-                f"{only_old}, new-only: {only_new}); pass compare_cols "
-                "explicitly to diff across a schema change"
-            )
-        compare_cols = [c for c in new.columns if c not in keys]
-    cols = list(compare_cols)
+    # schema drift must be an explicit decision: deriving the comparison
+    # from `new` alone would silently ignore a column DROPPED between
+    # snapshots (its changes would classify as 'unchanged'), while a
+    # column added fails loudly — make both directions loud
+    if set(old.columns) != set(new.columns):
+        only_old = sorted(set(old.columns) - set(new.columns))
+        only_new = sorted(set(new.columns) - set(old.columns))
+        raise ValueError(
+            "snapshot schemas differ (old-only: "
+            f"{only_old}, new-only: {only_new}); select the same columns "
+            "on both sides to diff across a schema change"
+        )
+    cols = [c for c in new.columns if c not in keys]
 
     o = old.select(*keys, *cols)
     n = new.select(*keys, *cols)

@@ -51,13 +51,12 @@ def hot_key_split_join(
     right: DataFrame,
     key: str,
     how: str = "inner",
-    hot_threshold: int | None = None,
     top_n: int = 100,
 ) -> DataFrame:
-    """Split-path join: hot keys (detected by a cheap count, either above
-    ``hot_threshold`` rows or the ``top_n`` heaviest) join via broadcast;
-    the remainder joins normally. One extra count pass over the left key
-    column (column-pruned scan) buys an even shuffle.
+    """Split-path join: hot keys (the ``top_n`` heaviest by a cheap
+    count) join via broadcast; the remainder joins normally. One extra
+    count pass over the left key column (column-pruned scan) buys an
+    even shuffle.
 
     Only inner/left are supported: right/full-outer would emit hot-key
     right rows twice (matched in the hot path AND null-padded in the cold
@@ -66,8 +65,6 @@ def hot_key_split_join(
         raise ValueError(f"hot_key_split_join supports inner/left, not {how!r}")
     counts = left.groupBy(key).agg(F.count(F.lit(1)).alias("__n"))
     hot = counts.orderBy(F.desc("__n")).limit(top_n)
-    if hot_threshold is not None:
-        hot = hot.filter(F.col("__n") >= hot_threshold)
     hot_keys = F.broadcast(hot.select(key))
 
     l_hot = left.join(hot_keys, key, "left_semi")

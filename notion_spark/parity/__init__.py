@@ -16,11 +16,11 @@ Cross-engine determinism rules used throughout (SURVEY §5):
 - Timestamps in outputs are formatted to strings (engine-neutral).
 - Computed columns are aliased identically on both sides.
 
-Queries whose semantics are not reasonably SQL-expressible (MinHash/LSH
-banding, SimHash, hyperplane-LSH ANN) are registered without an oracle —
-the driver records a weaker rows-only check, and their correctness is
-covered by unit tests against exact counterparts (tests/test_dedup.py,
-tests/test_similarity.py).
+Every registered query carries an oracle, the approximate ones too
+(MinHash/LSH banding, SimHash, hyperplane-LSH ANN): an oracle either
+recomputes the same hashes and buckets in SQL or computes the exact
+answer the approximate output must equal on the generated data, so the
+hash check covers them like any other query.
 """
 
 # Registration order is LOAD order: these imports must stay in the

@@ -179,6 +179,9 @@ PLAN_RECERT: tuple[str, ...] = (
     "text_cooccurrence_pruned",
     "heavy_hitters_users",
     "behavior_decayed_counts",
+    # asof_join lost its right_tiebreak option: the window orders by
+    # (ts, side) without the constant tiebreak column:
+    "join_asof_last_click",
 )
 
 

@@ -118,58 +118,3 @@ def bucketed_join(
     lt = spark.table(left_table)
     rt = spark.table(right_table)
     return lt.hint("merge").join(rt, key, how)
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_mb: int = 512,
-    sort_cols: list[str] | None = None,
-) -> dict[str, int]:
-    """Rewrite a parquet directory into ~target_mb files — the
-    small-files maintenance pass every long-lived ingest needs: a
-    streaming sink or daily increment writes thousands of KB-sized
-    files, and at 100 TB the resulting scan pays per-file open cost
-    (footer reads, task scheduling) that dwarfs the data itself.
-
-    Sizing comes from the FILES (sum of on-disk bytes), not a row
-    count, so compression ratio is accounted for. With ``sort_cols``
-    the rewrite also re-sorts within files (repartitionByRange +
-    sortWithinPartitions) so min/max pruning survives compaction;
-    without, a plain repartition round-robins for even file sizes.
-    Tmp-then-swap (sources/io.overwrite_store) keeps the rewrite safe
-    against mid-job failure and self-read lineage.
-
-    Returns {"files_before", "files_after", "bytes"} for audit logs.
-    """
-    import glob as _glob
-    import os
-
-    from notion_spark.sources.io import assert_unpartitioned, overwrite_store
-
-    parts = [
-        p
-        for p in _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(p)
-    ]
-    if not parts:
-        raise ValueError(f"no parquet files under {path}")
-    # hive-partitioned stores are rejected (shared guard with
-    # sources/io.compact_store — flattening destroys pruning)
-    assert_unpartitioned(path)
-    total = sum(os.path.getsize(p) for p in parts)
-    n = max(1, -(-total // (target_mb * 1024 * 1024)))  # ceil div
-    df = spark.read.parquet(path)
-    if sort_cols:
-        df = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
-    else:
-        df = df.repartition(n)
-    overwrite_store(df, path)
-    after = len(
-        [
-            p
-            for p in _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-            if os.path.isfile(p)
-        ]
-    )
-    return {"files_before": len(parts), "files_after": after, "bytes": total}

@@ -198,35 +198,11 @@ def phash_signatures(
     )
 
 
-def signatures_from_hex(
-    sig: DataFrame,
-    hex_col: str = "hex16",
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """(id, hex16, hi, lo) from ANY per-asset 64-bit hash rendered as 16
-    hex chars — the tested half of the decoder-swap contract: compute a
-    real pHash (Zauner 2010) in a pandas_udf that decodes actual image
-    bytes, emit it as hex, and feed the (id, hex) frame to
-    `phash_hamming_pairs(signatures=...)`; banding, candidate join and
-    Hamming verify downstream are byte-identical to the sha256 stand-in
-    path. hi/lo are the two 32-bit halves (signed-int64-safe on any
-    engine, same rationale as `phash_signatures`)."""
-    h = F.lower(F.col(hex_col))
-    return sig.select(
-        F.col(id_col).alias("id"),
-        h.alias("hex16"),
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("hi"),
-        F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("lo"),
-    )
-
-
 def phash_hamming_pairs(
-    assets: DataFrame | None,
+    assets: DataFrame,
     payload_col: str = "payload",
     id_col: str = "asset_id",
     max_bucket: int | None = 1000,
-    signatures: DataFrame | None = None,
-    hex_col: str = "hex16",
 ) -> DataFrame:
     """Near-duplicate asset candidates by banded 64-bit pHash:
     (id_a, id_b, hamming), every pair sharing at least one of four
@@ -241,19 +217,10 @@ def phash_hamming_pairs(
     shuffle for the candidate join, O(bucket²) bounded by the star
     guard; the Hamming verify is per-pair bit arithmetic (xor +
     bit_count, whole-stage codegen). Payload bytes are read ONCE for
-    the hash and never shuffled — only 16-char signatures move.
-
-    ``signatures`` swaps in a REAL perceptual hash: a (id_col, hex_col)
-    frame — typically a pandas_udf over decoded image bytes — replaces
-    the sha256 stand-in entirely (``assets``/``payload_col`` are then
-    unused and may be None)."""
+    the hash and never shuffled — only 16-char signatures move."""
     from notion_spark.pipeline.dedup import _banded_candidates
 
-    sig = (
-        signatures_from_hex(signatures, hex_col, id_col)
-        if signatures is not None
-        else phash_signatures(assets, payload_col, id_col)
-    )
+    sig = phash_signatures(assets, payload_col, id_col)
     banded = sig.select(
         "id",
         "hi",

@@ -1395,28 +1395,20 @@ def pq_adc_topk(
     query_id_col: str = "query_id",
     scale: int = 1_000_000,
     offset: float = 10.0,
-    codes: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: score(q, x) =
     Σ_m d²(q_m, c_{m, code_m(x)}) — the query stays exact, the corpus
     is its quantized reconstruction. All-integer (scaled query vs
     scaled centroids), so ranks are engine-exact; ties → vec_id asc.
 
-    Plan shape: corpus encodes once (codes survive as small ints — at
-    scale they are precomputed by `pq_encode` and WRITTEN, and the
-    search scans codes only); queries broadcast; per-subspace
-    distances resolve through the literal codebook (element_at on an
-    M·K-literal array — no join, stays in codegen); one per-query
-    rank window. Output: (query_id, vec_id, adc, rank).
-
-    Pass ``codes`` (a `pq_encode` output frame, typically read back
-    from parquet) to search WITHOUT touching the float vectors at all
-    — the production path at scale; ``corpus`` is then ignored."""
+    Plan shape: corpus encodes once (codes survive as small ints);
+    queries broadcast; per-subspace distances resolve through the
+    literal codebook (element_at on an M·K-literal array — no join,
+    stays in codegen); one per-query rank window.
+    Output: (query_id, vec_id, adc, rank)."""
     n_sub = len(books)
     dsub = len(books[0][0])
-    if codes is None:
-        codes = pq_encode(corpus, books, id_col, vec_col, scale, offset)
-    codes = codes.select(
+    codes = pq_encode(corpus, books, id_col, vec_col, scale, offset).select(
         F.col(id_col).alias("vid"), *[f"code_{m}" for m in range(n_sub)]
     )
     # r12: ADC via per-query LOOKUP TABLES. d²(q_m, c_{m,j}) depends

@@ -609,12 +609,12 @@ def mg_partition_summaries(df: DataFrame, col: str, capacity: int) -> DataFrame:
     return src.mapInPandas(mg, schema=out_schema)
 
 
-def heavy_hitters(df: DataFrame, col: str, k: int, capacity: int | None = None) -> DataFrame:
+def heavy_hitters(df: DataFrame, col: str, k: int) -> DataFrame:
     """EXACT phi-heavy hitters (frequency >= n/k) at bounded memory: the
     classic two-pass candidates-then-recount plan.
 
     Pass 1: per-partition Misra-Gries summaries (capacity 8k) are merged
-    into a candidate set of <= capacity x P values — guaranteed to
+    into a candidate set of <= 8k x P values — guaranteed to
     contain every true heavy hitter since the total undercount
     n/(8k+1) < n/k. Pass 2: exact recount of candidates only (semi-join
     then one map-side-combined groupBy), threshold applied with integer
@@ -624,17 +624,12 @@ def heavy_hitters(df: DataFrame, col: str, k: int, capacity: int | None = None) 
     no false negatives.
 
     Scale shape: no full-cardinality shuffle ever happens — the only
-    groupBys run over candidate values (bounded by capacity x
-    partitions), which is the point at 100 TB where the raw key space
+    groupBys run over candidate values (bounded by 8k x partitions),
+    which is the point at 100 TB where the raw key space
     (urls, shingles, user ids) is itself huge.
     """
-    if capacity is not None and capacity < k:
-        # undercount bound n/(capacity+1) must stay below the n/k
-        # threshold or the no-false-negative guarantee silently breaks
-        raise ValueError(f"capacity ({capacity}) must be >= k ({k})")
-    capacity = capacity if capacity is not None else 8 * k
     cands = (
-        mg_partition_summaries(df, col, capacity)
+        mg_partition_summaries(df, col, 8 * k)
         .groupBy("value")
         .agg(F.sum("est").alias("est"))
         .select("value")

@@ -395,15 +395,12 @@ def winnowing_fingerprints(
     )
 
 
-def fingerprint_overlap(
-    fps_a: DataFrame, fps_b: DataFrame | None = None
-) -> DataFrame:
-    """Pairwise shared-fingerprint counts from winnowing output — join on
-    the fingerprint value (high-cardinality key, no pairwise scan), count
-    per doc pair. Self-overlap form when fps_b is None."""
-    b = fps_a if fps_b is None else fps_b
-    x = fps_a.select(F.col("id").alias("id_a"), "fp")
-    y = b.select(F.col("id").alias("id_b"), F.col("fp").alias("fp_b"))
+def fingerprint_overlap(fps: DataFrame) -> DataFrame:
+    """Pairwise shared-fingerprint counts from winnowing output — a self
+    join on the fingerprint value (high-cardinality key, no pairwise
+    scan), counted per doc pair (id_a < id_b)."""
+    x = fps.select(F.col("id").alias("id_a"), "fp")
+    y = fps.select(F.col("id").alias("id_b"), F.col("fp").alias("fp_b"))
     return (
         x.join(y, on=[x["fp"] == y["fp_b"], x["id_a"] < y["id_b"]])
         .groupBy("id_a", "id_b")

@@ -41,6 +41,7 @@ from notion_spark.normalize import normalize_for_analysis, normalize_for_reports
 from notion_spark.operators.incremental import changed_rows, keep_last_upsert
 from notion_spark.queries import analysis as analysis_q
 from notion_spark.queries import reports as reports_q
+from notion_spark.schema import TASKS_SCHEMA
 from notion_spark.sinks.charts import render_chart_canvases, write_pngs
 from notion_spark.sinks.pdf_report import render_pdf, report_payload
 from notion_spark.sinks.text_report import render_analysis
@@ -74,17 +75,21 @@ def refresh_cache(
 
     A stored row that ``fetched`` no longer holds (a page deleted or
     archived upstream) stays in the store: the merge only adds and
-    replaces rows, so deletes never reach it."""
+    replaces rows, so deletes never reach it.
+
+    The store is read with its declared schema (``TASKS_SCHEMA``), so no
+    read starts a schema-inference job."""
     from notion_spark.sources.io import overwrite_store
 
+    read_store = spark.read.schema(TASKS_SCHEMA).parquet
     if os.path.exists(cache_path):
-        cache = spark.read.parquet(cache_path)
+        cache = read_store(cache_path)
         delta = changed_rows(fetched, cache, "uid", "updated_time")
         n_changed = delta.count()
         overwrite_store(keep_last_upsert(cache, delta, "uid"), cache_path)
-        return spark.read.parquet(cache_path), n_changed
+        return read_store(cache_path), n_changed
     overwrite_store(fetched, cache_path)
-    store = spark.read.parquet(cache_path)
+    store = read_store(cache_path)
     return store, store.count()
 
 

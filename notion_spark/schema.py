@@ -7,7 +7,7 @@ canonical store is Parquet with real ArrayType columns and UTC timestamps;
 CSV/JSON are export formats only.
 
 Column names are snake_case; `COLUMN_ALIASES` maps the reference's display
-headers ("Parent NID", "Active Tags", ...) for CSV-parity ingest/export.
+headers ("Parent NID", "Active Tags", ...) for the CSV-parity export.
 """
 
 from __future__ import annotations
@@ -70,16 +70,6 @@ BLOCKS_SCHEMA = "page_uid string, blocks array<struct<depth:int,type:string,payl
 # --- comments (fetch_pages.py:173-191, 412-418): one row per page, the
 # texts newline-joined in API order --------------------------------------
 COMMENTS_SCHEMA = "page_uid string, comments string"
-
-# --- attachments (fetch_pages.py:350-372, 444-459; reports 256-305) -------
-ATTACHMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("nid", T.LongType(), False),
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("ext", T.StringType(), True),
-        T.StructField("content", T.StringType(), True),
-    ]
-)
 
 # --- multimodal assets (pipeline extension, not in the reference) ---------
 # Opaque binary payload + typed metadata; see pipeline/multimodal.py.

@@ -19,9 +19,6 @@ from __future__ import annotations
 from collections import Counter
 from datetime import datetime
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from notion_spark.config import EngineConfig
 from notion_spark.functions.text import truncate_lines
 from notion_spark.queries.reports import ReportFrames, in_window_col
@@ -38,63 +35,24 @@ def report_payload(
     frames: ReportFrames,
     now: datetime,
     cfg: EngineConfig,
-    attachments: DataFrame | None = None,
 ) -> dict[str, dict]:
     """Collect the report rows (`ReportFrames.rows`, one plan) once into one
     render-ready payload per period, each section in its rank order: body
-    truncated to
-    cfg.body_content_max_lines (X11, generate_reports.py:97-102), grouped
-    by parent_name in section sort order (W1 boundaries implicit in the
-    ordering). With ``attachments`` and include_attachments on, readable
-    previews join in by nid and append to the body — one join replacing
-    the reference's per-row file reads (get_smart_attachment_content,
-    generate_reports.py:256-305).
+    truncated to cfg.body_content_max_lines (X11,
+    generate_reports.py:97-102), grouped by parent_name in section sort
+    order (W1 boundaries implicit in the ordering).
 
     Completed rows go to every period whose window flag is set (filtering
     keeps the section order); the pie counts (A5, generate_reports.py:
     226-234, status frequency over goals ∪ completed ∪ in-progress) come
     from the collected rows. Periods share the period-independent row
     lists."""
-    att_text = None
-    if attachments is not None and cfg.include_attachments:
-        from notion_spark.sources.attachments import attachment_previews
-
-        previews = attachment_previews(attachments, cfg)
-        att_text = (
-            previews.groupBy("nid")
-            .agg(
-                F.concat_ws(
-                    "\n",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("filename").alias("f"),
-                                    F.concat_ws(
-                                        ": ",
-                                        F.col("filename"),
-                                        F.coalesce(F.col("preview"), F.lit("(attachment)")),
-                                    ).alias("t"),
-                                )
-                            )
-                        ),
-                        lambda s: s["t"],
-                    ),
-                ).alias("__att")
-            )
-        )
-
     out = frames.rows
     cols = [c for c in ("nid", "name", "status", "priority", "parent_name") if c in out.columns]
     if cfg.include_body_content and "body_content" in out.columns:
         out = out.withColumn(
             "body_content", truncate_lines("body_content", cfg.body_content_max_lines)
         )
-        if att_text is not None:
-            out = out.join(att_text, "nid", "left").withColumn(
-                "body_content",
-                F.concat_ws("\n", F.col("body_content"), F.col("__att")),
-            ).drop("__att")
         cols.append("body_content")
     flags = {p: in_window_col(p) for p in frames.windows}
     # one collect; each section's rows in rank order

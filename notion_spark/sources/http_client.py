@@ -1,11 +1,10 @@
-"""HTTP Notion client (S1-S3 network path) + attachment downloader (S5).
+"""HTTP Notion client (S1-S3 network path).
 
 Implements the reference's extract stage over an injectable transport so
 every behavior — cursor pagination with limit pushdown
 (fetch_pages.py:67-114), 429 Retry-After + exponential backoff with max 5
-retries (fetch_pages.py:127-170), comments fetch (fetch_pages.py:173-191),
-attachment download into a dir-per-NID layout (fetch_pages.py:344-372,
-444-459) — is fully unit-testable offline. The default transport is
+retries (fetch_pages.py:127-170), comments fetch (fetch_pages.py:173-191)
+— is fully unit-testable offline. The default transport is
 stdlib urllib (no extra deps); tests plug a scripted fake.
 
 The client is a *connector*, deliberately driver-side and sequential: the
@@ -37,7 +36,6 @@ class Response:
     status: int
     headers: dict[str, str] = field(default_factory=dict)
     body: dict[str, Any] = field(default_factory=dict)
-    raw: bytes = b""
 
     def header(self, name: str, default: str | None = None) -> str | None:
         for k, v in self.headers.items():
@@ -79,11 +77,9 @@ class UrllibTransport:
         req = urllib.request.Request(url, data=data, headers=headers, method=method)
         try:
             with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                raw = resp.read()
-                return Response(resp.status, dict(resp.headers), _parse(raw), raw)
+                return Response(resp.status, dict(resp.headers), _parse(resp.read()))
         except urllib.error.HTTPError as e:  # 4xx/5xx still carry a body
-            raw = e.read()
-            return Response(e.code, dict(e.headers), _parse(raw), raw)
+            return Response(e.code, dict(e.headers), _parse(e.read()))
         except OSError as e:
             return Response(599, {}, {"error": str(e)})
 
@@ -204,49 +200,3 @@ class HttpNotionClient:
         url = f"{self._base}/comments"
         data = self._request("GET", url, params={"block_id": block_id}).body
         return data.get("results", [])
-
-    # ------------------------------------------------------------ S5: files
-    def download_file(self, url: str, path: str) -> bool:
-        """Fetch one attachment URL to a local path (fetch_pages.py:444-459).
-        Returns False on non-200 instead of raising (the reference logs and
-        moves on — a missing attachment must not kill the extract)."""
-        import os
-
-        resp = self._transport.request("GET", url, {})
-        if resp.status != 200:
-            return False
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "wb") as f:
-            f.write(resp.raw)
-        return True
-
-
-def download_attachments(
-    client: HttpNotionClient,
-    files_media: list[dict],
-    nid: int | str,
-    attachment_root: str,
-) -> list[str]:
-    """Download a page's Files & Media into ``attachment_root/<NID>/``
-    with sanitized names; returns the file names actually downloaded
-    (fetch_pages.py:344-372: external vs file URL variants, sanitize, dir
-    created only when at least one download succeeds)."""
-    import os
-
-    from notion_spark.functions.text import sanitize_filename_py
-
-    names: list[str] = []
-    target_dir = os.path.join(attachment_root, str(nid))
-    for file in files_media or []:
-        kind = file.get("type")
-        url = None
-        if kind == "external":
-            url = (file.get("external") or {}).get("url")
-        elif kind == "file":
-            url = (file.get("file") or {}).get("url")
-        if not url:
-            continue
-        name = sanitize_filename_py(file.get("name") or "unnamed")
-        if client.download_file(url, os.path.join(target_dir, name)):
-            names.append(name)
-    return names

@@ -9,12 +9,10 @@ sinks kept for format parity.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from notion_spark.schema import CANONICAL_TO_DISPLAY, COLUMN_ALIASES
+from notion_spark.schema import CANONICAL_TO_DISPLAY
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -52,41 +50,6 @@ def overwrite_store(df: DataFrame, path: str) -> None:
     os.rename(tmp, path)
 
 
-def assert_unpartitioned(path: str) -> None:
-    """Refuse hive-partitioned stores (key=value path segments) for
-    whole-directory rewrites: a flat rewrite silently destroys partition
-    pruning and breaks readers addressing path/key=X/. Shared by both
-    compaction entry points (this module and pipeline/layout)."""
-    import glob as _glob
-
-    rel = [
-        os.path.relpath(p, path)
-        for p in _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(p)
-    ]
-    hive = sorted({seg for r in rel for seg in r.split(os.sep)[:-1] if "=" in seg})
-    if hive:
-        raise ValueError(
-            f"{path} is hive-partitioned ({hive[0]}, ...): rewrite each "
-            "partition directory instead"
-        )
-
-
-def compact_store(spark: SparkSession, path: str, target_records_per_file: int = 500_000) -> int:
-    """Small-files compaction sized by ROW COUNT: rewrite a parquet store
-    into evenly sized files (incremental upserts and streaming
-    micro-batches accumulate small files; at 100 TB unbounded file
-    counts kill scan planning). Returns the row count. Uses the safe
-    tmp+swap overwrite. For BYTE-targeted sizing (compression-aware)
-    and sorted rewrites, use pipeline/layout.compact_files."""
-    assert_unpartitioned(path)
-    df = spark.read.parquet(path)
-    n = df.count()
-    n_files = max(1, -(-n // target_records_per_file))  # ceil
-    overwrite_store(df.repartition(n_files), path)
-    return n
-
-
 # --------------------------------------------------------------- S6 (CSV)
 def export_tasks_csv(df: DataFrame, path: str) -> None:
     """CSV export in the reference's on-disk dialect: display headers and
@@ -112,24 +75,6 @@ def export_tasks_csv(df: DataFrame, path: str) -> None:
         .option("ignoreTrailingWhiteSpace", False)
         .csv(path)
     )
-
-
-def read_tasks_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Ingest the reference CSV dialect back to canonical form (P8
-    rehydration happens in normalize.rehydrate_list_column)."""
-    from notion_spark.normalize import rehydrate_list_column
-
-    df = spark.read.option("header", True).option("multiLine", True).option("escape", '"').csv(path)
-    df = df.toDF(*[COLUMN_ALIASES.get(c.strip(), c.strip()) for c in df.columns])
-    for c, t in (
-        ("files_media", "string"),
-        ("children_uids", "string"),
-        ("children_nids", "long"),
-        ("active_tags", "string"),
-    ):
-        if c in df.columns:
-            df = rehydrate_list_column(df, c, t)
-    return df
 
 
 # --------------------------------------------------------------- S7 (JSON)

@@ -4,8 +4,8 @@
 fixed clock (2026-01-15T00:00:00Z): overdue actives, doing, due-in-7d,
 due-in-14d, undated high-priority, >15 to-dos (goals overflow), done rows
 inside each period window, uncategorized statuses, projects with children.
-Also the helpers several test modules share: a Notion rich-text payload
-and a Spark job counter.
+Also the helpers several test modules share: a Notion rich-text payload,
+a Spark job counter and the reference's reader of the CSV export.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 
-from notion_spark.schema import TASKS_SCHEMA
+from notion_spark.schema import CANONICAL_TO_DISPLAY, TASKS_SCHEMA
 
 FIXED_NOW = datetime(2026, 1, 15, 0, 0, 0)
 
@@ -43,6 +43,25 @@ def count_jobs(spark: SparkSession, fn):
 _STATUSES = ["To Do", "Doing", "Done", "Paused", "Notes", "Duplicate", "Canceled"]
 _PRIORITIES = ["Critical (48hrs)", "High (1wk)", "Medium (2wks)", "Low (>month)", "Note"]
 _TAGS = ["work", "home", "urgent", "idea", "admin", "dev", "ops", "research", "finance", "health"]
+
+
+def read_csv_like_reference(path: str) -> list[dict]:
+    """Rows of a CSV export read the way the reference reads its cache
+    (analyze_pages.py:37, 81-89): ``pandas.read_csv`` over the one part
+    file, then ``ast.literal_eval`` on each list column. Display headers
+    are kept; empty fields read as ""."""
+    import ast
+    import glob
+
+    import pandas as pd
+
+    (part,) = glob.glob(f"{path}/part-*.csv")
+    pdf = pd.read_csv(part, dtype=str, keep_default_na=False)
+    for c in ("files_media", "children_uids", "children_nids", "active_tags"):
+        c = CANONICAL_TO_DISPLAY[c]
+        if c in pdf.columns:
+            pdf[c] = pdf[c].map(lambda v: ast.literal_eval(v) if v else [])
+    return pdf.to_dict("records")
 
 
 def make_tasks(spark: SparkSession, n: int = 450, seed: int = 7) -> DataFrame:

@@ -140,15 +140,16 @@ def test_levenshtein_length_gap_prune_is_exact(spark):
 
 
 def test_heavy_hitters_exact_vs_bruteforce_multi_partition(spark):
-    # skewed values spread over many partitions; tiny capacity forces
-    # real Misra-Gries shrinking inside each partition
-    vals = [1] * 400 + [2] * 200 + [3] * 90 + list(range(100, 410))
-    k = 10  # threshold n/k = 100
+    # skewed values spread over many partitions; each partition holds
+    # ~380 distinct values, so its Misra-Gries summary (capacity 8k = 80)
+    # really shrinks
+    vals = [1] * 1000 + [2] * 500 + [3] * 90 + list(range(100, 3100))
+    k = 10  # threshold n/k = 459
     # an empty and an all-null column have no heavy hitter; nulls never
     # count toward n
     for rows in ([], [None] * 30, vals + [None] * 300, vals):
         df = spark.createDataFrame([(v,) for v in rows], "v long").repartition(8)
-        got = {(r.value, r.freq) for r in SK.heavy_hitters(df, "v", k=k, capacity=12).collect()}
+        got = {(r.value, r.freq) for r in SK.heavy_hitters(df, "v", k=k).collect()}
         n = sum(v is not None for v in rows)
         brute = {
             (r.v, r.cnt)
@@ -156,13 +157,7 @@ def test_heavy_hitters_exact_vs_bruteforce_multi_partition(spark):
             if r.v is not None and r.cnt * k >= n
         }
         assert got == brute, len(rows)
-    assert (1, 400) in got and (2, 200) in got and (3, 90) not in got
-
-
-def test_heavy_hitters_rejects_capacity_below_k(spark):
-    df = spark.createDataFrame([(1,)], "v long")
-    with pytest.raises(ValueError, match="capacity"):
-        SK.heavy_hitters(df, "v", k=10, capacity=5)
+    assert (1, 1000) in got and (2, 500) in got and (3, 90) not in got
 
 
 def test_heavy_hitters_nan_is_a_real_value(spark):

@@ -119,3 +119,21 @@ def test_pipeline_over_overlapping_snapshot_files(run, tmp_path):
     assert first["cached"] == 2 and first["changed"] == 2
     second = json.loads(run(*pipe))
     assert second["cached"] == 2 and second["changed"] == 0
+
+
+def test_pipeline_stores_no_bodies_or_comments(run, spark, tmp_path):
+    """The command ingests page snapshots only and calls no API, so every
+    stored row has an empty body and no comments, although the replayed
+    workspace has both (test_replay crawls them). Pinned until a sync
+    through the client replaces it."""
+    with open(FIXTURE) as f:
+        fx = json.load(f)
+    pages = [p for batch in fx["page_batches"] for p in batch["results"]]
+    assert fx["block_batches"] and fx["comments"]
+    dump = tmp_path / "pages.jsonl"
+    dump.write_text("".join(json.dumps(p) + "\n" for p in pages))
+    out_dir = tmp_path / "out"
+    run("pipeline", "--pages", str(dump), "--cache-dir", str(out_dir), "--now", NOW)
+    rows = spark.read.parquet(str(out_dir / "tasks.parquet")).collect()
+    assert len(rows) == len(pages)
+    assert {(r.body_content, r.comments) for r in rows} == {("", "")}

@@ -1,9 +1,6 @@
 from __future__ import annotations
 
 from notion_spark.config import EngineConfig
-from notion_spark.sources.ingest import pages_raw_df
-from notion_spark.sources.schema_health import check_schema_health
-from tests.test_ingest import _page
 
 
 def test_config_from_env():
@@ -19,24 +16,6 @@ def test_config_from_env():
     assert cfg.include_body_content and not cfg.include_uncategorized
     assert cfg.body_content_max_lines == 5
     assert EngineConfig.from_env({}).filter_tags == ()
-
-
-def test_schema_health_perfect_match(spark):
-    raw = pages_raw_df(spark, [_page("pg-1", 1, ["A"]), _page("pg-2", 2, ["B"])])
-    h = check_schema_health(raw)
-    assert h.ok and not h.missing and not h.partial
-    assert "PERFECT MATCH" in h.report()
-
-
-def test_schema_health_detects_missing_and_partial(spark):
-    p1 = _page("pg-1", 1, ["A"])
-    p2 = _page("pg-2", 2, ["B"])
-    del p2["properties"]["Due"]  # partial: on one page only
-    raw = pages_raw_df(spark, [p1, p2])
-    h = check_schema_health(raw, props={"status": "My Status"})
-    assert not h.ok and h.missing == ("My Status",)
-    assert "Due" in h.partial
-    assert "MISSING: 'My Status'" in h.report()
 
 
 def test_driver_window_rotation_contract():

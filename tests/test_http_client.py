@@ -1,17 +1,11 @@
 """HTTP Notion client over a scripted fake transport (no network):
-pagination + limit pushdown, 429 Retry-After, exponential backoff, and
-the attachment download → binaryFile read → preview round trip."""
+pagination + limit pushdown, 429 Retry-After and exponential backoff."""
 
 from __future__ import annotations
 
 import pytest
 
-from notion_spark.sources.http_client import (
-    HttpNotionClient,
-    NotionHttpError,
-    Response,
-    download_attachments,
-)
+from notion_spark.sources.http_client import HttpNotionClient, NotionHttpError, Response
 
 
 class FakeTransport:
@@ -166,50 +160,18 @@ def test_satisfies_notion_client_protocol_for_crawl(spark):
     assert [(b.depth, b.type) for b in rows[0].blocks] == [(0, "paragraph"), (1, "quote")]
 
 
-# ------------------------------------------------------------ attachments (S5)
-def _file_obj(name, kind="file", url="https://files/x"):
-    return {"name": name, "type": kind, kind: {"url": url}}
-
-
-def test_download_attachments_roundtrip(tmp_path, spark):
-    """Write side (fetch_pages.py:344-372) feeds the existing read side:
-    download → binaryFile scan → previews."""
-    from notion_spark.config import EngineConfig
-    from notion_spark.sources.attachments import (
-        attachment_previews,
-        read_attachment_files,
-    )
-
-    c, _, _ = _client(
-        [
-            Response(200, raw=b"hello world"),
-            Response(200, raw=b"\x89PNG-ish"),
-            Response(404),
-        ]
-    )
-    files = [
-        _file_obj("notes.txt"),
-        _file_obj("img<bad>.png", kind="external"),
-        _file_obj("missing.pdf"),  # 404 -> skipped, not raised
-        {"name": "no-url.bin", "type": "file", "file": {}},
-    ]
-    root = str(tmp_path / "attachments")
-    names = download_attachments(c, files, nid=42, attachment_root=root)
-    assert names == ["notes.txt", "img_bad_.png"]  # sanitized, 404 dropped
-
-    atts = read_attachment_files(spark, root)
-    prev = attachment_previews(atts, EngineConfig()).orderBy("filename").collect()
-    assert [(r.nid, r.filename, r.is_readable) for r in prev] == [
-        (42, "img_bad_.png", False),
-        (42, "notes.txt", True),
-    ]
-    assert prev[1].preview == "hello world"
-
-
 def test_sanitize_py_matches_column_version(spark):
+    """The column function equals the reference's Python sanitizer
+    (fetch_pages.py:462-467): each of <>:"/\\|?* becomes '_', then the
+    name is cut to 255 characters."""
     from pyspark.sql import functions as F
 
-    from notion_spark.functions.text import sanitize_filename, sanitize_filename_py
+    from notion_spark.functions.text import sanitize_filename
+
+    def sanitize_py(name: str) -> str:
+        for ch in '<>:"/\\|?*':
+            name = name.replace(ch, "_")
+        return name[:255]
 
     hostile = 'a<b>c:d"e/f\\g|h?i*j.txt' + "x" * 300
     got = (
@@ -218,7 +180,7 @@ def test_sanitize_py_matches_column_version(spark):
         .collect()[0]
         .s
     )
-    assert got == sanitize_filename_py(hostile)
+    assert got == sanitize_py(hostile)
 
 
 def test_429_http_date_retry_after_falls_back(spark):

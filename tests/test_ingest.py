@@ -129,8 +129,10 @@ def _workspace(n):
 
 @pytest.mark.parametrize("n", [50, 500])
 def test_ingest_job_counts(spark, tmp_path, n):
-    """Planning the ingest runs no Spark job; filling its cache and a
-    first load each run a fixed handful, whatever the page count."""
+    """Planning the ingest runs no Spark job; filling its cache, a first
+    load and a sync over the written store each run a fixed handful,
+    whatever the page count. The store is read with its declared schema,
+    so none of its reads starts a schema-inference job."""
     from notion_spark.pipeline_app import refresh_cache
 
     pages, client = _workspace(n)
@@ -150,5 +152,8 @@ def test_ingest_job_counts(spark, tmp_path, n):
         assert row.children_nids == [2, 3] and row.comments == "note 0"
     finally:
         cached.unpersist()
-    (_, written), loaded = count_jobs(spark, lambda: refresh_cache(spark, ingest(), str(tmp_path / "tasks.parquet")))
-    assert written == n and loaded <= 12, loaded
+    path = str(tmp_path / "tasks.parquet")
+    (_, written), loaded = count_jobs(spark, lambda: refresh_cache(spark, ingest(), path))
+    assert written == n and loaded <= 11, loaded
+    (_, changed), synced = count_jobs(spark, lambda: refresh_cache(spark, ingest(), path))
+    assert changed == 0 and synced <= 19, synced

@@ -1,5 +1,5 @@
-"""Z-order key correctness vs a Python Morton reference, and the file
-compaction and bucketing helpers."""
+"""Z-order key correctness vs a Python Morton reference, and the
+bucketing helpers."""
 
 from __future__ import annotations
 
@@ -23,72 +23,6 @@ def test_zorder_key_matches_reference(spark):
            df.select("a", "b", zorder_key("a", "b").alias("z")).collect()}
     for a, b in rows:
         assert got[(a, b)] == _morton_ref(a, b), (a, b)
-
-
-class TestCompactFiles:
-    def test_merges_small_files(self, spark, tmp_path):
-        import glob
-
-        from notion_spark.pipeline.layout import compact_files
-
-        path = str(tmp_path / "frag")
-        df = spark.range(0, 10_000).withColumn("v", F.col("id") % 100)
-        df.repartition(40).write.parquet(path)
-        assert len(glob.glob(path + "/*.parquet")) == 40
-
-        stats = compact_files(spark, path, target_mb=512)
-        assert stats["files_before"] == 40
-        assert stats["files_after"] == 1  # tiny data -> one target file
-        got = spark.read.parquet(path)
-        assert got.count() == 10_000
-        assert got.agg(F.sum("id")).first()[0] == 10_000 * 9_999 // 2
-
-    def test_sorted_compaction_keeps_pruning_layout(self, spark, tmp_path):
-        from notion_spark.pipeline.layout import compact_files
-
-        path = str(tmp_path / "sorted")
-        spark.range(0, 5_000).withColumn("v", (F.col("id") * 7919) % 5000).repartition(
-            16
-        ).write.parquet(path)
-        compact_files(spark, path, target_mb=512, sort_cols=["v"])
-        # per-file min/max on v must now be tight: read back footers
-        import pyarrow.parquet as pq
-        import glob
-
-        files = glob.glob(path + "/*.parquet")
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            col = [
-                md.row_group(i).column(j)
-                for i in range(md.num_row_groups)
-                for j in range(md.row_group(i).num_columns)
-                if md.row_group(i).column(j).path_in_schema == "v"
-            ]
-            spans = [(c.statistics.min, c.statistics.max) for c in col]
-            # sorted within file: row-group ranges are narrow and ordered
-            assert spans == sorted(spans)
-
-    def test_empty_dir_rejected(self, spark, tmp_path):
-        import pytest
-
-        from notion_spark.pipeline.layout import compact_files
-
-        (tmp_path / "empty").mkdir()
-        with pytest.raises(ValueError):
-            compact_files(spark, str(tmp_path / "empty"))
-
-
-def test_compact_rejects_hive_partitioned_store(spark, tmp_path):
-    import pytest
-
-    from notion_spark.pipeline.layout import compact_files
-
-    path = str(tmp_path / "parts")
-    spark.range(0, 1000).withColumn("pk", F.col("id") % 3).write.partitionBy(
-        "pk"
-    ).parquet(path)
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        compact_files(spark, path)
 
 
 def test_bucketed_join_has_zero_exchanges(spark, tmp_path):

@@ -40,32 +40,14 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "notion_spark"
-REASONS = {"reference step", "test fake", "test metric", "not yet reviewed"}
+REASONS = {"test fake", "test metric"}
 
 ALLOWED = {
-    # steps of the reference sync with no package caller yet
-    "pad_schema": "reference step",
-    "read_tasks_csv": "reference step",
-    "check_schema_health": "reference step",
-    "read_attachment_files": "reference step",
-    "download_attachments": "reference step",
     "FixtureClient": "test fake",
     "recall_at_k": "test metric",
-    "compact_files": "not yet reviewed",
-    "compact_store": "not yet reviewed",
 }
 
-ALLOWED_FLAGS = {
-    "asof_join.right_tiebreak": "not yet reviewed",
-    "compact_files.sort_cols": "not yet reviewed",
-    "fingerprint_overlap.fps_b": "not yet reviewed",
-    "heavy_hitters.capacity": "not yet reviewed",
-    "hot_key_split_join.hot_threshold": "not yet reviewed",
-    "phash_hamming_pairs.signatures": "not yet reviewed",
-    "pq_adc_topk.codes": "not yet reviewed",
-    "report_payload.attachments": "not yet reviewed",
-    "snapshot_diff.compare_cols": "not yet reviewed",
-}
+ALLOWED_FLAGS: dict[str, str] = {}
 
 CHECKPOINTS = {
     "basket_pair_lift": "eager on purpose: a lazy checkpoint of the basket"

@@ -13,14 +13,6 @@ def test_strip_column_names(spark):
     assert N.strip_column_names(df).columns == ["a", "b"]
 
 
-def test_pad_schema(spark):
-    df = spark.createDataFrame([(1,)], ["nid"])
-    out = N.pad_schema(df, {"nid": "long", "status": "string", "due": "timestamp"})
-    assert set(out.columns) == {"nid", "status", "due"}
-    row = out.collect()[0]
-    assert row.status is None and row.due is None
-
-
 def test_coerce_long_handles_garbage(spark):
     df = spark.createDataFrame([("12",), ("oops",), (None,)], ["nid"])
     vals = [r.nid for r in N.coerce_long(df, "nid").collect()]
@@ -51,12 +43,6 @@ def test_priority_score(spark):
     )
     vals = [r.s for r in df.select(N.priority_score().alias("s")).collect()]
     assert vals == [0, 1, 4, 5, 5]
-
-
-def test_rehydrate_list_column(spark):
-    df = spark.createDataFrame([("['a', 'b']",), ("[]",), ("garbage",), (None,)], ["active_tags"])
-    vals = [r.active_tags for r in N.rehydrate_list_column(df, "active_tags").collect()]
-    assert vals == [["a", "b"], [], [], []]
 
 
 def test_is_project(spark):

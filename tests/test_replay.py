@@ -1,7 +1,7 @@
-"""Canned-payload connector replay: S1-S5 as ONE pipeline.
+"""Canned-payload connector replay: S1-S4 as ONE pipeline.
 
 A routing fake transport serves a recorded realistic Notion page tree
-(pages + nested blocks + comments + attachments, with cursor pagination
+(pages + nested blocks + comments, with cursor pagination
 on both the page scan and a block listing) and the real HttpNotionClient
 drives crawl + assembly end-to-end offline, asserting the full canonical
 rows (reference fetch_pages.py:327-441 semantics)."""
@@ -13,7 +13,7 @@ import os
 
 import pytest
 
-from notion_spark.sources.http_client import HttpNotionClient, Response, download_attachments
+from notion_spark.sources.http_client import HttpNotionClient, Response
 from notion_spark.sources.ingest import assemble_tasks
 from notion_spark.sources.notion import blocks_df, comments_df
 
@@ -46,8 +46,6 @@ class ReplayTransport:
             return Response(200, body=self._batch(batches, (params or {}).get("start_cursor")))
         if url.endswith("/comments"):
             return Response(200, body=fx["comments"].get((params or {})["block_id"], {"results": []}))
-        if url in fx["files"]:
-            return Response(200, raw=fx["files"][url].encode())
         raise AssertionError(f"unexpected request {method} {url}")
 
 
@@ -112,11 +110,3 @@ def test_replay_full_page_tree_to_canonical_rows(spark, fx, client):
     assert b.body_content == "Child body"
     assert b.comments == ""
 
-
-def test_replay_attachment_download_layout(tmp_path, spark, fx, client):
-    files = fx["page_batches"][0]["results"][0]["properties"]["Files & Media"]["files"]
-    names = download_attachments(client, files, nid=101, attachment_root=str(tmp_path))
-    assert names == ["spec v1.pdf", "design_.png"]
-    spec = tmp_path / "101" / "spec v1.pdf"
-    assert spec.read_bytes() == b"fake pdf bytes"
-    assert (tmp_path / "101" / "design_.png").read_bytes() == b"fake png bytes"

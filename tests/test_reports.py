@@ -120,25 +120,6 @@ def test_report_payload_render_ready(tasks):
     assert all("parent_name" in row for row in payload["sections"]["goals"])
 
 
-def test_report_payload_with_attachments(spark, tasks):
-    from dataclasses import replace
-
-    from notion_spark.schema import ATTACHMENTS_SCHEMA
-    from notion_spark.sinks.pdf_report import report_payload
-
-    cfg = replace(CFG, include_body_content=True, include_attachments=True)
-    nid = tasks.filter(F.lower("status") == "doing").first().nid
-    att = spark.createDataFrame(
-        [(nid, "notes.txt", ".txt", "attachment body"), (nid, "img.png", ".png", None)],
-        ATTACHMENTS_SCHEMA,
-    )
-    frames = R.report_frames(tasks, ("yearly",), FIXED_NOW, cfg)
-    payload = report_payload(frames, FIXED_NOW, cfg, attachments=att)["yearly"]
-    rows = [r for r in payload["sections"]["in_progress"] if r["nid"] == nid]
-    assert rows and "notes.txt: attachment body" in rows[0]["body_content"]
-    assert "img.png: (attachment)" in rows[0]["body_content"]  # unreadable ext listed by name
-
-
 # ---------------------------------------------------- batch read path
 PERIODS = ("daily", "weekly", "biweekly", "monthly", "yearly")
 

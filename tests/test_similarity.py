@@ -419,26 +419,6 @@ class TestProductQuantization:
         assert r_small >= 0.25, r_small
         assert r_big > r_small, (r_small, r_big)
 
-    def test_precomputed_codes_path_equals_end_to_end(self, spark, tmp_path):
-        """The production path — write codes once, search codes only —
-        returns the identical ranking to in-query encoding."""
-        from notion_spark.pipeline.similarity import (
-            pq_adc_topk,
-            pq_encode,
-            train_pq_codebooks,
-        )
-
-        df, _ = self._clustered(spark)
-        books = train_pq_codebooks(df, n_subspaces=2, n_centroids=4,
-                                   iterations=2, dim=8)
-        path = str(tmp_path / "codes")
-        pq_encode(df, books).write.parquet(path)
-        codes = spark.read.parquet(path)
-        q = df.filter("vec_id < 2").selectExpr("vec_id AS query_id", "embedding")
-        a = sorted(map(tuple, pq_adc_topk(df, q, books, k=5).collect()))
-        b = sorted(map(tuple, pq_adc_topk(df, q, books, k=5, codes=codes).collect()))
-        assert a == b
-
     def test_ivfpq_full_probe_equals_pq(self, spark):
         """nprobe = |cells| removes the pruning, leaving pure PQ-ADC —
         the composed path must then equal pq_adc_topk exactly."""
